@@ -147,13 +147,10 @@ object Dedup {
     * from, so regenerated testdata re-exports instead of serving stale
     * sketches, while repeated queries in steady state skip the write.
     */
-  private[graft] def ensureExport(path: String, fp: Long)(build: => DataFrame): Unit = {
-    val marker = new java.io.File(path, s"_fp_$fp")
-    if (!marker.exists()) {
+  private[graft] def ensureExport(path: String, fp: Long)(build: => DataFrame): Unit =
+    graft.sources.Artifact.ensure(path, fp.toString, marker = graft.sources.Artifact.ExportFp) {
       build.write.mode("overwrite").parquet(path)
-      marker.createNewFile()
     }
-  }
 
   /** Shared candidate-pair front half of the shingle-overlap family
     * ([[ngramJaccardPairs]], [[containmentPairs]]): memoized shingle table
@@ -506,31 +503,18 @@ object Dedup {
       // the corpus. A stale or unstamped dir (testdata regenerated, or
       // pre-convention) is dropped and rebuilt. A deployment with a real
       // metastore never hits any of this: tableExists is durable there.
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val uri = java.net.URI.create(wh.replace(" ", "%20"))
-      val base =
-        if (uri.getScheme == null) Some(new java.io.File(wh))
-        else if (uri.getScheme == "file") Some(new java.io.File(uri.getPath))
-        else None
-      val tableDir = base.map(new java.io.File(_, table.toLowerCase))
-      val reusable = tableDir.exists(d => d.exists() &&
-        graft.sources.IndexStore.sourceFpCurrent(d.getPath, dir))
-      if (reusable) {
-        graft.sources.BucketedStore.registerKeys(
-          spark, table, Seq("band", "bk"), tableDir.get.getPath)
-      } else {
-        tableDir.filter(_.exists()).foreach(graft.streaming.StreamOps.rmTree)
-        val corpus = Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 0)
-        tableDir match {
-          case Some(d) =>
-            graft.sources.BucketedStore.writeKeysAt(
-              md5BandFrame(corpus, numPerms, bands), table, Seq("band", "bk"),
-              d.getPath)
-            graft.sources.IndexStore.stampSourceFp(d.getPath, dir)
-          case None => // non-local warehouse: managed CTAS, no reuse marker
-            graft.sources.BucketedStore.writeKeys(
-              md5BandFrame(corpus, numPerms, bands), table, Seq("band", "bk"))
-        }
+      lazy val bandFrame = md5BandFrame(
+        Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 0), numPerms, bands)
+      graft.sources.Artifact.warehouseTableDir(spark, table) match {
+        case Some(d) =>
+          val built = graft.sources.Artifact.ensureSource(d.getPath, dir, Nil) {
+            graft.streaming.StreamOps.rmTree(d)
+            graft.sources.BucketedStore.writeKeysAt(bandFrame, table, Seq("band", "bk"), d.getPath)
+          }
+          if (!built)
+            graft.sources.BucketedStore.registerKeys(spark, table, Seq("band", "bk"), d.getPath)
+        case None => // non-local warehouse: managed CTAS, no reuse marker
+          graft.sources.BucketedStore.writeKeys(bandFrame, table, Seq("band", "bk"))
       }
     }
     table

@@ -358,8 +358,7 @@ object Multimodal {
     */
   def ensureGrays(spark: SparkSession, dir: String): String = {
     val path = graysPath(dir)
-    if (!new java.io.File(s"$path/grays").exists() ||
-        !graft.sources.IndexStore.sourceFpCurrent(path, dir)) {
+    graft.sources.Artifact.ensureSource(path, dir, Seq("grays")) {
       val imgs = syntheticImages(spark, dir)
       val outSchema = StructType(Seq(
         StructField("doc_id", LongType, nullable = false),
@@ -374,7 +373,6 @@ object Multimodal {
           Seq(base, Row(id + VariantOffset, grays9x8(upscale2x(media)).toSeq))
         else Seq(base)
       }).write.mode("overwrite").parquet(s"$path/grays")
-      graft.sources.IndexStore.stampSourceFp(path, dir)
     }
     path
   }

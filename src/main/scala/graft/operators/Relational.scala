@@ -1172,16 +1172,10 @@ object Relational {
     val table = "graft_agg_base_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + java.lang.Long.toHexString(graft.Tables.dirFingerprint(dir))
     if (!spark.catalog.tableExists(table)) {
-      // Same in-memory-catalog vs durable-warehouse mismatch handling as
-      // Dedup.ensureBandIndex: drop a stale directory before CTAS.
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val uri = java.net.URI.create(wh.replace(" ", "%20"))
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        val base = if (uri.getScheme == null) new java.io.File(wh)
-        else new java.io.File(uri.getPath)
-        val stale = new java.io.File(base, table.toLowerCase)
-        if (stale.exists()) graft.streaming.StreamOps.rmTree(stale)
-      }
+      // in-memory-catalog vs durable-warehouse mismatch: drop a stale
+      // directory before CTAS
+      graft.sources.Artifact.warehouseTableDir(spark, table)
+        .foreach(graft.streaming.StreamOps.rmTree)
       typeAgg(Tables.events(spark, dir).filter(col("event_id") % 10 < 8))
         .write.mode("overwrite").format("parquet").saveAsTable(table)
     }

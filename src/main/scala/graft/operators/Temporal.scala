@@ -306,15 +306,9 @@ object Temporal {
       "_" + java.lang.Long.toHexString(graft.Tables.dirFingerprint(dir))
     if (!spark.catalog.tableExists(table)) {
       // in-memory-catalog vs durable-warehouse mismatch: drop a stale
-      // directory before CTAS (the Relational.ensureAggBase precedent)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val uri = java.net.URI.create(wh.replace(" ", "%20"))
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        val baseDir = if (uri.getScheme == null) new java.io.File(wh)
-        else new java.io.File(uri.getPath)
-        val stale = new java.io.File(baseDir, table.toLowerCase)
-        if (stale.exists()) graft.streaming.StreamOps.rmTree(stale)
-      }
+      // directory before CTAS
+      graft.sources.Artifact.warehouseTableDir(spark, table)
+        .foreach(graft.streaming.StreamOps.rmTree)
       val e = Tables.events(spark, dir)
       val cutUs = e.agg(min(unix_micros(col("ts")))).head().getLong(0) +
         24L * 86400L * 1000000L

@@ -58,7 +58,7 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
     * matching plan over a given path, planning does ZERO filesystem calls:
     * no exists() probes, no marker read (the per-plan NameNode round-trips
     * would dominate a high-QPS serving session). In-session rebuilds stay
-    * correct because IndexStore.stampBuildId calls [[invalidate]]; a store
+    * correct because Artifact.stampBuildId calls [[invalidate]]; a store
     * refreshed by an EXTERNAL writer behind a running session needs
     * [[invalidateAll]] — the same contract as Spark's own file-listing
     * caches (REFRESH TABLE).
@@ -142,9 +142,9 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
             fsDetectCalls.incrementAndGet()
             val parent = p.getParent
             val hfs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-            if (hfs.exists(new Path(parent, "centroids")) &&
-                hfs.exists(new Path(parent, "_build_id"))) {
-              val in = hfs.open(new Path(parent, "_build_id"))
+            val marker = new Path(parent, graft.sources.Artifact.BuildId.name)
+            if (hfs.exists(new Path(parent, "centroids")) && hfs.exists(marker)) {
+              val in = hfs.open(marker)
               val buildId =
                 try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
                 finally in.close()

@@ -94,7 +94,7 @@ object HiddenPartitionRewrite extends Rule[LogicalPlan] with PredicateHelper {
             val stamped = hfs.exists(new Path(p.getParent, "calendar")) && {
               val ls = try hfs.listStatus(p.getParent)
                        catch { case _: java.io.IOException => Array.empty[org.apache.hadoop.fs.FileStatus] }
-              ls.exists(_.getPath.getName.startsWith("_src_fp_"))
+              ls.exists(_.getPath.getName.startsWith(graft.sources.Artifact.SrcFp.name))
             }
             java.lang.Boolean.valueOf(stamped)
           }).booleanValue()

@@ -67,12 +67,11 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
   // tree printer flags the node as missing input ("!" marker)
   override def producedAttributes: AttributeSet = AttributeSet(Seq(output.last))
 
-  /** Worst-first ordering for the bounded heap: head = lowest sim, ties
-    * broken toward the larger vec_id — the element the next better
-    * candidate evicts. Mirrors the window form's (sim desc, vec_id asc).
+  /** Best-first ordering of candidates: highest sim first, ties broken
+    * toward the smaller vec_id — the window form's (sim desc, vec_id asc).
     */
   private type Cand = (Double, Long) // (sim, vec_id)
-  private val worstFirst: Ordering[Cand] =
+  private val bestFirst: Ordering[Cand] =
     Ordering.by((c: Cand) => (-c._1, c._2))
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -92,7 +91,7 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     // an accepted candidate (rare once warm: k of |base|) pays an O(k)
     // rescan. The row's embedding is ALSO materialized once per row —
     // `getFloat` per (query × dim) re-read the unsafe buffer nq times.
-    // Acceptance rule mirrors worstFirst exactly: better ⇔ s > worst's
+    // Acceptance rule mirrors bestFirst exactly: better ⇔ s > worst's
     // sim, or equal sim and smaller vec_id — results are bit-identical.
     val localTopK: RDD[(Long, Array[Cand])] = base.execute().mapPartitions { it =>
       val qs = bc.value
@@ -167,15 +166,16 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
         val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
           LongType, LongType, DoubleType))
         it.flatMap { case (qid, cands) =>
-          cands.sorted(worstFirst.reverse).iterator.map { case (sim, vecId) =>
+          cands.iterator.map { case (sim, vecId) =>
             proj(new GenericInternalRow(Array[Any](qid, vecId, sim))).copy()
           }
         }
       }
   }
 
+  /** The best k of two candidate lists, best first. */
   private def merge(a: Array[Cand], b: Array[Cand], k: Int): Array[Cand] =
-    (a ++ b).sorted(worstFirst.reverse).take(k)
+    (a ++ b).sorted(bestFirst).take(k)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): KnnJoinExec =

@@ -32,18 +32,15 @@ object BloomSidecar {
     */
   def ensure(dir: String, name: String, numBits: Long)(build: => Array[Byte]): Array[Byte] = {
     val path = s"${root(dir)}/${name}_$numBits"
-    val key = s"$path|${graft.Tables.dirFingerprint(dir)}"
-    memo.getOrElseUpdate(key, {
-      val bin = new java.io.File(path, "bloom.bin")
-      if (bin.exists() && IndexStore.sourceFpCurrent(path, dir))
-        java.nio.file.Files.readAllBytes(bin.toPath)
-      else {
+    val fp = Artifact.sourceKey(dir)
+    memo.getOrElseUpdate(s"$path|$fp", {
+      val bin = java.nio.file.Paths.get(path, "bloom.bin")
+      Artifact.ensure(path, fp, Seq("bloom.bin"), Artifact.SrcFp) {
         val bytes = build
-        new java.io.File(path).mkdirs()
-        java.nio.file.Files.write(bin.toPath, bytes)
-        IndexStore.stampSourceFp(path, dir)
-        bytes
+        java.nio.file.Files.createDirectories(bin.getParent)
+        java.nio.file.Files.write(bin, bytes)
       }
+      java.nio.file.Files.readAllBytes(bin)
     })
   }
 
@@ -67,9 +64,11 @@ object BloomSidecar {
     val bos = new java.io.ByteArrayOutputStream()
     merged.writeTo(bos)
     val bytes = bos.toByteArray
-    java.nio.file.Files.write(bin.toPath, bytes)
-    IndexStore.stampSourceFp(path, dir)
-    memo.put(s"$path|${graft.Tables.dirFingerprint(dir)}", bytes)
+    val fp = Artifact.sourceKey(dir)
+    Artifact.ensure(path, fp, marker = Artifact.SrcFp, force = true) {
+      java.nio.file.Files.write(bin.toPath, bytes)
+    }
+    memo.put(s"$path|$fp", bytes)
     bytes
   }
 

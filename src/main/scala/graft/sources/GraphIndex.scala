@@ -214,13 +214,14 @@ object GraphIndex {
     * sorted by src, so a probe's IN-list lands in few row groups via
     * parquet min/max skipping.
     */
-  def write(spark: SparkSession, dir: String, path: String): Unit = {
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    writeEdges(buildFrom(base), base, path)
-    // Same `_src_fp_*` marker scheme as every other persisted store —
-    // delegated so the scheme lives in exactly one place (IndexStore).
-    IndexStore.stampSourceFp(path, dir)
-  }
+  def write(spark: SparkSession, dir: String, path: String): Unit =
+    build(spark, dir, path, force = true)
+
+  private def build(spark: SparkSession, dir: String, path: String, force: Boolean): Unit =
+    Artifact.ensureSource(path, dir, Seq("edges"), force) {
+      val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      writeEdges(buildFrom(base), base, path)
+    }
 
   /** Persist an edge frame with dst payloads in the sorted layout and stamp
     * a fresh `_build_id` — shared by the full build and [[absorb]].
@@ -243,18 +244,8 @@ object GraphIndex {
       .repartitionByRange(parts, col("src"))
       .sortWithinPartitions(col("src"), col("dst"))
       .write.mode("overwrite").parquet(s"$path/edges")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/_build_id"),
-      java.util.UUID.randomUUID().toString)
+    Artifact.stampBuildId(path)
   }
-
-  /** One lock object per store path — [[ensureLevel]]'s check-then-derive
-    * must not race: `recallCurve` runs several beam walks from concurrent
-    * driver Futures, and two threads concurrently `overwrite`-writing the
-    * same `edges_l*` directory can corrupt the store.
-    */
-  private val levelLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Cheap deterministic fingerprint of an entry frame: row count + XOR of
     * per-row hashes over BOTH the id and the embedding payload. Stamped
@@ -288,60 +279,52 @@ object GraphIndex {
     * layout, so the level hops prune row groups the same way. Cost:
     * O(sourceEdges) semi-joins once per build — never at query time; the
     * walk replays over the EXPORTED `edges_{name}` verbatim in the DuckDB
-    * oracle, so the derivation itself never needs a SQL twin.
+    * oracle, so the derivation itself never needs a SQL twin. Concurrent
+    * callers (`recallCurve`'s beam walks run from driver Futures) derive
+    * once under the marker's lock.
     */
   private[graft] def ensureLevel(spark: SparkSession, path: String, name: String,
                                  entries: DataFrame,
                                  sourceEdges: DataFrame): DataFrame = {
-    val lock = levelLocks.computeIfAbsent(s"$path/$name", _ => new Object)
-    lock.synchronized {
-      val buildId = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$path/_build_id")).trim
-      val stamp = s"$buildId ${entryFp(entries)}"
-      val marker = java.nio.file.Paths.get(s"$path/_${name}_from")
-      val current = java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker).trim == stamp &&
-        new java.io.File(s"$path/edges_$name").exists()
-      if (!current) {
-        val ids = entries.select(col("vec_id"))
-        val nEntries = ids.count()
-        val proposals =
-          if (nEntries <= LevelAllPairsBound) {
-            ids.withColumnRenamed("vec_id", "src")
-              .crossJoin(ids.withColumnRenamed("vec_id", "dst"))
-              .filter(col("src") =!= col("dst"))
-          } else {
-            val edges = sourceEdges.select(col("src"), col("dst"))
-            val fromEntry = edges
-              .join(ids.withColumnRenamed("vec_id", "src"), Seq("src"), "left_semi")
-            val toEntry = edges
-              .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
-            val direct = fromEntry
-              .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
-              .select(col("src"), col("dst"))
-            // 2-hop: entry → any mid → entry; volume N·M²/stride² — sublinear
-            val twoHop = fromEntry.select(col("src"), col("dst").as("mid"))
-              .join(toEntry.select(col("src").as("mid"), col("dst")), "mid")
-              .filter(col("src") =!= col("dst"))
-              .select(col("src"), col("dst"))
-            direct.unionByName(twoHop).distinct()
-          }
-        val scored = topK(scorePairs(proposals, entries), M)
-        val payloaded = scored
-          .join(entries.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")), "dst")
-          .select(col("src"), col("dst"), col("sim"), col("dst_emb"))
-          .localCheckpoint()
-        val parts = math.max(1, math.min(
-          spark.sessionState.conf.numShufflePartitions,
-          (payloaded.count() / 230000L).toInt + 1))
-        payloaded
-          .repartitionByRange(parts, col("src"))
-          .sortWithinPartitions(col("src"), col("dst"))
-          .write.mode("overwrite").parquet(s"$path/edges_$name")
-        java.nio.file.Files.writeString(marker, stamp)
-      }
-      graft.Tables.storeParquet(spark, s"$path/edges_$name")
+    val stamp = s"${Artifact.BuildId.key(path)} ${entryFp(entries)}"
+    Artifact.ensure(path, stamp, Seq(s"edges_$name"), Artifact.levelFrom(name)) {
+      val ids = entries.select(col("vec_id"))
+      val nEntries = ids.count()
+      val proposals =
+        if (nEntries <= LevelAllPairsBound) {
+          ids.withColumnRenamed("vec_id", "src")
+            .crossJoin(ids.withColumnRenamed("vec_id", "dst"))
+            .filter(col("src") =!= col("dst"))
+        } else {
+          val edges = sourceEdges.select(col("src"), col("dst"))
+          val fromEntry = edges
+            .join(ids.withColumnRenamed("vec_id", "src"), Seq("src"), "left_semi")
+          val toEntry = edges
+            .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
+          val direct = fromEntry
+            .join(ids.withColumnRenamed("vec_id", "dst"), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst"))
+          // 2-hop: entry → any mid → entry; volume N·M²/stride² — sublinear
+          val twoHop = fromEntry.select(col("src"), col("dst").as("mid"))
+            .join(toEntry.select(col("src").as("mid"), col("dst")), "mid")
+            .filter(col("src") =!= col("dst"))
+            .select(col("src"), col("dst"))
+          direct.unionByName(twoHop).distinct()
+        }
+      val scored = topK(scorePairs(proposals, entries), M)
+      val payloaded = scored
+        .join(entries.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")), "dst")
+        .select(col("src"), col("dst"), col("sim"), col("dst_emb"))
+        .localCheckpoint()
+      val parts = math.max(1, math.min(
+        spark.sessionState.conf.numShufflePartitions,
+        (payloaded.count() / 230000L).toInt + 1))
+      payloaded
+        .repartitionByRange(parts, col("src"))
+        .sortWithinPartitions(col("src"), col("dst"))
+        .write.mode("overwrite").parquet(s"$path/edges_$name")
     }
+    graft.Tables.storeParquet(spark, s"$path/edges_$name")
   }
 
   /** Layered INSERT — HNSW's level assignment, batched (the reference's
@@ -368,20 +351,20 @@ object GraphIndex {
     */
   private[graft] def maintainLevels(spark: SparkSession, path: String,
                                     all: DataFrame, newIds: DataFrame): Unit = {
-    val buildId = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$path/_build_id")).trim
+    val buildId = Artifact.BuildId.key(path)
     val levels = Seq(("l1", entryStride.toLong, s"$path/edges"),
       ("l2", entryStride.toLong * l1Factor, s"$path/edges_l1"))
     levels.foreach { case (name, stride, finerPath) =>
       if (new java.io.File(s"$path/edges_$name").exists()) {
-        val lock = levelLocks.computeIfAbsent(s"$path/$name", _ => new Object)
-        lock.synchronized {
-          val entries = all.filter(col("vec_id") % stride === 0)
-            .select(col("vec_id"), col("embedding")).localCheckpoint()
-          val stamp = s"$buildId ${entryFp(entries)}"
-          val marker = java.nio.file.Paths.get(s"$path/_${name}_from")
-          val newLevel = entries.join(newIds.select(col("vec_id")),
-            Seq("vec_id"), "left_semi").localCheckpoint()
+        val entries = all.filter(col("vec_id") % stride === 0)
+          .select(col("vec_id"), col("embedding")).localCheckpoint()
+        val newLevel = entries.join(newIds.select(col("vec_id")),
+          Seq("vec_id"), "left_semi").localCheckpoint()
+        // the marker carries the fresh build id + union-frame fingerprint
+        // either way: a batch with no qualifying nodes leaves the level
+        // graph bit-identical AND still current for the new build
+        Artifact.ensure(path, s"$buildId ${entryFp(entries)}",
+            marker = Artifact.levelFrom(name), force = true) {
           if (!newLevel.isEmpty) {
             val old = graft.Tables.storeParquet(spark, s"$path/edges_$name")
               .select(col("src"), col("dst"), col("sim"))
@@ -422,10 +405,6 @@ object GraphIndex {
               .sortWithinPartitions(col("src"), col("dst"))
               .write.mode("overwrite").parquet(s"$path/edges_$name")
           }
-          // marker carries the fresh build id + union-frame fingerprint
-          // either way: a batch with no qualifying nodes leaves the level
-          // graph bit-identical AND still current for the new build
-          java.nio.file.Files.writeString(marker, stamp)
         }
       }
     }
@@ -599,11 +578,7 @@ object GraphIndex {
     * the persisted graph, not be beam-searched through it).
     */
   def ensure(spark: SparkSession, dir: String, path: String): Unit =
-    graft.Profiling.timed("GraphIndex.ensure") {
-      if (!new java.io.File(s"$path/edges").exists() ||
-          !IndexStore.sourceFpCurrent(path, dir))
-        write(spark, dir, path)
-    }
+    graft.Profiling.timed("GraphIndex.ensure")(build(spark, dir, path, force = false))
 
   /** Fixed-hop beam search over the persisted graph — the deterministic
     * batch unrolling of HNSW's ef-bounded walk (`stream1.py:161-162`,
@@ -909,24 +884,13 @@ object GraphIndex {
                      beams: Seq[Int] = Seq(4, 8, 32)): DataFrame = {
     val path = defaultPath(dir)
     ensure(spark, dir, path)
-    val srcBuild = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$path/_build_id")).trim
-    val marker = java.nio.file.Paths.get(s"$path/_tuned_beam_$targetRecallMicro")
-    val recorded =
-      if (java.nio.file.Files.exists(marker))
-        java.nio.file.Files.readString(marker).trim.split(" ") match {
-          case Array(b, bm) if b == srcBuild => Some(bm.toInt)
-          case _ => None
-        }
-      else None
-    val beam = recorded.getOrElse {
+    val beam = Artifact.remember(path, Artifact.tunedBeam(targetRecallMicro),
+        Artifact.BuildId.key(path)) {
       val curve = recallCurve(spark, dir, k, beams).collect()
-      val chosen = curve.filter(_.getAs[Long]("recall_micro") >= targetRecallMicro)
+      curve.filter(_.getAs[Long]("recall_micro") >= targetRecallMicro)
         .map(_.getLong(0)).sorted.headOption
-        .getOrElse(curve.map(_.getLong(0)).max).toInt
-      java.nio.file.Files.writeString(marker, s"$srcBuild $chosen")
-      chosen
-    }
+        .getOrElse(curve.map(_.getLong(0)).max).toString
+    }.toInt
     search(spark, dir, path, VectorSearch.querySet(spark, dir, 5), k, beam = beam,
       maxFlatEntries = FlatPinned)
       .withColumn("beam", lit(beam.toLong))
@@ -1007,15 +971,8 @@ object GraphIndex {
     // records WHICH canonical build this compaction folded — a rebuilt
     // canonical store invalidates it, exactly PqStore's `_ivf_build_id`
     // cascade. Re-executions pay only the staleness check + the walk.
-    val srcBuild = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$path/_build_id")).trim
-    val marker = java.nio.file.Paths.get(s"$cpt/_built_from")
-    val current = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker).trim == srcBuild &&
-      new java.io.File(s"$cpt/edges").exists()
-    if (!current) {
+    Artifact.ensure(cpt, Artifact.BuildId.key(path), Seq("edges")) {
       compactTombstones(spark, path, cpt, tombstones, emb)
-      java.nio.file.Files.writeString(marker, srcBuild)
     }
     val liveVecs = emb.filter(col("vec_id") % 17 =!= 3)
     val nNodes = graft.Tables.storeParquet(spark, s"$cpt/edges").select(col("src")).distinct().count()
@@ -1038,13 +995,11 @@ object GraphIndex {
     */
   def ensureHalf(spark: SparkSession, dir: String): String = {
     val path = corpusHalfPath(dir)
-    if (!new java.io.File(s"$path/edges").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir)) {
+    Artifact.ensureSource(path, dir, Seq("edges")) {
       val even = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 2 === 0)
         .select(col("vec_id"), col("embedding"))
       writeEdges(buildFrom(even), even, path)
-      IndexStore.stampSourceFp(path, dir)
     }
     path
   }

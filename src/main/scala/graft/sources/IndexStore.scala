@@ -27,10 +27,13 @@ object IndexStore {
     * filesystem mtimes (directory mtimes are not preserved across
     * copy/restore and only change on direct-child writes).
     */
-  def write(spark: SparkSession, dir: String, path: String): Unit = {
-    writeFrom(Tables.embeddings(spark, dir), path)
-    stampSourceFp(path, dir)
-  }
+  def write(spark: SparkSession, dir: String, path: String): Unit =
+    build(spark, dir, path, force = true)
+
+  private def build(spark: SparkSession, dir: String, path: String, force: Boolean): Unit =
+    Artifact.ensureSource(path, dir, Seq("centroids", Artifact.BuildId.name), force) {
+      writeFrom(Tables.embeddings(spark, dir), path)
+    }
 
   /** Build and persist a store from an explicit vector frame (subset /
     * ingest-side stores). Stamps `_build_id` only — callers that derive
@@ -43,7 +46,7 @@ object IndexStore {
       .partitionBy("cell_id")
       .parquet(s"$path/rows")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    stampBuildId(path)
+    Artifact.stampBuildId(path)
   }
 
   /** Day-2 maintenance: absorb new vectors into an EXISTING store without
@@ -68,7 +71,7 @@ object IndexStore {
       // listing. The tiny AQE-coalesced shuffle lands ~one file per cell.
       .repartition(col("cell_id"))
       .write.mode("append").partitionBy("cell_id").parquet(s"$path/rows")
-    stampBuildId(path)
+    Artifact.stampBuildId(path)
   }
 
   /** Small-files hygiene for the IVF absorb append path — the exact twin
@@ -86,12 +89,7 @@ object IndexStore {
     import org.apache.spark.sql.functions._
     val half = ensureCorpusHalf(spark, dir)
     val work = defaultPath(dir) + "_plc"
-    val gen = graft.streaming.StreamOps.storeGeneration(half)
-    val marker = java.nio.file.Paths.get(s"$work/_built_from")
-    val current = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker).trim == gen &&
-      new java.io.File(s"$work/rows").exists()
-    if (!current) {
+    Artifact.ensure(work, Artifact.generation(half), Seq("rows")) {
       cloneStore(half, work)
       val odd = Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 1)
       (0 until 3).foreach { i =>
@@ -113,7 +111,6 @@ object IndexStore {
           .partitionBy("cell_id")
           .parquet(s"$work/rows")
       }
-      java.nio.file.Files.writeString(marker, gen)
     }
     val corpusRows = Tables.embeddings(spark, dir).count()
     graft.Tables.storeParquet(spark, s"$work/rows")
@@ -144,9 +141,8 @@ object IndexStore {
     */
   private[graft] def ensureMaintDay1(spark: SparkSession, dir: String): String = {
     val p = defaultPath(dir) + "_maint_day1"
-    if (!new java.io.File(s"$p/centroids").exists() || !sourceFpCurrent(p, dir)) {
+    Artifact.ensureSource(p, dir, Seq("centroids")) {
       writeFrom(Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), p)
-      stampSourceFp(p, dir)
     }
     p
   }
@@ -226,16 +222,9 @@ object IndexStore {
     // audit count, never a re-clone + re-absorb per call.
     val maintPath = defaultPath(dir) + "_maint"
     val day1 = ensureMaintDay1(spark, dir)
-    val gen = graft.streaming.StreamOps.storeGeneration(day1) + s" decision=$decision"
-    val marker = java.nio.file.Paths.get(s"$maintPath/_maint_from")
     val servingPath = if (decision == "absorb") maintPath else maintPath + "_rb"
-    val current = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker).trim == gen &&
-      new java.io.File(s"$servingPath/rows").exists()
-    if (!current) {
-      maintain(spark, dir, decision)
-      java.nio.file.Files.writeString(marker, gen)
-    }
+    Artifact.ensure(maintPath, Artifact.generation(day1) + s" decision=$decision",
+      Seq(s"$servingPath/rows"), Artifact.MaintFrom)(maintain(spark, dir, decision))
     val rowsAfter = graft.Tables.storeParquet(spark, s"$servingPath/rows").count()
     drift
       .withColumn("decision", lit(decision))
@@ -254,44 +243,14 @@ object IndexStore {
   /** Build the even-half store once per source-content generation. */
   def ensureCorpusHalf(spark: SparkSession, dir: String): String = {
     val path = corpusHalfPath(dir)
-    if (!new java.io.File(s"$path/centroids").exists() || !sourceFpCurrent(path, dir)) {
+    Artifact.ensureSource(path, dir, Seq("centroids")) {
       writeFrom(Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), path)
-      stampSourceFp(path, dir)
     }
     path
   }
 
-  /** Record the CONTENT fingerprint of the data dir this build read
-    * (Tables.dirFingerprint), replacing any previous stamp — ensure()
-    * compares it so a regenerated corpus triggers a rebuild instead of
-    * being probed through an index built from data that no longer exists.
-    */
-  private[graft] def stampSourceFp(path: String, dir: String): Unit = {
-    val d = new java.io.File(path)
-    Option(d.listFiles()).foreach(_.filter(_.getName.startsWith("_src_fp_")).foreach(_.delete()))
-    new java.io.File(d, s"_src_fp_${graft.Tables.dirFingerprint(dir)}").createNewFile()
-  }
-
-  private[graft] def sourceFpCurrent(path: String, dir: String): Boolean =
-    new java.io.File(path, s"_src_fp_${graft.Tables.dirFingerprint(dir)}").exists()
-
-  private def stampBuildId(path: String): Unit = {
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/_build_id"),
-      java.util.UUID.randomUUID().toString)
-    // A fresh build id invalidates the planner's memoized store detection
-    // so the very next plan re-reads the marker (and so can never probe
-    // the re-clustered layout through stale centroids).
-    graft.plans.AnnProbeRewrite.invalidate(path)
-  }
-
   /** The build marker of the store at `path`, if present. */
-  def buildId(path: String): Option[String] = {
-    val p = java.nio.file.Paths.get(s"$path/_build_id")
-    if (java.nio.file.Files.exists(p))
-      Some(java.nio.file.Files.readString(p).trim)
-    else None
-  }
+  def buildId(path: String): Option[String] = Artifact.BuildId.read(path)
 
   /** Open the clustered index. */
   def read(spark: SparkSession, path: String): (DataFrame, DataFrame) =
@@ -320,17 +279,11 @@ object IndexStore {
   /** Build the index only if its artifacts don't exist yet OR were built
     * from different source content (`_src_fp_*` mismatch — the driver
     * regenerates the testdata between rounds, and an existence-only check
-    * would keep serving an index of the previous corpus). A pre-fingerprint
-    * store (artifacts present, markers missing) rebuilds once and records
-    * both markers; a store missing only `_build_id` is stamped in place so
-    * downstream marker comparisons work without a rebuild.
+    * would keep serving an index of the previous corpus). A store missing
+    * either marker rebuilds once and records both.
     */
   def ensure(spark: SparkSession, dir: String, path: String): Unit =
-    graft.Profiling.timed("IndexStore.ensure") {
-      if (!new java.io.File(s"$path/centroids").exists() || !sourceFpCurrent(path, dir))
-        write(spark, dir, path)
-      else if (buildId(path).isEmpty) stampBuildId(path)
-    }
+    graft.Profiling.timed("IndexStore.ensure")(build(spark, dir, path, force = false))
 
   /** Probed search with STATIC partition pruning: the probed cell set is
     * tiny driver-side metadata (≤ nq·nprobe ints — the same coarse-quantizer
@@ -593,7 +546,7 @@ object IndexStore {
         .partitionBy("cell_id")
         .parquet(s"$rebuiltPath/rows")
       centroids.write.mode("overwrite").parquet(s"$rebuiltPath/centroids")
-      stampBuildId(rebuiltPath)
+      Artifact.stampBuildId(rebuiltPath)
     } finally centroids.unpersist(blocking = false)
   }
 

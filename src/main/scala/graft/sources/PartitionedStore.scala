@@ -37,7 +37,20 @@ object PartitionedStore {
     * shuffle-free pass (dynamic partition write); the calendar is a
     * |dates|-row aggregate coalesced to one file.
     */
-  def write(spark: SparkSession, dir: String, path: String): Unit = {
+  def write(spark: SparkSession, dir: String, path: String): Unit =
+    ensureAt(spark, dir, path, force = true)
+
+  /** Build once per source-content generation (IndexStore contract). A
+    * rebuilt layout must not serve the previous generation's cached
+    * store-detection verdict (HiddenPartitionRewrite memoizes per path),
+    * so a build drops it once the new stamp is in place.
+    */
+  private def ensureAt(spark: SparkSession, dir: String, path: String,
+                       force: Boolean = false): Unit =
+    if (Artifact.ensureSource(path, dir, Seq("calendar"), force)(layout(spark, dir, path)))
+      graft.plans.HiddenPartitionRewrite.invalidatePath(s"$path/rows")
+
+  private def layout(spark: SparkSession, dir: String, path: String): Unit = {
     val e = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
     // partitionBy over an empty frame writes no readable files at all —
     // degrade to a plain (empty, schema-bearing) parquet so readers and
@@ -50,18 +63,11 @@ object PartitionedStore {
       .withColumn("dom", dayofmonth(col("event_date")))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/calendar")
-    IndexStore.stampSourceFp(path, dir)
-    // a rebuilt layout must not serve the previous generation's cached
-    // store-detection verdict (HiddenPartitionRewrite memoizes per path)
-    graft.plans.HiddenPartitionRewrite.invalidatePath(s"$path/rows")
   }
 
-  /** Build once per source-content generation (IndexStore contract). */
   def ensure(spark: SparkSession, dir: String): String = {
     val path = defaultPath(dir)
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     path
   }
 
@@ -208,9 +214,7 @@ object PartitionedStore {
     */
   def backfillQuery(spark: SparkSession, dir: String): DataFrame = {
     val path = defaultPath(dir) + "_bf"
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     val cal = graft.Tables.storeParquet(spark, s"$path/calendar")
     val lo = cal.agg(min(col("event_date"))).head().getDate(0)
     if (lo != null) {
@@ -262,9 +266,7 @@ object PartitionedStore {
     */
   def mergeQuery(spark: SparkSession, dir: String): DataFrame = {
     val path = defaultPath(dir) + "_mg"
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     val lo = graft.Tables.storeParquet(spark, s"$path/calendar")
       .agg(min(col("event_date"))).head().getDate(0)
     if (lo != null) {
@@ -368,9 +370,7 @@ object PartitionedStore {
     */
   def sqlMergeQuery(spark: SparkSession, dir: String): DataFrame = {
     val path = defaultPath(dir) + "_mgs"
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     val lo = graft.Tables.storeParquet(spark, s"$path/calendar")
       .agg(min(col("event_date"))).head().getDate(0)
     if (lo == null) return emptyReport(spark)
@@ -463,9 +463,7 @@ object PartitionedStore {
     */
   def compactQuery(spark: SparkSession, dir: String, targetFiles: Int = 1): DataFrame = {
     val path = defaultPath(dir) + "_cp"
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     def audit() = graft.Tables.storeParquet(spark, s"$path/rows")
       .select(col("event_date"), input_file_name().as("f"))
       .groupBy(col("event_date"))
@@ -522,11 +520,9 @@ object PartitionedStore {
   private[graft] def ensureVersioned(spark: SparkSession, dir: String,
                                      path: String): Unit = {
     val vdir = new java.io.File(s"$path/_versions")
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir) ||
-        !new java.io.File(vdir, "v2.txt").exists()) {
+    val built = Artifact.ensureSource(path, dir, Seq("calendar", "_versions/v2.txt")) {
       graft.streaming.StreamOps.rmTree(vdir)
-      write(spark, dir, path)
+      layout(spark, dir, path)
       val v1 = listParquet(path)
       val lo = graft.Tables.storeParquet(spark, s"$path/calendar")
         .agg(min(col("event_date"))).head().getDate(0)
@@ -548,6 +544,7 @@ object PartitionedStore {
       java.nio.file.Files.write(java.nio.file.Paths.get(vdir.getPath, "v2.txt"),
         v2.mkString("\n").getBytes("UTF-8"))
     }
+    if (built) graft.plans.HiddenPartitionRewrite.invalidatePath(s"$path/rows")
   }
 
   /** Read snapshot `v` of the versioned store at `path` — membership list
@@ -605,10 +602,10 @@ object PartitionedStore {
   private[graft] def vacuum(spark: SparkSession, dir: String, path: String,
                             keepLatest: Int = 1,
                             orphanGraceMs: Long = 0L): VacuumReport = {
-    if (!IndexStore.sourceFpCurrent(path, dir))
+    if (!Artifact.sourceCurrent(path, dir))
       throw new IllegalStateException(
         s"refusing to vacuum $path: store was built from a different " +
-          "source generation (_src_fp mismatch) — a concurrent rebuild's " +
+          "source generation (source stamp mismatch) — a concurrent rebuild's " +
           "fresh files would be deleted as orphans")
     val vdir = new java.io.File(s"$path/_versions")
     val manifests = Option(vdir.listFiles()).getOrElse(Array.empty)
@@ -722,9 +719,7 @@ object PartitionedStore {
     */
   def retentionQuery(spark: SparkSession, dir: String, keepDays: Int = 7): DataFrame = {
     val path = defaultPath(dir) + "_ret"
-    if (!new java.io.File(s"$path/calendar").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir))
-      write(spark, dir, path)
+    ensureAt(spark, dir, path)
     val hi = graft.Tables.storeParquet(spark, s"$path/calendar")
       .agg(max(col("event_date"))).head().getDate(0)
     if (hi != null) {

@@ -496,17 +496,27 @@ object PqStore {
     * to nprobe/nlist of the files statically; full-corpus readers
     * ([[search]]) just ignore the partition column.
     */
-  def write(spark: SparkSession, dir: String, path: String): Unit = {
+  def write(spark: SparkSession, dir: String, path: String): Unit =
+    build(spark, dir, path, force = true)
+
+  /** The build behind [[write]] and [[ensure]]. Refreshes the coarse
+    * quantizer first: IndexStore.ensure rebuilds it (with a fresh
+    * `_build_id`) when the SOURCE DATA changed, and the `_ivf_build_id`
+    * marker — WHICH IVF build the codes' cells came from, compared by
+    * content, never by directory mtime — then invalidates these codes too,
+    * so the ADC scan never serves codebooks trained on a corpus that no
+    * longer exists.
+    */
+  private def build(spark: SparkSession, dir: String, path: String, force: Boolean): Unit = {
     val ivfPath = IndexStore.defaultPath(dir)
     IndexStore.ensure(spark, dir, ivfPath)
-    writeFrom(spark, path,
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      IndexStore.read(spark, ivfPath)._2)
-    // Record WHICH IVF build the coarse quantizer came from — ensure()
-    // compares marker content, not directory mtimes.
-    IndexStore.buildId(ivfPath).foreach(id =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$path/_ivf_build_id"), id))
+    Artifact.ensure(path, Artifact.BuildId.key(ivfPath),
+        Seq("codebooks", "coarse", "rotation", Artifact.RotationKind, "codes"),
+        Artifact.IvfBuildId, force) {
+      writeFrom(spark, path,
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+        IndexStore.read(spark, ivfPath)._2)
+    }
   }
 
   /** Build a PQ store from an explicit vector frame against an explicit
@@ -536,8 +546,7 @@ object PqStore {
     r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
       .toDF("i", "row").repartition(1)
       .write.mode("overwrite").parquet(s"$path/rotation")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/_rotation_kind"), kind)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, Artifact.RotationKind), kind)
     val rotRes = rotateResiduals(res, r)
     val books = trainFrom(rotRes, dim, nCodes).cache()
     books.write.mode("overwrite").parquet(s"$path/codebooks")
@@ -562,16 +571,12 @@ object PqStore {
   def ensureCorpusHalf(spark: SparkSession, dir: String): String = {
     val path = corpusHalfPath(dir)
     val ivfHalf = IndexStore.ensureCorpusHalf(spark, dir)
-    if (!new java.io.File(s"$path/codebooks").exists() ||
-        !new java.io.File(s"$path/coarse").exists() ||
-        !new java.io.File(s"$path/rotation").exists() ||
-        !new java.io.File(s"$path/_rotation_kind").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir)) {
+    Artifact.ensureSource(path, dir,
+        Seq("codebooks", "coarse", "rotation", Artifact.RotationKind)) {
       val even = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 2 === 0)
         .select(col("vec_id"), col("embedding"))
       writeFrom(spark, path, even, IndexStore.read(spark, ivfHalf)._2)
-      IndexStore.stampSourceFp(path, dir)
     }
     path
   }
@@ -620,49 +625,18 @@ object PqStore {
   def defaultPath(dir: String): String =
     "/root/repo/data/pq_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Build only if the artifacts don't exist yet, predate the clustered
-    * `codes/cell_id=*` layout, or were built against a DIFFERENT IVF build
-    * than the current one — a rebuilt coarse quantizer must invalidate the
-    * codes, or searchIvfPq would probe new centroids against stale baked
-    * cell_ids and silently return wrong candidates. Staleness is decided
-    * by comparing explicit `_build_id` markers written at build time
-    * (directory mtimes change on any direct-child write and don't survive
-    * copy/restore, so they can both miss a rebuild and force spurious
-    * ones); a PQ store with no recorded marker (legacy layout) rebuilds
+  /** Build only if the artifacts don't exist yet or were built against a
+    * DIFFERENT IVF build than the current one — a rebuilt coarse quantizer
+    * must invalidate the codes, or searchIvfPq would probe new centroids
+    * against stale baked cell_ids and silently return wrong candidates.
+    * Staleness is decided by comparing explicit `_build_id` markers
+    * written at build time (directory mtimes change on any direct-child
+    * write and don't survive copy/restore, so they can both miss a rebuild
+    * and force spurious ones); a PQ store with no recorded marker rebuilds
     * once and records it.
     */
   def ensure(spark: SparkSession, dir: String, path: String): Unit =
-    graft.Profiling.timed("PqStore.ensure") { ensureImpl(spark, dir, path) }
-
-  private def ensureImpl(spark: SparkSession, dir: String, path: String): Unit = {
-    val books = new java.io.File(s"$path/codebooks")
-    // a store without persisted coarse centroids predates residual
-    // encoding, one without a rotation + kind marker predates the
-    // measured-selection OPQ — rebuild once into the self-contained layout
-    val hasCoarse = new java.io.File(s"$path/coarse").exists() &&
-      new java.io.File(s"$path/rotation").exists() &&
-      new java.io.File(s"$path/_rotation_kind").exists()
-    val clustered = Option(new java.io.File(s"$path/codes").listFiles())
-      .exists(_.exists(_.getName.startsWith("cell_id=")))
-    val ivfPath = IndexStore.defaultPath(dir)
-    // Refresh the coarse quantizer first: IndexStore.ensure rebuilds it
-    // (with a fresh `_build_id`) when the SOURCE DATA changed, and the
-    // marker comparison below then invalidates these codes too — without
-    // this call a stale-but-present IVF store would match the recorded
-    // marker and the ADC scan would serve codebooks trained on a corpus
-    // that no longer exists.
-    IndexStore.ensure(spark, dir, ivfPath)
-    val recorded = {
-      val p = java.nio.file.Paths.get(s"$path/_ivf_build_id")
-      if (java.nio.file.Files.exists(p))
-        Some(java.nio.file.Files.readString(p).trim)
-      else None
-    }
-    val staleVsIvf = new java.io.File(s"$ivfPath/centroids").exists() &&
-      (recorded.isEmpty || recorded != IndexStore.buildId(ivfPath))
-    if (!books.exists() || !hasCoarse || !clustered || staleVsIvf)
-      write(spark, dir, path)
-  }
+    graft.Profiling.timed("PqStore.ensure")(build(spark, dir, path, force = false))
 
   /** The ADC scoring stage shared by [[search]] and [[searchTombstoned]]:
     * every stored code row reconstructs its similarity to every query as a
@@ -799,24 +773,8 @@ object PqStore {
     val cpt = path + "_cpt"
     val tombstones = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
-    val srcP = java.nio.file.Paths.get(s"$path/_ivf_build_id")
-    // A source store with NO recorded build id is treated as STALE (the
-    // GraphIndex.compactQuery convention reads its marker unconditionally
-    // and throws if absent): an empty-string fallback would make "" match
-    // "" forever and a marker-less store permanently current.
-    val srcBuild =
-      if (java.nio.file.Files.exists(srcP))
-        Some(java.nio.file.Files.readString(srcP).trim)
-      else None
-    val marker = java.nio.file.Paths.get(s"$cpt/_built_from")
-    val current = srcBuild.nonEmpty && java.nio.file.Files.exists(marker) &&
-      srcBuild.contains(java.nio.file.Files.readString(marker).trim) &&
-      new java.io.File(s"$cpt/codes").exists() &&
-      new java.io.File(s"$cpt/coarse").exists() &&
-      new java.io.File(s"$cpt/rotation").exists()
-    if (!current) {
+    Artifact.ensure(cpt, Artifact.IvfBuildId.key(path), Seq("codes", "coarse", "rotation")) {
       compactTombstones(spark, path, cpt, tombstones)
-      java.nio.file.Files.writeString(marker, srcBuild.getOrElse("_no_src_build"))
     }
     search(spark, cpt, VectorSearch.querySet(spark, dir, 5), k)
   }
@@ -859,7 +817,7 @@ object PqStore {
     }.mkString("\nUNION ALL\n")
     spark.sql(
       s"""WITH q AS ($qRows),
-         |rq AS (SELECT /*+ BROADCAST(pq_rotation) */ q.qid, r.i,
+         |rq AS (SELECT /*+ BROADCAST(r) */ q.qid, r.i,
          |         CAST(dot(q.qvec, CAST(r.row AS ARRAY<FLOAT>)) AS FLOAT) AS x
          |       FROM q CROSS JOIN pq_rotation r),
          |rqa AS (SELECT qid,
@@ -973,13 +931,9 @@ object PqStore {
     // census — the query's actual semantics, measuring drift — plus a
     // marker check and the audit count, never a re-clone + re-absorb.
     val maintPath = defaultPath(dir) + "_maint"
-    val gen = graft.streaming.StreamOps.storeGeneration(half) + s" decision=$decision"
-    val marker = java.nio.file.Paths.get(s"$maintPath/_maint_from")
     val servingPath = if (decision == "absorb") maintPath else maintPath + "_rb"
-    val current = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker).trim == gen &&
-      new java.io.File(s"$servingPath/codes").exists()
-    if (!current) {
+    Artifact.ensure(maintPath, Artifact.generation(half) + s" decision=$decision",
+        Seq(s"$servingPath/codes"), Artifact.MaintFrom) {
       IndexStore.cloneStore(half, maintPath)
       batchCodes.write.mode("append").partitionBy("cell_id")
         .parquet(s"$maintPath/codes")
@@ -987,7 +941,6 @@ object PqStore {
         writeFrom(spark, servingPath,
           Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
           spark.read.parquet(s"$maintPath/coarse"))
-      java.nio.file.Files.writeString(marker, gen)
     }
     val codesAfter = spark.read.parquet(s"$servingPath/codes").count()
     tv.select(col("sub").cast("long").as("sub"), col("tv_micro"))
@@ -1045,12 +998,7 @@ object PqStore {
                          targetFiles: Int = 1): DataFrame = {
     val half = ensureCorpusHalf(spark, dir)
     val work = defaultPath(dir) + "_plc"
-    val gen = graft.streaming.StreamOps.storeGeneration(half)
-    val marker = java.nio.file.Paths.get(s"$work/_built_from")
-    val current = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker).trim == gen &&
-      new java.io.File(s"$work/codes").exists()
-    if (!current) {
+    Artifact.ensure(work, Artifact.generation(half), Seq("codes")) {
       IndexStore.cloneStore(half, work)
       val odd = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 2 === 1)
@@ -1076,7 +1024,6 @@ object PqStore {
           .partitionBy("cell_id")
           .parquet(s"$work/codes")
       }
-      java.nio.file.Files.writeString(marker, gen)
     }
     val corpusCodes = Tables.embeddings(spark, dir).count() * M
     spark.read.parquet(s"$work/codes")

@@ -67,13 +67,11 @@ object SortedLayout {
     */
   def ensureDocStore(spark: SparkSession, dir: String): String = {
     val path = docStorePath(dir)
-    if (!new java.io.File(s"$path/zonemap").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir)) {
+    Artifact.ensureSource(path, dir, Seq("zonemap")) {
       write(graft.Tables.documents(spark, dir), s"$path/data", "doc_id",
         numFiles = 8, maxRecordsPerFile = 1000000L)
       fileRanges(spark, s"$path/data", "doc_id")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/zonemap")
-      IndexStore.stampSourceFp(path, dir)
     }
     path
   }
@@ -163,8 +161,7 @@ object SortedLayout {
     */
   def ensureAbsorbStore(spark: SparkSession, dir: String): String = {
     val path = docStorePath(dir) + "_absorb"
-    if (!new java.io.File(s"$path/zonemap").exists() ||
-        !IndexStore.sourceFpCurrent(path, dir)) {
+    Artifact.ensureSource(path, dir, Seq("zonemap")) {
       graft.streaming.StreamOps.rmTree(new java.io.File(path))
       val docs = graft.Tables.documents(spark, dir)
       write(docs.filter(col("doc_id") % 2 === 0), s"$path/data", "doc_id",
@@ -172,7 +169,6 @@ object SortedLayout {
       fileRanges(spark, s"$path/data", "doc_id")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/zonemap")
       absorb(spark, path, docs.filter(col("doc_id") % 2 === 1), "doc_id", numFiles = 4)
-      IndexStore.stampSourceFp(path, dir)
     }
     path
   }

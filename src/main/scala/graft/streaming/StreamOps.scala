@@ -65,24 +65,6 @@ object StreamOps {
     f(pinned)
   }
 
-  /** Provenance string of a persisted store generation: the concatenated
-    * contents of its build/source markers. A completed streaming absorb
-    * records the HALF store's generation in a `_stream_complete` marker;
-    * later invocations may reuse the worked store only while the half they
-    * would clone from is identical in provenance.
-    */
-  private[graft] def storeGeneration(path: String): String = {
-    val dir = new java.io.File(path)
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && (f.getName.startsWith("_build_id") ||
-        f.getName.startsWith("_ivf_build_id") ||
-        f.getName.startsWith("_src_fp") ||
-        f.getName.startsWith("_rotation_kind")))
-      .sortBy(_.getName)
-      .map(f => f.getName + "=" + java.nio.file.Files.readString(f.toPath).trim)
-      .mkString("|")
-  }
-
   /** The streaming absorbs' run-to-run idempotence, promoted from per-batch
     * to per-run: absorb under fixed centroids/codebooks (and the graph's
     * deterministic link rule) is a pure function of (half store, source),
@@ -97,16 +79,10 @@ object StreamOps {
     * are about the streaming machinery itself. Same contract as every
     * `ensure*`: the BUILD is not the QUERY.
     */
-  private def reuseCompleted(work: String, half: String,
-                             options: Map[String, String]): Boolean = {
-    val m = java.nio.file.Paths.get(work, "_stream_complete")
-    options.isEmpty && java.nio.file.Files.exists(m) &&
-      java.nio.file.Files.readString(m).trim == storeGeneration(half)
-  }
-
-  private def markComplete(work: String, half: String): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "_stream_complete"), storeGeneration(half))
+  private def ensureRun(work: String, half: String, output: String,
+                        options: Map[String, String])(run: => Unit): Unit =
+    graft.sources.Artifact.ensure(work, graft.sources.Artifact.generation(half), Seq(output),
+      graft.sources.Artifact.StreamComplete, force = options.nonEmpty)(run)
 
   /** Recursive scratch-dir delete (local-FS dev/test paths only — production
     * stores live behind FileSystem APIs). Shared by the temp-dir users here
@@ -832,8 +808,8 @@ object StreamOps {
     import graft.sources.IndexStore
     val half = IndexStore.ensureCorpusHalf(spark, dir)
     val work = IndexStore.defaultPath(dir) + "_sab"
-    // per-run reset, completed runs reused (see [[reuseCompleted]])
-    if (!reuseCompleted(work, half, options)) {
+    // per-run reset, completed runs reused (see [[ensureRun]])
+    ensureRun(work, half, "rows", options) {
     IndexStore.cloneStore(half, work)
     val out = java.nio.file.Files.createTempDirectory("graft-storeabsorb").toString
     val schema = graft.Tables.embeddings(spark, dir).schema
@@ -875,7 +851,6 @@ object StreamOps {
           .start()
         q.awaitTermination()
       } finally rmTree(new java.io.File(out))
-      markComplete(work, half)
     }
     val queries = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 1 && col("vec_id") < 10)
@@ -941,8 +916,8 @@ object StreamOps {
     val half = GraphIndex.ensureHalf(spark, dir)
     val work = GraphIndex.defaultPath(dir) + "_gab"
     val absorbedDir = s"$work/absorbed_rows"
-    // per-run reset, completed runs reused (see [[reuseCompleted]])
-    if (!reuseCompleted(work, half, options)) {
+    // per-run reset, completed runs reused (see [[ensureRun]])
+    ensureRun(work, half, "edges", options) {
     IndexStore.cloneStore(half, work)
     val out = java.nio.file.Files.createTempDirectory("graft-graphabsorb").toString
     val schema = graft.Tables.embeddings(spark, dir).schema
@@ -1009,7 +984,6 @@ object StreamOps {
           .start()
         q.awaitTermination()
       } finally rmTree(new java.io.File(out))
-      markComplete(work, half)
     }
     val storeRows = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 0 || col("vec_id") % 10 === 1)
@@ -1078,8 +1052,8 @@ object StreamOps {
     import graft.sources.{IndexStore, PqStore}
     val half = PqStore.ensureCorpusHalf(spark, dir)
     val work = PqStore.defaultPath(dir) + "_pab"
-    // per-run reset, completed runs reused (see [[reuseCompleted]])
-    if (!reuseCompleted(work, half, options)) {
+    // per-run reset, completed runs reused (see [[ensureRun]])
+    ensureRun(work, half, "codes", options) {
     IndexStore.cloneStore(half, work)
     val out = java.nio.file.Files.createTempDirectory("graft-pqabsorb").toString
     val schema = graft.Tables.embeddings(spark, dir).schema
@@ -1126,7 +1100,6 @@ object StreamOps {
           .start()
         q.awaitTermination()
       } finally rmTree(new java.io.File(out))
-      markComplete(work, half)
     }
     val queries = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 1 && col("vec_id") < 10)

@@ -137,7 +137,7 @@ object BlowUp {
     // a blow-up of the PREVIOUS generation would silently compare
     // mismatched corpora — ScaleSweep/ShuffleAudit check this marker and
     // warn loudly when the sf1 dir is stale.
-    graft.sources.IndexStore.stampSourceFp(out, src)
+    graft.sources.Artifact.SrcFp.stamp(out, graft.sources.Artifact.sourceKey(src))
 
     spark.stop()
   }
@@ -146,7 +146,7 @@ object BlowUp {
     * content of `src` (stamped by [[main]]); pre-stamp dirs report false.
     */
   private[graft] def currentFor(out: String, src: String): Boolean =
-    graft.sources.IndexStore.sourceFpCurrent(out, src)
+    graft.sources.Artifact.sourceCurrent(out, src)
 }
 
 /** One-off stamper for a blow-up dir that predates the `_src_fp` scheme
@@ -192,7 +192,7 @@ object StampSf1 {
       println(s"sanity ok: ${factors.head._2}x blow-up across ${factors.size} fact tables")
       spark.stop()
     }
-    graft.sources.IndexStore.stampSourceFp(out, src)
+    graft.sources.Artifact.SrcFp.stamp(out, graft.sources.Artifact.sourceKey(src))
     println(s"stamped $out from $src")
   }
 }

@@ -136,7 +136,7 @@ object ScaleSweep {
     val sf1Dir = sys.env.get("SPARK_GRAFT_SF1_DIR")
     sf1Dir.filterNot(BlowUp.currentFor(_, SfDirs.last)).foreach { d =>
       System.err.println(s"WARN: sf1 dir $d was NOT generated from the CURRENT " +
-        s"${SfDirs.last} content (missing/stale _src_fp) — regenerate with " +
+        s"${SfDirs.last} content (missing/stale source stamp) — regenerate with " +
         "graft.tools.BlowUp or the 0.1→1 decade compares mismatched corpora")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -19,6 +19,22 @@ class KnnJoinSpec extends SparkSpec {
     assert(phys == decl)
   }
 
+  test("multi-partition base: the merge keeps the best k of all partition winners") {
+    val base = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding").repartition(4)
+    assert(base.rdd.getNumPartitions >= 4)
+    val q = VectorSearch.querySet(spark, sfDir, 5)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"qid").orderBy($"sim".desc, $"vec_id")
+    val phys = KnnJoinApi.knnJoin(spark, q, base, 5)
+      .withColumn("rank", row_number().over(w)).filter($"rank" <= 5)
+      .select($"qid", $"vec_id", $"rank",
+        graft.functions.VectorFunctions.micro($"sim").as("sim_micro"))
+      .orderBy($"qid", $"rank").collect().map(_.toSeq).toSeq
+    val decl = VectorSearch.knnDeclarative(q, base, 5).collect().map(_.toSeq).toSeq
+    assert(decl.size == 25)
+    assert(phys == decl, s"heap merge diverged: ${phys.take(5)} vs ${decl.take(5)}")
+  }
+
   test("the plan goes through KnnJoinExec") {
     val df = VectorSearch.knnExactPhysical(spark, sfDir)
     df.collect() // AQE finalizes the physical plan on execution

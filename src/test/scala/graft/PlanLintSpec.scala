@@ -1,5 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 /** Suite-wide scale lint: every registered query's physical plan is checked
   * for the two patterns that do not survive a 100× scale-up —
   * `CartesianProduct` (unbounded quadratic, never acceptable) and
@@ -81,11 +87,40 @@ class PlanLintSpec extends SparkSpec {
     // lazy-plan lint, exactly like lake_sql_graph_hier's and knn_graph's)
   )
 
-  test("no registered query plans a CartesianProduct or an un-allowlisted nested-loop join") {
-    val plans = SparkEntry.queries.toSeq
+  /** Runs `body` and returns what Spark's HintErrorLogger warned meanwhile
+    * — a hint naming a relation that is not in scope is dropped with only
+    * that warning, and the plan silently loses the join strategy it asked for.
+    */
+  private def hintWarnings[T](body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("plan-lint-hints", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try (body, seen.asScala.toSeq)
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
+  /** Every registered query's physical plan, planned once for both checks. */
+  private lazy val planned: (Seq[(String, String)], Seq[String]) = hintWarnings {
+    SparkEntry.queries.toSeq
       .filterNot { case (name, _) => streamingRuns(name) }
       .sortBy(_._1)
       .map { case (name, q) => name -> q(spark, sfDir).queryExecution.executedPlan.toString }
+  }
+
+  test("no registered query plans a CartesianProduct or an un-allowlisted nested-loop join") {
+    val plans = planned._1
     val cartesian = plans.collect { case (n, p) if p.contains("CartesianProduct") => n }
     assert(cartesian.isEmpty, s"CartesianProduct in: ${cartesian.mkString(", ")}")
     // exact-set compare: an un-allowlisted nested loop is a scale regression,
@@ -96,5 +131,10 @@ class PlanLintSpec extends SparkSpec {
       s"un-allowlisted BroadcastNestedLoopJoin in: ${(nested -- broadcastCrossOk).mkString(", ")}")
     assert((broadcastCrossOk -- nested).isEmpty,
       s"stale allowlist entries (no nested loop planned): ${(broadcastCrossOk -- nested).mkString(", ")}")
+  }
+
+  test("no registered query carries a hint Spark drops") {
+    val dropped = planned._2
+    assert(dropped.isEmpty, s"HintErrorLogger warnings while planning: ${dropped.mkString("; ")}")
   }
 }
