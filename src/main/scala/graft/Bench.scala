@@ -1,26 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE scan parallelism: the 4 MB openCostInBytes default
-      // floors maxSplitBytes at 4 MB, so a single-file 5-20 MB table scans
-      // with 2-4 tasks no matter the core count — compute-heavy scans
-      // (exact kNN, simhash, phash) are core-starved at every test SF. At
-      // 128 KB the split size follows totalBytes/defaultParallelism for
-      // small inputs while big inputs stay governed by maxPartitionBytes
-      // (128 MB) — behavior at 100 TB is unchanged (guide §6.1).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm up classloading/codegen so the first timed query isn't charged
     // for session startup.
     spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,38 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The names in a comma-separated query filter. A name that is not in
+    * [[SparkEntry.queries]] fails here: a typo would otherwise verify
+    * nothing and still exit 0.
+    */
+  def selectQueries(filter: String): Set[String] = {
+    val names = filter.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty, s"no query names in filter '$filter'")
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
     // The driver always passes exactly two; the optional third is the
     // local dev loop (verify just the queries being worked on).
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    val only: Option[Set[String]] = if (args.length > 2) Some(selectQueries(args(2))) else None
     // Pin the oracle's index-store paths to the sf dir actually verified:
     // SparkEntry.oracleSql derives knn_ivf/knn_pq/... artifact locations
     // from this property (default sf0.01) — see SparkEntry.oracleSfDir.
     sys.props("graft.oracle.sfdir") = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE scan parallelism: the 4 MB openCostInBytes default
-      // floors maxSplitBytes at 4 MB, so a single-file 5-20 MB table scans
-      // with 2-4 tasks no matter the core count — compute-heavy scans
-      // (exact kNN, simhash, phash) are core-starved at every test SF. At
-      // 128 KB the split size follows totalBytes/defaultParallelism for
-      // small inputs while big inputs stay governed by maxPartitionBytes
-      // (128 MB) — behavior at 100 TB is unchanged (guide §6.1).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A query that throws must be VISIBLE in the correctness report, not
     // absent from it: record it in errors.json AND write a one-row

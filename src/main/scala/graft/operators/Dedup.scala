@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.VectorFunctions._
 
 /** Deduplication family (SURVEY.md §2.3 + the LLM-pipeline north star):
@@ -701,8 +701,7 @@ object Dedup {
     val key = "spark.sql.shuffle.partitions"
     val sessionParts = spark.conf.get(key).toInt
     val loopParts = math.max(1L, math.min(sessionParts.toLong, nEdges / 65536 + 1))
-    spark.conf.set(key, loopParts.toString)
-    try {
+    GraftSession.withConf(spark, key, loopParts.toString) {
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -748,7 +747,7 @@ object Dedup {
     val members = edges.select(col("hi").as("node"), col("lo").as("label"))
     val centers = edges.select(col("lo").as("node"), col("lo").as("label")).distinct()
     (members.unionByName(centers).distinct(), i)
-    } finally spark.conf.set(key, sessionParts.toString)
+    }
   }
 
   /** Near-dup CLUSTERS: the step that turns pairwise hits into dedup
@@ -1022,9 +1021,8 @@ object Dedup {
     // partitions are pure per-task overhead × iterations).
     val key = "spark.sql.shuffle.partitions"
     val sessionParts = spark.conf.get(key).toInt
-    spark.conf.set(key,
-      math.max(1L, math.min(sessionParts.toLong, nEdges / 65536 + 1)).toString)
-    try {
+    GraftSession.withConf(spark, key,
+      math.max(1L, math.min(sessionParts.toLong, nEdges / 65536 + 1)).toString) {
       var pr = deg.select(col("src").as("node"), lit(1000000L).as("pr_micro"))
       for (_ <- 1 to iters) {
         pr = graph.join(pr, graph("src") === pr("node"))
@@ -1037,7 +1035,7 @@ object Dedup {
         .select(col("node"), col("pr_micro"), col("out_deg").cast("long").as("degree"))
         .orderBy(col("node"))
         .localCheckpoint()
-    } finally spark.conf.set(key, sessionParts.toString)
+    }
   }
 
   /** Staged dedup FUNNEL — the coverage report a curation pipeline emits
@@ -1126,9 +1124,8 @@ object Dedup {
     // Finer grain than pagerank's sizing: LPA rounds carry (node, label)
     // VOTE rows (≈ 2·|edges| per round) through TWO aggregates each, so a
     // single partition serializes real work — size to ~16k votes/task.
-    spark.conf.set(key,
-      math.max(1L, math.min(sessionParts.toLong, nEdges / 16384 + 1)).toString)
-    try {
+    GraftSession.withConf(spark, key,
+      math.max(1L, math.min(sessionParts.toLong, nEdges / 16384 + 1)).toString) {
       var lab = edges.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("label"))
       for (_ <- 1 to rounds) {
@@ -1146,7 +1143,7 @@ object Dedup {
         .select(col("node"), col("label"), col("community_size"))
         .orderBy(col("node"))
         .localCheckpoint()
-    } finally spark.conf.set(key, sessionParts.toString)
+    }
   }
 
   /** Corpus-wide exact SEGMENT dedup with document reconstruction — the

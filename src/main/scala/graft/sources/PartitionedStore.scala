@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Date-partitioned lake layout for the event stream — the third leg of
   * the layout triad ([[SortedLayout]] 1-D range, [[ZOrderLayout]] 2-D
@@ -414,15 +414,11 @@ object PartitionedStore {
          |  SELECT event_id, ts, user_id, event_type, value, props, event_date
          |  FROM lake_merge_upserts
          |)""".stripMargin)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.sql(
-      s"""INSERT OVERWRITE TABLE lake_merge_rows
-         |SELECT event_id, ts, user_id, event_type, value, props, event_date
-         |FROM lake_merge_stage""".stripMargin)
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+      spark.sql(
+        s"""INSERT OVERWRITE TABLE lake_merge_rows
+           |SELECT event_id, ts, user_id, event_type, value, props, event_date
+           |FROM lake_merge_stage""".stripMargin)
     }
     spark.sql(
       """SELECT event_type, count(*) AS n,

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Synthetic next-decade testdata: blow an existing sf dir up `factor`×
   * into a new dir, so ScaleSweep can measure the 0.1→1 decade — the first
@@ -58,13 +59,7 @@ object BlowUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/root/repo/data/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     def t(n: String) = spark.read.parquet(s"$src/$n.parquet")
     // single FILE per table, exactly like the driver's testdata — the
     // streaming sources rely on the `$dir/events.parquet*` glob trick
@@ -170,10 +165,7 @@ object StampSf1 {
     val out = if (pos.length > 1) pos(1) else "/root/repo/data/sf1"
     if (force) println(s"--force: skipping blow-up sanity check for $out")
     else {
-      val spark = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local()
       def factorOf(t: String): Long = {
         val s = spark.read.parquet(s"$src/$t.parquet")
         val o = spark.read.parquet(s"$out/$t.parquet")

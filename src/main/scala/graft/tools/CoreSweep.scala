@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Core-scaling evidence at a data-proportional SF (VERDICT r17 item 3):
-  * time the most DATA-BOUND bench queries at the core count given by
-  * `SPARK_GRAFT_CPUS` over the synthetic sf1 decade (`SPARK_GRAFT_SF1_DIR`,
-  * built by [[BlowUp]]; falls back to sf0.1). Run once with CPUS=32 and
-  * once with CPUS=8; the per-query ratio t(8c)/t(32c) against the 4×
+  * time the most DATA-BOUND bench queries at the core count of
+  * [[graft.GraftSession.cpus]] over the synthetic sf1 decade (`SPARK_GRAFT_SF1_DIR`,
+  * built by [[BlowUp]]; falls back to sf0.1). Run once at 32 cores and
+  * once at 8; the per-query ratio t(8c)/t(32c) against the 4×
   * core ratio is the scaling claim. The query set deliberately avoids the
   * memoPersist-fronted dedup family and the streaming fixed-cost runs —
   * their bench numbers measure cache warm-up / micro-batch machinery, not
@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol per query: one untimed warm run (store builds, JIT), then
   * median of 3 timed runs with cache cleared between runs (ScaleSweep's
-  * discipline). Writes CORESWEEP_<cpus>.json at the repo root.
+  * discipline). Writes CORESWEEP_<cpus>.json at the repo root, with the
+  * host's core count next to the requested one.
   */
 object CoreSweep {
 
@@ -39,21 +40,8 @@ object CoreSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args(0).split(",").toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE scan parallelism: the 4 MB openCostInBytes default
-      // floors maxSplitBytes at 4 MB, so a single-file 5-20 MB table scans
-      // with 2-4 tasks no matter the core count — compute-heavy scans
-      // (exact kNN, simhash, phash) are core-starved at every test SF. At
-      // 128 KB the split size follows totalBytes/defaultParallelism for
-      // small inputs while big inputs stay governed by maxPartitionBytes
-      // (128 MB) — behavior at 100 TB is unchanged (guide §6.1).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
@@ -76,6 +64,6 @@ object CoreSweep {
     val js = out.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"CORESWEEP_$cpus.json"),
-      (s"""{"cpus":$cpus,"sf_dir":"$sfDir","medians":$js}""" + "\n").getBytes("UTF-8"))
+      (s"""{"cpus":$cpus,"host_cores":${GraftSession.hostCores},"sf_dir":"$sfDir","medians":$js}""" + "\n").getBytes("UTF-8"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Empirical scaling-exponent evidence for the 100× claim: run the most
   * expensive bench queries at every driver testdata scale
@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * "Bench-variance contract"). Everything runs serially in one warm JVM
   * at the bench session config.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScaleSweep"
+  * Usage: sbt "runMain graft.tools.ScaleSweep" (cores: [[graft.GraftSession.cpus]])
   *        (optional arg: comma-separated query names)
   * Writes SCALING.md at the repo root and prints the same table.
   */
@@ -139,21 +139,8 @@ object ScaleSweep {
         s"${SfDirs.last} content (missing/stale source stamp) — regenerate with " +
         "graft.tools.BlowUp or the 0.1→1 decade compares mismatched corpora")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE scan parallelism: the 4 MB openCostInBytes default
-      // floors maxSplitBytes at 4 MB, so a single-file 5-20 MB table scans
-      // with 2-4 tasks no matter the core count — compute-heavy scans
-      // (exact kNN, simhash, phash) are core-starved at every test SF. At
-      // 128 KB the split size follows totalBytes/defaultParallelism for
-      // small inputs while big inputs stay governed by maxPartitionBytes
-      // (128 MB) — behavior at 100 TB is unchanged (guide §6.1).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // (query, sf dir) -> median seconds
@@ -184,7 +171,7 @@ object ScaleSweep {
     lines += ""
     lines += "Generated by `graft.tools.ScaleSweep`: median of 3 timed runs per"
     lines += "(query, sf) after one untimed warm run, serial, one JVM, bench session"
-    lines += "config (local[" + cpus + "]). Row counts scale linearly with sf, so the"
+    lines += "config (local[" + cpus + "] on a " + GraftSession.hostCores + "-core host). Row counts scale linearly with sf, so the"
     lines += "per-decade exponent is `slope = log10(t(10·sf)/t(sf))`: 1.0 = linear,"
     lines += "n·log n ≈ 1.05, flag threshold 1.3 on the LARGEST measured decade (the"
     lines += "small decade measures per-job overhead at sub-second totals, not the"

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Exact byte-level evidence for the 100 TB scale story: run each audited
   * query at sf0.01 and sf0.1 and capture, from a task-metrics listener,
@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   * then one measured run with the cache cleared — byte totals are stable
   * across runs (unlike wall-clock), so one measured run suffices.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ShuffleAudit"
+  * Usage: sbt "runMain graft.tools.ShuffleAudit" (cores: [[graft.GraftSession.cpus]])
   *        (optional arg: comma-separated query names)
   * Writes SHUFFLE.md at the repo root and prints the same table.
   */
@@ -91,13 +91,7 @@ object ShuffleAudit {
         s"${SfDirs.last} content (missing/stale source stamp) — regenerate with " +
         "graft.tools.BlowUp or the 0.1→1 decade compares mismatched corpora")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch profiler: time named queries N times in one JVM (bench-identical
   * session config) to separate fixed per-job overhead from plan cost.
@@ -10,21 +10,7 @@ object TimeQueries {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args(1).split(",").toSeq
                 else Seq("knn_ivf", "knn_pq", "knn_lsh", "knn_exact", "q1_pricing")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE scan parallelism: the 4 MB openCostInBytes default
-      // floors maxSplitBytes at 4 MB, so a single-file 5-20 MB table scans
-      // with 2-4 tasks no matter the core count — compute-heavy scans
-      // (exact kNN, simhash, phash) are core-starved at every test SF. At
-      // 128 KB the split size follows totalBytes/defaultParallelism for
-      // small inputs while big inputs stay governed by maxPartitionBytes
-      // (128 MB) — behavior at 100 TB is unchanged (guide §6.1).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
     for (q <- names; i <- 1 to 3) {
