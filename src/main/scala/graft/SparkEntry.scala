@@ -2,20 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
-import graft.streaming.StreamOps
+import graft.queries.{Oracle, Queries, QueryDef}
 
 /** Driver contract — the engine's public query surface (SURVEY.md §2).
   *
-  * Every operator family from the survey inventory is wired here as a named
-  * query over the driver testdata, and (where ANSI-SQL-expressible) paired
-  * with a DuckDB oracle in [[oracleSql]]. Non-SQL operators (k-means/IVF,
-  * xxhash64-based MinHash/SimHash, the hashing featurizer, HLL) are verified
-  * by ScalaTest property specs instead and get rows-only driver checks.
-  *
-  * Convention for oracle-checked outputs: all integers surface as BIGINT,
-  * floats as DOUBLE, money/decimal sums as fixed-point BIGINT (cents /
-  * ten-thousandths), similarity scores as floor(1e6·x) BIGINT — so the
-  * hash-compare never sees engine-specific numeric formatting.
+  * Every operator family from the survey inventory is a named query over
+  * the testdata, stated once as a [[graft.queries.QueryDef]] in its family
+  * file under `graft/queries/`, and (where ANSI-SQL-expressible) paired
+  * with a DuckDB oracle. Non-SQL operators are verified by ScalaTest
+  * property specs instead and get rows-only checks.
   */
 object SparkEntry {
 
@@ -27,386 +22,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     VectorSearch.knnExact(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.5/§2.7/§2.8 — vector search (the flagship surface)
-    "knn_exact" -> ((s, d) => VectorSearch.knnExact(s, d)),
-    "knn_exact_sql" -> ((s, d) => VectorSearch.knnExactSql(s, d)),
-    "vec_sql_kernels" -> ((s, d) => VectorSearch.sqlKernelsQuery(s, d)),
-    "knn_exact_phys" -> ((s, d) => VectorSearch.knnExactPhysical(s, d)),
-    "knn_batch" -> ((s, d) => VectorSearch.knnBatch(s, d)),
-    "knn_batch_oracle" -> ((s, d) => VectorSearch.knnBatchOracle(s, d)),
-    "knn_hard_negatives" -> ((s, d) => VectorSearch.hardNegatives(s, d)),
-    // Greedy MMR: each pick conditions the next, but k = 5 is a FIXED pick
-    // count — the greedy recursion unrolls into 5 CTE argmax steps over the
-    // deterministic candidate pool, so it IS oracle-replayable (mmrSql).
-    "knn_mmr" -> ((s, d) => VectorSearch.mmrRerank(s, d).toDF()
-      .orderBy(org.apache.spark.sql.functions.col("qid"),
-        org.apache.spark.sql.functions.col("rank"))),
-    "knn_range" -> ((s, d) => VectorSearch.rangeSearch(s, d)),
-    "knn_range_ivf" -> ((s, d) => graft.sources.IndexStore.rangeQuery(s, d)),
-    "index_stats" -> ((s, d) => graft.sources.IndexStore.statsQuery(s, d)),
-    "knn_filtered" -> ((s, d) => VectorSearch.knnFiltered(s, d)),
-    "rag_fusion" -> ((s, d) => VectorSearch.ragFusion(s, d)),
-    "knn_lsh" -> ((s, d) => VectorSearch.knnLsh(s, d)),
-    "knn_multiprobe" -> ((s, d) => VectorSearch.knnMultiProbe(s, d)),
-    "knn_maxsim" -> ((s, d) => VectorSearch.maxSim(s, d)),
-    "knn_maxsim_pruned" -> ((s, d) => VectorSearch.maxSimPruned(s, d)),
-    "knn_matryoshka" -> ((s, d) => VectorSearch.knnMatryoshka(s, d)),
-    "knn_binary" -> ((s, d) => VectorSearch.knnBinary(s, d)),
-    "knn_ivf" -> ((s, d) => graft.sources.IndexStore.searchQuery(s, d)),
-    "knn_graph" -> ((s, d) => graft.sources.GraphIndex.searchQuery(s, d)),
-    // The three-level (HNSW upper-layer) entry descent, forced on at every
-    // sf: top cross → level-2 walk over edges_l2 → level-1 walk over
-    // edges_l1 → level-0 walk.
-    "knn_graph_hier" -> ((s, d) => graft.sources.GraphIndex.searchHierQuery(s, d)),
-    // Reference-batch-scale walk (nq=400): frontier past MaxInlineIds, so
-    // the DISTRIBUTED (non-inline) hop route runs and is oracle-checked.
-    "knn_graph_batch" -> ((s, d) => graft.sources.GraphIndex.searchBatchQuery(s, d)),
-    // DELETE on the graph index: walk traverses dead nodes, results
-    // exclude them below the rank window (HNSW tombstoning).
-    "graph_tombstone" -> ((s, d) => graft.sources.GraphIndex.searchTombstonedQuery(s, d)),
-    // Offline compaction of the tombstoned graph (HNSW delete-repair):
-    // dead nodes physically gone, their neighborhoods bridge-relinked.
-    "graph_compact" -> ((s, d) => graft.sources.GraphIndex.compactQuery(s, d)),
-    // The ef dial measured: recall@5 per beam level, one real walk each.
-    "graph_recall_curve" -> ((s, d) => graft.sources.GraphIndex.recallCurve(s, d)),
-    // ...and self-tuned: smallest measured beam clearing the target drives
-    // the serve walk (decision cached per build via _tuned_beam marker).
-    "graph_autotune" -> ((s, d) => graft.sources.GraphIndex.autoTuneSearch(s, d)),
-    "graph_degree_stats" -> ((s, d) => graft.sources.GraphIndex.degreeStats(s, d)),
-    "knn_rewrite" -> ((s, d) => graft.sources.IndexStore.rewriteSearchQuery(s, d)),
-    "lake_sql_ann" -> ((s, d) => graft.sources.IndexStore.sqlAnnQuery(s, d)),
-    // SQL route to graph search: the unrolled beam walk as ONE SQL text
-    // over the graph_edges/graph_vectors catalog views.
-    "lake_sql_graph" -> ((s, d) => graft.sources.GraphIndex.sqlGraphQuery(s, d)),
-    // SQL route to the THREE-level hierarchical walk — the scale-out SQL
-    // surface (lake_sql_graph itself stays flat-pinned like knn_graph).
-    "lake_sql_graph_hier" -> ((s, d) => graft.sources.GraphIndex.sqlGraphHierQuery(s, d)),
-    // SQL route to compressed ADC search: LUT cross + code join + rank
-    // window as ONE SQL text over the pq_codes/pq_codebooks views.
-    "lake_sql_pq" -> ((s, d) => graft.sources.PqStore.sqlPqQuery(s, d)),
-    "knn_tombstone" -> ((s, d) => graft.sources.IndexStore.searchTombstoned(s, d)),
-    "knn_recall_report" -> ((s, d) => graft.sources.IndexStore.recallReport(s, d)),
-    "knn_rank_eval" -> ((s, d) => graft.sources.IndexStore.mrrReport(s, d)),
-    "embed_centroid_drift" -> ((s, d) => graft.sources.IndexStore.centroidDrift(s, d)),
-    "embed_maintain" -> ((s, d) => graft.sources.IndexStore.maintainQuery(s, d)),
-    "knn_recall_curve" -> ((s, d) => graft.sources.IndexStore.recallSweep(s, d)),
-    "knn_autotune" -> ((s, d) => graft.sources.IndexStore.autoTuneSearch(s, d)),
-    "knn_pq" -> ((s, d) => graft.sources.PqStore.searchQuery(s, d)),
-    // DELETE on the PQ store: tombstone anti-join below the ADC rank
-    // window — the third leg of the delete matrix (IVF knn_tombstone,
-    // graph graph_tombstone, PQ here), same vec_id % 17 = 3 victim set.
-    "knn_pq_tombstone" -> ((s, d) => graft.sources.PqStore.searchTombstoned(s, d)),
-    // ...and its maintenance half: fold the tombstones into a compacted
-    // sibling store (no retrain — FAISS remove_ids keeps the quantizers),
-    // then plain ADC search with no filter anywhere.
-    "pq_compact" -> ((s, d) => graft.sources.PqStore.compactQuery(s, d)),
-    // Drift-driven PQ maintenance (embed_maintain's PQ twin): code-usage
-    // census TV per subspace decides absorb vs retrain; the decision and
-    // the acted-on store's conservation census are the result.
-    "pq_maintain" -> ((s, d) => graft.sources.PqStore.maintainQuery(s, d)),
-    // Small-files hygiene on the absorb append paths: fragment, audit
-    // files-per-cell, compact cells above target, return the audit.
-    "pq_layout_compact" -> ((s, d) => graft.sources.PqStore.layoutCompactQuery(s, d)),
-    "ivf_layout_compact" -> ((s, d) => graft.sources.IndexStore.layoutCompactQuery(s, d)),
-    "knn_doc_join" -> ((s, d) => VectorSearch.knnDocJoin(s, d)),
-    "vec_normalize" -> ((s, d) => VectorSearch.normalizeQuery(s, d)),
-    "vec_quantize" -> ((s, d) => Quantize.quantizeQuery(s, d)),
-    "knn_quantized" -> ((s, d) => Quantize.knnQuantized(s, d)),
-    "vec_pair_metrics" -> ((s, d) => VectorSearch.pairMetricsQuery(s, d)),
-    // §2.4 — CRUD surface
-    "crud_insert" -> ((s, d) => Crud.insert(s, d)),
-    "crud_delete_last_n" -> ((s, d) => Crud.deleteLastN(s, d)),
-    "crud_delete_pred" -> ((s, d) => Crud.deleteByPredicate(s, d)),
-    "crud_delete_seeded" -> ((s, d) => Crud.deleteSeeded(s, d)),
-    "crud_update" -> ((s, d) => Crud.update(s, d)),
-    "crud_update_positional" -> ((s, d) => Crud.updatePositional(s, d)),
-    "crud_upsert" -> ((s, d) => Crud.upsert(s, d)),
-    "crud_point_lookup" -> ((s, d) => Crud.pointLookup(s, d)),
-    "crud_counts" -> ((s, d) => Crud.counts(s, d)),
-    // §2.3 + LLM-pipeline — dedup family
-    "dedup_keep_first" -> ((s, d) => Dedup.keepFirst(s, d)),
-    "dedup_exact" -> ((s, d) => Dedup.exactDedup(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLshPairs(s, d)),
-    "dedup_minhash_md5" -> ((s, d) => Dedup.minhashMd5Pairs(s, d)),
-    "dedup_lsh_eval" -> ((s, d) => Dedup.lshEval(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simhashPairs(s, d)),
-    "dedup_simhash_md5" -> ((s, d) => Dedup.simhashMd5Pairs(s, d)),
-    "dedup_containment" -> ((s, d) => Dedup.containmentPairs(s, d)),
-    "dedup_threshold_curve" -> ((s, d) => Dedup.thresholdCurve(s, d)),
-    "dedup_incremental" -> ((s, d) => Dedup.incrementalNearDup(s, d)),
-    "dedup_bloom" -> ((s, d) => Dedup.bloomIncrementalDedup(s, d)),
-    "dedup_cdc" -> ((s, d) => Dedup.cdcDedup(s, d)),
-    "dedup_funnel" -> ((s, d) => Dedup.dedupFunnel(s, d)),
-    "dedup_cdc_incremental" -> ((s, d) => Dedup.cdcIncremental(s, d)),
-    "text_novelty_decay" -> ((s, d) => TextAnalysis.noveltyDecay(s, d)),
-    "events_changepoint" -> ((s, d) => Relational.changepoint(s, d)),
-    "events_wau" -> ((s, d) => Relational.wauReport(s, d)),
-    "events_type_gini" -> ((s, d) => Relational.typeGini(s, d)),
-    "events_transitions" -> ((s, d) => Relational.transitionMatrix(s, d)),
-    "text_quality_curve" -> ((s, d) => TextAnalysis.qualityBudgetCurve(s, d)),
-    "dedup_paragraph" -> ((s, d) => Dedup.paragraphDedup(s, d)),
-    "dedup_substring" -> ((s, d) => Dedup.substringRuns(s, d)),
-    "dedup_substring_stats" -> ((s, d) => Dedup.substringStats(s, d)),
-    "dedup_substring_prune" -> ((s, d) => Dedup.substringPrune(s, d)),
-    "dedup_source_matrix" -> ((s, d) => Dedup.substringSourceMatrix(s, d)),
-    "graph_pagerank" -> ((s, d) => Dedup.dupPagerank(s, d)),
-    "graph_label_prop" -> ((s, d) => Dedup.dupLabelProp(s, d)),
-    "dedup_edit_distance" -> ((s, d) => Dedup.editDistancePairs(s, d)),
-    "dedup_clusters" -> ((s, d) => Dedup.nearDupClusters(s, d)),
-    "dedup_keep_best" -> ((s, d) => Dedup.keepBestDedup(s, d)),
-    // Library-default auto-bits (~64 vectors per sign-LSH bucket): the
-    // oracle replays the same bits-from-count formula in SQL, so the
-    // anchored query IS the scale path — a pinned small bits value would
-    // make the in-bucket self-join quadratic at corpus scale. (bits=4 is
-    // exercised as a spec-only case in DedupSpec.)
-    "dedup_embedding" -> ((s, d) => Dedup.embeddingNearDup(s, d)),
-    "dedup_embedding_banded" -> ((s, d) => Dedup.embeddingNearDupBanded(s, d)),
-    "decontam_embedding" -> ((s, d) => Dedup.embeddingDecontam(s, d)),
-    "dedup_semantic" -> ((s, d) => Dedup.semanticDedup(s, d)),
-    // LLM-pipeline — text analysis
-    "text_stats" -> ((s, d) => TextAnalysis.textStats(s, d)),
-    "text_lang_id" -> ((s, d) => TextAnalysis.langId(s, d)),
-    "text_lang_confusion" -> ((s, d) => TextAnalysis.langConfusion(s, d)),
-    "text_token_count" -> ((s, d) => TextAnalysis.tokenCount(s, d)),
-    "text_fingerprint" -> ((s, d) => TextAnalysis.fingerprint(s, d)),
-    "text_bigram_top" -> ((s, d) => TextAnalysis.bigramTop(s, d)),
-    "text_quality" -> ((s, d) => TextAnalysis.qualityGate(s, d)),
-    "text_tfidf" -> ((s, d) => TextAnalysis.tfIdf(s, d)),
-    "text_decontaminate" -> ((s, d) => TextAnalysis.decontaminate(s, d)),
-    "text_commonness" -> ((s, d) => TextAnalysis.commonness(s, d)),
-    "text_lm_score" -> ((s, d) => TextAnalysis.lmScore(s, d)),
-    "text_redact" -> ((s, d) => TextAnalysis.redactQuery(s)),
-    "text_repetition" -> ((s, d) => TextAnalysis.repetitionSignals(s, d)),
-    "text_vocab" -> ((s, d) => TextAnalysis.vocabReport(s, d)),
-    "text_bpe_merges" -> ((s, d) => TextAnalysis.bpeMerges(s, d)),
-    "text_unigram_lm" -> ((s, d) => TextAnalysis.unigramLm(s, d)),
-    "text_bpe_encode" -> ((s, d) => TextAnalysis.bpeEncode(s, d)),
-    "text_chunk" -> ((s, d) => TextAnalysis.chunk(s, d)),
-    "text_bm25" -> ((s, d) => TextAnalysis.bm25(s, d)),
-    "text_phrase_search" -> ((s, d) => TextAnalysis.phraseSearch(s, d)),
-    "sample_split" -> ((s, d) => Sampling.trainTestSplit(s, d)),
-    "sample_split_grouped" -> ((s, d) => Sampling.groupedSplit(s, d)),
-    "sample_split_cluster" -> ((s, d) => Sampling.clusterSplit(s, d)),
-    "corpus_offsets" -> ((s, d) => Sampling.globalOffsets(s, d)),
-    "sample_uniform" -> ((s, d) => Sampling.uniformSample(s, d)),
-    "sample_stratified" -> ((s, d) => Sampling.stratifiedSample(s, d)),
-    "sample_domain_cap" -> ((s, d) => Sampling.domainCap(s, d)),
-    "sample_mix" -> ((s, d) => Sampling.mixSample(s, d)),
-    "sample_quality_tiers" -> ((s, d) => Sampling.qualityTierSample(s, d)),
-    "corpus_pack" -> ((s, d) => Sampling.packSequences(s, d)),
-    "corpus_shuffle" -> ((s, d) => Sampling.epochShuffle(s, d)),
-    "corpus_budget_plan" -> ((s, d) => Sampling.budgetPlan(s, d)),
-    "sample_dsir" -> ((s, d) => Sampling.dsirSelect(s, d)),
-    "sample_weighted" -> ((s, d) => Sampling.weightedSample(s, d)),
-    "sample_neyman" -> ((s, d) => Sampling.neymanPlan(s, d)),
-    "corpus_budget_temperature" -> ((s, d) => Sampling.temperaturePlan(s, d)),
-    "knn_ivfpq" -> ((s, d) => graft.sources.PqStore.searchIvfPq(s, d)),
-    "knn_refine" -> ((s, d) => graft.sources.PqStore.searchRefined(s, d)),
-    "pipeline_clean_corpus" -> ((s, d) => TextAnalysis.cleanCorpus(s, d)),
-    "pipeline_curate" -> ((s, d) => TextAnalysis.curatePipeline(s, d)),
-    "pipeline_corpus_stats" -> ((s, d) => TextAnalysis.corpusStats(s, d)),
-    // LLM-pipeline — embedding + multimodal plumbing
-    "embed_docs" -> ((s, d) => EmbedQueries.embedDocs(s, d)),
-    "embed_dim_stats" -> ((s, d) => EmbedQueries.dimStats(s, d)),
-    "embed_gram" -> ((s, d) => EmbedQueries.gramMatrix(s, d)),
-    "embed_top_eigen" -> ((s, d) => EmbedQueries.topEigen(s, d)),
-    "media_meta" -> ((s, d) => Multimodal.mediaMeta(s, d)),
-    "media_decode" -> ((s, d) => EmbedQueries.mediaDecode(s, d)),
-    "media_decode_real" -> ((s, d) => Multimodal.realDecodeQuery(s, d)),
-    "media_phash" -> ((s, d) => Multimodal.phashQuery(s, d)),
-    "media_phash_pairs" -> ((s, d) => Multimodal.phashPairsQuery(s, d)),
-    "dedup_crossmodal" -> ((s, d) => Multimodal.crossModalQuery(s, d)),
-    "media_frames" -> ((s, d) => Multimodal.framesQuery(s, d)),
-    "media_resize" -> ((s, d) => Multimodal.resizeQuery(s, d)),
-    // §2.6–§2.9 — relational breadth
-    "q1_pricing" -> ((s, d) => Relational.q1Pricing(s, d)),
-    "q3_shipping" -> ((s, d) => Relational.q3Shipping(s, d)),
-    "q5_local_supplier" -> ((s, d) => Relational.q5LocalSupplier(s, d)),
-    "q10_returns" -> ((s, d) => Relational.q10Returns(s, d)),
-    "q18_big_customers" -> ((s, d) => Relational.q18BigCustomers(s, d)),
-    "q14_promo_share" -> ((s, d) => Relational.q14PromoShare(s, d)),
-    "basket_pairs" -> ((s, d) => Relational.basketPairs(s, d)),
-    "orders_pareto" -> ((s, d) => Relational.revenueConcentration(s, d)),
-    "q6_forecast_revenue" -> ((s, d) => Relational.q6ForecastRevenue(s, d)),
-    "q17_small_quantity" -> ((s, d) => Relational.q17SmallQuantity(s, d)),
-    "q8_market_share" -> ((s, d) => Relational.q8MarketShare(s, d)),
-    "q4_order_priority" -> ((s, d) => Relational.q4OrderPriority(s, d)),
-    "q7_volume_shipping" -> ((s, d) => Relational.q7VolumeShipping(s, d)),
-    "q12_priority_class" -> ((s, d) => Relational.q12PriorityClass(s, d)),
-    "q19_disjunctive" -> ((s, d) => Relational.q19Disjunctive(s, d)),
-    "q21_waiting_supplier" -> ((s, d) => Relational.q21WaitingSupplier(s, d)),
-    "q22_idle_customers" -> ((s, d) => Relational.q22IdleCustomers(s, d)),
-    "q2_min_cost_supplier" -> ((s, d) => Relational.q2MinCostSupplier(s, d)),
-    "q9_product_profit" -> ((s, d) => Relational.q9ProductProfit(s, d)),
-    "q11_important_parts" -> ((s, d) => Relational.q11ImportantParts(s, d)),
-    "q13_order_distribution" -> ((s, d) => Relational.q13OrderDistribution(s, d)),
-    "q15_top_supplier" -> ((s, d) => Relational.q15TopSupplier(s, d)),
-    "q16_supplier_cnt" -> ((s, d) => Relational.q16SupplierCount(s, d)),
-    "q20_excess_suppliers" -> ((s, d) => Relational.q20ExcessSuppliers(s, d)),
-    "graph_triangles" -> ((s, d) => Relational.graphTriangles(s, d)),
-    "events_anomaly_rolling" -> ((s, d) => Relational.rollingAnomaly(s, d)),
-    "join_salted_skew" -> ((s, d) => Relational.saltedSkewJoin(s, d)),
-    "join_size_estimate" -> ((s, d) => Relational.joinSizeEstimate(s, d)),
-    "join_semi" -> ((s, d) => Relational.semiJoin(s, d)),
-    "join_anti" -> ((s, d) => Relational.antiJoin(s, d)),
-    "window_top_orders" -> ((s, d) => Relational.windowTopOrders(s, d)),
-    "window_running" -> ((s, d) => Relational.windowRunning(s, d)),
-    "window_rank_family" -> ((s, d) => Relational.windowRankFamily(s, d)),
-    "agg_array" -> ((s, d) => Relational.arrayAgg(s, d)),
-    "sql_correlated" -> ((s, d) => Relational.sqlCorrelated(s, d)),
-    "agg_rollup" -> ((s, d) => Relational.aggRollup(s, d)),
-    "agg_cube" -> ((s, d) => Relational.aggCube(s, d)),
-    "agg_distinct" -> ((s, d) => Relational.aggDistinct(s, d)),
-    // HLL++ values aren't SQL-recomputable, but the error-bound VERDICT
-    // over the exported estimates is — exact side recomputed by both
-    // engines (export-replay; see Relational.aggApproxDistinctAudit).
-    "agg_approx_distinct" -> ((s, d) => Relational.aggApproxDistinctAudit(s, d)),
-    "agg_salted" -> ((s, d) => Relational.aggSalted(s, d)),
-    "agg_percentiles" -> ((s, d) => Relational.aggPercentiles(s, d)),
-    // GK rank-error verdict over the exported sketch values (export-replay).
-    "agg_approx_percentile" -> ((s, d) => Relational.aggApproxPercentileAudit(s, d)),
-    "agg_winsorized" -> ((s, d) => Relational.aggWinsorized(s, d)),
-    "sql_grouping_sets" -> ((s, d) => Relational.sqlGroupingSets(s, d)),
-    "agg_moments" -> ((s, d) => Relational.aggMoments(s, d)),
-    "time_extract" -> ((s, d) => Relational.timeExtract(s, d)),
-    "value_histogram" -> ((s, d) => Relational.valueHistogram(s, d)),
-    "quality_audit" -> ((s, d) => Relational.qualityAudit(s, d)),
-    "profile_columns" -> ((s, d) => Relational.profileColumns(s, d)),
-    "zorder_box" -> ((s, d) => graft.sources.ZOrderLayout.boxQuery(s, d)),
-    "partitioned_prune" -> ((s, d) => graft.sources.PartitionedStore.pruneQuery(s, d)),
-    "partitioned_dpp" -> ((s, d) => graft.sources.PartitionedStore.dppQuery(s, d)),
-    "lake_sql_prune" -> ((s, d) => graft.sources.PartitionedStore.sqlPruneQuery(s, d)),
-    "lake_sql_dpp" -> ((s, d) => graft.sources.PartitionedStore.sqlDppQuery(s, d)),
-    "lake_sql_hidden" -> ((s, d) => graft.sources.PartitionedStore.sqlHiddenQuery(s, d)),
-    "partitioned_backfill" -> ((s, d) => graft.sources.PartitionedStore.backfillQuery(s, d)),
-    "partitioned_merge" -> ((s, d) => graft.sources.PartitionedStore.mergeQuery(s, d)),
-    // The MERGE through the SQL DML surface (views + INSERT OVERWRITE).
-    "lake_sql_merge" -> ((s, d) => graft.sources.PartitionedStore.sqlMergeQuery(s, d)),
-    "partitioned_hidden" -> ((s, d) => graft.sources.PartitionedStore.hiddenRouteQuery(s, d)),
-    "partitioned_layout_stats" -> ((s, d) => graft.sources.PartitionedStore.layoutStats(s, d)),
-    "partitioned_retention" -> ((s, d) => graft.sources.PartitionedStore.retentionQuery(s, d)),
-    "partitioned_compact" -> ((s, d) => graft.sources.PartitionedStore.compactQuery(s, d)),
-    "partitioned_time_travel" -> ((s, d) => graft.sources.PartitionedStore.timeTravelQuery(s, d)),
-    // Snapshot expiry + orphan vacuum: the time-travel mechanism's day-2
-    // half (expire v1, unlink unreferenced files, verdict-checked).
-    "partitioned_vacuum" -> ((s, d) => graft.sources.PartitionedStore.vacuumQuery(s, d)),
-    "knn_filtered_adaptive" -> ((s, d) => VectorSearch.knnFilteredAdaptive(s, d)),
-    "text_phrase_lift" -> ((s, d) => TextAnalysis.phraseLift(s, d)),
-    "text_keyphrases" -> ((s, d) => TextAnalysis.keyphrases(s, d)),
-    "sorted_prune" -> ((s, d) => graft.sources.SortedLayout.rangeQuery(s, d)),
-    "sorted_absorb" -> ((s, d) => graft.sources.SortedLayout.absorbQuery(s, d)),
-    "snapshot_diff" -> ((s, d) => Crud.snapshotDiff(s, d)),
-    "agg_partial_merge" -> ((s, d) => Relational.partialMerge(s, d)),
-    "agg_incremental_refresh" -> ((s, d) => Relational.incrementalRefresh(s, d)),
-    "stats_contingency" -> ((s, d) => Relational.contingency(s, d)),
-    "stats_skew_report" -> ((s, d) => Relational.skewReport(s, d)),
-    "text_heaps_curve" -> ((s, d) => TextAnalysis.heapsCurve(s, d)),
-    "schema_drift_union" -> ((s, d) => Relational.schemaDriftUnion(s, d)),
-    // Misra-Gries counts are partition-order dependent, but the classical
-    // undercount guarantee over the exported summary is engine-checkable:
-    // both engines recount the exported tokens exactly and hash-compare
-    // the bound verdict (export-replay; see HeavyHitters.topTokensAudit).
-    "agg_heavy_hitters" -> ((s, d) => HeavyHitters.topTokensAudit(s, d)),
-    // Count-Min point-query sketch: estimates exported once per corpus
-    // content, both engines recompute the exact side + the 8n/width
-    // Markov bound verdict (export-replay; see HeavyHitters.countMinAudit).
-    "agg_countmin" -> ((s, d) => HeavyHitters.countMinAudit(s, d)),
-    // KMV/theta set-operation sketch: pairwise union/intersection distinct
-    // estimates combined from the k-row sketches alone, exported once,
-    // exact sides recomputed by both engines (export-replay).
-    "agg_kmv_setops" -> ((s, d) => HeavyHitters.kmvSetOpsAudit(s, d)),
-    "events_outliers" -> ((s, d) => Relational.outlierAudit(s, d)),
-    "events_gapfill" -> ((s, d) => Relational.gapFill(s, d)),
-    "pivot_events" -> ((s, d) => Relational.pivotEvents(s, d)),
-    "set_intersect" -> ((s, d) => Relational.setIntersect(s, d)),
-    "set_except" -> ((s, d) => Relational.setExcept(s, d)),
-    "set_intersect_all" -> ((s, d) => Relational.setIntersectAll(s, d)),
-    "set_except_all" -> ((s, d) => Relational.setExceptAll(s, d)),
-    "join_full_outer" -> ((s, d) => Relational.joinFullOuter(s, d)),
-    "value_counts_top" -> ((s, d) => Relational.valueCountsTop(s, d)),
-    // §2.1/§2.11 — multi-model sweep, ops metrics, catalog surface
-    "metrics_combined" -> ((s, d) => MultiModel.combinedMetrics(s, d)),
-    "metrics_ops" -> ((s, d) => OpsMetrics.opsMetrics(s, d)),
-    "catalog_ops" -> ((s, d) => CatalogOps.catalogQuery(s, d)),
-    // §2.1–§2.2 — flow-CSV pipeline parity
-    "flow_packet_text" -> ((s, d) => FlowParity.packetText(s, d)),
-    "flow_clean_cast" -> ((s, d) => FlowParity.cleanCast(s, d)),
-    "flow_synth_packets" -> ((s, d) => FlowParity.synthPackets(s)),
-    "flow_split_extract" -> ((s, d) => FlowParity.splitExtract(s, d)),
-    "flow_offset_resume" -> ((s, d) => FlowParity.offsetResume(s, d)),
-    "flow_resume_keyed" -> ((s, d) => FlowParity.resumeKeyed(s, d)),
-    "flow_json_extract" -> ((s, d) => FlowParity.jsonExtract(s, d)),
-    "flow_normalize" -> ((s, d) => FlowParity.normalizeText(s, d)),
-    "metrics_summary" -> ((s, d) => FlowParity.metricsSummary(s, d)),
-    "metrics_two_level" -> ((s, d) => FlowParity.metricsTwoLevel(s, d)),
-    // §2.9–§2.10 — temporal / sessionization / as-of
-    "events_hourly" -> ((s, d) => Temporal.eventsHourly(s, d)),
-    "sessionize" -> ((s, d) => Temporal.sessionize(s, d)),
-    "window_sliding" -> ((s, d) => Temporal.eventsSliding(s, d)),
-    "asof_join" -> ((s, d) => Temporal.asofClickView(s, d)),
-    "range_join_bucketed" -> ((s, d) => Temporal.rangeJoinBucketed(s, d)),
-    "events_funnel" -> ((s, d) => Temporal.eventsFunnel(s, d)),
-    "events_retention" -> ((s, d) => Temporal.retentionCohorts(s, d)),
-    "scd2_build" -> ((s, d) => Temporal.scd2Build(s, d)),
-    "scd2_merge" -> ((s, d) => Temporal.scd2Merge(s, d)),
-    "scd2_pit_lookup" -> ((s, d) => Temporal.scd2PitLookup(s, d)),
-    "lake_sql_pit" -> ((s, d) => Temporal.sqlPitQuery(s, d)),
-    "events_attribution" -> ((s, d) => Temporal.lastTouchAttribution(s, d)),
-    // §2.10 — an actual Structured Streaming execution, oracle-checked
-    "stream_hourly" -> ((s, d) => StreamOps.streamHourly(s, d)),
-    "stream_interval_join" -> ((s, d) => StreamOps.streamIntervalJoin(s, d)),
-    "stream_knn" -> ((s, d) => StreamOps.streamKnnSearch(s, d)),
-    "stream_dedup_ingest" -> ((s, d) => StreamOps.streamDedupIngest(s, d)),
-    // The reference's incremental Add Data loop: per-micro-batch absorb
-    // into the clustered store, per-batch searchability asserted in-run.
-    "stream_store_absorb" -> ((s, d) => StreamOps.streamStoreAbsorb(s, d)),
-    // The same Add Data loop landing in the GRAPH index (the reference's
-    // actual HNSW collection), per-batch beam-searchability asserted in-run.
-    "stream_graph_absorb" -> ((s, d) => StreamOps.streamGraphAbsorb(s, d)),
-    // ...and in the PQ store (FAISS IndexIVFPQ.add): map-side encode under
-    // fixed codebooks, per-batch code presence + bit-exactness asserted.
-    "stream_pq_absorb" -> ((s, d) => StreamOps.streamPqAbsorb(s, d)),
-    "stream_partitioned_ingest" -> ((s, d) => StreamOps.streamPartitionedIngest(s, d)),
-    "stream_bloom_ingest" -> ((s, d) => StreamOps.streamBloomIngest(s, d)),
-    "stream_dedup" -> ((s, d) => StreamOps.streamDedupRun(s, d)),
-    // Real flatMapGroupsWithState execution, checked against the batch
-    // windowed-SQL sessionize oracle (identical gap rule).
-    "stream_sessionize" -> ((s, d) => StreamOps.streamSessionize(s, d)),
-    // Real stateful funnel run, checked against the batch events_funnel
-    // oracle (same strict-sequence stage minima).
-    "stream_funnel" -> ((s, d) => StreamOps.streamFunnel(s, d)),
-    // CDC changelog apply: batch windowed form + the real stateful
-    // streaming run, one oracle text (the SQL replay of the fold).
-    "cdc_apply" -> ((s, d) => Temporal.cdcApply(s, d)),
-    "stream_cdc_apply" -> ((s, d) => StreamOps.streamCdcApply(s, d)),
-    "stream_enrich" -> ((s, d) => StreamOps.streamEnrich(s, d)),
-    "stream_trending" -> ((s, d) => StreamOps.streamTrending(s, d)),
-  )
+  /** Every registered query's builder, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.all.map { case (n, q) => n -> q.build }
 
-  // ------------------------------------------------------------ oracles --
-
-  /** Sequential left-fold dot product in DuckDB, mirroring Spark's
-    * `aggregate(zip_with(...))` accumulation order exactly (both are
-    * element-order left folds in double precision ⇒ bit-identical).
-    */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      s"s -> CAST(s[1] AS DOUBLE)*CAST(s[2] AS DOUBLE))), (acc,x) -> acc+x)"
-
-  private def sqDistSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      s"s -> (CAST(s[1] AS DOUBLE)-CAST(s[2] AS DOUBLE))*(CAST(s[1] AS DOUBLE)-CAST(s[2] AS DOUBLE)))), (acc,x) -> acc+x)"
-
-  /** sqDist where the right side is a stored ARRAY<DOUBLE> centroid that the
-    * Spark plan first narrows to float (`centroid.cast("array<float>")`) —
-    * mirror the double→float→double round-trip for bit-exactness.
-    */
-  private def sqDistCentroidSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      s"s -> (CAST(s[1] AS DOUBLE)-CAST(CAST(s[2] AS FLOAT) AS DOUBLE))*(CAST(s[1] AS DOUBLE)-CAST(CAST(s[2] AS FLOAT) AS DOUBLE)))), (acc,x) -> acc+x)"
+  /** The DuckDB SQL of every query that has an oracle, built on this call. */
+  def oracleSql: Map[String, String] = Queries.all.collect {
+    case (n, QueryDef(_, _, Oracle.Sql(text), _)) => n -> text()
+  }
 
   /** The data dir the ORACLE SQL assumes the index stores were built from.
     * [[Verify]] pins the `graft.oracle.sfdir` system property to the sfDir
@@ -421,3948 +44,4 @@ object SparkEntry {
     sys.props.get("graft.oracle.sfdir")
       .orElse(sys.env.get("SPARK_GRAFT_ORACLE_SF_DIR"))
       .getOrElse("/root/testdata/sf0.01")
-
-  /** Where graft.sources.IndexStore persists the IVF index the driver's
-    * Verify run builds — the oracle replays the probed search over these
-    * exported centroid/assignment artifacts in pure SQL. A `def` (not a
-    * `val`): [[oracleSql]] re-derives it from [[oracleSfDir]] on each call.
-    */
-  private def ivfStorePath = graft.sources.IndexStore.defaultPath(oracleSfDir)
-  private def partStorePath = graft.sources.PartitionedStore.defaultPath(oracleSfDir)
-
-  /** Where graft.sources.PqStore persists the PQ codebooks/codes the
-    * Verify run builds — the oracle replays the ADC search over them.
-    */
-  private def pqStorePath = graft.sources.PqStore.defaultPath(oracleSfDir)
-
-  /** Where graft.sources.GraphIndex persists the NN-Descent kNN graph the
-    * Verify run builds — the oracle replays the unrolled beam walk over the
-    * exported edge list in pure SQL.
-    */
-  private def graphStorePath = graft.sources.GraphIndex.defaultPath(oracleSfDir)
-
-  /** Fixed-hop beam search replayed in SQL over the exported kNN-graph
-    * edges — the HNSW-twin `knn_graph` query. Hop h: take the beam best
-    * visited per query (window rank over v(h-1)), expand their out-edges,
-    * score the destinations (same left-fold dot, same float payloads —
-    * the edge list stores the unchanged embedding values), and fold into
-    * the visited set with the (qid, vec_id) max-sim dedupe. Entry set,
-    * beam, hop count, self-exclusion and tie-breaks mirror
-    * GraphIndex.search exactly.
-    */
-  private def graphBeamSearchSql(beam: Int = 32, hops: Int = 4, k: Int = 5,
-                                 edgesPath: String = null,
-                                 qWhere: String = "vec_id < 5",
-                                 finalWhere: String = "",
-                                 auditSelect: String = "",
-                                 auditFrom: String = "",
-                                 entWhere: String = "TRUE"): String = {
-    val stride = graft.sources.GraphIndex.entryStride
-    val ep = if (edgesPath == null) graphStorePath else edgesPath
-    val hopCtes = (1 to hops).map { h =>
-      s"""f$h AS (SELECT qid, vec_id FROM (
-         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS fr FROM v${h - 1})
-         |  WHERE fr <= $beam),
-         |n$h AS (SELECT f$h.qid, e.dst AS vec_id, ${dotSql("q.qvec", "b.embedding")} AS sim
-         |        FROM f$h JOIN e ON e.src = f$h.vec_id
-         |        JOIN embeddings b ON b.vec_id = e.dst
-         |        JOIN q ON q.qid = f$h.qid),
-         |v$h AS (SELECT qid, vec_id, max(sim) AS sim
-         |        FROM (SELECT * FROM v${h - 1} UNION ALL SELECT * FROM n$h) GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
-       |           FROM read_parquet('$ep/edges/*.parquet')),
-       |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE $qWhere),
-       |ent AS (SELECT vec_id, embedding FROM embeddings
-       |        WHERE vec_id % $stride = 0 AND $entWhere),
-       |v0 AS (SELECT q.qid, ent.vec_id, ${dotSql("q.qvec", "ent.embedding")} AS sim
-       |       FROM q CROSS JOIN ent),
-       |$hopCtes
-       |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-       |       CAST(rank AS BIGINT) AS rank, ${microSql("sim")} AS sim_micro$auditSelect
-       |FROM (SELECT qid, vec_id, sim,
-       |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-       |      FROM v$hops WHERE vec_id <> qid$finalWhere)$auditFrom
-       |WHERE rank <= $k ORDER BY qid, rank""".stripMargin
-  }
-
-  /** Three-level walk replay for `knn_graph_hier`: v0 is the LEVEL-2 sample
-    * cross (every (stride·l1Factor²)-th vec_id — HNSW's top layer), hops
-    * 1..l1Hops expand over the exported LEVEL-2 edges (`edges_l2`, the
-    * coarse-node graph GraphIndex.ensureLevel derives once per build), the
-    * next l1Hops over the LEVEL-1 edges (`edges_l1`, the stride-node
-    * graph), and the remaining hops walk the level-0 edges — same window
-    * tie-breaks, same max-sim dedupe, so the replay is row-identical to
-    * the forced hierarchical DataFrame walk.
-    */
-  private def graphHierSearchSql(beam: Int = 32, hops: Int = 4, k: Int = 5): String = {
-    val stride = graft.sources.GraphIndex.entryStride
-    val l1Factor = graft.sources.GraphIndex.l1Factor
-    val coarseStride = stride.toLong * l1Factor * l1Factor
-    val l1Hops = graft.sources.GraphIndex.l1Hops
-    val hopCtes = (1 to (2 * l1Hops + hops)).map { h =>
-      val edgeCte = if (h <= l1Hops) "el2" else if (h <= 2 * l1Hops) "el" else "e"
-      s"""f$h AS (SELECT qid, vec_id FROM (
-         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS fr FROM v${h - 1})
-         |  WHERE fr <= $beam),
-         |n$h AS (SELECT f$h.qid, x.dst AS vec_id, ${dotSql("q.qvec", "b.embedding")} AS sim
-         |        FROM f$h JOIN $edgeCte x ON x.src = f$h.vec_id
-         |        JOIN embeddings b ON b.vec_id = x.dst
-         |        JOIN q ON q.qid = f$h.qid),
-         |v$h AS (SELECT qid, vec_id, max(sim) AS sim
-         |        FROM (SELECT * FROM v${h - 1} UNION ALL SELECT * FROM n$h) GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
-       |           FROM read_parquet('$graphStorePath/edges/*.parquet')),
-       |el AS (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
-       |       FROM read_parquet('$graphStorePath/edges_l1/*.parquet')),
-       |el2 AS (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
-       |        FROM read_parquet('$graphStorePath/edges_l2/*.parquet')),
-       |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-       |c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % $coarseStride = 0),
-       |v0 AS (SELECT q.qid, c.vec_id, ${dotSql("q.qvec", "c.embedding")} AS sim
-       |       FROM q CROSS JOIN c),
-       |$hopCtes
-       |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-       |       CAST(rank AS BIGINT) AS rank, ${microSql("sim")} AS sim_micro
-       |FROM (SELECT qid, vec_id, sim,
-       |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-       |      FROM v${2 * l1Hops + hops} WHERE vec_id <> qid)
-       |WHERE rank <= $k ORDER BY qid, rank""".stripMargin
-  }
-
-  /** Recall-vs-beam replay for `graph_recall_curve`: one unrolled walk
-    * chain PER beam level over the same exported edges (a narrower beam
-    * walks a different frontier — no membership shortcut exists, unlike
-    * the IVF cell-rank curve), an exact brute-force leg, and a membership
-    * count per level. Every multiply-referenced CTE is MATERIALIZED —
-    * DuckDB inlines CTE plans per reference, and 3 beam chains × 4 hops
-    * of doubly-referenced visited sets would otherwise re-execute the
-    * recursion exponentially (the text_unigram_lm lesson).
-    */
-  private def graphRecallCurveSql(beams: Seq[Int] = Seq(4, 8, 32),
-                                  hops: Int = 4, k: Int = 5): String = {
-    val unionHits = beams.map(b => s"SELECT * FROM hit_$b").mkString(" UNION ALL ")
-    s"""WITH ${graphCurveCtes(beams, hops, k)}
-       |SELECT h.beam, h.n_found, ne.n_exact,
-       |       CAST(h.n_found * 1000000 // ne.n_exact AS BIGINT) AS recall_micro
-       |FROM ($unionHits) h CROSS JOIN ne ORDER BY h.beam""".stripMargin
-  }
-
-  /** Self-tuned beam search replay for `graph_autotune`: the curve CTEs,
-    * the decision (smallest beam clearing the target, widest as the
-    * infeasible fallback — the graph is approximate at any ef), and one
-    * more walk chain whose per-hop frontier cut is the DECISION as a
-    * scalar subquery, so the replay audits knob derivation AND the
-    * search it drives in one statement (the knn_autotune convention).
-    */
-  private def graphAutotuneSql(beams: Seq[Int] = Seq(4, 8, 32),
-                               hops: Int = 4, k: Int = 5,
-                               targetMicro: Long = 900000L): String = {
-    val unionHits = beams.map(b => s"SELECT * FROM hit_$b").mkString(" UNION ALL ")
-    val hopCtes = (1 to hops).map { h =>
-      s"""f${h}_t AS MATERIALIZED (SELECT qid, vec_id FROM (
-         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS fr FROM v${h - 1}_t)
-         |  WHERE fr <= (SELECT chosen FROM pick)),
-         |n${h}_t AS (SELECT f.qid, e.dst AS vec_id, ${dotSql("q.qvec", "bb.embedding")} AS sim
-         |        FROM f${h}_t f JOIN e ON e.src = f.vec_id
-         |        JOIN embeddings bb ON bb.vec_id = e.dst
-         |        JOIN q ON q.qid = f.qid),
-         |v${h}_t AS MATERIALIZED (SELECT qid, vec_id, max(sim) AS sim
-         |        FROM (SELECT * FROM v${h - 1}_t UNION ALL SELECT * FROM n${h}_t) GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${graphCurveCtes(beams, hops, k)},
-       |curve AS (SELECT h.beam, CAST(h.n_found * 1000000 // ne.n_exact AS BIGINT) AS recall_micro
-       |          FROM ($unionHits) h CROSS JOIN ne),
-       |pick AS (SELECT COALESCE(
-       |           (SELECT min(beam) FROM curve WHERE recall_micro >= $targetMicro),
-       |           (SELECT max(beam) FROM curve)) AS chosen),
-       |v0_t AS (SELECT * FROM v0),
-       |$hopCtes
-       |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-       |       CAST(rank AS BIGINT) AS rank, ${microSql("sim")} AS sim_micro,
-       |       (SELECT chosen FROM pick) AS beam
-       |FROM (SELECT qid, vec_id, sim,
-       |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-       |      FROM v${hops}_t WHERE vec_id <> qid)
-       |WHERE rank <= $k ORDER BY qid, rank""".stripMargin
-  }
-
-  /** Shared WITH-body for the graph curve replays: edges, queries, entry
-    * sample, hop-0 scores, the brute-force exact leg, and one unrolled
-    * walk chain + membership count PER beam level.
-    */
-  private def graphCurveCtes(beams: Seq[Int], hops: Int, k: Int): String = {
-    val stride = graft.sources.GraphIndex.entryStride
-    val chains = beams.map { b =>
-      val hopCtes = (1 to hops).map { h =>
-        s"""f${h}_$b AS MATERIALIZED (SELECT qid, vec_id FROM (
-           |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS fr FROM v${h - 1}_$b)
-           |  WHERE fr <= $b),
-           |n${h}_$b AS (SELECT f.qid, e.dst AS vec_id, ${dotSql("q.qvec", "bb.embedding")} AS sim
-           |        FROM f${h}_$b f JOIN e ON e.src = f.vec_id
-           |        JOIN embeddings bb ON bb.vec_id = e.dst
-           |        JOIN q ON q.qid = f.qid),
-           |v${h}_$b AS MATERIALIZED (SELECT qid, vec_id, max(sim) AS sim
-           |        FROM (SELECT * FROM v${h - 1}_$b UNION ALL SELECT * FROM n${h}_$b) GROUP BY 1, 2)""".stripMargin
-      }.mkString(",\n")
-      s"""v0_$b AS (SELECT * FROM v0),
-         |$hopCtes,
-         |top_$b AS (SELECT qid, vec_id FROM (
-         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-         |  FROM v${hops}_$b WHERE vec_id <> qid) WHERE rank <= $k),
-         |hit_$b AS (SELECT CAST($b AS BIGINT) AS beam, CAST(count(*) AS BIGINT) AS n_found
-         |  FROM top_$b t JOIN exact x ON x.qid = t.qid AND x.vec_id = t.vec_id)""".stripMargin
-    }.mkString(",\n")
-    s"""e AS MATERIALIZED (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
-       |           FROM read_parquet('$graphStorePath/edges/*.parquet')),
-       |q AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-       |ent AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % $stride = 0),
-       |v0 AS MATERIALIZED (SELECT q.qid, ent.vec_id, ${dotSql("q.qvec", "ent.embedding")} AS sim
-       |       FROM q CROSS JOIN ent),
-       |s AS (SELECT q.qid, b2.vec_id, ${dotSql("q.qvec", "b2.embedding")} AS sim
-       |      FROM embeddings b2 CROSS JOIN q WHERE b2.vec_id <> q.qid),
-       |exact AS MATERIALIZED (SELECT qid, vec_id FROM (
-       |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-       |  WHERE rank <= $k),
-       |ne AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM exact),
-       |$chains""".stripMargin
-  }
-
-  /** Where graft.operators.Dedup exports the xxhash64 sketch frames — the
-    * oracle replays the banding / Hamming joins over the exports (the
-    * sketch construction itself is engine-specific; its correctness is
-    * pinned by the md5 twins + specs).
-    */
-  private def sketchStorePath = graft.operators.Dedup.sketchStorePath(oracleSfDir)
-
-  /** dot where the right side is a stored ARRAY<DOUBLE> centroid the Spark
-    * plan narrows to float first — mirror the double→float→double round-trip.
-    */
-  private def dotCentroidSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      s"s -> CAST(s[1] AS DOUBLE)*CAST(CAST(s[2] AS FLOAT) AS DOUBLE))), (acc,x) -> acc+x)"
-
-  private def microSql(x: String): String =
-    s"CAST(floor(($x)*1000000.0) AS BIGINT)"
-
-  /** Unrolled power-iteration replay for `embed_top_eigen`: the Gram CTE
-    * (same arithmetic as the `embed_gram` oracle), symmetrized edges, and
-    * `rounds` matvec+renormalize steps in pure integer arithmetic —
-    * signed floor division expressed as (u − ((u % d + d) % d)) // d,
-    * which equals Spark's (u − pmod(u, d)) DIV d at every sign because
-    * the numerator is an exact multiple of d.
-    */
-  private def topEigenSql(dims: Int = 16, rounds: Int = 5): String = {
-    val head =
-      s"""WITH g AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-         |       CAST(sum(CAST(floor(CAST(embedding[CAST(i + 1 AS INTEGER)] AS DOUBLE)
-         |                           * CAST(embedding[CAST(j + 1 AS INTEGER)] AS DOUBLE)
-         |                           * 1000000.0) AS BIGINT)) AS BIGINT) AS w
-         |     FROM embeddings CROSS JOIN range(0, $dims) ti(i) CROSS JOIN range(0, $dims) tj(j)
-         |     WHERE i <= j GROUP BY i, j),
-         |e AS (SELECT i, j, w FROM g UNION ALL SELECT j AS i, i AS j, w FROM g WHERE i <> j),
-         |v0 AS (SELECT CAST(i AS BIGINT) AS j, CAST(1000 AS BIGINT) AS v FROM range(0, $dims) t(i))""".stripMargin
-    val steps = (1 to rounds).map { r =>
-      s"""u$r AS (SELECT e.i AS i, CAST(sum(e.w * v.v) AS BIGINT) AS u
-         |        FROM e JOIN v${r - 1} v ON e.j = v.j GROUP BY e.i),
-         |d$r AS (SELECT greatest(CAST(max(abs(u)) AS BIGINT) // 1000, 1) AS d FROM u$r),
-         |v$r AS (SELECT u.i AS j, CAST((u - (((u % d) + d) % d)) // d AS BIGINT) AS v
-         |        FROM u$r u, d$r)""".stripMargin
-    }.mkString(",\n")
-    val tail =
-      s"""uf AS (SELECT e.i AS i, CAST(sum(e.w * v.v) AS BIGINT) AS u
-         |       FROM e JOIN v$rounds v ON e.j = v.j GROUP BY e.i),
-         |lam AS (SELECT greatest(CAST(max(abs(u)) AS BIGINT) // 1000, 1) AS lambda_micro FROM uf),
-         |tr AS (SELECT CAST(sum(w) AS BIGINT) AS trace_micro FROM g WHERE i = j)
-         |SELECT v.j AS comp, v.v AS eigvec_milli, lambda_micro, trace_micro,
-         |       CAST(lambda_micro * 1000 // trace_micro AS BIGINT) AS top_share_permille
-         |FROM v$rounds v, lam, tr ORDER BY comp""".stripMargin
-    s"$head,\n$steps,\n$tail"
-  }
-
-  /** Greedy MMR (λ = 0.7, k = 5, pool 30) unrolled into 5 CTE argmax steps
-    * — the same replay trick that oracle'd the graph beam walk: the pick
-    * count is fixed, so "each pick conditions the next" unrolls into a
-    * static chain. Step i scores every unpicked pool row as
-    * 0.7·rel − (1−0.7)·max(pairwise sim vs picks so far) and takes the
-    * argmax (ties → lower vec_id), exactly the mapGroups loop in
-    * [[graft.operators.VectorSearch.mmrRerank]]; rel and the pairwise sims
-    * are the identical left-fold doubles both engines compute bit-for-bit,
-    * and 0.7/(1.0-0.7) parse to the same IEEE doubles in both engines, so
-    * every comparison and the floored micro output agree exactly.
-    */
-  private def mmrSql: String = {
-    val score = "0.7*rel - (1.0-0.7)*red"
-    val steps = (2 to 5).map { i =>
-      s"""r$i AS (SELECT c.qid, c.vec_id, c.rel, max(pr.psim) AS red
-         |      FROM pool c JOIN pairs pr ON pr.qid = c.qid AND pr.v1 = c.vec_id
-         |      JOIN k${i - 1} kk ON kk.qid = pr.qid AND kk.vec_id = pr.v2
-         |      WHERE NOT EXISTS (SELECT 1 FROM k${i - 1} x WHERE x.qid = c.qid AND x.vec_id = c.vec_id)
-         |      GROUP BY 1, 2, 3),
-         |p$i AS (SELECT qid, vec_id, score FROM (
-         |      SELECT qid, vec_id, $score AS score,
-         |             row_number() OVER (PARTITION BY qid ORDER BY $score DESC, vec_id) AS rn FROM r$i)
-         |      WHERE rn = 1),
-         |k$i AS (SELECT * FROM k${i - 1} UNION ALL SELECT qid, vec_id FROM p$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-       |s AS (SELECT q.qid, e.vec_id, e.embedding, ${dotSql("q.qvec", "e.embedding")} AS rel
-       |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-       |pool AS (SELECT qid, vec_id, embedding, rel FROM (
-       |      SELECT qid, vec_id, embedding, rel,
-       |             row_number() OVER (PARTITION BY qid ORDER BY rel DESC, vec_id) AS pr FROM s)
-       |      WHERE pr <= 30),
-       |pairs AS (SELECT a.qid, a.vec_id AS v1, b.vec_id AS v2, ${dotSql("a.embedding", "b.embedding")} AS psim
-       |      FROM pool a JOIN pool b ON a.qid = b.qid AND a.vec_id <> b.vec_id),
-       |p1 AS (SELECT qid, vec_id, 0.7*rel AS score FROM (
-       |      SELECT qid, vec_id, rel, row_number() OVER (PARTITION BY qid ORDER BY 0.7*rel DESC, vec_id) AS rn FROM pool)
-       |      WHERE rn = 1),
-       |k1 AS (SELECT qid, vec_id FROM p1),
-       |$steps,
-       |allp AS (SELECT qid, vec_id, 1 AS rank, score FROM p1
-       |  UNION ALL SELECT qid, vec_id, 2, score FROM p2
-       |  UNION ALL SELECT qid, vec_id, 3, score FROM p3
-       |  UNION ALL SELECT qid, vec_id, 4, score FROM p4
-       |  UNION ALL SELECT qid, vec_id, 5, score FROM p5)
-       |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-       |       CAST(rank AS BIGINT) AS rank, ${microSql("score")} AS mmr_micro
-       |FROM allp ORDER BY qid, rank""".stripMargin
-  }
-
-  /** Unrolled BPE merge-round replay (TextAnalysis.bpeMerges): each round
-    * is a CTE block — pair count over the current segmentation, 1-row
-    * lexicographic argmax, gaps-and-islands parity selection (greedy
-    * non-overlapping left-to-right merge), re-segment + renumber. All
-    * integer arithmetic and string equality, so the hash is exact.
-    */
-  private def bpeSelResegSql(prevSeg: String, best: String, sel: String,
-                             seg: String): String =
-    s"""$sel AS (SELECT *, is_cand AND
-       |        (row_number() OVER (PARTITION BY word, is_cand, grp ORDER BY pos) - 1) % 2 = 0 AS selected
-       |      FROM (SELECT *, pos - row_number() OVER (PARTITION BY word, is_cand ORDER BY pos) AS grp
-       |            FROM (SELECT x.*, b.left_sym, b.right_sym,
-       |                         (nxt IS NOT NULL AND sym = b.left_sym AND nxt = b.right_sym) AS is_cand
-       |                  FROM (SELECT word, n, pos, sym,
-       |                               lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-       |                        FROM $prevSeg) x CROSS JOIN $best b))),
-       |$seg AS (SELECT word, n,
-       |        CAST(row_number() OVER (PARTITION BY word ORDER BY pos) - 1 AS BIGINT) AS pos,
-       |        CASE WHEN selected THEN left_sym || right_sym ELSE sym END AS sym
-       |      FROM (SELECT *, COALESCE(lag(selected) OVER (PARTITION BY word ORDER BY pos), false) AS consumed
-       |            FROM $sel)
-       |      WHERE NOT consumed)""".stripMargin
-
-  /** Shared train-side CTEs: corpus word count, bounded type table,
-    * char segmentation, and per-round (best, sel, seg) chain.
-    */
-  private def bpeTrainCtes(rounds: Int, topWords: Int): String = {
-    val blocks = (1 to rounds).map { r =>
-      s"""best$r AS (SELECT sym AS left_sym, nxt AS right_sym,
-         |        CAST(sum(n) AS BIGINT) AS pair_count
-         |      FROM (SELECT word, n, pos, sym,
-         |                   lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-         |            FROM seg${r - 1})
-         |      WHERE nxt IS NOT NULL GROUP BY 1, 2
-         |      ORDER BY pair_count DESC, left_sym, right_sym LIMIT 1),
-         |""".stripMargin +
-        bpeSelResegSql(s"seg${r - 1}", s"best$r", s"sel$r", s"seg$r")
-    }.mkString(",\n")
-    s"""w0 AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-       |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM w0
-       |      WHERE length(word) >= 2 GROUP BY 1
-       |      ORDER BY n DESC, word LIMIT $topWords),
-       |seg0 AS (SELECT word, n, CAST(pos AS BIGINT) AS pos, substr(word, pos + 1, 1) AS sym
-       |      FROM (SELECT word, n, unnest(range(length(word))) AS pos FROM wc)),
-       |$blocks""".stripMargin
-  }
-
-  private def bpeSql(rounds: Int = 4, topWords: Int = 300): String = {
-    val sums = (1 to rounds).map { r =>
-      s"""sum$r AS (SELECT CAST($r AS BIGINT) AS merge_round, b.left_sym, b.right_sym, b.pair_count,
-         |        (SELECT CAST(count(*) AS BIGINT) FROM sel$r WHERE selected) AS merge_sites,
-         |        (SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) FROM sel$r WHERE selected) AS merged_mass,
-         |        (SELECT CAST(count(DISTINCT sym) AS BIGINT) FROM seg$r) AS vocab_size,
-         |        (SELECT CAST(count(*) AS BIGINT) FROM seg$r) AS n_positions,
-         |        (SELECT CAST(sum(n * length(sym)) AS BIGINT) FROM seg$r) AS char_mass
-         |      FROM best$r b)""".stripMargin
-    }.mkString(",\n")
-    val union = (1 to rounds).map(r => s"SELECT * FROM sum$r").mkString("\n  UNION ALL ")
-    s"""WITH ${bpeTrainCtes(rounds, topWords)},
-       |$sums
-       |SELECT * FROM ($union) ORDER BY merge_round""".stripMargin
-  }
-
-  /** Unigram-LM trainer replay — the bounded type table, the
-    * substring-census seed inventory, then `rounds` unrolled EM rounds:
-    * forward Viterbi DP and backward reconstruction as RECURSIVE CTEs per
-    * round (the exact integer objective of `TextAnalysis.viterbiPieces` —
-    * fewest pieces via the 10¹² penalty, then max Σ count, longest-piece
-    * tie-break as the CASE cascade), usage recount, char-floored inventory
-    * update. Entirely integer, so the final census hashes identically.
-    */
-  private def unigramLmSql(rounds: Int = 3, topWords: Int = 300,
-                           topK: Int = 50): String = {
-    // The DP carry width (b0..b3) and substring join legs (q1..q4) below
-    // are generated for exactly this piece length; the engine pins it as a
-    // constant so the two can't silently diverge (ADVICE r12).
-    require(graft.operators.TextAnalysis.UnigramMaxPieceLen == 4,
-      "unigramLmSql's recursive-CTE replay is structurally generated for maxPieceLen=4")
-    val big = "1000000000000"
-    def dpCte(r: Int): String = {
-      val p = s"p${r - 1}"
-      s"""dp$r AS MATERIALIZED (
-         |  SELECT word, len(word) AS wl, 0 AS j,
-         |         CAST(0 AS BIGINT) AS b0, CAST(NULL AS BIGINT) AS b1,
-         |         CAST(NULL AS BIGINT) AS b2, CAST(NULL AS BIGINT) AS b3
-         |  FROM wc
-         |  UNION ALL
-         |  SELECT d.word, d.wl, d.j + 1,
-         |         greatest(
-         |           CASE WHEN q1.cnt IS NOT NULL THEN d.b0 + q1.cnt END,
-         |           CASE WHEN q2.cnt IS NOT NULL THEN d.b1 + q2.cnt END,
-         |           CASE WHEN q3.cnt IS NOT NULL THEN d.b2 + q3.cnt END,
-         |           CASE WHEN q4.cnt IS NOT NULL THEN d.b3 + q4.cnt END) - $big AS b0,
-         |         d.b0, d.b1, d.b2
-         |  FROM dp$r d
-         |  LEFT JOIN $p q1 ON q1.piece = substring(d.word, d.j + 1, 1)
-         |  LEFT JOIN $p q2 ON d.j >= 1 AND q2.piece = substring(d.word, d.j, 2)
-         |  LEFT JOIN $p q3 ON d.j >= 2 AND q3.piece = substring(d.word, d.j - 1, 3)
-         |  LEFT JOIN $p q4 ON d.j >= 3 AND q4.piece = substring(d.word, d.j - 2, 4)
-         |  WHERE d.j < d.wl)""".stripMargin
-    }
-    def wkCte(r: Int): String = {
-      val p = s"p${r - 1}"
-      s"""wk$r AS MATERIALIZED (
-         |  SELECT word, len(word) AS j, CAST(NULL AS VARCHAR) AS piece FROM wc
-         |  UNION ALL
-         |  SELECT word, j - lb, substring(word, j - lb + 1, lb)
-         |  FROM (
-         |    SELECT w.word, w.j,
-         |           CASE WHEN w.j >= 4 AND q4.cnt IS NOT NULL AND d4.b0 + q4.cnt - $big = dj.b0 THEN 4
-         |                WHEN w.j >= 3 AND q3.cnt IS NOT NULL AND d3.b0 + q3.cnt - $big = dj.b0 THEN 3
-         |                WHEN w.j >= 2 AND q2.cnt IS NOT NULL AND d2.b0 + q2.cnt - $big = dj.b0 THEN 2
-         |                ELSE 1 END AS lb
-         |    FROM wk$r w
-         |    JOIN dp$r dj ON dj.word = w.word AND dj.j = w.j
-         |    LEFT JOIN dp$r d2 ON d2.word = w.word AND d2.j = w.j - 2
-         |    LEFT JOIN dp$r d3 ON d3.word = w.word AND d3.j = w.j - 3
-         |    LEFT JOIN dp$r d4 ON d4.word = w.word AND d4.j = w.j - 4
-         |    LEFT JOIN $p q2 ON q2.piece = substring(w.word, w.j - 1, 2)
-         |    LEFT JOIN $p q3 ON q3.piece = substring(w.word, w.j - 2, 3)
-         |    LEFT JOIN $p q4 ON q4.piece = substring(w.word, w.j - 3, 4)
-         |    WHERE w.j > 0))""".stripMargin
-    }
-    def updCtes(r: Int): String =
-      s"""u$r AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS u
-         |      FROM wk$r JOIN wc USING (word) WHERE piece IS NOT NULL GROUP BY 1),
-         |p$r AS MATERIALIZED (SELECT piece, CAST(CASE WHEN s = 0 THEN 1 ELSE s END AS BIGINT) AS cnt
-         |      FROM (SELECT piece, sum(u) AS s
-         |            FROM (SELECT piece, u FROM u$r
-         |                  UNION ALL SELECT piece, 0 FROM ch) GROUP BY 1))""".stripMargin
-    val roundCtes = (1 to rounds)
-      .map(r => Seq(dpCte(r), wkCte(r), updCtes(r)).mkString(",\n")).mkString(",\n")
-    s"""WITH RECURSIVE
-       |w0 AS MATERIALIZED (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-       |wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS n FROM w0
-       |      WHERE length(word) >= 2 GROUP BY 1
-       |      ORDER BY n DESC, word LIMIT $topWords),
-       |p0 AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS cnt FROM (
-       |        SELECT unnest(flatten(list_transform(range(1, len(word) + 1), s ->
-       |                 list_transform(range(1, 5), l ->
-       |                   CASE WHEN s + l - 1 <= len(word) THEN substring(word, s, l) END)))) AS piece,
-       |               n
-       |        FROM wc)
-       |      WHERE piece IS NOT NULL GROUP BY 1),
-       |ch AS MATERIALIZED (SELECT DISTINCT unnest(list_transform(range(1, len(word) + 1),
-       |                s -> substring(word, s, 1))) AS piece FROM wc),
-       |$roundCtes
-       |SELECT CAST(row_number() OVER (ORDER BY u DESC, piece) AS BIGINT) AS rank,
-       |       piece, CAST(len(piece) AS BIGINT) AS piece_len, CAST(u AS BIGINT) AS usage
-       |FROM u$rounds ORDER BY rank LIMIT $topK""".stripMargin
-  }
-
-  /** BPE apply-side replay: the train chain re-derives each round's merge
-    * pair, then the same sel/re-segment blocks run over the FULL word-type
-    * table; per-doc counts come from the token-per-type join.
-    */
-  private def bpeEncodeSql(rounds: Int = 4, topWords: Int = 300): String = {
-    val blocks = (1 to rounds).map { r =>
-      bpeSelResegSql(s"eseg${r - 1}", s"best$r", s"esel$r", s"eseg$r")
-    }.mkString(",\n")
-    s"""WITH ${bpeTrainCtes(rounds, topWords)},
-       |ew AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM w0
-       |      WHERE length(word) >= 1 GROUP BY 1),
-       |eseg0 AS (SELECT word, n, CAST(pos AS BIGINT) AS pos, substr(word, pos + 1, 1) AS sym
-       |      FROM (SELECT word, n, unnest(range(length(word))) AS pos FROM ew)),
-       |$blocks,
-       |tok AS (SELECT word, CAST(count(*) AS BIGINT) AS n_tokens FROM eseg$rounds GROUP BY 1)
-       |SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-       |       CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(length(d.word)) AS BIGINT) AS n_chars,
-       |       CAST(sum(t.n_tokens) AS BIGINT) AS n_tokens,
-       |       CAST((sum(length(d.word)) - sum(t.n_tokens)) * 1000000 // sum(length(d.word)) AS BIGINT) AS saved_micro
-       |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents) d
-       |JOIN tok t ON d.word = t.word
-       |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** Sign-LSH bucket over coordinates [offset, offset+bits), mirroring
-    * `VectorFunctions.signLshBucketAt`.
-    */
-  private def bucketSqlAt(v: String, offset: Int, bits: Int): String =
-    (0 until bits)
-      .map(i => s"(CASE WHEN CAST($v[${offset + i + 1}] AS DOUBLE) > 0.0 THEN ${1L << i} ELSE 0 END)")
-      .mkString("(", " + ", ")")
-
-  private def bucketSql(v: String, bits: Int): String = bucketSqlAt(v, 0, bits)
-
-  /** Symmetric int8 scalar quantization, mirroring `Quantize.quantize`. */
-  private def codeSql(v: String): String =
-    s"list_transform($v, x -> least(127, greatest(-127, CAST(round(CAST(x AS DOUBLE)*127.0) AS BIGINT))))"
-
-  private val discPrice =
-    "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))"
-
-  /** Gap-rule sessionization as windowed SQL — shared by the batch query
-    * (`sessionize`) and its stateful streaming twin (`stream_sessionize`).
-    */
-  private val sessionizeSql =
-    """WITH e AS (SELECT user_id, event_id, ts, CAST(floor(epoch(ts)) AS BIGINT) AS ep FROM events),
-      |l AS (SELECT *, lag(ep) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ep FROM e),
-      |f AS (SELECT *, CASE WHEN prev_ep IS NULL OR ep - prev_ep > 1800 THEN 1 ELSE 0 END AS ns FROM l),
-      |s AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM f)
-      |SELECT CAST(user_id AS BIGINT) AS user_id, CAST(session_id AS BIGINT) AS session_id,
-      |       CAST(count(*) AS BIGINT) AS n_events,
-      |       CAST(floor(epoch(min(ts))) AS BIGINT) AS start_epoch,
-      |       CAST(floor(epoch(max(ts))) AS BIGINT) AS end_epoch
-      |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin
-
-  /** CDC changelog apply replayed in SQL — shared by the batch query
-    * (`cdc_apply`) and its stateful streaming twin (`stream_cdc_apply`):
-    * per-key (ts, event_id) replay order via row_number, the last `error`
-    * tombstone as a deletion frontier (state restarts after it; a key
-    * whose log ends in a tombstone is absent), exact cents, last mutation
-    * by max_by, tombstone count as key metadata.
-    */
-  private val cdcApplySql =
-    """WITH base AS (SELECT user_id, ts, event_id, event_type,
-      |                     CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c
-      |              FROM events),
-      |ord AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      |        FROM base),
-      |tomb AS (SELECT user_id, max(rn) AS del_rn, count(*) AS n_tomb
-      |         FROM ord WHERE event_type = 'error' GROUP BY 1),
-      |live AS (SELECT o.* FROM ord o LEFT JOIN tomb t USING (user_id)
-      |         WHERE o.event_type <> 'error' AND o.rn > coalesce(t.del_rn, 0)),
-      |agg AS (SELECT user_id, count(*) AS n_events, sum(v_c) AS sum_value_c,
-      |               max_by(event_type, rn) AS last_type,
-      |               CAST(floor(epoch(max(ts))) AS BIGINT) AS last_ep
-      |        FROM live GROUP BY 1)
-      |SELECT CAST(a.user_id AS BIGINT) AS user_id, CAST(n_events AS BIGINT) AS n_events,
-      |       CAST(sum_value_c AS BIGINT) AS sum_value_c, last_type, last_ep,
-      |       CAST(coalesce(t.n_tomb, 0) AS BIGINT) AS n_tombstones
-      |FROM agg a LEFT JOIN tomb t USING (user_id) ORDER BY user_id""".stripMargin
-
-  /** SCD2 interval history replayed in SQL — shared by the full build
-    * (`scd2_build`) and the incremental merge (`scd2_merge`, whose hash
-    * match against this full-rebuild replay IS the merge-correctness
-    * proof): lag-change islands per user (IS DISTINCT FROM mirrors
-    * Spark's null-safe `<=>` flag), `[valid_from, valid_to)` bounds via
-    * lead, NULL valid_to ⇔ is_current.
-    */
-  private val scd2Sql =
-    """WITH ord AS (SELECT user_id, ts, event_id, event_type,
-      |                    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c,
-      |                    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
-      |                         THEN 1 ELSE 0 END AS chg
-      |             FROM events
-      |             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |isl AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-      |        FROM ord),
-      |grp AS (SELECT user_id, version, min(event_type) AS event_type, min(ts) AS t0,
-      |               count(*) AS n_events, sum(v_c) AS sum_value_c
-      |        FROM isl GROUP BY 1, 2)
-      |SELECT CAST(user_id AS BIGINT) AS user_id, CAST(version AS BIGINT) AS version,
-      |       event_type,
-      |       CAST(floor(epoch(t0)) AS BIGINT) AS valid_from_ep,
-      |       CAST(floor(epoch(lead(t0) OVER wv)) AS BIGINT) AS valid_to_ep,
-      |       CAST(CASE WHEN lead(t0) OVER wv IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current,
-      |       CAST(n_events AS BIGINT) AS n_events,
-      |       CAST(sum_value_c AS BIGINT) AS sum_value_c
-      |FROM grp WINDOW wv AS (PARTITION BY user_id ORDER BY version)
-      |ORDER BY user_id, version""".stripMargin
-
-  /** SCD2 point-in-time lookup replay (strictly-before interval join) —
-    * shared by the DataFrame path (`scd2_pit_lookup`) and its registered
-    * SQL-view surface (`lake_sql_pit`).
-    */
-  private val scd2PitSql =
-    """WITH ord AS (SELECT user_id, ts, event_id, event_type,
-      |                    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
-      |                         THEN 1 ELSE 0 END AS chg
-      |             FROM events
-      |             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |isl AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-      |        FROM ord),
-      |grp AS (SELECT user_id, version, min(event_type) AS event_type,
-      |               min(epoch_us(ts)) AS from_us, count(*) AS n_events
-      |        FROM isl GROUP BY 1, 2),
-      |iv AS (SELECT *, lead(from_us) OVER (PARTITION BY user_id ORDER BY version) AS to_us
-      |       FROM grp),
-      |q AS (SELECT user_id AS q_user, event_id AS purchase_event, epoch_us(ts) AS q_us
-      |      FROM events WHERE event_type = 'purchase')
-      |SELECT CAST(q.q_user AS BIGINT) AS user_id,
-      |       CAST(purchase_event AS BIGINT) AS purchase_event,
-      |       CAST(q_us // 1000000 AS BIGINT) AS at_ep,
-      |       CAST(coalesce(version, 0) AS BIGINT) AS version,
-      |       coalesce(event_type, 'none') AS state_type,
-      |       CAST(from_us // 1000000 AS BIGINT) AS valid_from_ep,
-      |       CAST(coalesce(n_events, 0) AS BIGINT) AS version_n_events
-      |FROM q LEFT JOIN iv ON iv.user_id = q.q_user
-      |               AND iv.from_us < q.q_us
-      |               AND (iv.to_us IS NULL OR q.q_us <= iv.to_us)
-      |ORDER BY user_id, purchase_event""".stripMargin
-
-  /** Strict view→click→purchase funnel as correlated stage minima —
-    * shared by the batch query (`events_funnel`) and its stateful
-    * streaming twin (`stream_funnel`).
-    */
-  private val funnelSql =
-    """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-      |           WHERE event_type = 'view' GROUP BY 1),
-      |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e JOIN v USING (user_id)
-      |      WHERE e.event_type = 'click' AND e.ts >= v.t_view GROUP BY 1),
-      |p AS (SELECT e.user_id, min(e.ts) AS t_purchase FROM events e JOIN c USING (user_id)
-      |      WHERE e.event_type = 'purchase' AND e.ts >= c.t_click GROUP BY 1)
-      |SELECT CAST(v.user_id AS BIGINT) AS user_id,
-      |       CAST(floor(epoch(v.t_view)) AS BIGINT) AS view_epoch,
-      |       CAST(floor(epoch(c.t_click)) AS BIGINT) AS click_epoch,
-      |       CAST(floor(epoch(p.t_purchase)) AS BIGINT) AS purchase_epoch,
-      |       CAST(1 + (c.user_id IS NOT NULL)::INT + (p.user_id IS NOT NULL)::INT AS BIGINT) AS stages_reached
-      |FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-      |ORDER BY 1""".stripMargin
-
-  private val hourlySql =
-    """SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch, event_type,
-      | CAST(count(*) AS BIGINT) AS n,
-      | CAST(sum(CAST(value AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_value_c
-      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Probed IVF search replayed in SQL over the exported store artifacts —
-    * shared by `knn_ivf` (batch) and `stream_knn` (the AvailableNow
-    * streaming execution of the same search). A `def`: [[ivfStorePath]]
-    * re-derives from the pinned oracle sf dir on each call.
-    */
-  /** Inline replay of the lake MERGE changeset against the raw table —
-    * the hash match proves merge ≡ full recompute. Shared by
-    * `partitioned_merge` (DataFrame copy-on-write route) and
-    * `lake_sql_merge` (the INSERT OVERWRITE DML route over catalog views):
-    * both apply the same raw-derived changeset to their own store clones.
-    */
-  private val partitionedMergeReplaySql: String =
-    """WITH r AS (SELECT event_id, event_type, value, CAST(ts AS DATE) AS d FROM events),
-      |b AS (SELECT min(d) AS lo FROM r),
-      |keep AS (SELECT event_type, value FROM r, b
-      |         WHERE NOT (d = b.lo + 1 AND event_id % 7 = 0)
-      |           AND NOT (d = b.lo + 2 AND event_type = 'click')),
-      |upd AS (SELECT event_type, value * 2 AS value FROM r, b
-      |        WHERE d = b.lo + 2 AND event_type = 'click'),
-      |ins AS (SELECT event_type, value FROM r, b
-      |        WHERE d = b.lo AND event_id % 5 = 0),
-      |m AS (SELECT * FROM keep UNION ALL SELECT * FROM upd UNION ALL SELECT * FROM ins)
-      |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-      |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-      |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private def ivfProbedSearchSql(extraRowPred: String = "", k: Int = 5): String =
-    s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-       |               FROM read_parquet('$ivfStorePath/centroids/*.parquet')),
-       |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-       |      FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-       |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-       |qc AS (SELECT q.qid, q.qvec, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-       |       FROM q CROSS JOIN cents c),
-       |pr AS (SELECT qid, qvec, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-       |probed AS (SELECT qid, qvec, cell_id FROM pr WHERE cr <= 10),
-       |s AS (SELECT p.qid, r.vec_id, ${dotSql("p.qvec", "r.embedding")} AS sim
-       |      FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid$extraRowPred),
-       |rk AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-       |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-       |       ${microSql("sim")} AS sim_micro
-       |FROM rk WHERE rank <= $k ORDER BY qid, rank""".stripMargin
-
-  /** Okapi BM25 CTE chain (k1 = 1, b = 0.75, linear idf; per-term integer
-    * micros) ending in `bm25agg(doc_id, score_micro, n_terms)` — shared by
-    * the `text_bm25` oracle and the `rag_fusion` lexical leg.
-    */
-  private val bm25CtesSql =
-    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |lens AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl FROM w),
-      |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_words FROM lens),
-      |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      |       FROM (SELECT doc_id, unnest(ws) AS term FROM w)
-      |       WHERE term IN ('vector', 'spark', 'stream') GROUP BY 1, 2),
-      |dfr AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-      |pt AS (SELECT tf.doc_id,
-      |         CAST(floor(((CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) *
-      |           (CAST(tf AS DOUBLE) * 2.0) /
-      |           (CAST(tf AS DOUBLE) + (0.25 + 0.75 *
-      |             (CAST(dl AS DOUBLE) / (CAST(total_words AS DOUBLE) / CAST(n_docs AS DOUBLE))))))
-      |           * 1000000.0) AS BIGINT) AS score_micro
-      |       FROM tf JOIN dfr USING (term) JOIN lens USING (doc_id) CROSS JOIN corpus),
-      |bm25agg AS (SELECT doc_id, CAST(sum(score_micro) AS BIGINT) AS score_micro,
-      |          CAST(count(*) AS BIGINT) AS n_terms
-      |        FROM pt GROUP BY 1)""".stripMargin
-
-  /** Shared MinHash construction CTEs ending in `bands(doc_id, band, bk)` —
-    * one md5 per shingle, Kirsch–Mitzenmacher double-hashed permutations,
-    * 4 bands × 3 rows. Used by `dedup_minhash_md5` (self-join) and
-    * `dedup_incremental` (incoming-vs-corpus probe).
-    */
-  private def minhashMd5BandCtesSql: String = {
-    val p = graft.operators.Dedup.MinhashP32
-    val mins = (0 until 12)
-      .map(j => s"min((h1 + $j*h2) % $p) AS m$j")
-      .mkString(",\n      |        ")
-    val bandRows = (0 until 4)
-      .map(b => s"SELECT doc_id, $b AS band, m${b * 3}::VARCHAR || '|' || m${b * 3 + 1}::VARCHAR || '|' || m${b * 3 + 2}::VARCHAR AS bk FROM sig")
-      .mkString("\n      |  UNION ALL ")
-    s"""sh AS (SELECT doc_id, list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-      |               i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-      |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-      |dgt AS (SELECT doc_id, md5('mh:' || unnest(sh)) AS dg FROM sh),
-      |hw AS (SELECT doc_id,
-      |         ${graft.operators.Dedup.hexWordSql("strpos", "dg", 1)} AS h1,
-      |         ${graft.operators.Dedup.hexWordSql("strpos", "dg", 9)} AS h2 FROM dgt),
-      |sig AS (SELECT doc_id, $mins FROM hw GROUP BY 1),
-      |bands AS (
-      |  $bandRows)""".stripMargin
-  }
-
-  /** N-gram Jaccard near-dup pairs (inverted-index formulation), shared by
-    * the pair query and the clusters query's recursive-CTE replay.
-    */
-  private val ngramJaccardSql =
-    """WITH sh AS (SELECT doc_id, list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-      |                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-      |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-      |sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-      |inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-      |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-      |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |j AS (SELECT id_a, id_b,
-      |             CAST(common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - common AS DOUBLE) AS jaccard
-      |      FROM p JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b)
-      |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-      |       CAST(floor(jaccard*1000000.0) AS BIGINT) AS jaccard_micro
-      |FROM j WHERE jaccard >= 0.12 ORDER BY id_a, id_b""".stripMargin
-
-  /** Shared CTE block of the suffix-array-style span-dedup pair: positional
-    * word 5-grams (1-based pos, every occurrence kept), count ≥ 2 prune,
-    * cross-doc self-join on the gram, and maximal diagonal runs via
-    * gaps-and-islands — the SQL replay of `Dedup.substringRuns`. Ends with
-    * a `runs(id_a, id_b, pos_a, pos_b, span_words)` CTE.
-    */
-  private val substringRunsCteSql =
-    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |g0 AS (SELECT doc_id, unnest(range(1, greatest(len(ws) - 3, 1))) AS pos, ws FROM w),
-      |g AS (SELECT doc_id, pos,
-      |             ws[pos] || ' ' || ws[pos+1] || ' ' || ws[pos+2] || ' ' || ws[pos+3] || ' ' || ws[pos+4] AS gram
-      |      FROM g0),
-      |keep AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-      |m AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.pos AS pa, b.pos AS pb
-      |      FROM (SELECT g.* FROM g JOIN keep USING (gram)) a
-      |      JOIN (SELECT g.* FROM g JOIN keep USING (gram)) b
-      |        ON a.gram = b.gram AND a.doc_id < b.doc_id),
-      |isl AS (SELECT *, pa - row_number() OVER (PARTITION BY id_a, id_b, pa - pb ORDER BY pa) AS i
-      |        FROM m),
-      |runs AS (SELECT id_a, id_b, min(pa) AS pos_a, min(pb) AS pos_b,
-      |                max(pa) - min(pa) + 5 AS span_words
-      |         FROM isl GROUP BY id_a, id_b, pa - pb, i)""".stripMargin
-
-  /** The composite corpus-clean pipeline, shared by its two oracle
-    * entries: quality gate → keep-first exact dedup → lang-consistency
-    * filter.
-    */
-  private val cleanCorpusSql =
-    """WITH d AS (SELECT doc_id, text, lang, string_split(text, ' ') AS ws FROM documents),
-      |q AS (SELECT doc_id, text, lang, len(ws) AS n_words,
-      |             len(list_filter(ws, w -> list_contains(['the','a','of','and','to','in','is'], w))) AS n_stop
-      |      FROM d),
-      |f AS (SELECT * FROM q WHERE n_words >= 5 AND CAST(n_stop AS DOUBLE)/CAST(n_words AS DOUBLE) < 0.5),
-      |s AS (SELECT text, min(doc_id) AS doc_id FROM f GROUP BY text),
-      |sv AS (SELECT f.doc_id, f.text, f.lang, f.n_words FROM f JOIN s ON f.doc_id = s.doc_id),
-      |g AS (SELECT doc_id, lang, n_words,
-      |        len(list_filter(ws, w -> list_contains(['the','a','of','and'], w))) AS score_en,
-      |        len(list_filter(ws, w -> list_contains(['el','la','de','que'], w))) AS score_es,
-      |        len(list_filter(ws, w -> list_contains(['der','die','und','das'], w))) AS score_de,
-      |        len(list_filter(ws, w -> list_contains(['le','la','et','les'], w))) AS score_fr,
-      |        len(list_filter(ws, w -> list_contains(['的','了','是','在'], w))) AS score_zh
-      |      FROM (SELECT doc_id, lang, n_words, string_split(text, ' ') AS ws, text FROM sv)),
-      |p AS (SELECT doc_id, lang, n_words,
-      |             greatest(score_en, score_es, score_de, score_fr, score_zh) AS mx,
-      |             score_en, score_es, score_de, score_fr, score_zh FROM g)
-      |SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, CAST(n_words AS BIGINT) AS n_words
-      |FROM p
-      |WHERE CASE WHEN score_en = mx AND mx > 0 THEN 'en'
-      |           WHEN score_es = mx AND mx > 0 THEN 'es'
-      |           WHEN score_de = mx AND mx > 0 THEN 'de'
-      |           WHEN score_fr = mx AND mx > 0 THEN 'fr'
-      |           WHEN score_zh = mx AND mx > 0 THEN 'zh'
-      |           ELSE 'unk' END = lang""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
-    * same parquet tables. Omitted for non-SQL-expressible ops
-    * (embed_docs, media_decode,
-    * agg_approx_distinct, knn_batch — its 5000-query batch is synthesized
-    * by the Featurizer, which SQL can't replay; KnnJoinSpec asserts the
-    * heap path equals the declarative form row-for-row at that nq, and
-    * knn_batch_oracle DuckDB-checks the same physical operator at nq=200)
-    * → driver records a rows-only check; those are
-    * covered by ScalaTest property specs instead. knn_ivf IS oracle-checked:
-    * k-means itself isn't SQL, but the probed search over the EXPORTED
-    * centroid/assignment artifacts is (see ivfStorePath) — and likewise
-    * dedup_minhash_lsh / dedup_simhash replay their banding / Hamming
-    * joins over the exported xxhash64 sketch frames (see sketchStorePath).
-    */
-  def oracleSql: Map[String, String] = Map(
-    "knn_exact" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // The SQL-path twin computes the identical result through the
-    // injectFunction-registered dot(): same oracle as knn_exact.
-    "knn_exact_sql" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // All seven SQL-registered kernels: the l2_normalize mirror multiplies
-    // by the double inverse norm and rounds each element THROUGH FLOAT,
-    // exactly as the codegen kernel does.
-    "vec_sql_kernels" ->
-      s"""WITH p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |                  a.embedding AS va, b.embedding AS vb
-         |           FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1),
-         |u AS (SELECT *, CASE WHEN ${dotSql("va", "va")} = 0 THEN 1.0
-         |                     ELSE 1.0 / sqrt(${dotSql("va", "va")}) END AS inv FROM p),
-         |n AS (SELECT *, list_transform(va, x -> CAST(CAST(x AS DOUBLE) * inv AS FLOAT)) AS ua FROM u)
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-         |       ${microSql(dotSql("va", "vb"))} AS dot_micro,
-         |       ${microSql(s"sqrt(${sqDistSql("va", "vb")})")} AS l2_micro,
-         |       ${microSql(s"${dotSql("va", "vb")} / (sqrt(${dotSql("va", "va")}) * sqrt(${dotSql("vb", "vb")}))")} AS cos_micro,
-         |       CAST(floor(CAST(ua[1] AS DOUBLE) * 1000000000.0) AS BIGINT) AS unit0_nano,
-         |       ${microSql(s"sqrt(${dotSql("ua", "ua")})")} AS unit_norm_micro,
-         |       CAST(bit_count(xor(id_a * 2654435761, id_b * 2654435761)) AS BIGINT) AS ham_bits
-         |FROM n ORDER BY id_a""".stripMargin,
-    // Hard-negative mining: top-k most-similar vectors with a DIFFERENT label.
-    "knn_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec, label AS qlabel
-         |           FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, e.label, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.label <> q.qlabel),
-         |r AS (SELECT qid, vec_id, label, sim,
-         |             row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-         |       CAST(label AS BIGINT) AS neg_label, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Unrolled greedy MMR replay (see mmrSql).
-    "knn_mmr" -> mmrSql,
-    // The custom KnnJoinExec path at batch size nq=200 with REAL embedding
-    // rows as queries — the SQL replay of the heap+merge physical operator
-    // (knn_batch's synthetic 5000-query batch is Featurizer-made and not
-    // SQL-expressible; this entry closes the oracle gap through the same
-    // operator).
-    "knn_batch_oracle" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 200),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "knn_exact_phys" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Scalar-filtered search: the label predicate restricts the BASE side
-    // (k fills from qualifying rows only — never post-filter the top-k).
-    "knn_filtered" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid AND e.label < 5),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Adaptive filtered search: label=3 is ~10% selective, under the 20%
-    // crossover, so the engine takes the BRUTE branch (exact over the
-    // qualifying subset) — the oracle replays that branch and pins the
-    // emitted strategy column.
-    "knn_filtered_adaptive" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid AND e.label = 3),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro, 'brute' AS strategy
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "knn_range" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM s WHERE ${microSql("sim")} >= 200000 ORDER BY qid, sim_micro DESC, vec_id""".stripMargin,
-    "knn_lsh" ->
-      s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding", 8)} AS bucket FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec, ${bucketSql("embedding", 8)} AS bucket FROM embeddings WHERE vec_id < 10),
-         |s AS (SELECT q.qid, b.vec_id, ${dotSql("q.qvec", "b.embedding")} AS sim
-         |      FROM b JOIN q USING (bucket) WHERE b.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-    // Multi-probe LSH: home bucket + the buckets reached by flipping the
-    // 2 lowest-|margin| bits (margin of bit i = |v[i+1]|, ties → lower i)
-    // — probe selection, XOR and scoring are all engine-portable.
-    "knn_multiprobe" ->
-      s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding", 8)} AS bucket FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec, ${bucketSql("embedding", 8)} AS bucket FROM embeddings WHERE vec_id < 10),
-         |x AS (SELECT qid, qvec, bucket, i, abs(CAST(qvec[CAST(i + 1 AS INTEGER)] AS DOUBLE)) AS ax
-         |      FROM q CROSS JOIN range(0, 8) t(i)),
-         |f AS (SELECT qid, qvec, xor(bucket, CAST(pow(2, i) AS BIGINT)) AS bucket,
-         |             row_number() OVER (PARTITION BY qid ORDER BY ax, i) AS fr FROM x),
-         |p AS (SELECT qid, qvec, bucket FROM q
-         |      UNION ALL SELECT qid, qvec, bucket FROM f WHERE fr <= 2),
-         |s AS (SELECT p.qid, b.vec_id, ${dotSql("p.qvec", "b.embedding")} AS sim
-         |      FROM b JOIN p USING (bucket) WHERE b.vec_id <> p.qid),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-    // Late-interaction MaxSim (ColBERT scoring): docs = vec_id DIV 4
-    // token groups; score = Σ over the 4 query slots of the per-slot
-    // conditional max — a FIXED left-to-right addition of 4 doubles, so
-    // the fold replays bit-identically.
-    "knn_maxsim" ->
-      s"""WITH tok AS (SELECT vec_id // 4 AS ddoc, embedding FROM embeddings),
-         |qtok AS (SELECT vec_id // 4 AS qdoc, vec_id % 4 AS qslot, embedding AS qvec
-         |         FROM embeddings WHERE vec_id // 4 < 5),
-         |s AS (SELECT q.qdoc, t.ddoc, q.qslot, ${dotSql("q.qvec", "t.embedding")} AS sim
-         |      FROM tok t CROSS JOIN qtok q WHERE t.ddoc <> q.qdoc),
-         |a AS (SELECT qdoc, ddoc,
-         |             max(CASE WHEN qslot = 0 THEN sim END) AS m0,
-         |             max(CASE WHEN qslot = 1 THEN sim END) AS m1,
-         |             max(CASE WHEN qslot = 2 THEN sim END) AS m2,
-         |             max(CASE WHEN qslot = 3 THEN sim END) AS m3
-         |      FROM s GROUP BY qdoc, ddoc),
-         |sc AS (SELECT qdoc, ddoc,
-         |              ((coalesce(m0, 0.0) + coalesce(m1, 0.0)) + coalesce(m2, 0.0)) + coalesce(m3, 0.0) AS score
-         |       FROM a),
-         |r AS (SELECT qdoc, ddoc, score, row_number() OVER (PARTITION BY qdoc ORDER BY score DESC, ddoc) AS rank FROM sc)
-         |SELECT CAST(qdoc AS BIGINT) AS qdoc, CAST(ddoc AS BIGINT) AS ddoc, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("score")} AS score_micro
-         |FROM r WHERE rank <= 5 ORDER BY qdoc, rank""".stripMargin,
-    // Token-level sign-LSH pruned MaxSim: scoring only on bucket
-    // collisions; absent slots coalesce to 0 — deterministic bucketing
-    // keeps the approximation engine-exact.
-    "knn_maxsim_pruned" ->
-      s"""WITH tok AS (SELECT vec_id // 4 AS ddoc, embedding, ${bucketSql("embedding", 6)} AS bucket FROM embeddings),
-         |qtok AS (SELECT vec_id // 4 AS qdoc, vec_id % 4 AS qslot, embedding AS qvec,
-         |                ${bucketSql("embedding", 6)} AS bucket
-         |         FROM embeddings WHERE vec_id // 4 < 5),
-         |s AS (SELECT q.qdoc, t.ddoc, q.qslot, ${dotSql("q.qvec", "t.embedding")} AS sim
-         |      FROM tok t JOIN qtok q USING (bucket) WHERE t.ddoc <> q.qdoc),
-         |a AS (SELECT qdoc, ddoc,
-         |             max(CASE WHEN qslot = 0 THEN sim END) AS m0,
-         |             max(CASE WHEN qslot = 1 THEN sim END) AS m1,
-         |             max(CASE WHEN qslot = 2 THEN sim END) AS m2,
-         |             max(CASE WHEN qslot = 3 THEN sim END) AS m3
-         |      FROM s GROUP BY qdoc, ddoc),
-         |sc AS (SELECT qdoc, ddoc,
-         |              ((coalesce(m0, 0.0) + coalesce(m1, 0.0)) + coalesce(m2, 0.0)) + coalesce(m3, 0.0) AS score
-         |       FROM a),
-         |r AS (SELECT qdoc, ddoc, score, row_number() OVER (PARTITION BY qdoc ORDER BY score DESC, ddoc) AS rank FROM sc)
-         |SELECT CAST(qdoc AS BIGINT) AS qdoc, CAST(ddoc AS BIGINT) AS ddoc, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("score")} AS score_micro
-         |FROM r WHERE rank <= 5 ORDER BY qdoc, rank""".stripMargin,
-    // Matryoshka two-stage: coarse prefix-dot (first 16 dims) → top-50
-    // pool → exact full-dim rerank. Both stages are the same left-fold
-    // dot both engines run, over identical slices.
-    "knn_matryoshka" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec, embedding[1:16] AS qpre
-         |           FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT q.qid, q.qvec, e.vec_id, e.embedding,
-         |             ${dotSql("q.qpre", "e.embedding[1:16]")} AS coarse
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |p AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY coarse DESC, vec_id) AS crank FROM c),
-         |s AS (SELECT qid, vec_id, ${dotSql("qvec", "embedding")} AS sim FROM p WHERE crank <= 50),
-         |r AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Binary-quantization search: sign codes (two 32-bit words), Hamming
-    // candidate scan, exact-dot rerank of the top 50 — every stage is
-    // engine-portable integer/float SQL, so the full two-stage pipeline
-    // replays without any exported artifact.
-    "knn_binary" ->
-      s"""WITH c AS (SELECT vec_id, embedding, ${bucketSqlAt("embedding", 0, 32)} AS code_lo,
-         |             ${bucketSqlAt("embedding", 32, 32)} AS code_hi FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec, code_lo AS q_lo, code_hi AS q_hi
-         |      FROM c WHERE vec_id < 5),
-         |h AS (SELECT q.qid, c.vec_id,
-         |        bit_count(xor(c.code_lo, q.q_lo)) + bit_count(xor(c.code_hi, q.q_hi)) AS hamming
-         |      FROM c CROSS JOIN q WHERE c.vec_id <> q.qid),
-         |cand AS (SELECT qid, vec_id, hamming FROM (
-         |  SELECT qid, vec_id, hamming,
-         |         row_number() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS cr FROM h)
-         |  WHERE cr <= 50),
-         |s AS (SELECT cand.qid, cand.vec_id, cand.hamming, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM cand JOIN embeddings e ON e.vec_id = cand.vec_id JOIN q ON q.qid = cand.qid),
-         |r AS (SELECT qid, vec_id, hamming, sim,
-         |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-         |       CAST(rank AS BIGINT) AS rank, CAST(hamming AS BIGINT) AS hamming,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "knn_ivf" -> ivfProbedSearchSql(),
-    // HNSW-twin graph search: the unrolled beam walk replayed in SQL over
-    // the exported NN-Descent edge list (graph construction is
-    // engine-specific; its invariants — degree bound, determinism, recall —
-    // are pinned by GraphIndexSpec, and the walk itself is re-derived here).
-    "knn_graph" -> graphBeamSearchSql(),
-    // Forced three-level entry descent: top cross, level-2 hops over the
-    // exported edges_l2, level-1 hops over edges_l1, then the level-0
-    // walk — one replay, three layers.
-    "knn_graph_hier" -> graphHierSearchSql(),
-    // Reference-batch-scale walk: same unrolled replay with the 400-query
-    // CTE — route-independence of the distributed frontier, oracle-pinned.
-    "knn_graph_batch" -> graphBeamSearchSql(qWhere = "vec_id < 400"),
-    // The SQL-text route walks the same persisted edges with the same
-    // unrolled-hop arithmetic — one oracle serves both surfaces.
-    "lake_sql_graph" -> graphBeamSearchSql(),
-    // The forced-hier SQL surface is row-identical to knn_graph_hier's
-    // forced DataFrame descent — the three-level replay serves both.
-    "lake_sql_graph_hier" -> graphHierSearchSql(),
-    // Tombstoned graph search: the SAME unrolled walk (dead nodes still
-    // traversed), minus the tombstone set below the rank window.
-    "graph_tombstone" -> graphBeamSearchSql(finalWhere = " AND vec_id % 17 <> 3"),
-    // Recall-vs-beam: per-level walk chains + brute-force leg, MATERIALIZED
-    // CTEs against DuckDB's per-reference inlining.
-    "graph_recall_curve" -> graphRecallCurveSql(),
-    // Self-tuned walk: the curve, the decision, and the search it drives
-    // in ONE statement — the frontier cut is the decision as a scalar
-    // subquery (the knn_autotune convention).
-    "graph_autotune" -> graphAutotuneSql(),
-    // Compacted graph: plain walk over the REPAIRED exported edges (no
-    // tombstone filter — dead nodes physically gone), live entry sample;
-    // n_nodes recomputed from the source table (every live node keeps a
-    // neighbor list through the bridge-relink repair).
-    "graph_compact" -> graphBeamSearchSql(
-      edgesPath = graphStorePath + "_cpt",
-      entWhere = "vec_id % 17 <> 3",
-      auditSelect = ", n.n_nodes",
-      auditFrom =
-        " CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM embeddings" +
-          " WHERE vec_id % 17 <> 3) n"),
-    // Streaming absorb into the graph: the walk replay over the EXPORTED
-    // post-stream edges of the working clone, queried with the first five
-    // ABSORBED (crawl-slice) vectors from the STORE corpus's own entry
-    // sample; nodes_after recomputed from the SOURCE table (every store
-    // node — even half ∪ crawl — must be an edge src post-stream).
-    "stream_graph_absorb" -> graphBeamSearchSql(
-      edgesPath = graphStorePath + "_gab",
-      qWhere = "vec_id % 10 = 1 AND vec_id < 51",
-      entWhere = "(vec_id % 2 = 0 OR vec_id % 10 = 1)",
-      auditSelect = ", n.nodes_after",
-      auditFrom =
-        " CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS nodes_after FROM embeddings" +
-          " WHERE vec_id % 2 = 0 OR vec_id % 10 = 1) n"),
-    // Out-degree histogram over the same exported edges.
-    "graph_degree_stats" ->
-      s"""SELECT CAST(degree AS BIGINT) AS degree, CAST(count(*) AS BIGINT) AS n_nodes
-         |FROM (SELECT src, count(*) AS degree
-         |      FROM read_parquet('$graphStorePath/edges/*.parquet') GROUP BY src)
-         |GROUP BY degree ORDER BY degree""".stripMargin,
-    // The AnnProbeRewrite-rewritten naive flat query probes the same cells
-    // and scores identically — one oracle serves both plans.
-    "knn_rewrite" -> ivfProbedSearchSql(),
-    // The SQL-route twin: spark.sql over the lake_vectors catalog view,
-    // rewritten by the same rule into the same probed plan — one oracle
-    // serves the DataFrame, rewritten-flat, and SQL entry surfaces.
-    "lake_sql_ann" -> ivfProbedSearchSql(),
-    // The streaming run searches the SAME persisted store with the same
-    // k/nprobe/query set — one oracle serves both the batch and the
-    // AvailableNow streaming execution.
-    "stream_knn" -> ivfProbedSearchSql(),
-    // Dedup-on-ingest: the odd-half "crawl" kept-set recomputed over the
-    // exported even-half corpus store. Valid against the REAL streaming
-    // run because the dedup reference is static — the keep set is
-    // batch-split-independent (spec-asserted with maxFilesPerTrigger=1).
-    // Streaming exact dedup gate: the Bloom sketch is a pruning hint with
-    // zero effect on the answer, so the oracle is the plain content
-    // anti-join over the batch side — same replay as dedup_bloom's novels.
-    "stream_bloom_ingest" ->
-      """SELECT CAST(d.doc_id AS BIGINT) AS doc_id
-        |FROM documents d
-        |WHERE d.doc_id % 10 = 0
-        |  AND NOT EXISTS (SELECT 1 FROM documents c
-        |                  WHERE c.doc_id % 10 <> 0 AND md5(c.text) = md5(d.text))
-        |ORDER BY doc_id""".stripMargin,
-    "stream_dedup_ingest" -> {
-      val half = s"${ivfStorePath}_half"
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$half/centroids/*.parquet')),
-         |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |      FROM read_parquet('$half/rows/*/*.parquet', hive_partitioning=1)),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id % 2 = 1),
-         |qc AS (SELECT q.qid, q.qvec, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, qvec, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |probed AS (SELECT qid, qvec, cell_id FROM pr WHERE cr <= 10),
-         |s AS (SELECT p.qid, r.vec_id, ${dotSql("p.qvec", "r.embedding")} AS sim
-         |      FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid),
-         |rk AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s),
-         |n1 AS (SELECT qid, vec_id AS nearest_id, ${microSql("sim")} AS nearest_micro FROM rk WHERE rank = 1)
-         |SELECT CAST(q.qid AS BIGINT) AS vec_id,
-         |       CAST(coalesce(n1.nearest_id, -1) AS BIGINT) AS nearest_id,
-         |       CAST(coalesce(n1.nearest_micro, -1) AS BIGINT) AS nearest_micro
-         |FROM q LEFT JOIN n1 ON n1.qid = q.qid
-         |WHERE n1.nearest_micro IS NULL OR n1.nearest_micro < 300000
-         |ORDER BY vec_id""".stripMargin
-    },
-    // Streaming absorb into the IVF store: the post-stream row set derived
-    // IN SQL as half-store rows ∪ argmin-assigned odd rows over the
-    // exported even-half artifacts (assignment replayed with the RAW
-    // double centroids — the engine's nearest-cell kernel never
-    // float-narrows them, unlike the probe ranking which mirrors the
-    // plan's `.cast("array<float>")`), then the probed search replayed
-    // over that derived set. The hash match proves the wall-clock
-    // streaming run absorbed every odd row into the cell the fixed
-    // centroids dictate AND that the probed search serves them; valid
-    // against the real run because assignment is per-row against FIXED
-    // centroids, so the store content is batch-split-independent
-    // (spec-asserted).
-    "stream_store_absorb" -> {
-      val half = s"${ivfStorePath}_half"
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$half/centroids/*.parquet')),
-         |hr AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |       FROM read_parquet('$half/rows/*/*.parquet', hive_partitioning=1)),
-         |od AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1),
-         |oa AS (SELECT cell_id, vec_id, embedding FROM (
-         |         SELECT o.vec_id, o.embedding, c.cell_id,
-         |                row_number() OVER (PARTITION BY o.vec_id
-         |                  ORDER BY ${sqDistSql("o.embedding", "c.centroid")}, c.cell_id) AS ar
-         |         FROM od o CROSS JOIN cents c)
-         |       WHERE ar = 1),
-         |r AS (SELECT cell_id, vec_id, embedding FROM hr
-         |      UNION ALL SELECT cell_id, vec_id, embedding FROM oa),
-         |n AS (SELECT CAST(count(*) AS BIGINT) AS rows_after FROM r),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings
-         |      WHERE vec_id % 2 = 1 AND vec_id < 10),
-         |qc AS (SELECT q.qid, q.qvec, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, qvec, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |probed AS (SELECT qid, qvec, cell_id FROM pr WHERE cr <= 10),
-         |s AS (SELECT p.qid, r.vec_id, ${dotSql("p.qvec", "r.embedding")} AS sim
-         |      FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid),
-         |rk AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro, n.rows_after
-         |FROM rk CROSS JOIN n WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
-    },
-    // Tombstone-aware search: same exported-store replay minus the
-    // tombstone set — the anti-join sits below the rank window.
-    "knn_tombstone" -> ivfProbedSearchSql(" AND r.vec_id % 17 <> 3"),
-    // Recall report: both legs deterministic (exported-store replay vs
-    // brute force), so the nprobe recall dial gets an oracle-checked
-    // MEASUREMENT; integer floor-division micro.
-    "knn_recall_report" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |ex AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s),
-         |exact AS (SELECT qid, vec_id FROM ex WHERE rank <= 5),
-         |approx AS (SELECT qid, vec_id FROM (${ivfProbedSearchSql()}) t),
-         |f AS (SELECT e.qid, count(*) AS n_found
-         |      FROM exact e JOIN approx a ON e.qid = a.qid AND e.vec_id = a.vec_id GROUP BY 1),
-         |ne AS (SELECT qid, count(*) AS n_exact FROM exact GROUP BY 1)
-         |SELECT CAST(ne.qid AS BIGINT) AS qid, CAST(COALESCE(n_found, 0) AS BIGINT) AS n_found,
-         |       CAST(n_exact AS BIGINT) AS n_exact,
-         |       CAST(COALESCE(n_found, 0) * 1000000 // n_exact AS BIGINT) AS recall_micro
-         |FROM ne LEFT JOIN f ON ne.qid = f.qid ORDER BY qid""".stripMargin,
-    // Reciprocal-rank eval: the exact top-1's rank inside the probed
-    // top-10 (replayed over the exported store), rr = 10^6 // rank, 0 on
-    // a miss — integer arithmetic end to end.
-    "knn_rank_eval" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |ex AS (SELECT qid, vec_id FROM (
-         |        SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS xr FROM s)
-         |       WHERE xr = 1),
-         |pk AS (SELECT qid, vec_id, rank FROM (${ivfProbedSearchSql(k = 10)}) t)
-         |SELECT CAST(ex.qid AS BIGINT) AS qid,
-         |       CAST(COALESCE(pk.rank, 0) AS BIGINT) AS rank,
-         |       CAST(CASE WHEN pk.rank IS NOT NULL THEN 1000000 // pk.rank ELSE 0 END AS BIGINT) AS rr_micro
-         |FROM ex LEFT JOIN pk ON ex.qid = pk.qid AND ex.vec_id = pk.vec_id
-         |ORDER BY qid""".stripMargin,
-    // Split-half centroid drift over the exported clustered rows: offset
-    // micros summed exactly, floor-division only on non-negatives.
-    "embed_centroid_drift" ->
-      s"""WITH r AS (SELECT vec_id, embedding, CAST(cell_id AS BIGINT) AS cell_id
-         |           FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |comp AS (SELECT cell_id, vec_id % 2 = 0 AS even,
-         |                generate_subscripts(embedding, 1) AS dim,
-         |                CAST(floor((CAST(unnest(embedding) AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT) AS xm
-         |         FROM r),
-         |sums AS (SELECT cell_id, dim,
-         |                sum(CASE WHEN even THEN xm ELSE 0 END) AS se,
-         |                sum(CASE WHEN even THEN 1 ELSE 0 END) AS ne,
-         |                sum(CASE WHEN NOT even THEN xm ELSE 0 END) AS so,
-         |                sum(CASE WHEN NOT even THEN 1 ELSE 0 END) AS no
-         |         FROM comp GROUP BY 1, 2),
-         |d AS (SELECT cell_id, ne, no, (se // ne) - (so // no) AS d
-         |      FROM sums WHERE ne > 0 AND no > 0)
-         |SELECT CAST(cell_id AS BIGINT) AS cell_id, CAST(max(ne) AS BIGINT) AS n_even,
-         |       CAST(max(no) AS BIGINT) AS n_odd, CAST(sum(d * d) AS BIGINT) AS drift_metric
-         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Drift-driven maintenance decision: the same drift replay feeds the
-    // τ rule; rows_after must equal the corpus (both branches end serving
-    // every vector). The executed branch's structure is spec-pinned.
-    "embed_maintain" ->
-      s"""WITH r AS (SELECT vec_id, embedding, CAST(cell_id AS BIGINT) AS cell_id
-         |           FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |comp AS (SELECT cell_id, vec_id % 2 = 0 AS even,
-         |                generate_subscripts(embedding, 1) AS dim,
-         |                CAST(floor((CAST(unnest(embedding) AS DOUBLE) + 1.0) * 1000000.0) AS BIGINT) AS xm
-         |         FROM r),
-         |sums AS (SELECT cell_id, dim,
-         |                sum(CASE WHEN even THEN xm ELSE 0 END) AS se,
-         |                sum(CASE WHEN even THEN 1 ELSE 0 END) AS ne,
-         |                sum(CASE WHEN NOT even THEN xm ELSE 0 END) AS so,
-         |                sum(CASE WHEN NOT even THEN 1 ELSE 0 END) AS no
-         |         FROM comp GROUP BY 1, 2),
-         |d AS (SELECT cell_id, ne, no, (se // ne) - (so // no) AS d
-         |      FROM sums WHERE ne > 0 AND no > 0),
-         |dr AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, CAST(max(ne) AS BIGINT) AS n_even,
-         |              CAST(max(no) AS BIGINT) AS n_odd, CAST(sum(d * d) AS BIGINT) AS drift_metric
-         |       FROM d GROUP BY 1)
-         |SELECT cell_id, n_even, n_odd, drift_metric,
-         |       CASE WHEN max(drift_metric) OVER () >= 1000000000000 THEN 'rebuild' ELSE 'absorb' END AS decision,
-         |       CAST(1000000000000 AS BIGINT) AS threshold,
-         |       (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS rows_after
-         |FROM dr ORDER BY cell_id""".stripMargin,
-    // nprobe→recall curve: recall@k at level L = |exact ∩ cells(rank≤L)|,
-    // so the sweep is one conditional aggregation over each exact hit's
-    // cell rank — replayed over the exported store artifacts.
-    "knn_recall_curve" ->
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$ivfStorePath/centroids/*.parquet')),
-         |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id
-         |      FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |qc AS (SELECT q.qid, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |ex AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s),
-         |exact AS (SELECT qid, vec_id FROM ex WHERE rank <= 5),
-         |hit AS (SELECT e.qid, p.cr FROM exact e
-         |        JOIN r ON r.vec_id = e.vec_id
-         |        JOIN pr p ON p.qid = e.qid AND p.cell_id = r.cell_id),
-         |lv AS (SELECT DISTINCT nprobe FROM
-         |       (SELECT unnest([1, 2, 5, 10, (SELECT count(*) FROM cents)]) AS nprobe))
-         |SELECT CAST(l.nprobe AS BIGINT) AS nprobe,
-         |       CAST(sum(CASE WHEN h.cr <= l.nprobe THEN 1 ELSE 0 END) AS BIGINT) AS n_found,
-         |       CAST(count(*) AS BIGINT) AS n_exact,
-         |       CAST(sum(CASE WHEN h.cr <= l.nprobe THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT) AS recall_micro
-         |FROM lv l CROSS JOIN hit h
-         |GROUP BY l.nprobe ORDER BY nprobe""".stripMargin,
-    // Auto-tuned probed search: the recall curve picks the smallest
-    // measured nprobe clearing the target, then the probed search runs at
-    // that knob — the whole decision replayed in one statement.
-    "knn_autotune" ->
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$ivfStorePath/centroids/*.parquet')),
-         |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |      FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |qc AS (SELECT q.qid, q.qvec, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, qvec, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |s0 AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |       FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |ex AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s0),
-         |exact AS (SELECT qid, vec_id FROM ex WHERE rank <= 5),
-         |hit AS (SELECT e.qid, p.cr FROM exact e
-         |        JOIN r ON r.vec_id = e.vec_id
-         |        JOIN pr p ON p.qid = e.qid AND p.cell_id = r.cell_id),
-         |lv AS (SELECT DISTINCT nprobe FROM
-         |       (SELECT unnest([1, 2, 5, 10, (SELECT count(*) FROM cents)]) AS nprobe)),
-         |curve AS (SELECT l.nprobe,
-         |            sum(CASE WHEN h.cr <= l.nprobe THEN 1 ELSE 0 END) * 1000000 // count(*) AS recall_micro
-         |          FROM lv l CROSS JOIN hit h GROUP BY 1),
-         |tuned AS (SELECT min(nprobe) AS np FROM curve WHERE recall_micro >= 900000),
-         |probed AS (SELECT qid, qvec, cell_id FROM pr WHERE cr <= (SELECT np FROM tuned)),
-         |sc AS (SELECT p.qid, rr.vec_id, ${dotSql("p.qvec", "rr.embedding")} AS sim
-         |       FROM r rr JOIN probed p USING (cell_id) WHERE rr.vec_id <> p.qid),
-         |rk AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM sc)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-         |       CAST(rank AS BIGINT) AS rank, ${microSql("sim")} AS sim_micro,
-         |       (SELECT CAST(np AS BIGINT) FROM tuned) AS nprobe
-         |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Radius search replayed over the same exported IVF artifacts: probe
-    // the 10 nearest cells, then a micro-threshold cut instead of top-k.
-    "knn_range_ivf" ->
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$ivfStorePath/centroids/*.parquet')),
-         |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |      FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |qc AS (SELECT q.qid, q.qvec, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, qvec, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |probed AS (SELECT qid, qvec, cell_id FROM pr WHERE cr <= 10),
-         |s AS (SELECT p.qid, r.vec_id, ${dotSql("p.qvec", "r.embedding")} AS sim
-         |      FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM s WHERE ${microSql("sim")} >= 200000 ORDER BY qid, sim_micro DESC, vec_id""".stripMargin,
-    // Index health (num_entities / invlist balance): per-cell counts, key
-    // range, integer-mean norm — replayed over the exported clustered rows.
-    "index_stats" ->
-      s"""WITH r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |           FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1))
-         |SELECT cell_id, CAST(count(*) AS BIGINT) AS n_vecs,
-         |       CAST(min(vec_id) AS BIGINT) AS min_vec_id,
-         |       CAST(max(vec_id) AS BIGINT) AS max_vec_id,
-         |       CAST(sum(${microSql(s"sqrt(${dotSql("embedding", "embedding")})")}) // count(*) AS BIGINT) AS mean_norm_micro
-         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Residual ADC replay (IndexIVFPQ semantics): score = micro'd
-    // dot(q, coarse_cell) + Σ micro'd residual LUT hits — coarse centroids
-    // and residual codebooks both read from the exported store.
-    "knn_pq" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('$pqStorePath/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('$pqStorePath/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('$pqStorePath/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('$pqStorePath/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |      WHERE c.vec_id <> l.qid GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |r AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // SQL route to PQ search: row-identical to knn_pq by construction
-    // (same kernel, same micro-before-sum, same tie-breaks), so the same
-    // residual ADC replay serves verbatim.
-    "lake_sql_pq" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('$pqStorePath/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('$pqStorePath/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('$pqStorePath/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('$pqStorePath/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |      WHERE c.vec_id <> l.qid GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |r AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // PQ delete: same ADC replay, tombstoned ids (vec_id % 17 = 3)
-    // excluded below the rank window so k fills from live rows.
-    "knn_pq_tombstone" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('$pqStorePath/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('$pqStorePath/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('$pqStorePath/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('$pqStorePath/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |      WHERE c.vec_id <> l.qid AND c.vec_id % 17 <> 3 GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |r AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Compacted PQ store: plain ADC replay over the COMPACTED export —
-    // no tombstone filter, the dead code rows are physically gone.
-    "pq_compact" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('${pqStorePath}_cpt/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('${pqStorePath}_cpt/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('${pqStorePath}_cpt/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('${pqStorePath}_cpt/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |      WHERE c.vec_id <> l.qid GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |r AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Drift-driven PQ maintenance: the census TV, threshold, decision and
-    // conservation count all recomputed from the EXPORTED maintenance +
-    // half stores and the source table (the absorb branch; retrain
-    // re-runs k-means and is spec-pinned, the embed_maintain split).
-    "pq_maintain" ->
-      s"""WITH mb AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(vec_id AS BIGINT) AS vec_id
-         |            FROM read_parquet('${pqStorePath}_maint/codes/*/*.parquet', hive_partitioning=1)),
-         |hbc AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code
-         |        FROM read_parquet('${pqStorePath}_half/codes/*/*.parquet', hive_partitioning=1)),
-         |bat AS (SELECT sub, code FROM mb WHERE vec_id % 2 = 1),
-         |ub AS (SELECT sub, code, CAST(count(*) AS BIGINT) AS n FROM bat GROUP BY 1, 2),
-         |ubt AS (SELECT sub, CAST(sum(n) AS BIGINT) AS t FROM ub GROUP BY 1),
-         |pbb AS (SELECT ub.sub, ub.code, ub.n * 1000000 // ubt.t AS pb FROM ub JOIN ubt USING (sub)),
-         |uc AS (SELECT sub, code, CAST(count(*) AS BIGINT) AS n FROM hbc GROUP BY 1, 2),
-         |uct AS (SELECT sub, CAST(sum(n) AS BIGINT) AS t FROM uc GROUP BY 1),
-         |pcc AS (SELECT uc.sub, uc.code, uc.n * 1000000 // uct.t AS pc FROM uc JOIN uct USING (sub)),
-         |tv AS (SELECT sub, abs(COALESCE(pb, 0) - COALESCE(pc, 0)) AS diff
-         |       FROM pbb FULL OUTER JOIN pcc USING (sub, code)),
-         |tvs AS (SELECT sub, CAST(sum(diff) AS BIGINT) // 2 AS tv_micro FROM tv GROUP BY 1),
-         |nb AS (SELECT count(*) AS n FROM embeddings WHERE vec_id % 2 = 1),
-         |tau AS (SELECT CAST(250000 + least(500000, floor(800000 * sqrt(64.0 / n))) AS BIGINT) AS t FROM nb),
-         |dec AS (SELECT CASE WHEN (SELECT max(tv_micro) FROM tvs) >= (SELECT t FROM tau)
-         |                    THEN 'retrain' ELSE 'absorb' END AS d)
-         |SELECT tvs.sub, tvs.tv_micro, dec.d AS decision, tau.t AS threshold_micro,
-         |       (SELECT CAST(count(*) * 8 AS BIGINT) FROM embeddings) AS codes_after
-         |FROM tvs CROSS JOIN dec CROSS JOIN tau ORDER BY sub""".stripMargin,
-    // Small-files audit over the EXPORTED compacted store: files-per-cell
-    // from the parquet filenames themselves, conservation from the source.
-    "pq_layout_compact" ->
-      s"""WITH c AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, filename
-         |           FROM read_parquet('${pqStorePath}_plc/codes/*/*.parquet', hive_partitioning=1, filename=1)),
-         |a AS (SELECT cell_id, CAST(count(DISTINCT filename) AS BIGINT) AS n_files,
-         |             CAST(count(*) AS BIGINT) AS n_rows
-         |      FROM c GROUP BY 1)
-         |SELECT cell_id, n_files, n_rows, n_rows // n_files AS rows_per_file,
-         |       (SELECT CAST(count(*) * 8 AS BIGINT) FROM embeddings) AS corpus_codes
-         |FROM a ORDER BY cell_id""".stripMargin,
-    "ivf_layout_compact" ->
-      s"""WITH c AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, filename
-         |           FROM read_parquet('${ivfStorePath}_plc/rows/*/*.parquet', hive_partitioning=1, filename=1)),
-         |a AS (SELECT cell_id, CAST(count(DISTINCT filename) AS BIGINT) AS n_files,
-         |             CAST(count(*) AS BIGINT) AS n_rows
-         |      FROM c GROUP BY 1)
-         |SELECT cell_id, n_files, n_rows, n_rows // n_files AS rows_per_file,
-         |       (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS corpus_rows
-         |FROM a ORDER BY cell_id""".stripMargin,
-    // Streaming absorb into the PQ store: ADC replay over the EXPORTED
-    // post-stream working store (even half ∪ absorbed odd rows), queried
-    // with the first five ABSORBED vectors; codes_after recomputed from
-    // the SOURCE table (corpus · m code rows — every row encoded once).
-    "stream_pq_absorb" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('${pqStorePath}_pab/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('${pqStorePath}_pab/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('${pqStorePath}_pab/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('${pqStorePath}_pab/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id % 2 = 1 AND vec_id < 10),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |      WHERE c.vec_id <> l.qid GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |r AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro, n.codes_after
-         |FROM r CROSS JOIN (SELECT CAST(count(*)*8 AS BIGINT) AS codes_after FROM embeddings) n
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // Two-stage refine: PQ ADC shortlist (rank ≤ 20), exact re-rank of only
-    // the shortlist's float vectors.
-    "knn_refine" ->
-      s"""WITH books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |               FROM read_parquet('$pqStorePath/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('$pqStorePath/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('$pqStorePath/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('$pqStorePath/rotation/*.parquet')),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s0 AS (SELECT l.qid, c.vec_id, c.cell_id, sum(l.p_micro) AS r_micro
-         |       FROM codes c JOIN lut l ON l.sub = c.sub AND l.code = c.code
-         |       WHERE c.vec_id <> l.qid GROUP BY 1, 2, 3),
-         |s AS (SELECT s0.qid, s0.vec_id, s0.r_micro + cl.c_micro AS adc
-         |      FROM s0 JOIN clut cl ON cl.qid = s0.qid AND cl.cell_id = s0.cell_id),
-         |sl AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS r FROM s),
-         |short AS (SELECT qid, vec_id FROM sl WHERE r <= 20),
-         |x AS (SELECT sh.qid, sh.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM short sh JOIN embeddings e ON e.vec_id = sh.vec_id JOIN q ON q.qid = sh.qid),
-         |rk AS (SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM x)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       ${microSql("sim")} AS sim_micro
-         |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // IVF-PQ composition: candidates from the probed IVF cells, scores from
-    // the PQ ADC tables — both read straight from the exported index stores.
-    "knn_ivfpq" ->
-      s"""WITH cents AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |               FROM read_parquet('$ivfStorePath/centroids/*.parquet')),
-         |r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id
-         |      FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |qc AS (SELECT q.qid, c.cell_id, ${sqDistCentroidSql("q.qvec", "c.centroid")} AS d2
-         |       FROM q CROSS JOIN cents c),
-         |pr AS (SELECT qid, cell_id, row_number() OVER (PARTITION BY qid ORDER BY d2, cell_id) AS cr FROM qc),
-         |probed AS (SELECT qid, cell_id FROM pr WHERE cr <= 10),
-         |cand AS (SELECT p.qid, r.vec_id FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid),
-         |books AS (SELECT CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, centroid
-         |          FROM read_parquet('$pqStorePath/codebooks/*.parquet')),
-         |coarse AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, centroid
-         |           FROM read_parquet('$pqStorePath/coarse/*.parquet')),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code, CAST(cell_id AS BIGINT) AS cell_id
-         |          FROM read_parquet('$pqStorePath/codes/*/*.parquet', hive_partitioning=1)),
-         |rot AS (SELECT CAST(i AS BIGINT) AS i, row FROM read_parquet('$pqStorePath/rotation/*.parquet')),
-         |rq AS (SELECT q.qid, list(CAST(${dotCentroidSql("q.qvec", "r.row")} AS FLOAT) ORDER BY r.i) AS rqvec
-         |       FROM q CROSS JOIN rot r GROUP BY q.qid),
-         |lut AS (SELECT rq.qid, b.sub, b.code,
-         |          ${microSql(dotCentroidSql("list_slice(rq.rqvec, b.sub*8+1, b.sub*8+8)", "b.centroid"))} AS p_micro
-         |        FROM rq CROSS JOIN books b),
-         |clut AS (SELECT q.qid, g.cell_id, ${microSql(dotCentroidSql("q.qvec", "g.centroid"))} AS c_micro
-         |         FROM q CROSS JOIN coarse g),
-         |s AS (SELECT c.qid, c.vec_id, k.cell_id, sum(l.p_micro) AS r_micro
-         |      FROM cand c JOIN codes k ON k.vec_id = c.vec_id
-         |                  JOIN lut l ON l.qid = c.qid AND l.sub = k.sub AND l.code = k.code
-         |      GROUP BY 1, 2, 3),
-         |t AS (SELECT s.qid, s.vec_id, s.r_micro + cl.c_micro AS adc
-         |      FROM s JOIN clut cl ON cl.qid = s.qid AND cl.cell_id = s.cell_id),
-         |rk AS (SELECT qid, vec_id, adc, row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM t)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc AS BIGINT) AS adc_micro
-         |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "knn_doc_join" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 3),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank FROM s)
-         |SELECT CAST(r.qid AS BIGINT) AS qid, CAST(r.vec_id AS BIGINT) AS vec_id, CAST(r.rank AS BIGINT) AS rank,
-         |       substr(d.text, 1, 20) AS text_prefix
-         |FROM r JOIN documents d ON r.vec_id = d.doc_id WHERE r.rank <= 3 ORDER BY qid, rank""".stripMargin,
-    "vec_normalize" ->
-      s"""SELECT CAST(vec_id AS BIGINT) AS vec_id,
-         |       ${microSql(s"sqrt(${dotSql("embedding", "embedding")})")} AS norm_micro
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "vec_quantize" ->
-      s"""WITH q AS (SELECT vec_id, embedding, ${codeSql("embedding")} AS code FROM embeddings)
-         |SELECT CAST(vec_id AS BIGINT) AS vec_id, code[1] AS c0, code[2] AS c1,
-         |       ${microSql("sqrt(list_reduce(list_prepend(0.0, list_transform(list_zip(embedding, code), " +
-          "z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)/127.0)*(CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)/127.0))), (acc,x) -> acc+x))")} AS err_micro
-         |FROM q ORDER BY vec_id""".stripMargin,
-    "knn_quantized" ->
-      s"""WITH b AS (SELECT vec_id, ${codeSql("embedding")} AS code FROM embeddings),
-         |q AS (SELECT vec_id AS qid, code AS qcode FROM b WHERE vec_id < 5),
-         |sc AS (SELECT q.qid, b.vec_id,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(list_zip(q.qcode, b.code), z -> z[1]*z[2])), (acc,x) -> acc+x) AS qsim
-         |       FROM b CROSS JOIN q WHERE b.vec_id <> q.qid),
-         |r AS (SELECT qid, vec_id, qsim, row_number() OVER (PARTITION BY qid ORDER BY qsim DESC, vec_id) AS rank FROM sc)
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(qsim AS BIGINT) AS qsim
-         |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "vec_pair_metrics" ->
-      s"""WITH a AS (SELECT vec_id AS id_a, embedding AS va FROM embeddings),
-         |b AS (SELECT vec_id - 1 AS id_a, vec_id AS id_b, embedding AS vb FROM embeddings)
-         |SELECT CAST(a.id_a AS BIGINT) AS id_a, CAST(b.id_b AS BIGINT) AS id_b,
-         |       ${microSql(dotSql("a.va", "b.vb"))} AS cos_micro,
-         |       ${microSql(s"sqrt(${sqDistSql("a.va", "b.vb")})")} AS l2_micro
-         |FROM a JOIN b USING (id_a) ORDER BY id_a""".stripMargin,
-    "crud_insert" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label,
-        |       CAST(len(embedding) AS BIGINT) AS dim,
-        |       CAST(floor(CAST(embedding[1] AS DOUBLE)*1000000.0) AS BIGINT) AS dim0_micro
-        |FROM embeddings
-        |UNION ALL
-        |SELECT CAST(i+100000 AS BIGINT), CAST(i%10 AS BIGINT), 64,
-        |       CAST(floor(CAST(CAST(CAST((i*31)%97 AS DOUBLE)/97.0 AS FLOAT) AS DOUBLE)*1000000.0) AS BIGINT)
-        |FROM range(100) t(i)
-        |ORDER BY vec_id""".stripMargin,
-    "crud_delete_last_n" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT vec_id FROM embeddings ORDER BY vec_id DESC LIMIT 100)
-        |ORDER BY vec_id""".stripMargin,
-    "crud_delete_pred" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label FROM embeddings
-        |WHERE vec_id % 7 <> 3 ORDER BY vec_id""".stripMargin,
-    "crud_update" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |       CAST(CASE WHEN vec_id % 7 = 3 THEN label + 100 ELSE label END AS BIGINT) AS label
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "crud_update_positional" ->
-      """WITH mx AS (SELECT max(vec_id) AS max_id FROM embeddings),
-        |v AS (SELECT label, row_number() OVER (ORDER BY vec_id) AS rn
-        |      FROM embeddings WHERE vec_id % 7 = 3)
-        |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label,
-        |       CAST(0 AS BIGINT) AS reassigned
-        |FROM embeddings WHERE vec_id % 7 <> 3
-        |UNION ALL
-        |SELECT CAST(max_id + rn AS BIGINT), CAST(label + 100 AS BIGINT), CAST(1 AS BIGINT)
-        |FROM v CROSS JOIN mx
-        |ORDER BY vec_id""".stripMargin,
-    "crud_upsert" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id,
-        |       CAST(CASE WHEN vec_id < 50 THEN label + 1000 ELSE label END AS BIGINT) AS label
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "crud_point_lookup" ->
-      "SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label FROM embeddings WHERE vec_id = 42",
-    "crud_delete_seeded" ->
-      """SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS BIGINT) AS label FROM embeddings
-        |WHERE ((vec_id * 2654435761 + 42) % 1000000007) % 100 >= 10 ORDER BY vec_id""".stripMargin,
-    "crud_counts" ->
-      """SELECT CAST(label AS BIGINT) AS label, CAST(count(*) AS BIGINT) AS n
-        |FROM embeddings GROUP BY ROLLUP(label) ORDER BY label NULLS FIRST""".stripMargin,
-    "dedup_keep_first" ->
-      """WITH r AS (SELECT user_id % 50 AS k, event_id, event_type,
-        |                  row_number() OVER (PARTITION BY user_id % 50 ORDER BY event_id) AS rn
-        |           FROM events)
-        |SELECT CAST(k AS BIGINT) AS k, CAST(event_id AS BIGINT) AS event_id, event_type
-        |FROM r WHERE rn = 1 ORDER BY k""".stripMargin,
-    "dedup_exact" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS doc_id_kept, CAST(count(*) AS BIGINT) AS n_copies,
-        |       CAST(length(text) AS BIGINT) AS text_len
-        |FROM documents GROUP BY text ORDER BY doc_id_kept""".stripMargin,
-    "dedup_ngram_jaccard" -> ngramJaccardSql,
-    // Threshold dial: the full candidate-pair set once, per-level counts
-    // as conditional aggregates — pairs at each τ plus docs whose BEST
-    // pair clears τ.
-    "dedup_threshold_curve" ->
-      """WITH sh AS (SELECT doc_id, list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-        |                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-        |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-        |inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |j AS (SELECT id_a, id_b,
-        |             CAST(floor(CAST(common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - common AS DOUBLE) * 1000000.0) AS BIGINT) AS jm
-        |      FROM p JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b),
-        |d AS (SELECT doc_id, max(jm) AS ms
-        |      FROM (SELECT id_a AS doc_id, jm FROM j UNION ALL SELECT id_b AS doc_id, jm FROM j)
-        |      GROUP BY 1),
-        |lv AS (SELECT unnest([120000, 200000, 300000, 500000, 800000]) AS tau_micro)
-        |SELECT CAST(l.tau_micro AS BIGINT) AS tau_micro,
-        |       CAST((SELECT count(*) FROM j WHERE jm >= l.tau_micro) AS BIGINT) AS n_pairs,
-        |       CAST((SELECT count(*) FROM d WHERE ms >= l.tau_micro) AS BIGINT) AS n_docs_flagged
-        |FROM lv l ORDER BY tau_micro""".stripMargin,
-    // Asymmetric containment near-dup: same inverted index, score =
-    // common / min(|A|,|B|), cut on the floored micro (engine-exact).
-    "dedup_containment" ->
-      """WITH sh AS (SELECT doc_id, list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-        |                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-        |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-        |inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |c AS (SELECT id_a, id_b, sa.n_sh AS n_a, sb.n_sh AS n_b, common,
-        |        CAST(floor(CAST(common AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE) * 1000000.0) AS BIGINT) AS containment_micro
-        |      FROM p JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b)
-        |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-        |       CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |       CAST(common AS BIGINT) AS common, containment_micro,
-        |       CAST(CASE WHEN n_a < n_b THEN id_a WHEN n_b < n_a THEN id_b
-        |                 ELSE least(id_a, id_b) END AS BIGINT) AS contained_id
-        |FROM c WHERE containment_micro >= 500000 ORDER BY id_a, id_b""".stripMargin,
-    // Suffix-array-style span dedup (Lee et al. 2021): positional 5-gram
-    // anchors, diagonal gaps-and-islands, maximal shared runs >= 8 words.
-    // The oracle joins on the gram STRING where the engine joins on its
-    // xxhash64 — same no-collision contract as the shingle family.
-    "dedup_substring" ->
-      s"""WITH $substringRunsCteSql
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-         |       CAST(pos_a AS BIGINT) AS pos_a, CAST(pos_b AS BIGINT) AS pos_b,
-         |       CAST(span_words AS BIGINT) AS span_words
-         |FROM runs WHERE span_words >= 8 ORDER BY id_a, id_b, pos_a, pos_b""".stripMargin,
-    // Per-doc coverage of duplicated spans: both endpoints contribute an
-    // interval, running-max island merge unions overlaps, frac in micro.
-    "dedup_substring_stats" ->
-      s"""WITH $substringRunsCteSql,
-         |fr AS (SELECT * FROM runs WHERE span_words >= 8),
-         |iv AS (SELECT id_a AS doc_id, pos_a AS s, pos_a + span_words - 1 AS e FROM fr
-         |       UNION ALL
-         |       SELECT id_b, pos_b, pos_b + span_words - 1 FROM fr),
-         |o AS (SELECT doc_id, s, e,
-         |             max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-         |                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
-         |      FROM iv),
-         |grp AS (SELECT doc_id, s, e,
-         |               sum(CASE WHEN prev_max IS NULL OR s > prev_max THEN 1 ELSE 0 END)
-         |                 OVER (PARTITION BY doc_id ORDER BY s, e) AS g
-         |        FROM o),
-         |mrg AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM grp GROUP BY doc_id, g),
-         |agg AS (SELECT doc_id, count(*) AS dup_spans, sum(e - s + 1) AS dup_words
-         |        FROM mrg GROUP BY doc_id),
-         |nw AS (SELECT doc_id, len(string_split(text, ' ')) AS n_words FROM documents)
-         |SELECT CAST(agg.doc_id AS BIGINT) AS doc_id, CAST(n_words AS BIGINT) AS n_words,
-         |       CAST(dup_spans AS BIGINT) AS dup_spans, CAST(dup_words AS BIGINT) AS dup_words,
-         |       CAST(floor(CAST(dup_words AS DOUBLE) / CAST(n_words AS DOUBLE) * 1000000.0) AS BIGINT) AS dup_frac_micro
-         |FROM agg JOIN nw ON nw.doc_id = agg.doc_id ORDER BY doc_id""".stripMargin,
-    // Span-removal action (keep-first by doc_id: every run survives only
-    // in its lowest-id doc). The oracle cuts covered positions with a
-    // correlated NOT EXISTS and rebuilds text with an ordered string_agg.
-    "dedup_substring_prune" ->
-      s"""WITH $substringRunsCteSql,
-         |fr AS (SELECT * FROM runs WHERE span_words >= 8),
-         |iv AS (SELECT id_b AS doc_id, pos_b AS s, pos_b + span_words - 1 AS e FROM fr),
-         |p AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, ws FROM w),
-         |kp AS (SELECT p.doc_id, pos, ws[pos] AS word FROM p
-         |       WHERE NOT EXISTS (SELECT 1 FROM iv
-         |                         WHERE iv.doc_id = p.doc_id AND pos BETWEEN iv.s AND iv.e)),
-         |ag AS (SELECT doc_id, count(*) AS n_kept,
-         |              string_agg(word, ' ' ORDER BY pos) AS text_kept
-         |       FROM kp GROUP BY doc_id)
-         |SELECT CAST(w.doc_id AS BIGINT) AS doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-         |       CAST(coalesce(n_kept, 0) AS BIGINT) AS n_kept,
-         |       coalesce(text_kept, '') AS text_kept
-         |FROM w LEFT JOIN ag ON ag.doc_id = w.doc_id ORDER BY doc_id""".stripMargin,
-    // Cross-source contamination matrix over the same runs (unordered
-    // source pair, canonicalized source_a <= source_b).
-    "dedup_source_matrix" ->
-      s"""WITH $substringRunsCteSql,
-         |fr AS (SELECT * FROM runs WHERE span_words >= 8),
-         |src AS (SELECT doc_id, source FROM documents),
-         |e AS (SELECT least(sa.source, sb.source) AS source_a,
-         |             greatest(sa.source, sb.source) AS source_b, span_words
-         |      FROM fr JOIN src sa ON sa.doc_id = fr.id_a
-         |              JOIN src sb ON sb.doc_id = fr.id_b)
-         |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_runs,
-         |       CAST(sum(span_words) AS BIGINT) AS dup_words
-         |FROM e GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-    // Engine-portable MinHash: one md5 per shingle, Kirsch–Mitzenmacher
-    // xxhash64 MinHash banding: the signatures are engine-specific, so the
-    // oracle replays the BANDING JOIN over the exported band frame (the
-    // knn_ivf exported-artifact pattern; sketch half covered by the md5
-    // twin + SketchExpressions specs).
-    "dedup_minhash_lsh" ->
-      s"""WITH b AS (SELECT doc_id, band, bh
-         |           FROM read_parquet('$sketchStorePath/minhash_bands/*.parquet'))
-         |SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS id_a, CAST(c.doc_id AS BIGINT) AS id_b
-         |FROM b a JOIN b c ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-    // xxhash64 SimHash: chunk-block + bit_count(xor) Hamming verify over
-    // the exported signatures — integer SQL end to end.
-    "dedup_simhash" ->
-      s"""WITH s AS (SELECT doc_id, simhash
-         |           FROM read_parquet('$sketchStorePath/simhash_sigs/*.parquet')),
-         |ch AS (SELECT doc_id, simhash, c.chunk, (simhash >> (c.chunk * 8)) & 255 AS cv
-         |       FROM s, (SELECT unnest([0, 1, 2, 3]) AS chunk) c),
-         |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             bit_count(xor(a.simhash, b.simhash)) AS hamming
-         |      FROM ch a JOIN ch b ON a.chunk = b.chunk AND a.cv = b.cv AND a.doc_id < b.doc_id)
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-         |       CAST(hamming AS BIGINT) AS hamming
-         |FROM p WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin,
-    // double-hashed permutations over two nibble-arithmetic 32-bit words,
-    // 4 bands × 3 — the exact integer replay of Dedup.minhashMd5Pairs.
-    "dedup_minhash_md5" ->
-      s"""WITH $minhashMd5BandCtesSql
-         |SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
-    // LSH precision/recall audit: the banded candidate set vs the exact
-    // Jaccard truth set — both legs reuse the shared `sh` shingle CTE.
-    "dedup_lsh_eval" ->
-      s"""WITH $minhashMd5BandCtesSql,
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
-         |sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-         |inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-         |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         |truth AS (SELECT id_a, id_b
-         |          FROM p JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-         |          WHERE CAST(common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - common AS DOUBLE) >= 0.12),
-         |hit AS (SELECT count(*) AS n_hit FROM truth JOIN cand USING (id_a, id_b))
-         |SELECT CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_truth,
-         |       CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_cand,
-         |       CAST(n_hit AS BIGINT) AS n_hit,
-         |       CAST(n_hit * 1000 // (SELECT count(*) FROM cand) AS BIGINT) AS precision_permille,
-         |       CAST(n_hit * 1000 // (SELECT count(*) FROM truth) AS BIGINT) AS recall_permille
-         |FROM hit""".stripMargin,
-    // Incremental probe: incoming batch (doc_id%10=0) vs the corpus band
-    // index (the rest). Band rows are per-doc, so filtering the shared
-    // bands CTE by side replays Dedup.incrementalNearDup exactly.
-    "dedup_incremental" ->
-      s"""WITH $minhashMd5BandCtesSql
-         |SELECT DISTINCT CAST(q.doc_id AS BIGINT) AS incoming_id,
-         |       CAST(c.doc_id AS BIGINT) AS corpus_id
-         |FROM bands q JOIN bands c ON q.band = c.band AND q.bk = c.bk
-         |WHERE q.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
-         |ORDER BY incoming_id, corpus_id""".stripMargin,
-    // Bloom-pruned incremental EXACT dedup: the Bloom filter is a pure
-    // pruning hint (no false negatives; false positives die in the exact
-    // confirm join), so the oracle is the plain md5-content left join the
-    // query is provably equivalent to.
-    "dedup_bloom" ->
-      """WITH ck AS (SELECT md5(text) AS w, min(doc_id) AS dup_of, count(*) AS n_copies
-        |            FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1),
-        |b AS (SELECT doc_id, md5(text) AS w FROM documents WHERE doc_id % 10 = 0)
-        |SELECT CAST(b.doc_id AS BIGINT) AS doc_id, CAST(ck.dup_of AS BIGINT) AS dup_of,
-        |       CAST(coalesce(ck.n_copies, 0) AS BIGINT) AS n_copies
-        |FROM b LEFT JOIN ck USING (w) ORDER BY doc_id""".stripMargin,
-    // Staged dedup funnel: each stage reuses its operator's exact
-    // survivor rule; the near-dup stage drops the LARGER side of every
-    // banded candidate pair (the shared minhash CTE fragments).
-    "dedup_funnel" ->
-      s"""WITH $minhashMd5BandCtesSql,
-         |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |          FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
-         |exact_kept AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |near_kept AS (SELECT doc_id FROM exact_kept
-         |              WHERE doc_id NOT IN (SELECT id_b FROM pairs)),
-         |q_kept AS (SELECT n.doc_id FROM near_kept n JOIN documents d ON d.doc_id = n.doc_id
-         |           WHERE d.n_chars >= 50)
-         |SELECT * FROM (
-         |  SELECT CAST(1 AS BIGINT) AS stage_no, 'raw' AS stage,
-         |         CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs
-         |  UNION ALL SELECT 2, 'exact_dedup', CAST((SELECT count(*) FROM exact_kept) AS BIGINT)
-         |  UNION ALL SELECT 3, 'near_dup', CAST((SELECT count(*) FROM near_kept) AS BIGINT)
-         |  UNION ALL SELECT 4, 'length_floor', CAST((SELECT count(*) FROM q_kept) AS BIGINT)
-         |) ORDER BY stage_no""".stripMargin,
-    // DAU / trailing-7-day WAU / stickiness: distinct activity grid,
-    // bounded day-list range join, integer ratio.
-    "events_wau" ->
-      """WITH grid AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-        |days AS (SELECT DISTINCT d AS day FROM grid),
-        |dau AS (SELECT d AS day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau FROM grid GROUP BY 1),
-        |wau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS wau
-        |        FROM days JOIN grid ON grid.d BETWEEN day - 6 AND day GROUP BY 1)
-        |SELECT day, dau, wau, CAST(dau * 1000000 // wau AS BIGINT) AS stickiness_micro
-        |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin,
-    // Per-day type diversity: rational Gini (no libm), exact integers.
-    "events_type_gini" ->
-      """WITH bt AS (SELECT CAST(ts AS DATE) AS event_date, event_type, CAST(count(*) AS BIGINT) AS n_t
-        |            FROM events GROUP BY 1, 2)
-        |SELECT event_date, CAST(sum(n_t) AS BIGINT) AS n,
-        |       CAST(count(*) AS BIGINT) AS n_types,
-        |       CAST(1000000 - (sum(n_t * n_t) * 1000000) // (sum(n_t) * sum(n_t)) AS BIGINT) AS gini_micro
-        |FROM bt GROUP BY 1 ORDER BY 1""".stripMargin,
-    // First-order transition matrix: per-user lead window (ts, event_id
-    // tiebreak), one pair-count aggregate, integer row-conditional permille.
-    "events_transitions" ->
-      """WITH s AS (SELECT user_id, event_type,
-        |             lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        |           FROM events),
-        |p AS (SELECT event_type AS from_type, next_type AS to_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM s WHERE next_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from FROM p GROUP BY 1)
-        |SELECT p.from_type, p.to_type, p.n, CAST(p.n * 1000 // t.n_from AS BIGINT) AS prob_permille
-        |FROM p JOIN t USING (from_type) ORDER BY from_type, to_type""".stripMargin,
-    // Quality-dial token budget: one-pass conditional sums over the same
-    // score construction as text_quality, priced at every tau at once.
-    "text_quality_curve" -> {
-      val taus = Seq(600000L, 700000L, 750000L, 800000L, 850000L)
-      val rows = taus.map(t =>
-        s"SELECT CAST($t AS BIGINT) AS tau_micro, " +
-          s"CAST(sum(CASE WHEN sm >= $t THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_kept, " +
-          s"CAST(sum(CASE WHEN sm >= $t THEN nw ELSE 0 END) AS BIGINT) AS tokens_kept FROM s")
-        .mkString("\n|UNION ALL ")
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |t AS (SELECT doc_id, len(ws) AS nw, len(list_distinct(ws)) AS nd,
-         |         list_max(list_transform(list_distinct(ws), tk -> len(list_filter(ws, w -> w = tk)))) AS mf
-         |      FROM d),
-         |s AS (SELECT doc_id, nw,
-         |         CAST(floor(((CAST(least(nw, 50) AS DOUBLE)/50.0 + CAST(nd AS DOUBLE)/CAST(nw AS DOUBLE)
-         |          + 1.0 - CAST(mf AS DOUBLE)/CAST(nw AS DOUBLE))/3.0)*1000000.0) AS BIGINT) AS sm
-         |      FROM t)
-         |SELECT * FROM ($rows) ORDER BY tau_micro""".stripMargin
-    },
-    // CUSUM changepoint: division-free scaled deviations, windowed cumsum,
-    // argmax |cusum| flagged.
-    "events_changepoint" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS event_date, CAST(count(*) AS BIGINT) AS n_events
-        |               FROM events GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_events) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS days FROM daily),
-        |c AS (SELECT event_date, n_events,
-        |        CAST(sum(n_events * days - total) OVER (ORDER BY event_date
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cusum_scaled
-        |      FROM daily CROSS JOIN tot)
-        |SELECT event_date, n_events, cusum_scaled,
-        |       abs(cusum_scaled) = (SELECT max(abs(cusum_scaled)) FROM c) AS is_peak
-        |FROM c ORDER BY event_date""".stripMargin,
-    // Content-defined chunking dedup: word-gear cut points (boundary after
-    // any word whose md5 gear word is ≡0 mod 8), chunk text re-assembled
-    // ORDER BY pos, duplication = one hash aggregate over the chunk table.
-    "dedup_cdc" ->
-      s"""WITH w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos
-         |           FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-         |h AS (SELECT doc_id, pos, w, md5('cdc:' || w) AS dg FROM w),
-         |b AS (SELECT doc_id, pos, w,
-         |        CASE WHEN (${graft.operators.Dedup.hexWordSql("strpos", "dg", 1)}) % 8 = 0
-         |             THEN 1 ELSE 0 END AS brk FROM h),
-         |c AS (SELECT doc_id, pos, w,
-         |        COALESCE(sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk
-         |      FROM b),
-         |ch AS (SELECT doc_id, chunk, md5(string_agg(w, ' ' ORDER BY pos)) AS chunk_hash
-         |       FROM c GROUP BY 1, 2),
-         |occ AS (SELECT chunk_hash, count(DISTINCT doc_id) AS n_docs FROM ch GROUP BY 1)
-         |SELECT CAST(ch.doc_id AS BIGINT) AS doc_id,
-         |       CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(sum(CASE WHEN occ.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-         |       CAST(sum(CASE WHEN occ.n_docs >= 2 THEN 1 ELSE 0 END) * 1000 // count(*) AS BIGINT) AS dup_permille
-         |FROM ch JOIN occ USING (chunk_hash) GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Cross-snapshot CDC containment: chunking is per-doc independent, so
-    // chunking the whole table then splitting by side replays both legs.
-    "dedup_cdc_incremental" ->
-      s"""WITH w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos
-         |           FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-         |h AS (SELECT doc_id, pos, w, md5('cdc:' || w) AS dg FROM w),
-         |b AS (SELECT doc_id, pos, w,
-         |        CASE WHEN (${graft.operators.Dedup.hexWordSql("strpos", "dg", 1)}) % 8 = 0
-         |             THEN 1 ELSE 0 END AS brk FROM h),
-         |c AS (SELECT doc_id, pos, w,
-         |        COALESCE(sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk
-         |      FROM b),
-         |ch AS (SELECT doc_id, chunk, md5(string_agg(w, ' ' ORDER BY pos)) AS chunk_hash
-         |       FROM c GROUP BY 1, 2),
-         |corpus AS (SELECT DISTINCT chunk_hash FROM ch WHERE doc_id % 10 <> 0),
-         |batch AS (SELECT * FROM ch WHERE doc_id % 10 = 0)
-         |SELECT CAST(batch.doc_id AS BIGINT) AS doc_id,
-         |       CAST(count(*) AS BIGINT) AS n_chunks,
-         |       CAST(sum(CASE WHEN corpus.chunk_hash IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_known_chunks,
-         |       CAST(sum(CASE WHEN corpus.chunk_hash IS NOT NULL THEN 1 ELSE 0 END) * 1000 // count(*) AS BIGINT) AS known_permille
-         |FROM batch LEFT JOIN corpus USING (chunk_hash)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Novelty decay: distinct 3-grams attributed to their first document,
-    // per-decile first-seen share.
-    "text_novelty_decay" ->
-      """WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-        |                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]))) AS g
-        |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |f AS (SELECT g, min(doc_id) AS first_doc FROM sh GROUP BY 1),
-        |m AS (SELECT max(doc_id) AS mx FROM documents)
-        |SELECT CAST(least(9, doc_id * 10 // (mx + 1)) AS BIGINT) AS decile,
-        |       CAST(count(*) AS BIGINT) AS n_grams,
-        |       CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-        |       CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) * 1000 // count(*) AS BIGINT) AS novelty_permille
-        |FROM sh JOIN f USING (g) CROSS JOIN m
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Edit-distance near-dup: blocked candidates (>=2 common shingles),
-    // exact Levenshtein verify, normalized integer-micro cut.
-    "dedup_edit_distance" ->
-      """WITH sh AS (SELECT doc_id, list_distinct(list_transform(range(greatest(len(ws)-2, 0)),
-        |                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) AS sh
-        |            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |      FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |c AS (SELECT id_a, id_b FROM p WHERE common >= 3),
-        |l AS (SELECT id_a, id_b, CAST(levenshtein(da.text, db.text) AS BIGINT) AS lev,
-        |             greatest(length(da.text), length(db.text)) AS mx
-        |      FROM c JOIN documents da ON da.doc_id = id_a JOIN documents db ON db.doc_id = id_b)
-        |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, lev,
-        |       CAST(lev * 1000000 // mx AS BIGINT) AS lev_micro
-        |FROM l WHERE lev * 1000000 // mx <= 300000 ORDER BY 1, 2""".stripMargin,
-    // Integer fixed-point PageRank over the near-dup graph: 5 unrolled
-    // power-iteration CTEs replaying the engine's exact micro/floor-div
-    // recurrence (long addition is order-independent, so the sums agree).
-    "graph_pagerank" -> {
-      val iters = 5
-      val steps = (1 to iters).map { i =>
-        s"pr$i AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(p.pr_micro // e.out_deg)) // 100 AS BIGINT) AS pr_micro " +
-          s"FROM g e JOIN pr${i - 1} p ON e.src = p.node GROUP BY e.dst)"
-      }.mkString(",\n")
-      s"""WITH pairs AS (SELECT id_a, id_b FROM ($ngramJaccardSql)),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-         |deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src),
-         |g AS (SELECT e.src, e.dst, d.out_deg FROM edges e JOIN deg d ON e.src = d.src),
-         |pr0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS pr_micro FROM deg),
-         |$steps
-         |SELECT CAST(p.node AS BIGINT) AS node, p.pr_micro,
-         |       CAST(d.out_deg AS BIGINT) AS degree
-         |FROM pr$iters p JOIN deg d ON p.node = d.src ORDER BY node""".stripMargin
-    },
-    // Deterministic synchronous LPA replay: the same fixed rounds unrolled
-    // as CTEs — the self-vote is a self-loop edge (as in the engine), so
-    // each round reads the previous one exactly ONCE (linear CTE chain,
-    // not 2^rounds re-derivations); argmax via QUALIFY with the
-    // smallest-label tie-break.
-    "graph_label_prop" -> {
-      val rounds = 3
-      val steps = (1 to rounds).map { i =>
-        s"""l$i AS (SELECT e.dst AS node, p.label, count(*) AS c
-           |        FROM edges e JOIN l${i - 1} p ON e.src = p.node GROUP BY 1, 2
-           |        QUALIFY row_number() OVER (PARTITION BY e.dst ORDER BY count(*) DESC, p.label) = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pairs AS (SELECT id_a, id_b FROM ($ngramJaccardSql)),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |        UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-         |edges AS (SELECT src, dst FROM sym
-         |          UNION ALL SELECT DISTINCT src, src FROM sym),
-         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
-         |$steps,
-         |sizes AS (SELECT label, count(*) AS community_size FROM l$rounds GROUP BY 1)
-         |SELECT CAST(l.node AS BIGINT) AS node, CAST(l.label AS BIGINT) AS label,
-         |       CAST(s.community_size AS BIGINT) AS community_size
-         |FROM l$rounds l JOIN sizes s ON l.label = s.label ORDER BY node""".stripMargin
-    },
-    // Passage-exact dedup with reconstruction: non-overlapping 10-word
-    // segments, global keep-first by (doc_id, seg_no), docs rebuilt from
-    // surviving segments in order. COALESCE matches Spark's '' on a doc
-    // whose every segment duplicated an earlier one.
-    "dedup_paragraph" ->
-      """WITH segs0 AS (SELECT doc_id,
-        |                      unnest(range(CAST(ceil(len(ws) / 10.0) AS BIGINT))) AS seg_no, ws
-        |               FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |segs AS (SELECT doc_id, seg_no,
-        |                array_to_string(list_slice(ws, seg_no*10 + 1, seg_no*10 + 10), ' ') AS seg
-        |         FROM segs0),
-        |ranked AS (SELECT doc_id, seg_no, seg,
-        |                  row_number() OVER (PARTITION BY seg ORDER BY doc_id, seg_no) AS rn
-        |           FROM segs)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(count(*) AS BIGINT) AS n_segs,
-        |       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |       COALESCE(string_agg(CASE WHEN rn = 1 THEN seg END, ' ' ORDER BY seg_no), '') AS text_kept
-        |FROM ranked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // Engine-portable SimHash: bit b of a token's hash = integer nibble
-    // arithmetic on md5 hex; signature bit = strict per-bit majority.
-    "dedup_simhash_md5" -> {
-      val cs = (0 until 32)
-        .map(b => s"sum(((strpos('0123456789abcdef', substr(h, ${b / 4 + 1}, 1)) - 1) >> ${3 - b % 4}) & 1) AS c$b")
-        .mkString(",\n         |        ")
-      val sig = (0 until 32)
-        .map(b => s"(CASE WHEN c$b*2 > n THEN (1::BIGINT << $b) ELSE 0 END)")
-        .mkString(" +\n         |        ")
-      s"""WITH t AS (SELECT doc_id, substr(md5(w), 1, 8) AS h
-         |           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)),
-         |s AS (SELECT doc_id, count(*) AS n,
-         |        $cs
-         |      FROM t GROUP BY 1),
-         |g AS (SELECT doc_id,
-         |        $sig AS sh
-         |      FROM s),
-         |chunks AS (SELECT doc_id, sh, c AS chunk, (sh >> (c*8)) & 255 AS cv
-         |           FROM g, (SELECT unnest([0,1,2,3]) AS c)),
-         |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, bit_count(xor(a.sh, b.sh)) AS hamming
-         |      FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.cv = b.cv AND a.doc_id < b.doc_id)
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, CAST(hamming AS BIGINT) AS hamming
-         |FROM p WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin
-    },
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($ngramJaccardSql)),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |reach(node, lab) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node),
-         |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node)
-         |SELECT CAST(cluster_id AS BIGINT) AS cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-         |       CAST(min(node) AS BIGINT) AS min_member, CAST(max(node) AS BIGINT) AS max_member
-         |FROM cc GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-    // Keep-best dedup: same recursive-CTE components as dedup_clusters,
-    // same quality score as text_quality, argmax survivor per cluster.
-    "dedup_keep_best" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($ngramJaccardSql)),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |reach(node, lab) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node),
-         |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
-         |t AS (SELECT doc_id, len(ws) AS nw, len(list_distinct(ws)) AS nd,
-         |         list_max(list_transform(list_distinct(ws), tk -> len(list_filter(ws, w -> w = tk)))) AS mf
-         |      FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-         |q AS (SELECT doc_id, CAST(floor(((CAST(least(nw, 50) AS DOUBLE)/50.0
-         |         + CAST(nd AS DOUBLE)/CAST(nw AS DOUBLE)
-         |         + 1.0 - CAST(mf AS DOUBLE)/CAST(nw AS DOUBLE))/3.0)*1000000.0) AS BIGINT) AS score_micro
-         |      FROM t),
-         |lab AS (SELECT q.doc_id, coalesce(cc.cluster_id, q.doc_id) AS cluster_id, q.score_micro
-         |        FROM q LEFT JOIN cc ON cc.node = q.doc_id),
-         |r AS (SELECT cluster_id, doc_id, score_micro,
-         |             row_number() OVER (PARTITION BY cluster_id ORDER BY score_micro DESC, doc_id) AS rk,
-         |             count(*) OVER (PARTITION BY cluster_id) AS n_members
-         |      FROM lab)
-         |SELECT CAST(cluster_id AS BIGINT) AS cluster_id, CAST(doc_id AS BIGINT) AS survivor_id,
-         |       CAST(n_members AS BIGINT) AS n_members, score_micro
-         |FROM r WHERE rk = 1 ORDER BY cluster_id""".stripMargin,
-    "dedup_embedding" ->
-      // Replays Dedup.embeddingNearDup's auto-bits formula exactly:
-      // n = max(1, count), bits = clamp(64 - nlz(n/64), 4, 20) — for
-      // n/64 >= 1 that is floor(log2(n/64)) + 1, and the n/64 = 0 branch
-      // clamps to 4 either way. The bucket is then the dynamic-width sign
-      // pattern over the first `bits` coordinates.
-      s"""WITH nb AS (SELECT least(20, greatest(4,
-         |        CAST(floor(log2(greatest(1, count(*) // 64))) AS BIGINT) + 1)) AS bits
-         |      FROM embeddings),
-         |e AS (SELECT vec_id, embedding,
-         |        list_reduce(list_prepend(0::BIGINT, list_transform(range(1, bits + 1),
-         |          i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0.0
-         |                    THEN (1::BIGINT << (i - 1)) ELSE 0::BIGINT END)),
-         |          (acc, x) -> acc + x) AS bucket
-         |      FROM embeddings CROSS JOIN nb),
-         |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${dotSql("a.embedding", "b.embedding")} AS sim
-         |      FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, ${microSql("sim")} AS sim_micro
-         |FROM p WHERE sim >= 0.30 ORDER BY id_a, id_b""".stripMargin,
-    "dedup_embedding_banded" ->
-      s"""WITH e AS (SELECT vec_id, embedding,
-         |             ${bucketSqlAt("embedding", 0, 8)} AS b0, ${bucketSqlAt("embedding", 8, 8)} AS b1,
-         |             ${bucketSqlAt("embedding", 16, 8)} AS b2, ${bucketSqlAt("embedding", 24, 8)} AS b3
-         |           FROM embeddings),
-         |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, ${dotSql("a.embedding", "b.embedding")} AS sim
-         |      FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |       AND (a.b0 = b.b0 OR a.b1 = b.b1 OR a.b2 = b.b2 OR a.b3 = b.b3))
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, ${microSql("sim")} AS sim_micro
-         |FROM p WHERE sim >= 0.30 ORDER BY id_a, id_b""".stripMargin,
-    // Semantic decontamination: exact cosine of every train row (vec_id % 97
-    // <> 0) against the broadcast eval holdout (vec_id % 97 = 0).
-    "decontam_embedding" ->
-      s"""WITH p AS (SELECT t.vec_id AS vec_id, q.vec_id AS eval_id,
-         |             ${dotSql("t.embedding", "q.embedding")} AS sim
-         |           FROM embeddings t JOIN embeddings q
-         |             ON t.vec_id % 97 <> 0 AND q.vec_id % 97 = 0)
-         |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(count(*) AS BIGINT) AS n_eval_matches,
-         |       ${microSql("max(sim)")} AS max_sim_micro, CAST(min(eval_id) AS BIGINT) AS first_eval_id
-         |FROM p WHERE sim >= 0.30 GROUP BY 1 ORDER BY 1""".stripMargin,
-    // SemDeDup over the persisted IVF clustering: within-cell self-join on
-    // the exported store rows (the cluster IS the index's coarse quantizer),
-    // keep-the-earliest eviction — replayed over the same artifacts the
-    // knn_ivf oracle reads.
-    "dedup_semantic" ->
-      s"""WITH r AS (SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id, embedding
-         |           FROM read_parquet('$ivfStorePath/rows/*/*.parquet', hive_partitioning=1)),
-         |p AS (SELECT a.vec_id AS aid, b.vec_id AS vec_id, b.cell_id AS cell_id,
-         |        ${dotSql("a.embedding", "b.embedding")} AS cos
-         |      FROM r a JOIN r b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id)
-         |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(min(aid) AS BIGINT) AS dup_of,
-         |       CAST(cell_id AS BIGINT) AS cell_id, ${microSql("max(cos)")} AS cos_micro
-         |FROM p WHERE cos >= 0.30 GROUP BY vec_id, cell_id ORDER BY vec_id""".stripMargin,
-    "text_stats" ->
-      """WITH d AS (SELECT doc_id, text, n_chars, string_split(text, ' ') AS ws FROM documents),
-        |t AS (SELECT doc_id, length(text) AS n_chars_calc, n_chars, len(ws) AS n_words,
-        |             list_reduce(list_prepend(0::BIGINT, list_transform(ws, w -> CAST(length(w) AS BIGINT))), (acc,x) -> acc+x) AS sum_word_len,
-        |             len(list_filter(ws, w -> list_contains(['the','a','of','and','to','in','is'], w))) AS n_stopwords
-        |      FROM d)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(n_chars_calc AS BIGINT) AS n_chars_calc,
-        |       CAST(n_chars AS BIGINT) AS n_chars, CAST(n_words AS BIGINT) AS n_words,
-        |       CAST(sum_word_len AS BIGINT) AS sum_word_len, CAST(n_stopwords AS BIGINT) AS n_stopwords,
-        |       CAST(floor(CAST(n_stopwords AS DOUBLE)/CAST(n_words AS DOUBLE)*1000000.0) AS BIGINT) AS stopword_ratio_micro
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
-      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |             len(list_filter(ws, w -> list_contains(['the','a','of','and'], w))) AS score_en,
-        |             len(list_filter(ws, w -> list_contains(['el','la','de','que'], w))) AS score_es,
-        |             len(list_filter(ws, w -> list_contains(['der','die','und','das'], w))) AS score_de,
-        |             len(list_filter(ws, w -> list_contains(['le','la','et','les'], w))) AS score_fr,
-        |             len(list_filter(ws, w -> list_contains(['的','了','是','在'], w))) AS score_zh
-        |      FROM d),
-        |g AS (SELECT *, greatest(score_en, score_es, score_de, score_fr, score_zh) AS mx FROM s)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-        |       CASE WHEN score_en = mx AND mx > 0 THEN 'en'
-        |            WHEN score_es = mx AND mx > 0 THEN 'es'
-        |            WHEN score_de = mx AND mx > 0 THEN 'de'
-        |            WHEN score_fr = mx AND mx > 0 THEN 'fr'
-        |            WHEN score_zh = mx AND mx > 0 THEN 'zh'
-        |            ELSE 'unk' END AS lang_pred,
-        |       CAST(score_en AS BIGINT) AS score_en, CAST(score_es AS BIGINT) AS score_es
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // Confusion matrix: the same scoring CTE aggregated to (lang, pred)
-    // cells — off-diagonal mass localizes where the heuristic fails.
-    "text_lang_confusion" ->
-      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |             len(list_filter(ws, w -> list_contains(['the','a','of','and'], w))) AS score_en,
-        |             len(list_filter(ws, w -> list_contains(['el','la','de','que'], w))) AS score_es,
-        |             len(list_filter(ws, w -> list_contains(['der','die','und','das'], w))) AS score_de,
-        |             len(list_filter(ws, w -> list_contains(['le','la','et','les'], w))) AS score_fr,
-        |             len(list_filter(ws, w -> list_contains(['的','了','是','在'], w))) AS score_zh
-        |      FROM d),
-        |g AS (SELECT *, greatest(score_en, score_es, score_de, score_fr, score_zh) AS mx FROM s),
-        |p AS (SELECT lang,
-        |       CASE WHEN score_en = mx AND mx > 0 THEN 'en'
-        |            WHEN score_es = mx AND mx > 0 THEN 'es'
-        |            WHEN score_de = mx AND mx > 0 THEN 'de'
-        |            WHEN score_fr = mx AND mx > 0 THEN 'fr'
-        |            WHEN score_zh = mx AND mx > 0 THEN 'zh'
-        |            ELSE 'unk' END AS lang_pred
-        |      FROM g)
-        |SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_token_count" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-        |       CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS re_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |       list_reduce(list_prepend(0::BIGINT, list_transform(range(length(text)),
-        |                   i -> CAST(ascii(text[i+1]) AS BIGINT))), (acc,x) -> (acc*31+x) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_bigram_top" ->
-      """WITH d AS (SELECT string_split(text, ' ') AS ws FROM documents),
-        |b AS (SELECT unnest(list_transform(range(greatest(len(ws)-1, 0)), i -> ws[i+1] || ' ' || ws[i+2])) AS bigram FROM d)
-        |SELECT bigram, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1 ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "text_quality" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |t AS (SELECT doc_id, len(ws) AS nw, len(list_distinct(ws)) AS nd,
-        |         list_max(list_transform(list_distinct(ws), tk -> len(list_filter(ws, w -> w = tk)))) AS mf
-        |      FROM d),
-        |s AS (SELECT doc_id, nw, nd, mf,
-        |         (CAST(least(nw, 50) AS DOUBLE)/50.0 + CAST(nd AS DOUBLE)/CAST(nw AS DOUBLE)
-        |          + 1.0 - CAST(mf AS DOUBLE)/CAST(nw AS DOUBLE))/3.0 AS score
-        |      FROM t)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(nw AS BIGINT) AS n_words,
-        |       CAST(nd AS BIGINT) AS n_distinct, CAST(mf AS BIGINT) AS max_tok,
-        |       CAST(floor(score*1000000.0) AS BIGINT) AS score_micro
-        |FROM s WHERE score >= 0.75 ORDER BY doc_id""".stripMargin,
-    "text_tfidf" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2),
-        |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |s AS (SELECT doc_id, tf.term, tf, df, CAST(tf * 1000000 * n_docs // df AS BIGINT) AS score
-        |      FROM tf JOIN df USING (term) CROSS JOIN n),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank FROM s)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, term, tf, df, score, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 3 AND doc_id % 20 = 0 ORDER BY doc_id, rank""".stripMargin,
-    // Gopher/C4 decontamination: 4-gram overlap vs the doc_id%97 eval set.
-    "text_decontaminate" ->
-      """WITH g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(greatest(len(ws)-3, 0)),
-        |             i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] || ' ' || ws[i+4]))) AS gram
-        |           FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |e AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0)
-        |SELECT CAST(g.doc_id AS BIGINT) AS doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM g JOIN e USING (gram) WHERE g.doc_id % 97 <> 0
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    // Unigram-LM commonness (perplexity-proxy): per-token (c*1e6) DIV total
-    // micros, integer mean per doc — identical BIGINT folds on both engines.
-    "text_commonness" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |c AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM t),
-        |s AS (SELECT doc_id, count(*) AS n_tokens, sum(c.c * 1000000 // n.total) AS sm
-        |      FROM t JOIN c USING (w) CROSS JOIN n GROUP BY 1)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |       CAST(sm // n_tokens AS BIGINT) AS common_micro
-        |FROM s ORDER BY doc_id""".stripMargin,
-    // Conditional bigram LM with add-one smoothing, integer micros — same
-    // BIGINT folds as text_commonness so both engines agree bit-for-bit.
-    "text_lm_score" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |b AS (SELECT doc_id, unnest(list_transform(range(greatest(len(ws)-1, 0)),
-        |        i -> ws[i+1] || ' ' || ws[i+2])) AS bg FROM w),
-        |bc AS (SELECT bg, CAST(count(*) AS BIGINT) AS cab FROM b GROUP BY 1),
-        |pc AS (SELECT split_part(bg, ' ', 1) AS pfx, CAST(count(*) AS BIGINT) AS ca
-        |       FROM b GROUP BY 1),
-        |v AS (SELECT CAST(count(DISTINCT t.w) AS BIGINT) AS v
-        |      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t),
-        |s AS (SELECT doc_id, (cab + 1) * 1000000 // (ca + v) AS m
-        |      FROM b JOIN bc ON b.bg = bc.bg
-        |      JOIN pc ON split_part(b.bg, ' ', 1) = pc.pfx
-        |      CROSS JOIN v)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |       CAST(sum(m) // count(*) AS BIGINT) AS lm_micro
-        |FROM s GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "text_redact" ->
-      """WITH p AS (SELECT i, printf('%d 192.168.1.%d TCP packet %d', i, i % 256, i*10) AS t
-        |           FROM range(500) t(i))
-        |SELECT CAST(i AS BIGINT) AS frame_number,
-        |       regexp_replace(regexp_replace(regexp_replace(t,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |         '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |         '\b\d{4,}\b', '<NUM>', 'g') AS redacted,
-        |       CAST(len(regexp_extract_all(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |       CAST(len(regexp_extract_all(t, '\b\d{4,}\b')) AS BIGINT) AS n_nums,
-        |       CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails
-        |FROM p ORDER BY frame_number""".stripMargin,
-    // Tokenizer-prep vocabulary census: top-N words, mass share + running
-    // coverage in integer micros; windows run over the limited N rows only.
-    "text_vocab" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM t),
-        |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1),
-        |top AS (SELECT word, n, total FROM c CROSS JOIN n ORDER BY n DESC, word LIMIT 50),
-        |r AS (SELECT word, n, n * 1000000 // total AS share_micro,
-        |        CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS rank
-        |      FROM top)
-        |SELECT rank, word, n, CAST(share_micro AS BIGINT) AS share_micro,
-        |       CAST(sum(share_micro) OVER (ORDER BY rank ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_share_micro
-        |FROM r ORDER BY rank""".stripMargin,
-    // BPE trainer replay: unrolled merge rounds over the bounded word-type
-    // table; greedy non-overlap via the gaps-and-islands parity rule.
-    "text_bpe_merges" -> bpeSql(),
-    // Unigram-LM trainer: 3 unrolled EM rounds, forward DP + backward walk
-    // per round as recursive CTEs under the exact integer objective.
-    "text_unigram_lm" -> unigramLmSql(),
-    // BPE apply replay: the learned pair sequence re-applied to the full
-    // type table, token counts joined back per doc.
-    "text_bpe_encode" -> bpeEncodeSql(),
-    // Gopher repetition signals: dup-word fraction + top-bigram fraction as
-    // integer micros. The oracle computes the bigram mode the relational way
-    // (unnest + group + max) — same value as the Spark side's sorted-run fold.
-    "text_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |b AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |        CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
-        |        list_transform(range(greatest(len(ws)-1, 0)), i -> ws[i+1] || ' ' || ws[i+2]) AS bs
-        |      FROM w),
-        |m AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_bigram_n
-        |      FROM (SELECT doc_id, bg, count(*) AS c
-        |            FROM (SELECT doc_id, unnest(bs) AS bg FROM b) GROUP BY 1, 2)
-        |      GROUP BY 1)
-        |SELECT CAST(b.doc_id AS BIGINT) AS doc_id, n_words, n_distinct,
-        |       CAST((n_words - n_distinct) * 1000000 // n_words AS BIGINT) AS dup_word_micro,
-        |       CAST(len(bs) AS BIGINT) AS n_bigrams,
-        |       CAST(COALESCE(top_bigram_n, 0) AS BIGINT) AS top_bigram_n,
-        |       CAST(CASE WHEN len(bs) > 0 THEN top_bigram_n * 1000000 // len(bs) ELSE 0 END AS BIGINT) AS top_bigram_micro
-        |FROM b LEFT JOIN m ON b.doc_id = m.doc_id ORDER BY doc_id""".stripMargin,
-    // Sliding-window chunking: starts = range(0, n, stride) (same set as
-    // Spark's sequence(0, n-1, stride)); DuckDB list_slice is inclusive-end.
-    "text_chunk" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s AS (SELECT doc_id, ws, unnest(range(0, greatest(len(ws), 1), 30)) AS st FROM w)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(st // 30 AS BIGINT) AS chunk_idx,
-        |       CAST(len(list_slice(ws, st + 1, st + 40)) AS BIGINT) AS n_words,
-        |       array_to_string(list_slice(ws, st + 1, st + 40), ' ') AS chunk_text
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-    // Okapi BM25 (k1 = 1, b = 0.75, linear idf): every constant is exactly
-    // representable and every op is IEEE +*/ in mirrored order, so the
-    // doubles replay bit-identically; per-term micros sum as BIGINT.
-    "text_bm25" ->
-      s"""WITH $bm25CtesSql
-         |SELECT CAST(doc_id AS BIGINT) AS doc_id, score_micro, n_terms,
-         |       CAST(row_number() OVER (ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank
-         |FROM bm25agg ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin,
-    // RRF hybrid fusion: full-outer join of the bm25 top-20 and the dense
-    // top-20 for query vector 0; integer-micro 1e6 // (60 + rank) terms.
-    "rag_fusion" ->
-      s"""WITH $bm25CtesSql,
-         |lex AS (SELECT doc_id, lex_rank FROM (
-         |          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |                 CAST(row_number() OVER (ORDER BY score_micro DESC, doc_id) AS BIGINT) AS lex_rank
-         |          FROM bm25agg) WHERE lex_rank <= 20),
-         |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 1),
-         |s AS (SELECT q.qid, e.vec_id, ${dotSql("q.qvec", "e.embedding")} AS sim
-         |      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |dense AS (SELECT doc_id, dense_rank FROM (
-         |            SELECT CAST(vec_id AS BIGINT) AS doc_id,
-         |                   CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS BIGINT) AS dense_rank
-         |            FROM s) WHERE dense_rank <= 20),
-         |f AS (SELECT COALESCE(lex.doc_id, dense.doc_id) AS doc_id,
-         |        COALESCE(lex_rank, 0) AS lex_rank, COALESCE(dense_rank, 0) AS dense_rank
-         |      FROM lex FULL OUTER JOIN dense ON lex.doc_id = dense.doc_id),
-         |g AS (SELECT doc_id, lex_rank, dense_rank,
-         |        CAST(CASE WHEN lex_rank > 0 THEN 1000000 // (60 + lex_rank) ELSE 0 END +
-         |             CASE WHEN dense_rank > 0 THEN 1000000 // (60 + dense_rank) ELSE 0 END AS BIGINT) AS rrf_micro
-         |      FROM f)
-         |SELECT doc_id, lex_rank, dense_rank, rrf_micro,
-         |       CAST(row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS BIGINT) AS fused_rank
-         |FROM g ORDER BY fused_rank""".stripMargin,
-    "sample_split" ->
-      """WITH h AS (SELECT doc_id,
-        |             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6) AS BIGINT) % 100 AS bucket
-        |           FROM documents)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(bucket AS BIGINT) AS bucket,
-        |       CASE WHEN bucket < 80 THEN 'train' ELSE 'test' END AS split
-        |FROM h ORDER BY doc_id""".stripMargin,
-    // Contamination-safe split: the bucket hash runs over the CONTENT key
-    // (md5 of text), so verbatim copies always land in one split.
-    "sample_split_grouped" ->
-      """WITH h AS (SELECT doc_id,
-        |             CAST('0x' || substr(md5(md5(text) || ':gsplit'), 1, 6) AS BIGINT) % 100 AS bucket
-        |           FROM documents)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(bucket AS BIGINT) AS bucket,
-        |       CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split
-        |FROM h ORDER BY doc_id""".stripMargin,
-    // Cluster-aware split: same recursive-CTE components as dedup_clusters,
-    // split hash over the component representative (singletons = self).
-    "sample_split_cluster" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($ngramJaccardSql)),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |reach(node, lab) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node),
-         |cc AS (SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node),
-         |lab AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-         |        FROM documents d LEFT JOIN cc ON cc.node = d.doc_id),
-         |h AS (SELECT doc_id, cluster_id,
-         |        CAST('0x' || substr(md5(CAST(cluster_id AS VARCHAR) || ':csplit'), 1, 6) AS BIGINT) % 100 AS bucket
-         |      FROM lab)
-         |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-         |       CAST(bucket AS BIGINT) AS bucket,
-         |       CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split
-         |FROM h ORDER BY doc_id""".stripMargin,
-    // Global token offsets: the oracle runs the NAIVE single-window global
-    // prefix sum; Spark computes the same numbers as a two-phase per-shard
-    // prefix sum (no global sort) — the hash equality is the proof.
-    "corpus_offsets" ->
-      """WITH d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |             md5(CAST(doc_id AS VARCHAR) || ':ep1') AS ord
-        |           FROM documents),
-        |s AS (SELECT *, CAST(((strpos('0123456789abcdef', substr(ord, 1, 1)) - 1) * 16 +
-        |                      strpos('0123456789abcdef', substr(ord, 2, 1)) - 1) % 8 AS BIGINT) AS shard
-        |      FROM d)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, shard, n_tokens,
-        |       CAST(sum(n_tokens) OVER (ORDER BY shard, ord, doc_id
-        |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            - n_tokens AS BIGINT) AS start_offset
-        |FROM s ORDER BY start_offset""".stripMargin,
-    "sample_uniform" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id, substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS h8
-        |FROM documents ORDER BY h8, doc_id LIMIT 50""".stripMargin,
-    "sample_stratified" ->
-      """WITH d AS (SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents),
-        |r AS (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn FROM d)
-        |SELECT lang, CAST(doc_id AS BIGINT) AS doc_id, CAST(rn AS BIGINT) AS rn
-        |FROM r WHERE rn <= 20 ORDER BY lang, rn""".stripMargin,
-    "sample_domain_cap" ->
-      """WITH r AS (SELECT source, doc_id, n_chars,
-        |             row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rk
-        |           FROM documents)
-        |SELECT source, CAST(doc_id AS BIGINT) AS doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |       CAST(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 20 ORDER BY source, rk""".stripMargin,
-    // Language-mix resampling: per-language quota fill in salted-hash order.
-    "sample_mix" ->
-      """WITH d AS (SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR) || ':mix') AS h FROM documents),
-        |r AS (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn FROM d)
-        |SELECT lang, CAST(doc_id AS BIGINT) AS doc_id, CAST(rn AS BIGINT) AS rn
-        |FROM r WHERE rn <= CASE lang WHEN 'en' THEN 100 WHEN 'es' THEN 40 WHEN 'de' THEN 30
-        |                             WHEN 'fr' THEN 20 WHEN 'zh' THEN 10 ELSE 0 END
-        |ORDER BY lang, rn""".stripMargin,
-    // Quality-tier quota sample: same score CTE as text_quality, fixed
-    // micro-threshold tiers (map-side, no global ntile), salted-hash fill.
-    "sample_quality_tiers" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |t AS (SELECT doc_id, len(ws) AS nw, len(list_distinct(ws)) AS nd,
-        |         list_max(list_transform(list_distinct(ws), tk -> len(list_filter(ws, w -> w = tk)))) AS mf
-        |      FROM d),
-        |s AS (SELECT doc_id,
-        |         CAST(floor((CAST(least(nw, 50) AS DOUBLE)/50.0 + CAST(nd AS DOUBLE)/CAST(nw AS DOUBLE)
-        |              + 1.0 - CAST(mf AS DOUBLE)/CAST(nw AS DOUBLE))/3.0*1000000.0) AS BIGINT) AS score_micro
-        |      FROM t),
-        |b AS (SELECT doc_id, score_micro, least(score_micro // 250000, 3) AS tier,
-        |             md5(CAST(doc_id AS VARCHAR) || ':qtier') AS h
-        |      FROM s),
-        |r AS (SELECT tier, doc_id, score_micro,
-        |             row_number() OVER (PARTITION BY tier ORDER BY h, doc_id) AS rn
-        |      FROM b)
-        |SELECT CAST(tier AS BIGINT) AS tier, CAST(doc_id AS BIGINT) AS doc_id,
-        |       score_micro, CAST(rn AS BIGINT) AS rn
-        |FROM r WHERE rn <= 50 ORDER BY tier, rn""".stripMargin,
-    // Seeded epoch shuffle: md5(doc_id || ':ep1') order, first-byte shard,
-    // dense within-shard positions — replayed verbatim.
-    "corpus_shuffle" ->
-      """WITH d AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':ep1') AS ord FROM documents),
-        |s AS (SELECT doc_id, ord,
-        |         CAST(((strpos('0123456789abcdef', substr(ord, 1, 1)) - 1) * 16 +
-        |               strpos('0123456789abcdef', substr(ord, 2, 1)) - 1) % 8 AS BIGINT) AS shard
-        |      FROM d)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, shard,
-        |       CAST(row_number() OVER (PARTITION BY shard ORDER BY ord, doc_id) - 1 AS BIGINT) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-    "corpus_pack" ->
-      """WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-        |             md5(CAST(doc_id AS VARCHAR) || ':pack') AS ord
-        |           FROM documents),
-        |s AS (SELECT *, CAST(strpos('0123456789abcdef', substr(ord, 1, 1)) - 1 AS BIGINT) AS shard FROM d),
-        |c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY shard ORDER BY ord, doc_id
-        |                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM s)
-        |SELECT shard, CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-        |       CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "embed_dim_stats" ->
-      """WITH x AS (SELECT embedding, unnest(range(len(embedding))) AS i FROM embeddings),
-        |v AS (SELECT CAST(i AS BIGINT) AS dim,
-        |             CAST(floor(CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE)*1000000.0) AS BIGINT) AS vm
-        |      FROM x)
-        |SELECT dim, CAST(count(*) AS BIGINT) AS n, CAST(sum(vm) AS BIGINT) AS sum_micro,
-        |       min(vm) AS min_micro, max(vm) AS max_micro
-        |FROM v GROUP BY dim ORDER BY dim""".stripMargin,
-    // Power iteration on the micro-integer Gram matrix, 5 rounds unrolled
-    // (the pagerank trick): matvec sums are exact BIGINT, re-quantization
-    // is max-norm FLOOR division built from truncating ops —
-    // (u − pmod(u, d)) is an exact multiple of d, so `//`/DIV agree at
-    // every sign and the replay is bit-identical.
-    "embed_top_eigen" -> topEigenSql(),
-    // Upper-triangle Gram matrix: per-term micro floors BEFORE the sum
-    // (the dim-stats rule), so the reduction is pure BIGINT.
-    "embed_gram" ->
-      """SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(floor(CAST(embedding[CAST(i + 1 AS INTEGER)] AS DOUBLE)
-        |                           * CAST(embedding[CAST(j + 1 AS INTEGER)] AS DOUBLE)
-        |                           * 1000000.0) AS BIGINT)) AS BIGINT) AS gram_sum_micro
-        |FROM embeddings CROSS JOIN range(0, 16) ti(i) CROSS JOIN range(0, 16) tj(j)
-        |WHERE i <= j GROUP BY i, j ORDER BY i, j""".stripMargin,
-    "pipeline_clean_corpus" -> (cleanCorpusSql + "\nORDER BY doc_id"),
-    "pipeline_corpus_stats" ->
-      s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_words) AS BIGINT) AS total_words
-         |FROM ($cleanCorpusSql) GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Real-codec round-trip: the Spark side PNG-encodes an image with these
-    // formula dimensions, decodes it with javax.imageio, resizes to 12x9 and
-    // decodes again — the oracle replays the formulas arithmetically, so a
-    // hash match proves a real encoder+decoder ran on every row.
-    "media_decode_real" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |       CAST(8 + doc_id % 16 AS BIGINT) AS width,
-        |       CAST(8 + doc_id % 7 AS BIGINT) AS height,
-        |       'png' AS format,
-        |       CAST(12 AS BIGINT) AS rs_width, CAST(9 AS BIGINT) AS rs_height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Perceptual hash: the dHash bit rule is the SAME generated SQL on
-    // both engines, evaluated over the exported grays artifact — only the
-    // decode+block-average step (non-SQL by nature) is trusted to the
-    // export, and even that is bit-deterministic integer arithmetic.
-    "media_phash" -> {
-      val lo = graft.operators.Multimodal.dhashSql("grays", 0, base = 1)
-      val hi = graft.operators.Multimodal.dhashSql("grays", 1, base = 1)
-      s"""SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |       CAST($lo AS BIGINT) AS phash_lo,
-         |       CAST($hi AS BIGINT) AS phash_hi,
-         |       CAST(bit_count(CAST($lo AS BIGINT)) + bit_count(CAST($hi AS BIGINT)) AS BIGINT) AS n_ones
-         |FROM read_parquet('${graft.operators.Multimodal.graysPath(oracleSfDir)}/grays/*.parquet')
-         |ORDER BY doc_id""".stripMargin
-    },
-    // Multi-index Hamming pairs with the AUTO-SCALED band layout. The
-    // pair SET is layout-independent (every feasible layout is complete
-    // for the tau cut by pigeonhole), so the oracle replays it with the
-    // fixed 8-byte-band layout; the LAYOUT DECISION is replayed from the
-    // same measured statistics (corpus size + per-width collision mass,
-    // all integer) and attached as the audit columns — the hash match
-    // proves both the pairs and that the engine chose the cost argmin.
-    "media_phash_pairs" -> {
-      val lo = graft.operators.Multimodal.dhashSql("grays", 0, base = 1)
-      val hi = graft.operators.Multimodal.dhashSql("grays", 1, base = 1)
-      // probes/band per width for the default tau=7 — layout constants,
-      // computed by the same combinatorics the engine uses. Emitted from
-      // the FEASIBILITY-FILTERED set (probesPerBand ≤ 2²⁰, the same cut
-      // chooseHammingLayout applies) so the oracle's argmin draws from
-      // structurally the same candidates as the engine's at any tau
-      // (ADVICE r12 — at tau=7 all of {8,16,32} happen to be feasible).
-      val feas = graft.operators.Multimodal.feasibleWidths(7)
-      val pCase = feas.map { w =>
-        val p = graft.operators.Multimodal.probeBitsFor(w, 7)
-        s"WHEN $w THEN ${graft.operators.Multimodal.probesPerBand(w, p)}"
-      }.mkString(" ")
-      val pbCase = feas.map { w =>
-        s"WHEN $w THEN ${graft.operators.Multimodal.probeBitsFor(w, 7)}"
-      }.mkString(" ")
-      val feasIn = feas.mkString(", ")
-      s"""WITH h AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |                  CAST($lo AS BIGINT) AS lo, CAST($hi AS BIGINT) AS hi
-         |           FROM read_parquet('${graft.operators.Multimodal.graysPath(oracleSfDir)}/grays/*.parquet')),
-         |b AS (SELECT doc_id, i,
-         |             CASE WHEN i < 4 THEN (lo >> (8 * i)) & 255
-         |                  ELSE (hi >> (8 * (i - 4))) & 255 END AS bv
-         |      FROM h CROSS JOIN (SELECT unnest(range(8)) AS i)),
-         |allb AS (SELECT 8 AS w, i,
-         |                CASE WHEN i < 4 THEN (lo >> (8 * i)) & 255
-         |                     ELSE (hi >> (8 * (i - 4))) & 255 END AS bv
-         |         FROM h CROSS JOIN (SELECT unnest(range(8)) AS i)
-         |         UNION ALL
-         |         SELECT 16, i,
-         |                CASE WHEN i < 2 THEN (lo >> (16 * i)) & 65535
-         |                     ELSE (hi >> (16 * (i - 2))) & 65535 END
-         |         FROM h CROSS JOIN (SELECT unnest(range(4)) AS i)
-         |         UNION ALL
-         |         SELECT 32, i,
-         |                CASE WHEN i = 0 THEN lo & 4294967295 ELSE hi & 4294967295 END
-         |         FROM h CROSS JOIN (SELECT unnest(range(2)) AS i)),
-         |cm AS (SELECT w, SUM(c * c) AS coll
-         |       FROM (SELECT w, i, bv, COUNT(*) AS c FROM allb GROUP BY 1, 2, 3)
-         |       GROUP BY w),
-         |nn AS (SELECT COUNT(*) AS n FROM h),
-         |pick AS (SELECT w, 64 // w AS m, CASE w $pbCase END AS p
-         |         FROM (SELECT w,
-         |                      n * (64 // w) * (CASE w $pCase END)
-         |                        + (CASE w $pCase END) * coll AS cost
-         |               FROM cm CROSS JOIN nn
-         |               WHERE w IN ($feasIn))
-         |         ORDER BY cost, w LIMIT 1),
-         |hot AS (SELECT count(*) AS n_hot
-         |        FROM (SELECT w, i, bv, COUNT(*) AS c FROM allb GROUP BY 1, 2, 3) g
-         |        JOIN pick ON g.w = pick.w
-         |        WHERE g.c > ${graft.operators.Multimodal.HotBucketCap}),
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-         |         FROM b a JOIN b b2 ON a.i = b2.i AND a.bv = b2.bv AND a.doc_id < b2.doc_id),
-         |v AS (SELECT id_a, id_b,
-         |             CAST(bit_count(xor(ha.lo, hb.lo)) + bit_count(xor(ha.hi, hb.hi)) AS BIGINT) AS hamming
-         |      FROM cand JOIN h ha ON ha.doc_id = id_a JOIN h hb ON hb.doc_id = id_b)
-         |SELECT id_a, id_b, hamming,
-         |       CAST(pick.w AS BIGINT) AS band_w, CAST(pick.m AS BIGINT) AS n_bands,
-         |       CAST(pick.p AS BIGINT) AS probe_bits, CAST(nn.n AS BIGINT) AS n_hashes,
-         |       CAST(hot.n_hot AS BIGINT) AS n_hot_buckets
-         |FROM v CROSS JOIN pick CROSS JOIN nn CROSS JOIN hot WHERE hamming <= 7
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-    // Cross-modal curation: the md5 MinHash banding (text leg) and the
-    // 8-band Hamming replay over the grays export (image leg, within-τ
-    // pairs mapped to documents through the variant-offset link,
-    // same-document pairs dropped), united by a full-outer flag join.
-    "dedup_crossmodal" -> {
-      val lo = graft.operators.Multimodal.dhashSql("grays", 0, base = 1)
-      val hi = graft.operators.Multimodal.dhashSql("grays", 1, base = 1)
-      val off = graft.operators.Multimodal.VariantOffset
-      s"""WITH $minhashMd5BandCtesSql,
-         |tp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |       FROM bands a JOIN bands b
-         |         ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
-         |td AS (SELECT DISTINCT doc_id FROM (SELECT id_a AS doc_id FROM tp
-         |                                    UNION ALL SELECT id_b FROM tp)),
-         |ph AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |              CAST($lo AS BIGINT) AS lo, CAST($hi AS BIGINT) AS hi
-         |       FROM read_parquet('${graft.operators.Multimodal.graysPath(oracleSfDir)}/grays/*.parquet')),
-         |pb AS (SELECT doc_id, i,
-         |              CASE WHEN i < 4 THEN (lo >> (8 * i)) & 255
-         |                   ELSE (hi >> (8 * (i - 4))) & 255 END AS bv
-         |       FROM ph CROSS JOIN (SELECT unnest(range(8)) AS i)),
-         |pc AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-         |       FROM pb a JOIN pb b2 ON a.i = b2.i AND a.bv = b2.bv AND a.doc_id < b2.doc_id),
-         |pv AS (SELECT id_a, id_b FROM pc
-         |       JOIN ph ha ON ha.doc_id = pc.id_a JOIN ph hb ON hb.doc_id = pc.id_b
-         |       WHERE bit_count(xor(ha.lo, hb.lo)) + bit_count(xor(ha.hi, hb.hi)) <= 7),
-         |pl AS (SELECT CASE WHEN id_a >= $off THEN id_a - $off ELSE id_a END AS doc_a,
-         |              CASE WHEN id_b >= $off THEN id_b - $off ELSE id_b END AS doc_b
-         |       FROM pv),
-         |idv AS (SELECT DISTINCT doc_id FROM (
-         |          SELECT doc_a AS doc_id FROM pl WHERE doc_a <> doc_b
-         |          UNION ALL SELECT doc_b FROM pl WHERE doc_a <> doc_b)),
-         |fl AS (SELECT coalesce(td.doc_id, idv.doc_id) AS doc_id,
-         |              CASE WHEN td.doc_id IS NULL THEN 0 ELSE 1 END AS text_dup,
-         |              CASE WHEN idv.doc_id IS NULL THEN 0 ELSE 1 END AS image_dup
-         |       FROM td FULL OUTER JOIN idv ON td.doc_id = idv.doc_id)
-         |SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |       CAST(text_dup AS BIGINT) AS text_dup,
-         |       CAST(image_dup AS BIGINT) AS image_dup,
-         |       CASE WHEN text_dup = 1 AND image_dup = 1 THEN 'both'
-         |            WHEN text_dup = 1 THEN 'text_only'
-         |            ELSE 'image_only' END AS curation
-         |FROM fl ORDER BY doc_id""".stripMargin
-    },
-    "media_meta" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
-        |       CAST(ascii(text) AS BIGINT) AS first_cp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "media_frames" ->
-      """WITH b AS (SELECT doc_id, encode(text) AS media FROM documents),
-        |f AS (SELECT doc_id, unnest(range(greatest(octet_length(media) // 256 - 1, 0) + 1)) AS frame_no,
-        |      media FROM b)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(frame_no AS BIGINT) AS frame_no,
-        |       CAST(least(greatest(octet_length(media) - frame_no*256, 0), 64) AS BIGINT) AS frame_len
-        |FROM f ORDER BY doc_id, frame_no""".stripMargin,
-    "media_resize" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |       CAST(least(greatest(strlen(text), 1), 64) AS BIGINT) AS resized_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q1_pricing" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_qty_c,
-         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_base_price_c,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS sum_disc_price_c,
-         |       CAST(count(*) AS BIGINT) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-12-01'
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q3_shipping" ->
-      s"""SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-         |       CAST(floor(epoch(o_orderdate)) AS BIGINT) AS o_orderdate_epoch,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS revenue_c
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |     JOIN customer ON o_custkey = c_custkey
-         |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-06-01'
-         |  AND l_shipdate > TIMESTAMP '1998-06-01'
-         |GROUP BY 1, 2 ORDER BY revenue_c DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
-      s"""SELECT n_name,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS revenue_c,
-         |       CAST(count(*) AS BIGINT) AS n_items
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |     JOIN customer ON o_custkey = c_custkey
-         |     JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         |     JOIN nation ON s_nationkey = n_nationkey
-         |     JOIN region ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA' GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q10_returns" ->
-      s"""SELECT CAST(c_custkey AS BIGINT) AS c_custkey, c_name, n_name,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS revenue_c,
-         |       CAST(count(*) AS BIGINT) AS n_items
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |     JOIN customer ON o_custkey = c_custkey
-         |     JOIN nation ON c_nationkey = n_nationkey
-         |WHERE l_returnflag = 'R'
-         |GROUP BY 1, 2, 3 ORDER BY revenue_c DESC, c_custkey LIMIT 20""".stripMargin,
-    // Q18-shaped big customers: the HAVING aggregate prunes before joins.
-    "q18_big_customers" ->
-      """WITH big AS (SELECT l_orderkey,
-        |               CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_qty_c
-        |             FROM lineitem GROUP BY 1
-        |             HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))*100 AS BIGINT) > 25000)
-        |SELECT CAST(c.c_custkey AS BIGINT) AS c_custkey, c.c_name,
-        |       CAST(b.l_orderkey AS BIGINT) AS o_orderkey,
-        |       CAST(CAST(o.o_totalprice AS DECIMAL(18,2))*100 AS BIGINT) AS o_totalprice_c,
-        |       b.sum_qty_c
-        |FROM big b JOIN orders o ON b.l_orderkey = o.o_orderkey
-        |     JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY sum_qty_c DESC, o_orderkey""".stripMargin,
-    // Q14-shaped promo share: conditional sums + BIGINT floor division.
-    "q14_promo_share" ->
-      s"""SELECT strftime(l_shipdate, '%Y-%m') AS month,
-         |       CAST(sum(CASE WHEN p_type = 'PROMO' THEN $discPrice ELSE 0 END)*10000 AS BIGINT) AS promo_c,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS total_c,
-         |       (CAST(sum(CASE WHEN p_type = 'PROMO' THEN $discPrice ELSE 0 END)*10000 AS BIGINT) * 1000000)
-         |         // CAST(sum($discPrice)*10000 AS BIGINT) AS promo_share_micro
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Pareto concentration: the oracle replays the NAIVE global cumulative
-    // window; the engine runs the two-phase range-sharded prefix sum, so
-    // the hash equality IS the two-phase correctness proof (the
-    // corpus_offsets convention).
-    "orders_pareto" -> {
-      val disc = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))"
-      val ts = Seq(500L, 800L, 900L)
-      val sel = ts.map(t =>
-        s"SELECT CAST($t AS BIGINT) AS threshold_permille, " +
-          s"CAST(min(CASE WHEN cum * 1000 >= total_rev * $t THEN rn END) AS BIGINT) AS n_customers, " +
-          s"CAST(min(CASE WHEN cum * 1000 >= total_rev * $t THEN rn END) * 1000 // max(n_cust) AS BIGINT) AS customers_permille " +
-          "FROM ranked CROSS JOIN totals")
-        .mkString("\n|UNION ALL ")
-      s"""WITH pc AS (SELECT o_custkey, CAST(sum(CAST($disc * 10000 AS BIGINT)) AS BIGINT) AS rev_tmc
-         |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1),
-         |ranked AS (SELECT o_custkey, rev_tmc,
-         |             CAST(row_number() OVER (ORDER BY rev_tmc DESC, o_custkey) AS BIGINT) AS rn,
-         |             sum(rev_tmc) OVER (ORDER BY rev_tmc DESC, o_custkey
-         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |           FROM pc),
-         |totals AS (SELECT sum(rev_tmc) AS total_rev, CAST(count(*) AS BIGINT) AS n_cust FROM pc)
-         |SELECT * FROM ($sel) ORDER BY threshold_permille""".stripMargin
-    },
-    // Market-basket brand lift: distinct (order, brand) grid, self-join on
-    // the order key (basket-bounded fan-out), HUGEINT-widened lift.
-    "basket_pairs" ->
-      """WITH ob AS (SELECT DISTINCT l_orderkey AS okey, p_brand AS brand
-        |            FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |n AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM ob),
-        |marg AS (SELECT brand, CAST(count(*) AS BIGINT) AS c FROM ob GROUP BY 1),
-        |pairs AS (SELECT a.brand AS brand_a, b.brand AS brand_b, CAST(count(*) AS BIGINT) AS c_ab
-        |          FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-        |          GROUP BY 1, 2 HAVING count(*) >= 3)
-        |SELECT brand_a, brand_b, c_ab, ma.c AS c_a, mb.c AS c_b,
-        |       CAST((CAST(c_ab AS HUGEINT) * n.n_orders * 1000000) // (ma.c * mb.c) AS BIGINT) AS lift_micro
-        |FROM pairs
-        |JOIN marg ma ON ma.brand = brand_a
-        |JOIN marg mb ON mb.brand = brand_b
-        |CROSS JOIN n
-        |ORDER BY lift_micro DESC, brand_a, brand_b LIMIT 20""".stripMargin,
-    // Q6-shaped scan-dominated aggregate: three pushed range predicates,
-    // one scalar sum of exact decimal products.
-    "q6_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))) * 10000 AS BIGINT) AS revenue_tmc,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND CAST(l_discount AS DECIMAL(18,2)) BETWEEN CAST(0.05 AS DECIMAL(18,2)) AND CAST(0.07 AS DECIMAL(18,2))
-        |  AND l_quantity < 24""".stripMargin,
-    // Q17-shaped small-quantity loss: the correlated avg as a grouped
-    // aggregate joined back; the 0.2·avg cut in cross-multiplied exact
-    // decimal form (no division anywhere near the comparison).
-    "q17_small_quantity" ->
-      """WITH avgq AS (SELECT l_partkey AS ap, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty_sum,
-        |                     count(*) AS qty_n
-        |              FROM lineitem GROUP BY 1),
-        |f AS (SELECT l.l_extendedprice
-        |      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey AND p.p_brand = 'Brand#13'
-        |      JOIN avgq a ON l.l_partkey = a.ap
-        |      WHERE CAST(l.l_quantity AS DECIMAL(18,2)) * 5 * a.qty_n < a.qty_sum)
-        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) // 7 AS avg_yearly_c,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS loss_sum_c,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM f""".stripMargin,
-    // Q2-shape: the correlated per-part MIN decorrelated; the derived
-    // (part, supplier) offer replays exactly (cents // integral quantity).
-    "q2_min_cost_supplier" ->
-      """WITH rs AS (SELECT s_suppkey, s_name, s_acctbal, n_name
-        |            FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |                 JOIN region ON n_regionkey = r_regionkey
-        |            WHERE r_name = 'EUROPE'),
-        |pp AS (SELECT p_partkey, p_brand FROM part WHERE p_size = 15 AND p_type = 'STANDARD'),
-        |off AS (SELECT l_partkey, l_suppkey,
-        |               min(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |                   // CAST(l_quantity AS BIGINT)) AS offer_c
-        |        FROM lineitem GROUP BY 1, 2),
-        |reg AS (SELECT o.l_partkey, o.offer_c, rs.s_name, rs.s_acctbal, rs.n_name, pp.p_brand
-        |        FROM off o JOIN pp ON o.l_partkey = pp.p_partkey
-        |                   JOIN rs ON o.l_suppkey = rs.s_suppkey),
-        |mc AS (SELECT l_partkey AS mk, min(offer_c) AS min_c FROM reg GROUP BY 1)
-        |SELECT CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS s_acctbal_c,
-        |       s_name, n_name, CAST(l_partkey AS BIGINT) AS p_partkey, p_brand, offer_c
-        |FROM reg JOIN mc ON l_partkey = mk AND offer_c = min_c
-        |ORDER BY s_acctbal_c DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-    // Q9-shape: profit = discounted revenue − retail·qty/2, supplier nation × year.
-    "q9_product_profit" ->
-      s"""SELECT n_name AS nation, CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-         |       CAST(sum(CAST($discPrice * 10000 AS BIGINT)
-         |                - CAST(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) * 10000 AS BIGINT) // 2) AS BIGINT) AS profit_tmc
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |     JOIN orders ON l_orderkey = o_orderkey
-         |     JOIN supplier ON l_suppkey = s_suppkey
-         |     JOIN nation ON s_nationkey = n_nationkey
-         |WHERE p_name LIKE '%red%'
-         |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    // Q11-shape: the HAVING scalar subquery as a cross-multiplied total.
-    "q11_important_parts" ->
-      """WITH v AS (SELECT CAST(l_partkey AS BIGINT) AS p_partkey,
-        |                  CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS value_c
-        |           FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |                JOIN nation ON s_nationkey = n_nationkey
-        |           WHERE n_name = 'NATION_3' GROUP BY 1),
-        |t AS (SELECT CAST(sum(value_c) AS BIGINT) AS total_c FROM v)
-        |SELECT p_partkey, value_c FROM v, t WHERE value_c * 10000 > total_c
-        |ORDER BY value_c DESC, p_partkey""".stripMargin,
-    // Q13-shape: LEFT join so zero-order customers stay in the histogram.
-    "q13_order_distribution" ->
-      """WITH cc AS (SELECT c_custkey, CAST(count(o_custkey) AS BIGINT) AS c_count
-        |            FROM customer LEFT JOIN orders
-        |              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |            GROUP BY 1)
-        |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM cc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    // Q15-shape: quarter revenue view + scalar max matched by equality.
-    "q15_top_supplier" ->
-      s"""WITH rev AS (SELECT l_suppkey, CAST(sum(CAST($discPrice * 10000 AS BIGINT)) AS BIGINT) AS total_rev_tmc
-         |             FROM lineitem
-         |             WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-         |             GROUP BY 1),
-         |m AS (SELECT max(total_rev_tmc) AS max_tmc FROM rev)
-         |SELECT CAST(r.l_suppkey AS BIGINT) AS s_suppkey, s.s_name, r.total_rev_tmc
-         |FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey CROSS JOIN m
-         |WHERE r.total_rev_tmc = m.max_tmc ORDER BY s_suppkey""".stripMargin,
-    // Q16-shape: excluded suppliers anti-joined below the distinct count.
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
-        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    // Q20-shape: the double-nested IN as a semi-join chain.
-    "q20_excess_suppliers" ->
-      """SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name, n_name
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-        |    AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY l_suppkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 100)
-        |ORDER BY s_name""".stripMargin,
-    // Q8-shaped market-share: same 8-table join; the share is replayed with
-    // the exact BIGINT floor division the engine uses (// in DuckDB ≡ DIV).
-    "q8_market_share" ->
-      s"""WITH j AS (
-         |  SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-         |         CAST($discPrice*10000 AS BIGINT) AS vol_c,
-         |         n2.n_name AS supp_nation
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |       JOIN part ON l_partkey = p_partkey
-         |       JOIN customer ON o_custkey = c_custkey
-         |       JOIN nation n1 ON c_nationkey = n1.n_nationkey
-         |       JOIN region ON n1.n_regionkey = r_regionkey
-         |       JOIN supplier ON l_suppkey = s_suppkey
-         |       JOIN nation n2 ON s_nationkey = n2.n_nationkey
-         |  WHERE p_type = 'ECONOMY' AND r_name = 'AMERICA'
-         |    AND o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1997-01-01')
-         |SELECT CAST(o_year AS BIGINT) AS o_year,
-         |       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN vol_c ELSE 0 END) AS BIGINT) AS nation_c,
-         |       CAST(sum(vol_c) AS BIGINT) AS total_c,
-         |       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN vol_c ELSE 0 END) * 1000000
-         |            // sum(vol_c) AS BIGINT) AS mkt_share_micro
-         |FROM j GROUP BY o_year ORDER BY o_year""".stripMargin,
-    // Q4-shape: the correlated EXISTS (late lineitem) as DuckDB writes it;
-    // Spark plans the identical semantics as one non-equi left-semi join.
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
-        |              AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Q7-shape: directional region pairs, revenue by ship year.
-    "q7_volume_shipping" ->
-      s"""SELECT supp_region, cust_region, l_year,
-         |       CAST(sum(vol_c) AS BIGINT) AS revenue_c, CAST(count(*) AS BIGINT) AS n_items
-         |FROM (
-         |  SELECT r1.r_name AS supp_region, r2.r_name AS cust_region,
-         |         CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-         |         CAST($discPrice*10000 AS BIGINT) AS vol_c
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |       JOIN supplier ON l_suppkey = s_suppkey
-         |       JOIN customer ON o_custkey = c_custkey
-         |       JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |       JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |       JOIN region r1 ON n1.n_regionkey = r1.r_regionkey
-         |       JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-         |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-         |    AND ((r1.r_name = 'AMERICA' AND r2.r_name = 'ASIA')
-         |      OR (r1.r_name = 'ASIA' AND r2.r_name = 'AMERICA')))
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    // Q12-shape: conditional priority-class counts per return flag.
-    "q12_priority_class" ->
-      """SELECT l_returnflag,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Q19-shape: the OR-of-ANDs disjunction evaluated post-join.
-    "q19_disjunctive" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS n_items,
-         |       CAST(sum($discPrice)*10000 AS BIGINT) AS revenue_c
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 10 AND 25)
-         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 30 AND l_quantity BETWEEN 20 AND 35)""".stripMargin,
-    // Q21-shape: the doubly-correlated EXISTS/NOT-EXISTS replayed in its
-    // aggregate form — identical formulation to the Spark plan so the
-    // sole-late-supplier attribution is deterministic in both engines.
-    "q21_waiting_supplier" ->
-      """WITH per_order AS (
-        |  SELECT l_orderkey,
-        |         count(DISTINCT l_suppkey) AS n_supp,
-        |         count(DISTINCT CASE WHEN l_shipdate > o_orderdate + INTERVAL 45 DAY THEN l_suppkey END) AS n_late,
-        |         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 45 DAY THEN l_suppkey END) AS late_supp
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |  GROUP BY 1)
-        |SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM per_order JOIN supplier ON late_supp = s_suppkey
-        |WHERE n_supp > 1 AND n_late = 1
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin,
-    // Q22-shape: scalar-subquery threshold in exact cross-multiplied
-    // integer form (bal_c*n > s ⇔ bal > s/n), NOT EXISTS over recent orders.
-    "q22_idle_customers" ->
-      """WITH st AS (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))*100) AS BIGINT) AS s,
-        |                   count(*) AS n
-        |            FROM customer WHERE c_acctbal > 0)
-        |SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, CAST(count(*) AS BIGINT) AS n_cust,
-        |       CAST(sum(CAST(CAST(c_acctbal AS DECIMAL(18,2))*100 AS BIGINT)) AS BIGINT) AS total_bal_c
-        |FROM customer, st
-        |WHERE CAST(CAST(c_acctbal AS DECIMAL(18,2))*100 AS BIGINT) * n > s
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '2000-06-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Rolling 3sigma anomaly over hourly rates: trailing-24-row frame,
-    // cross-multiplied integer test — the same formulation in both engines.
-    "events_anomaly_rolling" ->
-      """WITH h AS (SELECT event_type,
-        |                  CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch,
-        |                  CAST(count(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1, 2),
-        |r AS (SELECT *,
-        |        count(n) OVER w AS w, coalesce(sum(n) OVER w, 0) AS s1, sum(n*n) OVER w AS s2
-        |      FROM h WINDOW w AS (PARTITION BY event_type ORDER BY hour_epoch
-        |                          ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, hour_epoch, n, CAST(w AS BIGINT) AS w, CAST(s1 AS BIGINT) AS s1,
-        |       CAST(CASE WHEN w >= 12 AND (w*n - s1)*(w*n - s1) > 9*(w*s2 - s1*s1)
-        |            THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
-        |FROM r ORDER BY event_type, hour_epoch""".stripMargin,
-    // Triangle census over the co-order part graph: the degree-ordered
-    // orientation replayed with row-value tuple comparisons.
-    "graph_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem WHERE l_quantity >= 30),
-        |edges AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |deg AS (SELECT n, count(*) AS d FROM (SELECT u AS n FROM edges UNION ALL SELECT v FROM edges) GROUP BY 1),
-        |o AS (SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS s,
-        |             CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS t,
-        |             CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN dv.d ELSE du.d END AS td
-        |      FROM edges e JOIN deg du ON e.u = du.n JOIN deg dv ON e.v = dv.n),
-        |w AS (SELECT o1.t AS x, o2.t AS y FROM o o1 JOIN o o2 ON o1.s = o2.s AND (o1.td, o1.t) < (o2.td, o2.t)),
-        |tri AS (SELECT count(*) AS n_tri FROM w JOIN o ON w.x = o.s AND w.y = o.t)
-        |SELECT CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_nodes,
-        |       CAST((SELECT count(*) FROM edges) AS BIGINT) AS n_edges,
-        |       CAST((SELECT n_tri FROM tri) AS BIGINT) AS n_triangles,
-        |       CAST((SELECT sum(d*(d-1)//2) FROM deg) AS BIGINT) AS n_wedges,
-        |       CAST((SELECT n_tri FROM tri)*3*1000000 // (SELECT sum(d*(d-1)//2) FROM deg) AS BIGINT) AS cc_micro""".stripMargin,
-    // Salted skew join: the oracle replays the PLAIN join — salting must
-    // not change the result set, only the shuffle layout.
-    "join_salted_skew" ->
-      """SELECT c_mktsegment, event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) * 100 AS BIGINT) AS acctbal_wsum_c
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Join-size preflight: the p=1/16 key sample is the first md5 nibble,
-    // identical in both engines; everything downstream is integer.
-    "join_size_estimate" ->
-      """WITH la AS (SELECT l_orderkey AS k FROM lineitem),
-        |ob AS (SELECT o_orderkey AS k FROM orders),
-        |fa AS (SELECT k, count(*) AS fa FROM la GROUP BY k),
-        |fb AS (SELECT k, count(*) AS fb FROM ob GROUP BY k),
-        |ex AS (SELECT sum(fa * fb) AS exact_rows, count(*) AS n_keys FROM fa JOIN fb USING (k)),
-        |ins AS (SELECT (SELECT sum(fa) FROM fa) AS rows_a, (SELECT sum(fb) FROM fb) AS rows_b),
-        |sfa AS (SELECT k, count(*) AS fa FROM la WHERE substr(md5(CAST(k AS VARCHAR)), 1, 1) = '0' GROUP BY k),
-        |sfb AS (SELECT k, count(*) AS fb FROM ob WHERE substr(md5(CAST(k AS VARCHAR)), 1, 1) = '0' GROUP BY k),
-        |es AS (SELECT coalesce(sum(fa * fb), 0) AS samp_rows, count(*) AS sampled_keys FROM sfa JOIN sfb USING (k))
-        |SELECT CAST(n_keys AS BIGINT) AS n_keys, CAST(sampled_keys AS BIGINT) AS sampled_keys,
-        |       CAST(samp_rows * 16 AS BIGINT) AS est_rows, CAST(exact_rows AS BIGINT) AS exact_rows,
-        |       CAST(abs(samp_rows * 16 - exact_rows) * 1000 // exact_rows AS BIGINT) AS err_permille,
-        |       CAST(rows_a AS BIGINT) AS rows_a, CAST(rows_b AS BIGINT) AS rows_b,
-        |       CASE WHEN samp_rows * 16 > 4 * greatest(rows_a, rows_b) THEN 'explodes' ELSE 'ok' END AS verdict
-        |FROM ex, es, ins""".stripMargin,
-    "join_semi" ->
-      """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_customers
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_anti" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS c_custkey, c_mktsegment
-        |FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "window_top_orders" ->
-      """WITH r AS (SELECT o_custkey, o_orderkey, o_totalprice,
-        |                  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |           FROM orders)
-        |SELECT CAST(o_custkey AS BIGINT) AS o_custkey, CAST(o_orderkey AS BIGINT) AS o_orderkey,
-        |       CAST(CAST(o_totalprice AS DECIMAL(18,2))*100 AS BIGINT) AS price_c, CAST(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "window_running" ->
-      """SELECT CAST(user_id AS BIGINT) AS user_id, CAST(event_id AS BIGINT) AS event_id,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)*100 AS BIGINT) AS running_value_c,
-        |       CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) AS seq
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "window_rank_family" ->
-      """WITH o AS (SELECT o_custkey, o_orderkey, o_totalprice,
-        |                  CAST(o_totalprice AS DECIMAL(18,2)) AS p
-        |           FROM orders WHERE o_custkey % 100 = 0),
-        |w AS (SELECT o_custkey, o_orderkey,
-        |        dense_rank() OVER win AS drk,
-        |        ntile(4) OVER win AS quartile,
-        |        CAST(p - coalesce(lag(p, 1) OVER win, 0) AS DECIMAL(18,2)) AS delta
-        |      FROM o WINDOW win AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey))
-        |SELECT CAST(o_custkey AS BIGINT) AS o_custkey, CAST(o_orderkey AS BIGINT) AS o_orderkey,
-        |       CAST(drk AS BIGINT) AS drk, CAST(quartile AS BIGINT) AS quartile,
-        |       CAST(delta*100 AS BIGINT) AS delta_c
-        |FROM w ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "agg_array" ->
-      """SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
-        |       array_to_string(list_sort(list(CAST(o_orderkey AS BIGINT))), ',') AS order_keys,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM orders WHERE o_custkey % 500 = 0 GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sql_correlated" ->
-      """SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
-        |       CAST(o_orderkey AS BIGINT) AS o_orderkey,
-        |       CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c
-        |FROM orders o
-        |WHERE o_totalprice = (SELECT max(o2.o_totalprice) FROM orders o2
-        |                      WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "agg_rollup" ->
-      """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_qty_c
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "agg_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS n
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "agg_distinct" ->
-      """SELECT l_returnflag, CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "pivot_events" ->
-      """SELECT CAST(user_id % 10 AS BIGINT) AS user_bucket,
-        |       CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
-        |       CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS error,
-        |       CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase,
-        |       CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS signup,
-        |       CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "value_counts_top" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events
-        |GROUP BY 1 ORDER BY n DESC, event_type LIMIT 10""".stripMargin,
-    "set_intersect" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |INTERSECT SELECT CAST(o_custkey AS BIGINT) FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY c_custkey""".stripMargin,
-    "set_except" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |EXCEPT SELECT CAST(o_custkey AS BIGINT) FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY c_custkey""".stripMargin,
-    "join_full_outer" ->
-      """WITH c AS (SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_cust FROM customer GROUP BY 1),
-        |s AS (SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_supp FROM supplier GROUP BY 1)
-        |SELECT CAST(coalesce(c.c_nationkey, s.s_nationkey) AS BIGINT) AS nationkey,
-        |       coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-        |FROM c FULL OUTER JOIN s ON c.c_nationkey = s.s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "metrics_combined" ->
-      """WITH b AS (SELECT count(*) AS n_base FROM embeddings),
-        |m AS (SELECT * FROM (VALUES ('paraphrase_minilm_l12', 384), ('all_minilm_l6', 384),
-        |        ('distilbert_nli_stsb', 768), ('codebert_base', 768), ('bert_base_nli', 768),
-        |        ('komninos_word_avg', 300), ('all_mpnet_base', 768)) t(model, dim)),
-        |s AS (SELECT * FROM (VALUES (2500), (5000), (7500), (10000), (20000), (30000)) t(op_size)),
-        |o AS (SELECT * FROM (VALUES ('insertion'), ('deletion'), ('update'), ('query')) t(op))
-        |SELECT model, op, CAST(op_size AS BIGINT) AS op_size,
-        |       CAST(CASE op WHEN 'insertion' THEN op_size
-        |                    WHEN 'deletion'  THEN n_base
-        |                    WHEN 'update'    THEN op_size
-        |                    ELSE 5 * op_size END AS BIGINT) AS n_rows,
-        |       CAST(dim AS BIGINT) AS dim
-        |FROM m CROSS JOIN s CROSS JOIN o CROSS JOIN b
-        |ORDER BY model, op, op_size""".stripMargin,
-    "catalog_ops" ->
-      """SELECT 'graft_cat_keep_c' AS store_name, CAST(count(*) AS BIGINT) AS n_rows
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    "flow_packet_text" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id,
-        |       concat_ws(' ', coalesce(CAST(event_id AS VARCHAR), ''), coalesce(CAST(user_id AS VARCHAR), ''),
-        |                 coalesce(event_type, ''), coalesce(event_type, ''), coalesce(props, '')) AS packet_text
-        |FROM events ORDER BY event_id""".stripMargin,
-    "flow_clean_cast" ->
-      """WITH p AS (SELECT *, try_cast(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k FROM events),
-        |r AS (SELECT k, event_id, event_type, row_number() OVER (PARTITION BY k ORDER BY event_id) AS rn
-        |      FROM p WHERE k IS NOT NULL)
-        |SELECT CAST(k AS BIGINT) AS k, CAST(event_id AS BIGINT) AS event_id, event_type
-        |FROM r WHERE rn = 1 ORDER BY k""".stripMargin,
-    "flow_synth_packets" ->
-      """SELECT CAST(i AS BIGINT) AS frame_number,
-        |       printf('192.168.1.%d', i % 256) AS ip_src,
-        |       printf('10.0.0.%d', i % 200) AS ip_dst,
-        |       CAST((i*10) % 60000 + 1000 AS BIGINT) AS port,
-        |       (['TCP','UDP','DNS','ICMP','ARP'])[(i % 5) + 1] AS protocol,
-        |       printf('%d 192.168.1.%d TCP packet %d', i, i % 256, i*10) AS packet_text
-        |FROM range(500) t(i) ORDER BY frame_number""".stripMargin,
-    "flow_split_extract" ->
-      """SELECT CAST(i AS BIGINT) AS frame_number,
-        |       string_split(printf('%d 192.168.1.%d TCP packet %d', i, i % 256, i*10), ' ')[3] AS field3
-        |FROM range(500) t(i) ORDER BY frame_number""".stripMargin,
-    "flow_offset_resume" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id, event_type FROM events
-        |ORDER BY event_id LIMIT 1000 OFFSET 500""".stripMargin,
-    "flow_resume_keyed" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id, event_type FROM events
-        |WHERE event_id > 500 ORDER BY event_id LIMIT 1000""".stripMargin,
-    "flow_json_extract" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id,
-        |       CAST(json_extract(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "flow_normalize" ->
-      """SELECT CAST(i AS BIGINT) AS frame_number,
-        |       trim(regexp_replace(regexp_replace(
-        |         lower(printf('%d 192.168.1.%d TCP packet %d', i, i % 256, i*10)),
-        |         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm_text
-        |FROM range(500) t(i) ORDER BY frame_number""".stripMargin,
-    "set_intersect_all" ->
-      """SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey FROM lineitem WHERE l_returnflag = 'R'
-        |INTERSECT ALL SELECT CAST(l_orderkey AS BIGINT) FROM lineitem WHERE l_linestatus = 'F'
-        |ORDER BY l_orderkey""".stripMargin,
-    "set_except_all" ->
-      """SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey FROM lineitem WHERE l_returnflag = 'R'
-        |EXCEPT ALL SELECT CAST(l_orderkey AS BIGINT) FROM lineitem WHERE l_linestatus = 'F'
-        |ORDER BY l_orderkey""".stripMargin,
-    "metrics_summary" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n, min(value) AS min_value, max(value) AS max_value,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_value_c
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "metrics_two_level" ->
-      """WITH u AS (SELECT event_type, user_id, sum(CAST(value AS DECIMAL(18,2))) AS user_sum
-        |           FROM events GROUP BY 1, 2)
-        |SELECT event_type, CAST(max(user_sum)*100 AS BIGINT) AS max_user_sum_c,
-        |       CAST(count(*) AS BIGINT) AS n_users, CAST(sum(user_sum)*100 AS BIGINT) AS total_c
-        |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_hourly" -> hourlySql,
-    "stream_hourly" -> hourlySql,
-    // Cohort retention: signup-week cohorts × week offsets, distinct users.
-    "events_retention" ->
-      """WITH c AS (SELECT user_id, min(date_trunc('week', ts)) AS cohort_week
-        |           FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |a AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM events)
-        |SELECT CAST(floor(epoch(cohort_week)) AS BIGINT) AS cohort_week_epoch,
-        |       CAST((floor(epoch(w)) - floor(epoch(cohort_week))) // 604800 AS BIGINT) AS week_offset,
-        |       CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-        |FROM a JOIN c USING (user_id) WHERE w >= cohort_week
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Strict-sequence funnel: each stage's min is conditioned on the prior
-    // stage's timestamp, so a click before the first view never counts.
-    "events_funnel" -> funnelSql,
-    // The stateful streaming funnel resolves the SAME strict sequence the
-    // batch SQL derives — one oracle text, two execution models.
-    "stream_funnel" -> funnelSql,
-    // CDC changelog apply (tombstone = 'error', everything else upserts):
-    // the fold replayed as a per-key row_number order, the last-tombstone
-    // frontier, and a max_by last-mutation pick. Keys whose log ends in a
-    // tombstone are deleted — absent. One text, batch + streaming models.
-    "cdc_apply" -> cdcApplySql,
-    "stream_cdc_apply" -> cdcApplySql,
-    // SCD2 interval history: lag-change islands per user, [valid_from,
-    // valid_to) bounds via lead, NULL valid_to ⇔ is_current. IS DISTINCT
-    // FROM mirrors Spark's null-safe <=> change flag.
-    "scd2_build" -> scd2Sql,
-    // Incremental merge of the day-2 slice into the persisted SCD2 base:
-    // the oracle is the FULL REBUILD replay, so the hash match proves
-    // merge ≡ rebuild (the agg_incremental_refresh convention).
-    "scd2_merge" -> scd2Sql,
-    // Point-in-time lookup: each purchase resolves to the version current
-    // JUST BEFORE it (valid_from < t <= valid_to — at-t would vacuously be
-    // its own island); first-ever-event purchases report 'none'. Bounds in
-    // exact integer microseconds; left join conserves purchases.
-    "scd2_pit_lookup" -> scd2PitSql,
-    // The same as-of join reached through the registered SQL views — one
-    // strictly-before replay serves both entry surfaces.
-    "lake_sql_pit" -> scd2PitSql,
-    // Last-touch attribution: IGNORE NULLS last over the preceding-rows
-    // frame pulls the latest non-purchase touch (type + timestamp from the
-    // same row); 7-day lookback in exact integer microseconds.
-    "events_attribution" ->
-      """WITH base AS (SELECT user_id, ts, event_id, event_type,
-        |                     CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v_c,
-        |                     CASE WHEN event_type <> 'purchase' THEN event_type END AS touch_type,
-        |                     CASE WHEN event_type <> 'purchase' THEN ts END AS touch_ts
-        |              FROM events),
-        |att AS (SELECT *, last_value(touch_type IGNORE NULLS) OVER w AS prev_type,
-        |               last_value(touch_ts IGNORE NULLS) OVER w AS prev_ts
-        |        FROM base
-        |        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT coalesce(CASE WHEN epoch_us(ts) - epoch_us(prev_ts) <= 604800000000
-        |                     THEN prev_type END, 'direct') AS channel,
-        |       CAST(count(*) AS BIGINT) AS n_purchases,
-        |       CAST(sum(v_c) AS BIGINT) AS revenue_c
-        |FROM att WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Keys-only projection makes the streaming dropDuplicates deterministic:
-    // the surviving key set == SELECT DISTINCT regardless of arrival order.
-    "stream_dedup" ->
-      """SELECT DISTINCT CAST(user_id AS BIGINT) AS user_id, event_type,
-        |       CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch
-        |FROM events ORDER BY 1, 2, 3""".stripMargin,
-    // Sliding-window trending: each event lands in two 2h/1h windows —
-    // replayed by unioning the two shifted hour-trunc window starts.
-    "stream_trending" ->
-      """WITH w AS (SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS s,
-        |                  event_type, value FROM events),
-        |x AS (SELECT s AS window_epoch, event_type, value FROM w
-        |      UNION ALL SELECT s - 3600, event_type, value FROM w),
-        |a AS (SELECT window_epoch, event_type, CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |      FROM x GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY window_epoch
-        |                                   ORDER BY n DESC, event_type) AS rn FROM a)
-        |SELECT window_epoch, event_type, n, sum_value_c, CAST(rn AS BIGINT) AS rank
-        |FROM r WHERE rn <= 3 ORDER BY window_epoch, rank""".stripMargin,
-    // Stream-static enrichment: the batch replay of the broadcast join the
-    // stream runs per micro-batch (the result is batch≡stream by design).
-    "stream_enrich" ->
-      """SELECT c_mktsegment, event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_interval_join" ->
-      """SELECT CAST(c.event_id AS BIGINT) AS click_id, CAST(v.event_id AS BIGINT) AS view_id,
-        |       CAST(c.user_id AS BIGINT) AS user_id
-        |FROM events c JOIN events v ON c.user_id = v.user_id
-        | AND c.event_type = 'click' AND v.event_type = 'view'
-        | AND v.ts BETWEEN c.ts - INTERVAL 4 HOUR AND c.ts
-        |ORDER BY click_id, view_id""".stripMargin,
-    "agg_salted" ->
-      """SELECT l_returnflag, CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))*100 AS BIGINT) AS sum_qty_c,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_percentiles" ->
-      """SELECT l_returnflag,
-        |       CAST(round(quantile_cont(l_quantity, 0.5)*1000000.0) AS BIGINT) AS qty_p50_micro,
-        |       CAST(round(quantile_cont(l_quantity, 0.95)*1000000.0) AS BIGINT) AS qty_p95_micro,
-        |       CAST(round(quantile_cont(l_extendedprice, 0.5)*1000000.0) AS BIGINT) AS price_p50_micro
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // HLL++ error-bound verdict over the exported estimates: DuckDB
-    // recomputes the EXACT distinct side independently; the verdict allows
-    // 3x the default 5% rsd (err*20 <= exact*3) in pure integers.
-    "agg_approx_distinct" ->
-      s"""WITH a AS (SELECT l_returnflag, approx_orders
-         |           FROM read_parquet('$sketchStorePath/hll_distinct/*.parquet')),
-         |e AS (SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_orders FROM lineitem GROUP BY 1)
-         |SELECT a.l_returnflag, CAST(a.approx_orders AS BIGINT) AS approx_orders,
-         |       CAST(e.exact_orders AS BIGINT) AS exact_orders,
-         |       CAST(CASE WHEN abs(a.approx_orders - e.exact_orders) * 20 <= e.exact_orders * 3
-         |            THEN 1 ELSE 0 END AS BIGINT) AS within_3sigma
-         |FROM a JOIN e USING (l_returnflag) ORDER BY l_returnflag""".stripMargin,
-    // GK rank-error verdict: the exported sketch value's exact rank
-    // interval must intersect [t-s, t+s], t = n*q (integer), s = n//1000+1.
-    "agg_approx_percentile" ->
-      s"""WITH a AS (SELECT l_returnflag, p50, p95
-         |           FROM read_parquet('$sketchStorePath/gk_percentile/*.parquet')),
-         |r AS (SELECT a.l_returnflag, a.p50, a.p95, count(*) AS n,
-         |             sum(CASE WHEN CAST(l.l_extendedprice AS DOUBLE) <  a.p50 THEN 1 ELSE 0 END) AS lt50,
-         |             sum(CASE WHEN CAST(l.l_extendedprice AS DOUBLE) <= a.p50 THEN 1 ELSE 0 END) AS le50,
-         |             sum(CASE WHEN CAST(l.l_extendedprice AS DOUBLE) <  a.p95 THEN 1 ELSE 0 END) AS lt95,
-         |             sum(CASE WHEN CAST(l.l_extendedprice AS DOUBLE) <= a.p95 THEN 1 ELSE 0 END) AS le95
-         |      FROM lineitem l JOIN a ON l.l_returnflag = a.l_returnflag
-         |      GROUP BY 1, 2, 3)
-         |SELECT l_returnflag,
-         |       CAST(floor(p50*1000000.0) AS BIGINT) AS p50_micro,
-         |       CAST(floor(p95*1000000.0) AS BIGINT) AS p95_micro,
-         |       CAST(n AS BIGINT) AS n,
-         |       CAST(CASE WHEN le50 >= (n*5 // 10) - (n // 1000 + 1)
-         |                  AND lt50 <= (n*5 // 10) + (n // 1000 + 1) THEN 1 ELSE 0 END AS BIGINT) AS ok_p50,
-         |       CAST(CASE WHEN le95 >= (n*95 // 100) - (n // 1000 + 1)
-         |                  AND lt95 <= (n*95 // 100) + (n // 1000 + 1) THEN 1 ELSE 0 END AS BIGINT) AS ok_p95
-         |FROM r ORDER BY l_returnflag""".stripMargin,
-    // Misra-Gries undercount-guarantee verdict over the exported summary:
-    // count_lb <= exact <= count_lb + n//capacity, exact recounted by both
-    // engines from the corpus.
-    "agg_heavy_hitters" ->
-      s"""WITH ex AS (SELECT token, count_lb FROM read_parquet('$sketchStorePath/mg_top/*.parquet')),
-         |w AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |tot AS (SELECT count(*) AS n FROM w),
-         |cnt AS (SELECT token, count(*) AS exact_n FROM w
-         |        WHERE token IN (SELECT token FROM ex) GROUP BY 1)
-         |SELECT ex.token, CAST(ex.count_lb AS BIGINT) AS count_lb,
-         |       CAST(cnt.exact_n AS BIGINT) AS exact_n,
-         |       CAST(CASE WHEN ex.count_lb <= cnt.exact_n
-         |                  AND cnt.exact_n <= ex.count_lb + (tot.n // 20)
-         |            THEN 1 ELSE 0 END AS BIGINT) AS within_bound
-         |FROM ex JOIN cnt USING (token) CROSS JOIN tot
-         |ORDER BY count_lb DESC, token""".stripMargin,
-    // Count-Min overcount-bound verdict over the exported estimates:
-    // est >= exact (structural) and (est-exact)*width <= 8*n, exact side
-    // and stream length recomputed by both engines.
-    "agg_countmin" ->
-      s"""WITH est AS (SELECT user_id, est_cnt FROM read_parquet('$sketchStorePath/cm_est/*.parquet')),
-         |e AS (SELECT user_id, count(*) AS exact_cnt FROM events GROUP BY 1),
-         |n AS (SELECT count(*) AS n_total FROM events)
-         |SELECT CAST(est.user_id AS BIGINT) AS user_id, CAST(est.est_cnt AS BIGINT) AS est_cnt,
-         |       CAST(e.exact_cnt AS BIGINT) AS exact_cnt, CAST(n.n_total AS BIGINT) AS n_total,
-         |       CAST(CASE WHEN est.est_cnt >= e.exact_cnt
-         |                  AND (est.est_cnt - e.exact_cnt) * 4096 <= 8 * n.n_total
-         |            THEN 1 ELSE 0 END AS BIGINT) AS within_bound
-         |FROM est JOIN e USING (user_id) CROSS JOIN n ORDER BY user_id""".stripMargin,
-    // KMV set-op verdicts over the exported estimates: exact per-pair
-    // union/intersection distinct counts recomputed from the base table,
-    // ±25% of exact-union bound (4x the k=256 KMV rsd).
-    "agg_kmv_setops" ->
-      s"""WITH est AS (SELECT * FROM read_parquet('$sketchStorePath/kmv_setops/*.parquet')),
-         |ev AS (SELECT DISTINCT event_type, user_id FROM events),
-         |sz AS (SELECT event_type, count(*) AS n FROM ev GROUP BY 1),
-         |ix AS (SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS exact_inter
-         |       FROM ev a JOIN ev b ON a.user_id = b.user_id AND a.event_type < b.event_type
-         |       GROUP BY 1, 2)
-         |SELECT est.type_a, est.type_b,
-         |       CAST(est.est_union AS BIGINT) AS est_union,
-         |       CAST(sa.n + sb.n - ix.exact_inter AS BIGINT) AS exact_union,
-         |       CAST(est.est_inter AS BIGINT) AS est_inter,
-         |       CAST(ix.exact_inter AS BIGINT) AS exact_inter,
-         |       CAST(CASE WHEN abs(est.est_union - (sa.n + sb.n - ix.exact_inter)) * 100
-         |                      <= (sa.n + sb.n - ix.exact_inter) * 25
-         |                  AND abs(est.est_inter - ix.exact_inter) * 100
-         |                      <= (sa.n + sb.n - ix.exact_inter) * 25
-         |            THEN 1 ELSE 0 END AS BIGINT) AS within_bound
-         |FROM est JOIN ix USING (type_a, type_b)
-         |     JOIN sz sa ON sa.event_type = est.type_a
-         |     JOIN sz sb ON sb.event_type = est.type_b
-         |ORDER BY type_a, type_b""".stripMargin,
-    // Winsorized stats: clamp at exact [p05, p95], same quantile_cont
-    // interpolation; avg over clamped doubles is order-independent enough
-    // only because both engines sum the same clamped set — mean surfaces
-    // as round-micro like the percentile family.
-    "agg_winsorized" ->
-      """WITH b AS (SELECT quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi FROM events),
-        |c AS (SELECT least(greatest(value, lo), hi) AS cv, value, lo, hi FROM events, b)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |       CAST(round(avg(cv)*1000000.0) AS BIGINT) AS wmean_micro,
-        |       CAST(round(min(cv)*1000000.0) AS BIGINT) AS wmin_micro,
-        |       CAST(round(max(cv)*1000000.0) AS BIGINT) AS wmax_micro,
-        |       CAST(sum(CASE WHEN value < lo OR value > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped
-        |FROM c""".stripMargin,
-    "agg_moments" ->
-      // Mirrors Relational.aggMoments exactly: cents fixed-point (DECIMAL(18,0)
-      // here — products fit DuckDB's 38-digit cap; the sums are the same exact
-      // integers as Spark's DECIMAL(38,0) path), then the identical
-      // left-to-right double expression tree for the closed-form moments.
-      """WITH c AS (SELECT l_returnflag,
-        |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS DECIMAL(18,0)) AS qc,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS DECIMAL(18,0)) AS pc,
-        |  CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS DECIMAL(18,0)) AS dc
-        |  FROM lineitem),
-        |s AS (SELECT l_returnflag, count(*) AS n,
-        |  sum(qc) AS sq, sum(pc) AS sp, sum(dc) AS sd,
-        |  sum(qc*pc) AS sqp, sum(qc*qc) AS sqq, sum(pc*pc) AS spp, sum(dc*dc) AS sdd
-        |  FROM c GROUP BY 1)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CAST(floor(
-        |    (CAST(sqp AS DOUBLE) - CAST(sq AS DOUBLE)*CAST(sp AS DOUBLE)/CAST(n AS DOUBLE))
-        |    / sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE)*CAST(sq AS DOUBLE)/CAST(n AS DOUBLE))
-        |         * (CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE)*CAST(sp AS DOUBLE)/CAST(n AS DOUBLE)))
-        |    * 1000000.0) AS BIGINT) AS corr_micro,
-        |  CAST(floor(
-        |    (CAST(sqp AS DOUBLE) - CAST(sq AS DOUBLE)*CAST(sp AS DOUBLE)/CAST(n AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) - 1.0) / 10000.0 * 1000000.0) AS BIGINT) AS covar_micro,
-        |  CAST(floor(
-        |    sqrt((CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE)*CAST(sd AS DOUBLE)/CAST(n AS DOUBLE))
-        |         / (CAST(n AS DOUBLE) - 1.0)) / 100.0 * 1000000.0) AS BIGINT) AS stddev_micro
-        |FROM s ORDER BY l_returnflag""".stripMargin,
-    "sql_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "time_extract" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS y, CAST(month(o_orderdate) AS BIGINT) AS m,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "value_histogram" ->
-      """SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket, CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Expectations gate: one row per declared check, conditional aggregates.
-    "quality_audit" ->
-      """SELECT * FROM (
-        |SELECT 'lineitem' AS tbl, 'fk_orderkey_in_orders' AS chk,
-        |       CAST(count(*) AS BIGINT) AS n_checked,
-        |       CAST(sum(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        |FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |UNION ALL SELECT 'lineitem', 'quantity_in_1_50', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |UNION ALL SELECT 'lineitem', 'extendedprice_positive', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN l_extendedprice <= 0 THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-        |UNION ALL SELECT 'documents', 'text_nonempty', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN text IS NULL OR length(text) = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM documents
-        |UNION ALL SELECT 'documents', 'n_chars_matches_text', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN n_chars <> length(text) THEN 1 ELSE 0 END) AS BIGINT) FROM documents
-        |UNION ALL SELECT 'documents', 'lang_nonnull', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents
-        |UNION ALL SELECT 'events', 'user_id_nonnull', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM events
-        |UNION ALL SELECT 'events', 'value_non_negative', CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN value < 0 THEN 1 ELSE 0 END) AS BIGINT) FROM events
-        |) ORDER BY tbl, chk""".stripMargin,
-    // One-pass profiler: single aggregate row unpivoted per column; the
-    // oracle computes the same row once (CTE) and unions the per-column
-    // projections. Timestamp min/max = floor-epoch seconds both sides.
-    "profile_columns" ->
-      """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS event_id_nulls,
-        |  CAST(min(event_id) AS DOUBLE) AS event_id_min, CAST(max(event_id) AS DOUBLE) AS event_id_max,
-        |  CAST(sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS ts_nulls,
-        |  CAST(floor(epoch(min(ts))) AS DOUBLE) AS ts_min, CAST(floor(epoch(max(ts))) AS DOUBLE) AS ts_max,
-        |  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS user_id_nulls,
-        |  CAST(min(user_id) AS DOUBLE) AS user_id_min, CAST(max(user_id) AS DOUBLE) AS user_id_max,
-        |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS value_nulls,
-        |  min(value) AS value_min, max(value) AS value_max,
-        |  CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS event_type_nulls,
-        |  min(event_type) AS event_type_min, max(event_type) AS event_type_max,
-        |  CAST(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS props_nulls,
-        |  min(props) AS props_min, max(props) AS props_max
-        |  FROM events)
-        |SELECT * FROM (
-        |SELECT 'event_id' AS column_name, n_rows, event_id_nulls AS n_nulls,
-        |       event_id_min AS min_num, event_id_max AS max_num,
-        |       CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s FROM a
-        |UNION ALL SELECT 'event_type', n_rows, event_type_nulls, NULL, NULL, event_type_min, event_type_max FROM a
-        |UNION ALL SELECT 'props', n_rows, props_nulls, NULL, NULL, props_min, props_max FROM a
-        |UNION ALL SELECT 'ts', n_rows, ts_nulls, ts_min, ts_max, NULL, NULL FROM a
-        |UNION ALL SELECT 'user_id', n_rows, user_id_nulls, user_id_min, user_id_max, NULL, NULL FROM a
-        |UNION ALL SELECT 'value', n_rows, value_nulls, value_min, value_max, NULL, NULL FROM a
-        |) ORDER BY column_name""".stripMargin,
-    // Z-order box query: the oracle filters the RAW table — the clustered
-    // layout may only change what is scanned, never the result.
-    "zorder_box" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events WHERE user_id BETWEEN 4 AND 6 AND value BETWEEN 10.0 AND 30.0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Partitioned-store queries: both oracles replay on the RAW events
-    // table — directory partitioning (and its static/dynamic pruning) may
-    // only change what is SCANNED, never the result.
-    "partitioned_prune" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, lo WHERE CAST(ts AS DATE) BETWEEN lo.d AND lo.d + INTERVAL 2 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "partitioned_dpp" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events WHERE day(CAST(ts AS DATE)) % 2 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // The SQL-surface twins (catalog views over the same layout) replay
-    // the identical raw-table oracles: entry surface may only change what
-    // is scanned.
-    "lake_sql_prune" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, lo WHERE CAST(ts AS DATE) BETWEEN lo.d AND lo.d + INTERVAL 2 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "lake_sql_dpp" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events WHERE day(CAST(ts AS DATE)) % 2 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Backfill replay: the day-2 partition-overwrite correction applied
-    // inline on the raw table — overwrite may only change WHERE the
-    // corrected rows live, never what they aggregate to.
-    "partitioned_backfill" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(CASE WHEN CAST(ts AS DATE) = lo.d + 1
-        |                          THEN value * 2 ELSE value END AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, lo GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Lake MERGE replay: the whole changeset (delete day-2 keys ≡ 0 mod 7,
-    // re-derive day-3 click values ×2, insert day-1 keys ≡ 0 mod 5 as
-    // fresh day-3 rows) applied inline on the raw table — the hash match
-    // proves the copy-on-write merge ≡ a full recompute.
-    // The SQL DML route applies the SAME changeset on its own clone — one
-    // replay text serves both the DataFrame and the INSERT OVERWRITE path.
-    "lake_sql_merge" -> partitionedMergeReplaySql,
-    "partitioned_merge" -> partitionedMergeReplaySql,
-    // Layout audit replayed over the SAME exported store artifact — even
-    // the per-partition file attribution is hash-checked.
-    "partitioned_layout_stats" ->
-      s"""SELECT CAST(event_date AS DATE) AS event_date,
-         |       CAST(count(DISTINCT filename) AS BIGINT) AS n_files,
-         |       CAST(count(*) AS BIGINT) AS n_rows,
-         |       CAST(count(*) // count(DISTINCT filename) AS BIGINT) AS rows_per_file
-         |FROM read_parquet('$partStorePath/rows/*/*.parquet', hive_partitioning=1, filename=true)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Streaming partitioned ingest: per-day aggregates are additive across
-    // micro-batch appends, so the lake aggregate equals the raw batch one.
-    "stream_partitioned_ingest" ->
-      """SELECT CAST(ts AS DATE) AS event_date, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Compaction replay over the compacted artifact: post-compaction every
-    // date directory is one file; rows are conserved.
-    "partitioned_compact" ->
-      s"""SELECT CAST(event_date AS DATE) AS event_date,
-         |       CAST(count(DISTINCT filename) AS BIGINT) AS n_files,
-         |       CAST(count(*) AS BIGINT) AS n_rows
-         |FROM read_parquet('${partStorePath}_cp/rows/*/*.parquet', hive_partitioning=1, filename=true)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Time-travel replay: v1 must equal the RAW table (snapshot isolation
-    // across the later correction), v2 the corrected one.
-    "partitioned_time_travel" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events),
-        |v1 AS (SELECT CAST(1 AS BIGINT) AS version, event_type, CAST(count(*) AS BIGINT) AS n,
-        |              CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |       FROM events GROUP BY 2),
-        |v2 AS (SELECT CAST(2 AS BIGINT) AS version, event_type, CAST(count(*) AS BIGINT) AS n,
-        |              CAST(sum(CAST(CASE WHEN CAST(ts AS DATE) = lo.d + 1
-        |                                 THEN value * 2 ELSE value END AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |       FROM events, lo GROUP BY 2)
-        |SELECT * FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-        |ORDER BY version, event_type""".stripMargin,
-    // Vacuum replay: the post-vacuum current read must equal the corrected
-    // table (the v2 leg of the time-travel replay) — vacuum reclaims only
-    // what no surviving manifest references — and the three verdicts
-    // (current read unchanged, expired version gone, bytes reclaimed) are
-    // engine-computed booleans the oracle pins to 1.
-    "partitioned_vacuum" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(CASE WHEN CAST(ts AS DATE) = lo.d + 1
-        |                          THEN value * 2 ELSE value END AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c,
-        |       CAST(1 AS BIGINT) AS post_equals_pre,
-        |       CAST(1 AS BIGINT) AS expired_gone,
-        |       CAST(1 AS BIGINT) AS files_deleted_gt0
-        |FROM events, lo GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Retention replay: partition drop may only remove WHOLE days older
-    // than the cutoff — surviving rows equal the raw-table date filter.
-    "partitioned_retention" ->
-      """WITH hi AS (SELECT max(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, hi WHERE CAST(ts AS DATE) >= hi.d - 6
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Hidden-partitioning route: the user's data-column date filter,
-    // replayed inline on the raw table (the rewrite is exact — it only
-    // changes what is scanned).
-    "partitioned_hidden" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, lo
-        |WHERE CAST(ts AS DATE) BETWEEN lo.d + 3 AND lo.d + 5
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // The SQL-view twin of the hidden-partition route: a pure ts-range
-    // predicate, same days-4-6 slice, same raw-table replay.
-    "lake_sql_hidden" ->
-      """WITH lo AS (SELECT min(CAST(ts AS DATE)) AS d FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events, lo
-        |WHERE CAST(ts AS DATE) BETWEEN lo.d + 3 AND lo.d + 5
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // RAKE keyphrases: stopword gaps-and-islands candidates, integer
-    // degree/frequency word scores summed per phrase.
-    "text_keyphrases" ->
-      """WITH toks AS (SELECT doc_id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w
-        |              FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)),
-        |t2 AS (SELECT doc_id, pos, w,
-        |              (w IN ('the','a','of','and','to','in','is') OR w = '') AS is_stop FROM toks),
-        |runs AS (SELECT doc_id, pos, w, is_stop,
-        |           sum(CASE WHEN is_stop THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-        |         FROM t2),
-        |cand AS (SELECT doc_id, grp, pos, w FROM runs WHERE NOT is_stop),
-        |phrases AS (SELECT doc_id, grp, string_agg(w, ' ' ORDER BY pos) AS phrase,
-        |                   CAST(count(*) AS BIGINT) AS plen
-        |            FROM cand GROUP BY 1, 2),
-        |wl AS (SELECT c.doc_id, c.grp, c.w, p.plen FROM cand c JOIN phrases p USING (doc_id, grp)),
-        |wstats AS (SELECT w, CAST(count(*) AS BIGINT) AS freq, CAST(sum(plen) AS BIGINT) AS degree
-        |           FROM wl GROUP BY 1),
-        |wscore AS (SELECT w, degree * 1000000 // freq AS word_score FROM wstats),
-        |sc AS (SELECT wl.doc_id, wl.grp, CAST(sum(word_score) AS BIGINT) AS score_micro
-        |       FROM wl JOIN wscore USING (w) GROUP BY 1, 2)
-        |SELECT p.phrase, CAST(max(p.plen) AS BIGINT) AS n_words,
-        |       CAST(count(*) AS BIGINT) AS n_occurrences,
-        |       CAST(max(sc.score_micro) AS BIGINT) AS score_micro
-        |FROM phrases p JOIN sc USING (doc_id, grp)
-        |GROUP BY 1 ORDER BY score_micro DESC, phrase LIMIT 25""".stripMargin,
-    // Collocation lift: integer micro ratio widened to HUGEINT (the
-    // corpus_budget overflow precedent), rank-equivalent to PMI.
-    "text_phrase_lift" ->
-      """WITH d AS (SELECT string_split(text, ' ') AS ws FROM documents),
-        |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c
-        |        FROM (SELECT unnest(ws) AS w FROM d) GROUP BY 1),
-        |n AS (SELECT sum(c) AS n_words FROM uni),
-        |bi AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c_ab FROM (
-        |         SELECT unnest(list_transform(range(greatest(len(ws)-1, 0)),
-        |                  i -> ws[i+1] || ' ' || ws[i+2])) AS bigram FROM d)
-        |       GROUP BY 1 HAVING count(*) >= 5)
-        |SELECT bigram, c_ab, ua.c AS c_a, ub.c AS c_b,
-        |       CAST((CAST(c_ab AS HUGEINT) * n.n_words * 1000000) // (ua.c * ub.c) AS BIGINT) AS lift_micro
-        |FROM bi
-        |JOIN uni ua ON ua.w = string_split(bigram, ' ')[1]
-        |JOIN uni ub ON ub.w = string_split(bigram, ' ')[2]
-        |CROSS JOIN n
-        |ORDER BY lift_micro DESC, bigram LIMIT 50""".stripMargin,
-    // Manifest pruning is conservative, so the pruned-scan result is
-    // EXACTLY the full-table range filter the oracle runs.
-    "sorted_prune" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars,
-        |       CAST(min(doc_id) AS BIGINT) AS min_id, CAST(max(doc_id) AS BIGINT) AS max_id
-        |FROM documents WHERE doc_id BETWEEN 100 AND 299
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    // Absorb lifecycle: delta files + manifest union are invisible to the
-    // semantics — the pruned post-absorb scan equals the full filter.
-    "sorted_absorb" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars,
-        |       CAST(min(doc_id) AS BIGINT) AS min_id, CAST(max(doc_id) AS BIGINT) AS max_id
-        |FROM documents WHERE doc_id BETWEEN 300 AND 599
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    // Snapshot diff: the engine compares xxhash64, the oracle md5 — hashes
-    // never cross engines, only the derived status does.
-    "snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 11 <> 0),
-        |n AS (SELECT doc_id, md5(CASE WHEN doc_id % 13 = 0 THEN text || ' v2' ELSE text END) AS h
-        |      FROM documents WHERE doc_id % 17 <> 3)
-        |SELECT CAST(COALESCE(o.doc_id, n.doc_id) AS BIGINT) AS doc_id,
-        |       CASE WHEN o.doc_id IS NULL THEN 'added'
-        |            WHEN n.doc_id IS NULL THEN 'removed'
-        |            WHEN o.h <> n.h THEN 'changed' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-        |WHERE o.doc_id IS NULL OR n.doc_id IS NULL OR o.h <> n.h
-        |ORDER BY doc_id""".stripMargin,
-    // Partial-aggregate merge: the oracle is the FULL single-pass
-    // recompute — the gate itself proves merge == recompute.
-    "agg_partial_merge" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c,
-        |       CAST(floor(epoch(min(ts))) AS BIGINT) AS first_epoch,
-        |       CAST(floor(epoch(max(ts))) AS BIGINT) AS last_epoch
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Incremental view refresh: persisted-base merge must equal the full
-    // single-pass recompute — the same gate partialMerge passes, but the
-    // engine side never rescans the historical slice (spec-asserted).
-    "agg_incremental_refresh" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c,
-        |       CAST(floor(epoch(min(ts))) AS BIGINT) AS first_epoch,
-        |       CAST(floor(epoch(max(ts))) AS BIGINT) AS last_epoch
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Hamilton apportionment: floor shares + largest-remainder top-up so
-    // integer allocations sum exactly to the budget; all-integer replay.
-    // budget*mass widened to HUGEINT (128-bit, = the Scala DECIMAL(38,0)
-    // path) so the product can't overflow BIGINT at 100 TB-scale masses.
-    // Neyman allocation: exact-decimal power sums → one IEEE sqrt per
-    // stratum → the same all-integer Hamilton tail as corpus_budget_plan.
-    "sample_neyman" ->
-      """WITH s AS (SELECT lang, count(*) AS n, sum(CAST(n_chars AS HUGEINT)) AS s1,
-        |                  sum(CAST(n_chars AS HUGEINT) * n_chars) AS s2
-        |           FROM documents GROUP BY 1),
-        |w AS (SELECT lang, n, CAST(floor(sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE))) AS BIGINT) AS share FROM s),
-        |t AS (SELECT *, sum(share) OVER () AS total FROM w),
-        |b AS (SELECT *, (CAST(10000 AS HUGEINT) * share) // total AS base,
-        |             (CAST(10000 AS HUGEINT) * share) % total AS rem FROM t),
-        |l AS (SELECT *, 10000 - sum(base) OVER () AS leftover,
-        |             row_number() OVER (ORDER BY rem DESC, lang) AS rr FROM b)
-        |SELECT lang, CAST(n AS BIGINT) AS n, share AS neyman_w,
-        |       CAST(base + CASE WHEN rr <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM l ORDER BY lang""".stripMargin,
-    "corpus_budget_plan" ->
-      """WITH m AS (SELECT lang, CAST(sum(n_chars) AS BIGINT) AS mass FROM documents GROUP BY 1),
-        |t AS (SELECT *, sum(mass) OVER () AS total FROM m),
-        |b AS (SELECT *, (CAST(1000000 AS HUGEINT) * mass) // total AS base, (CAST(1000000 AS HUGEINT) * mass) % total AS rem FROM t),
-        |l AS (SELECT *, 1000000 - sum(base) OVER () AS leftover,
-        |             row_number() OVER (ORDER BY rem DESC, lang) AS rr FROM b)
-        |SELECT lang, mass, CAST(base AS BIGINT) AS base,
-        |       CAST(base + CASE WHEN rr <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM l ORDER BY lang""".stripMargin,
-    // DSIR importance selection: identical hashed-unigram bucket (md5 hex
-    // prefix mod 1024), identical Laplace-smoothed log-ratio model, top-100
-    // by weight — the float weight stays internal to the ORDER BY; only
-    // integer columns are emitted (see Sampling.dsirSelect's contract).
-    "sample_dsir" ->
-      """WITH t AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents),
-        |tk AS (SELECT doc_id, lang, CAST('0x' || substr(md5(w), 1, 6) AS BIGINT) % 1024 AS b
-        |       FROM t WHERE length(w) > 0),
-        |dc AS (SELECT doc_id, lang, b, count(*) AS c FROM tk GROUP BY 1, 2, 3),
-        |cnt AS (SELECT b, sum(c) AS cr,
-        |          sum(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct
-        |        FROM dc GROUP BY b),
-        |llr AS (SELECT b,
-        |          ln(CAST(ct + 1 AS DOUBLE) / CAST(nt + 1024 AS DOUBLE)) -
-        |          ln(CAST(cr + 1 AS DOUBLE) / CAST(nr + 1024 AS DOUBLE)) AS llr
-        |        FROM (SELECT *, sum(cr) OVER () AS nr, sum(ct) OVER () AS nt FROM cnt)),
-        |sc AS (SELECT dc.doc_id, dc.lang, sum(dc.c) AS n_tokens,
-        |         sum(CAST(dc.c AS DOUBLE) * llr.llr) AS weight
-        |       FROM dc JOIN llr USING (b) GROUP BY dc.doc_id, dc.lang),
-        |sel AS (SELECT doc_id, lang, n_tokens FROM sc ORDER BY weight DESC, doc_id LIMIT 100)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, CAST(n_tokens AS BIGINT) AS n_tokens
-        |FROM sel ORDER BY doc_id""".stripMargin,
-    // Efraimidis-Spirakis weighted sample: identical hash-uniform draw and
-    // ln(u)/w priority key; only the selected integer id set is emitted.
-    "sample_weighted" ->
-      """WITH d AS (SELECT doc_id, lang, n_chars,
-        |             ln((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6) AS BIGINT) + 1.0)
-        |                / 16777216.0) / CAST(n_chars AS DOUBLE) AS k
-        |           FROM documents),
-        |sel AS (SELECT doc_id, lang, n_chars FROM d ORDER BY k DESC, doc_id LIMIT 100)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        |FROM sel ORDER BY doc_id""".stripMargin,
-    // Temperature mixing plan (alpha = 1/2): integer shares floor(1e6*sqrt(mass))
-    // -- sqrt is correctly rounded per IEEE 754, so both engines agree exactly;
-    // Hamilton tail identical to corpus_budget_plan (same HUGEINT widening:
-    // share ~ 1e6*sqrt(mass) makes the BIGINT product overflow even sooner).
-    "corpus_budget_temperature" ->
-      """WITH m AS (SELECT lang, CAST(sum(n_chars) AS BIGINT) AS mass FROM documents GROUP BY 1),
-        |s AS (SELECT lang, mass, CAST(floor(sqrt(CAST(mass AS DOUBLE)) * 1000000.0) AS BIGINT) AS share FROM m),
-        |t AS (SELECT *, sum(share) OVER () AS total FROM s),
-        |b AS (SELECT *, (CAST(1000000 AS HUGEINT) * share) // total AS base, (CAST(1000000 AS HUGEINT) * share) % total AS rem FROM t),
-        |l AS (SELECT *, 1000000 - sum(base) OVER () AS leftover,
-        |             row_number() OVER (ORDER BY rem DESC, lang) AS rr FROM b)
-        |SELECT lang, mass, CAST(share AS BIGINT) AS share, CAST(base AS BIGINT) AS base,
-        |       CAST(base + CASE WHEN rr <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM l ORDER BY lang""".stripMargin,
-    // Gap fill: full hourly grid from observed bounds x distinct types,
-    // left-joined counts — silent gaps become explicit zeros.
-    "events_gapfill" ->
-      """WITH b AS (SELECT CAST(floor(epoch(date_trunc('hour', min(ts)))) AS BIGINT) AS lo,
-        |                  CAST(floor(epoch(date_trunc('hour', max(ts)))) AS BIGINT) AS hi FROM events),
-        |h AS (SELECT unnest(range(lo, hi + 3600, 3600)) AS hour_epoch FROM b),
-        |t AS (SELECT DISTINCT event_type FROM events),
-        |g AS (SELECT hour_epoch, event_type FROM h CROSS JOIN t),
-        |a AS (SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch,
-        |             event_type, count(*) AS n FROM events GROUP BY 1, 2)
-        |SELECT CAST(g.hour_epoch AS BIGINT) AS hour_epoch, g.event_type,
-        |       CAST(COALESCE(a.n, 0) AS BIGINT) AS n
-        |FROM g LEFT JOIN a USING (hour_epoch, event_type) ORDER BY 1, 2""".stripMargin,
-    // 3-sigma outlier audit cleared of denominators into pure integer
-    // arithmetic: Spark DECIMAL(38,0) == DuckDB HUGEINT, both exact.
-    "events_outliers" ->
-      """WITH e AS (SELECT event_type, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc FROM events),
-        |st AS (SELECT event_type, count(*) AS n, sum(xc) AS s1,
-        |              sum(CAST(xc AS HUGEINT) * xc) AS s2 FROM e GROUP BY 1),
-        |f AS (SELECT e.event_type, xc,
-        |             CASE WHEN CAST(n * xc - s1 AS HUGEINT) * CAST(n * xc - s1 AS HUGEINT)
-        |                       > 9 * (CAST(n AS HUGEINT) * s2 - CAST(s1 AS HUGEINT) * s1)
-        |                  THEN 1 ELSE 0 END AS is_out
-        |      FROM e JOIN st USING (event_type))
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(is_out) AS BIGINT) AS n_outliers,
-        |       CAST(min(CASE WHEN is_out = 1 THEN xc END) AS BIGINT) AS out_min_c,
-        |       CAST(max(CASE WHEN is_out = 1 THEN xc END) AS BIGINT) AS out_max_c
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Schema-drift union: the old-schema half (even event_id) has its
-    // props null-filled by the name-aligned union.
-    "schema_drift_union" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CASE WHEN event_id % 2 = 0 OR props IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_props,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_c
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Positional phrase search: per-term posting-list legs, anchor-aligned
-    // equi-join — replayed with the same shifted-position join.
-    "text_phrase_search" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |t AS (SELECT doc_id, pos, ws[pos + 1] AS w
-        |      FROM (SELECT doc_id, unnest(range(len(ws))) AS pos, ws FROM d)),
-        |l0 AS (SELECT doc_id, pos AS p0 FROM t WHERE w = 'table'),
-        |l1 AS (SELECT doc_id, pos - 1 AS p0 FROM t WHERE w = 'value')
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(count(*) AS BIGINT) AS n_hits,
-        |       CAST(min(p0) AS BIGINT) AS first_pos
-        |FROM l0 JOIN l1 USING (doc_id, p0)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // Contingency audit: expected-under-independence in integer micro;
-    // the n scalar folds into both engines' floor division identically.
-    // Join-key skew preflight: top-N hot keys + max/mean skew ratio, all
-    // integer-micro BIGINT floor divisions.
-    "stats_skew_report" ->
-      """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS n_keys,
-        |             CAST(max(cnt) AS BIGINT) AS max_cnt FROM c)
-        |SELECT CAST(user_id AS BIGINT) AS user_id, cnt,
-        |       CAST(cnt * 1000000 // total AS BIGINT) AS share_micro, n_keys,
-        |       CAST(max_cnt * n_keys * 1000000 // total AS BIGINT) AS skew_ratio_micro
-        |FROM c CROSS JOIN t ORDER BY cnt DESC, user_id LIMIT 10""".stripMargin,
-    // Heaps'-law curve: cumulative vocabulary vs token mass at nested
-    // hash-bucket fractions; a word counts at its min (first) bucket.
-    "text_heaps_curve" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        |bkt AS (SELECT word,
-        |          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':heaps'), 1, 6) AS BIGINT) % 4 AS b
-        |        FROM t),
-        |fs AS (SELECT minb AS b, CAST(count(*) AS BIGINT) AS new_words
-        |       FROM (SELECT word, min(b) AS minb FROM bkt GROUP BY 1) GROUP BY 1),
-        |tk AS (SELECT b, CAST(count(*) AS BIGINT) AS n_tokens FROM bkt GROUP BY 1)
-        |SELECT CAST(tk.b AS BIGINT) AS fraction_bucket,
-        |       CAST(sum(tk.n_tokens) OVER (ORDER BY tk.b) AS BIGINT) AS cum_tokens,
-        |       CAST(sum(coalesce(fs.new_words, 0)) OVER (ORDER BY tk.b) AS BIGINT) AS cum_vocab
-        |FROM tk LEFT JOIN fs USING (b) ORDER BY 1""".stripMargin,
-    "stats_contingency" ->
-      """WITH cells AS (SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT lang, sum(o) AS r FROM cells GROUP BY 1),
-        |c AS (SELECT source, sum(o) AS c FROM cells GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents)
-        |SELECT cells.lang, cells.source, CAST(o AS BIGINT) AS observed,
-        |       CAST((r.r * c.c * 1000000) // n.n AS BIGINT) AS expected_micro,
-        |       CAST(abs(o * 1000000 - (r.r * c.c * 1000000) // n.n) AS BIGINT) AS dev_micro
-        |FROM cells JOIN r USING (lang) JOIN c USING (source) CROSS JOIN n
-        |ORDER BY 1, 2""".stripMargin,
-    // Composite curation: quality gate -> exact dedup keep-first ->
-    // per-source cap -> manifest, replayed stage by stage.
-    "pipeline_curate" ->
-      """WITH d AS (SELECT doc_id, text, lang, source, string_split(text, ' ') AS ws FROM documents),
-        |q AS (SELECT doc_id, text, lang, source, len(ws) AS n_words,
-        |             len(list_filter(ws, w -> list_contains(['the','a','of','and','to','in','is'], w))) AS n_stop
-        |      FROM d),
-        |f AS (SELECT * FROM q WHERE n_words >= 5 AND CAST(n_stop AS DOUBLE)/CAST(n_words AS DOUBLE) < 0.5),
-        |s AS (SELECT text, min(doc_id) AS doc_id FROM f GROUP BY text),
-        |sv AS (SELECT f.doc_id, f.lang, f.source, f.n_words FROM f JOIN s ON f.doc_id = s.doc_id),
-        |c AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn FROM sv)
-        |SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_words) AS BIGINT) AS n_tokens
-        |FROM c WHERE rn <= 15 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "window_sliding" ->
-      """WITH e AS (SELECT event_type, date_trunc('hour', ts) AS h FROM events),
-        |x AS (SELECT event_type, unnest([h, h - INTERVAL 1 HOUR]) AS ws FROM e)
-        |SELECT CAST(floor(epoch(ws)) AS BIGINT) AS win_epoch, event_type, CAST(count(*) AS BIGINT) AS n
-        |FROM x GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sessionize" -> sessionizeSql,
-    // The stateful streaming twin closes the SAME sessions the windowed
-    // batch SQL derives — one oracle text, two execution models.
-    "stream_sessionize" -> sessionizeSql,
-    // Overlap semantics replayed as DuckDB's native inequality join — the
-    // bucketing is a Spark-side execution strategy, invisible in the result.
-    "range_join_bucketed" ->
-      """WITH ep AS (SELECT user_id, event_id, event_type,
-        |            CAST(floor(epoch(ts)) AS BIGINT) AS ep FROM events),
-        |s AS (SELECT user_id, ep // 86400 AS day, min(ep) AS s, max(ep) AS e
-        |      FROM ep GROUP BY 1, 2),
-        |i AS (SELECT event_id AS incident_id, ep - 120 AS a, ep + 120 AS b
-        |      FROM ep WHERE event_type = 'error' AND event_id % 199 = 0)
-        |SELECT CAST(s.user_id AS BIGINT) AS user_id, CAST(day AS BIGINT) AS day,
-        |       CAST(count(*) AS BIGINT) AS n_incidents,
-        |       CAST(min(incident_id) AS BIGINT) AS first_incident
-        |FROM s JOIN i ON s.s <= i.b AND i.a <= s.e
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "asof_join" ->
-      """WITH c AS (SELECT user_id, ts, event_id AS click_id, CAST(NULL AS BIGINT) AS view_id, 1 AS side
-        |           FROM events WHERE event_type = 'click'),
-        |v AS (SELECT user_id, ts, CAST(NULL AS BIGINT) AS click_id, event_id AS view_id, 0 AS side
-        |      FROM events WHERE event_type = 'view'),
-        |u AS (SELECT * FROM c UNION ALL SELECT * FROM v),
-        |m AS (SELECT *, last_value(view_id IGNORE NULLS) OVER (PARTITION BY user_id
-        |             ORDER BY ts, side, view_id NULLS FIRST, click_id NULLS FIRST
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_view FROM u)
-        |SELECT CAST(click_id AS BIGINT) AS click_id, CAST(user_id AS BIGINT) AS user_id,
-        |       CAST(matched_view AS BIGINT) AS matched_view
-        |FROM m WHERE side = 1 ORDER BY click_id""".stripMargin,
-  )
 }

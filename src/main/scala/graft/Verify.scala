@@ -3,24 +3,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** The names in a comma-separated query filter. A name that is not in
-    * [[SparkEntry.queries]] fails here: a typo would otherwise verify
-    * nothing and still exit 0.
-    */
-  def selectQueries(filter: String): Set[String] = {
-    val names = filter.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(names.nonEmpty, s"no query names in filter '$filter'")
-    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
-    names
-  }
-
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
     // The driver always passes exactly two; the optional third is the
     // local dev loop (verify just the queries being worked on).
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] = if (args.length > 2) Some(selectQueries(args(2))) else None
+    val only: Option[Set[String]] =
+      if (args.length > 2) Some(graft.queries.Queries.select(args(2)).toSet) else None
     // Pin the oracle's index-store paths to the sf dir actually verified:
     // SparkEntry.oracleSql derives knn_ivf/knn_pq/... artifact locations
     // from this property (default sf0.01) — see SparkEntry.oracleSfDir.

@@ -1006,7 +1006,7 @@ object TextAnalysis {
     * recursive-CTE Viterbi replay hardcodes this width structurally — a
     * 4-slot DP carry (b0..b3) and 4 substring join legs (q1..q4) per round
     * — so a caller-supplied different length would silently diverge from
-    * the replay. `SparkEntry.unigramLmSql` require()s this value so a
+    * the replay. `OracleSql.unigramLmSql` require()s this value so a
     * future change fails loudly at query-registration time instead.
     * The private [[unigramLmFit]] keeps the parameter for specs.
     */

@@ -32,12 +32,12 @@ import graft.GraftSession
   */
 object BlowUp {
 
-  /** Every table [[main]] writes — the fixed dims pass through unreplicated
+  /** Every table [[run]] writes — the fixed dims pass through unreplicated
     * (factor 1), the facts all share the replication factor. StampSf1's
     * sanity check leans on exactly this contract.
     */
-  private[tools] val Dims = Seq("region", "nation")
-  private[tools] val Facts = Seq("customer", "supplier", "part", "orders",
+  private[graft] val Dims = Seq("region", "nation")
+  private[graft] val Facts = Seq("customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
   private def replicate(spark: SparkSession, df: DataFrame, factor: Int): DataFrame =
@@ -60,6 +60,14 @@ object BlowUp {
     val out = if (args.length > 1) args(1) else "/root/repo/data/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.local()
+    run(spark, src, out, factor)
+    spark.stop()
+  }
+
+  /** Writes the `factor`× blow-up of the sf dir `src` into `out`, one file
+    * per table, and stamps `out` with `src`'s content key.
+    */
+  def run(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
     def t(n: String) = spark.read.parquet(s"$src/$n.parquet")
     // single FILE per table, exactly like the driver's testdata — the
     // streaming sources rely on the `$dir/events.parquet*` glob trick
@@ -96,7 +104,8 @@ object BlowUp {
       "events")
 
     // documents: token-suffix replicas 1..f-1 so cross-replica similarity
-    // is zero (constant near-dup density); n_chars re-derived from the text
+    // is zero (constant near-dup density); n_chars re-derived from the text,
+    // in the source's type (length() is an int, the source column a long)
     val doc = t("documents")
     val maxD = maxOf(doc, "doc_id")
     w(replicate(spark, doc, factor)
@@ -106,7 +115,7 @@ object BlowUp {
           .otherwise(concat_ws(" ",
             transform(split(col("text"), " "),
               x => concat(x, lit("r"), col("rep"))))))
-      .withColumn("n_chars", length(col("text")))
+      .withColumn("n_chars", length(col("text")).cast(doc.schema("n_chars").dataType))
       .drop("rep"), "documents")
 
     // embeddings: per-replica sign-flip mask hashed from (rep, dim) —
@@ -133,12 +142,10 @@ object BlowUp {
     // mismatched corpora — ScaleSweep/ShuffleAudit check this marker and
     // warn loudly when the sf1 dir is stale.
     graft.sources.Artifact.SrcFp.stamp(out, graft.sources.Artifact.sourceKey(src))
-
-    spark.stop()
   }
 
   /** True when the blow-up at `out` was generated from the CURRENT
-    * content of `src` (stamped by [[main]]); pre-stamp dirs report false.
+    * content of `src` (stamped by [[run]]); pre-stamp dirs report false.
     */
   private[graft] def currentFor(out: String, src: String): Boolean =
     graft.sources.Artifact.sourceCurrent(out, src)
@@ -166,25 +173,33 @@ object StampSf1 {
     if (force) println(s"--force: skipping blow-up sanity check for $out")
     else {
       val spark = GraftSession.local()
-      def factorOf(t: String): Long = {
-        val s = spark.read.parquet(s"$src/$t.parquet")
-        val o = spark.read.parquet(s"$out/$t.parquet")
-        require(o.schema == s.schema,
-          s"$t: schema mismatch between $out and $src — not a blow-up of this source")
-        val (sn, on) = (s.count(), o.count())
-        require(sn > 0 && on % sn == 0,
-          s"$t: $out has $on rows, not an integer multiple of $src's $sn")
-        on / sn
-      }
-      BlowUp.Dims.foreach(t => require(factorOf(t) == 1,
-        s"$t: dims pass through unreplicated — factor != 1 means wrong source"))
-      val factors = BlowUp.Facts.map(t => t -> factorOf(t))
-      require(factors.map(_._2).distinct.size == 1,
-        s"replication factor differs across facts (${factors.mkString(", ")}) — refusing to stamp")
-      println(s"sanity ok: ${factors.head._2}x blow-up across ${factors.size} fact tables")
+      val factor = check(spark, src, out)
+      println(s"sanity ok: ${factor}x blow-up across ${BlowUp.Facts.size} fact tables")
       spark.stop()
     }
     graft.sources.Artifact.SrcFp.stamp(out, graft.sources.Artifact.sourceKey(src))
     println(s"stamped $out from $src")
+  }
+
+  /** The replication factor of `out` over `src`; fails, naming the table,
+    * unless `out` plausibly is a blow-up of `src`.
+    */
+  def check(spark: SparkSession, src: String, out: String): Long = {
+    def factorOf(t: String): Long = {
+      val s = spark.read.parquet(s"$src/$t.parquet")
+      val o = spark.read.parquet(s"$out/$t.parquet")
+      require(o.schema == s.schema,
+        s"$t: schema mismatch between $out and $src — not a blow-up of this source")
+      val (sn, on) = (s.count(), o.count())
+      require(sn > 0 && on % sn == 0,
+        s"$t: $out has $on rows, not an integer multiple of $src's $sn")
+      on / sn
+    }
+    BlowUp.Dims.foreach(t => require(factorOf(t) == 1,
+      s"$t: dims pass through unreplicated — factor != 1 means wrong source"))
+    val factors = BlowUp.Facts.map(t => t -> factorOf(t))
+    require(factors.map(_._2).distinct.size == 1,
+      s"replication factor differs across facts (${factors.mkString(", ")}) — refusing to stamp")
+    factors.head._2
   }
 }

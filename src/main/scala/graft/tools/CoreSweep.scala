@@ -39,7 +39,7 @@ object CoreSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/testdata/sf0.1")
-    val names = if (args.nonEmpty) args(0).split(",").toSeq else DefaultQueries
+    val names = if (args.nonEmpty) graft.queries.Queries.select(args(0)) else DefaultQueries
     val cpus = GraftSession.cpus
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -9,6 +9,10 @@ import graft.GraftSession
   * takes the query list and output dir from args so an optimization
   * round can snapshot exactly the queries it touches.
   *
+  * An unknown name is skipped, not rejected as `Queries.select` does: the
+  * "before" snapshot runs at the parent commit, which may not have the
+  * query yet.
+  *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]
   */
 object PlanDump {

@@ -126,7 +126,7 @@ object ScaleSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val names0 = if (args.nonEmpty) args(0).split(",").toSeq else DefaultQueries
+    val names0 = if (args.nonEmpty) graft.queries.Queries.select(args(0)) else DefaultQueries
     // the sf1 heavy subset joined the sweep in round 11 — default runs
     // must cover all of it (orders_pareto, dedup_funnel, phash pairs, …)
     val names =

@@ -78,7 +78,7 @@ object ShuffleAudit {
   private def mb(b: Long): String = f"${b / 1048576.0}%.1f"
 
   def main(args: Array[String]): Unit = {
-    val names = if (args.nonEmpty) args(0).split(",").toSeq
+    val names = if (args.nonEmpty) graft.queries.Queries.select(args(0))
                 else ScaleSweep.DefaultQueries ++
                   ScaleSweep.Sf1Queries.toSeq.sorted
                     .filterNot(ScaleSweep.DefaultQueries.toSet)

@@ -41,8 +41,8 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("Verify's query filter rejects an unknown name and names it") {
-    assert(Verify.selectQueries(" q1_pricing,knn_ivf ") == Set("q1_pricing", "knn_ivf"))
-    val e = intercept[IllegalArgumentException](Verify.selectQueries("q1_pricing,q1_pricnig"))
+    assert(graft.queries.Queries.select(" q1_pricing,knn_ivf ") == Seq("q1_pricing", "knn_ivf"))
+    val e = intercept[IllegalArgumentException](graft.queries.Queries.select("q1_pricing,q1_pricnig"))
     assert(e.getMessage.contains("q1_pricnig") && !e.getMessage.contains("q1_pricing"), e.getMessage)
   }
 

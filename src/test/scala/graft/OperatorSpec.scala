@@ -33,26 +33,6 @@ class OperatorSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
-  test("every query key has either an oracle or a documented exemption") {
-    // knn_ivf graduated to oracle-checked in round 3 (SQL replay over the
-    // exported index); metrics_ops emits wall-clock measurements (rows-only
-    // by nature, deterministic columns spec-checked in SweepCatalogSpec);
-    // knn_batch's 5000-query batch is Featurizer-synthesized (not SQL-
-    // replayable) — KnnJoinSpec asserts heap ≡ declarative at that nq.
-    // dedup_minhash_lsh / dedup_simhash graduated to oracle-checked in
-    // round 9 (banding/Hamming joins replayed over the exported xxhash64
-    // sketch frames, the knn_ivf exported-artifact pattern);
-    // knn_mmr graduated in round 10 (fixed k=5 unrolls the greedy into
-    // 5 CTE argmax steps — SparkEntry.mmrSql), as did the three approx
-    // sketches (error-bound verdict rows over exported sketch outputs,
-    // exact side recomputed independently by both engines).
-    val exempt = Set("embed_docs", "media_decode", "metrics_ops", "knn_batch")
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- exempt
-    assert(missing.isEmpty, s"queries without oracle: $missing")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without query: $orphans")
-  }
-
   test("entry flagship returns ranked rows") {
     val rows = SparkEntry.entry(spark).collect()
     assert(rows.length > 0)

@@ -40,8 +40,7 @@ class OracleSfDirSpec extends SparkSpec {
         "no stale default path may leak through the partitioned-store oracle")
       // Running the same queries at the overridden sf builds exactly the
       // artifacts the oracle SQL will read.
-      for (name <- Seq("knn_ivf", "knn_pq", "index_stats",
-          "partitioned_layout_stats", "media_phash"))
+      for (name <- OracleSfDirSpec.StoreBuilders)
         assert(SparkEntry.queries(name)(spark, sfDir).count() > 0, s"$name returns rows")
       assert(new java.io.File(s"$expectIvf/centroids").exists(), "exported centroids")
       assert(new java.io.File(s"$expectIvf/rows").exists(), "exported clustered rows")
@@ -59,4 +58,10 @@ class OracleSfDirSpec extends SparkSpec {
         sys.env.get("SPARK_GRAFT_ORACLE_SF_DIR").isEmpty)
       assert(SparkEntry.oracleSql("knn_ivf").contains("sf0.01"))
   }
+}
+
+object OracleSfDirSpec {
+  /** The queries whose runs build the stores the oracle SQL reads. */
+  val StoreBuilders: Seq[String] =
+    Seq("knn_ivf", "knn_pq", "index_stats", "partitioned_layout_stats", "media_phash")
 }
