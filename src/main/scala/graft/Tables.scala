@@ -29,10 +29,14 @@ object Tables {
   /** Per-run temp locations (StreamOps sinks, zorder scratch) are
     * write-once-read-once — memoizing them would only grow the map.
     */
-  private val tmpRoot = System.getProperty("java.io.tmpdir", "/tmp")
+  private val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp")).getAbsolutePath
+
+  /** `path` lies under `root` on a path boundary (`/tmpdata` is not under `/tmp`). */
+  private[graft] def under(root: String, path: String): Boolean =
+    path == root || path.startsWith(root + java.io.File.separator)
 
   private def memoizedRead(spark: SparkSession, path: String): DataFrame = {
-    if (path.startsWith(tmpRoot)) return spark.read.parquet(path)
+    if (under(tmpRoot, path)) return spark.read.parquet(path)
     val k = (System.identityHashCode(spark), path)
     val gen = dirFingerprint(path)
     tableMemo.get(k) match {

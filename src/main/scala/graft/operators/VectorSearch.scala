@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.IvfProbe
 import graft.functions.VectorFunctions._
 
 /** Similarity search (SURVEY.md §2.5 V2–V6, O2, J1): the engine's flagship.
@@ -68,7 +69,7 @@ object VectorSearch {
   }
 
   /** Shared tail: per-query rank window + output contract. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -478,10 +479,6 @@ object VectorSearch {
     })
   }
 
-  private def collectCentroids(centroids: DataFrame): Array[Array[Double]] =
-    centroids.orderBy(col("cell_id")).collect()
-      .map(_.getSeq[Double](1).toArray)
-
   /** Deterministic Lloyd's k-means over the embedding column (V4 —
     * `index.train`, `pipeline.py:315-321`). Init = the nlist lowest-vec_id
     * vectors (deterministic; FAISS samples). Each iteration is ONE job:
@@ -550,17 +547,19 @@ object VectorSearch {
     * it is only annotated and re-written clustered by `cell_id`.
     */
   def assignCells(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    assignCells(vectors, IvfProbe.collect(centroids))
+
+  /** [[assignCells]] against collected centroids (no centroid job). */
+  def assignCells(vectors: DataFrame, cents: IvfProbe.Centroids): DataFrame =
     withCellId(vectors.select(col("vec_id"), col("embedding"), col("label")),
-      centroids, "embedding")
+      cents, "embedding")
 
   /** Schema-agnostic cell assignment: annotate any DataFrame carrying an
     * embedding column with its nearest-centroid `cell_id` (map-side only).
     * Used by both the batch index build and the streaming ingest path.
     */
-  def withCellId(df: DataFrame, centroids: DataFrame, embCol: String): DataFrame = {
-    val assign = nearestCellUdf(df, collectCentroids(centroids))
-    df.withColumn("cell_id", assign(col(embCol)))
-  }
+  def withCellId(df: DataFrame, cents: IvfProbe.Centroids, embCol: String): DataFrame =
+    df.withColumn("cell_id", nearestCellUdf(df, cents.raw)(col(embCol)))
 
   /** IVF "index build" = clustered materialization: rows + cell_id, plus the
     * centroid table. At scale this is written `partitionBy(cell_id)` so
@@ -580,37 +579,22 @@ object VectorSearch {
     (assignCells(e, centroids), centroids)
   }
 
-  /** V5: probed ANN search — rank cells per query, keep nprobe nearest,
-    * equi-join on cell_id, exact score within probed cells, top-k.
-    * (`index.nprobe = 10`, `pipeline.py:257`.)
+  /** V5: probed ANN search — probe each query's nprobe nearest cells
+    * map-side ([[IvfProbe]]), equi-join on cell_id, exact score within
+    * probed cells, top-k. (`index.nprobe = 10`, `pipeline.py:257`.)
     *
     * Edge clamps (`pipeline+ui.py:227-230`: `min(nprobe, nlist)`,
-    * `min(k, ntotal)`) are realized by the rank windows themselves:
-    * `cell-rank ≤ nprobe` probes min(nprobe, nlist) cells and
+    * `min(k, ntotal)`): the probe returns min(nprobe, nlist) cells and
     * `rank ≤ k` emits min(k, candidates) hits — over-asking never errors
     * and never fabricates rows (asserted in VectorSearchSpec "clamp").
     */
   def ivfSearch(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
                 k: Int = 5, nprobe: Int = 10): DataFrame = {
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2", l2DistanceSq(col("qvec"), col("centroid").cast("array<float>")))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("d2"), col("cell_id"))
-    val probed = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cell_id"))
+    val probed = IvfProbe.probed(queries, IvfProbe.collect(centroids), nprobe)
     val scored = assigned.join(broadcast(probed), "cell_id")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
     rankTopK(scored, k)
-  }
-
-  /** End-to-end IVF query (build + probe) as a single named query.
-    * No SQL oracle (k-means isn't SQL) — correctness is property-tested:
-    * recall vs knnExact → 1 as nprobe → nlist (see VectorSearchSpec).
-    */
-  def ivfSearchQuery(spark: SparkSession, dir: String): DataFrame = {
-    val (assigned, centroids) = ivfBuild(spark, dir)
-    ivfSearch(assigned, centroids, querySet(spark, dir, 5))
   }
 
   /** V1 as a named query: per-row norm probe (all ≈ 1 on this table, but the

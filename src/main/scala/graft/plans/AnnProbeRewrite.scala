@@ -21,8 +21,8 @@ import graft.expressions.{DotProductFloat, L2DistanceSqFloat}
   * sibling `path/centroids` + `_build_id` marker) and rewrite it into the
   * probed form by injecting `Filter(cell_id IN <nprobe nearest cells>)`
   * directly above the relation. The probed cell set is decided at
-  * PLANNING time from the broadcast-sized centroid table (≤ nlist rows,
-  * memoized per `_build_id`), so the injected IN-list is static and the
+  * PLANNING time from the store's centroids (≤ nlist rows, memoized per
+  * content by [[graft.sources.IvfProbe]]), so the injected IN-list is static and the
   * parquet source prunes unprobed `cell_id=*` directories before reading
   * a byte (`PartitionFilters` in the scan) — the user writes the flat
   * FAISS `IndexFlatL2` query and gets the `index.nprobe = 10` plan
@@ -38,33 +38,22 @@ import graft.expressions.{DotProductFloat, L2DistanceSqFloat}
   *     flat scans over the store layout
   *   spark.graft.ann.rewrite.nprobe   (default 10)    — the recall knob
   *
-  * Cell ranking replicates `IndexStore.scoreProbed` bit for bit (centroid
-  * double→float narrowing, then a left-to-right double fold of squared
-  * diffs; ties by cell_id), so the rewritten query is row-identical to
-  * `IndexStore.searchPruned` — `knn_rewrite` replays it against the SAME
-  * DuckDB oracle SQL as `knn_ivf`.
+  * Cell ranking calls the same probe as `IndexStore.scoreProbed`
+  * ([[graft.sources.IvfProbe]]), so the rewritten query is row-identical
+  * to `IndexStore.searchPruned` — `knn_rewrite` replays it against the
+  * SAME DuckDB oracle SQL as `knn_ivf`.
   */
 object AnnProbeRewrite extends Rule[LogicalPlan] {
 
-  /** Centroids memoized per (store parent, _build_id): a rebuild stamps a
-    * fresh marker, so stale cached centroids can never be probed against a
-    * re-clustered layout.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Float])]]()
-
-  /** Store detection memoized per rows-root path — value is the (parent,
-    * _build_id) pair, or None for a non-store layout. After the first
-    * matching plan over a given path, planning does ZERO filesystem calls:
-    * no exists() probes, no marker read (the per-plan NameNode round-trips
-    * would dominate a high-QPS serving session). In-session rebuilds stay
-    * correct because Artifact.stampBuildId calls [[invalidate]]; a store
-    * refreshed by an EXTERNAL writer behind a running session needs
-    * [[invalidateAll]] — the same contract as Spark's own file-listing
-    * caches (REFRESH TABLE).
+  /** Store detection memoized per rows-root path — the store root, or None
+    * for a non-store layout — so repeated planning makes no exists() probes
+    * (per-plan NameNode round-trips would dominate a high-QPS session).
+    * Artifact.stampBuildId calls [[invalidate]]; a store refreshed by an
+    * EXTERNAL writer behind a running session needs [[invalidateAll]] —
+    * the same contract as Spark's own file-listing caches (REFRESH TABLE).
     */
   private val detectCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(String, String)]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
 
   /** Count of filesystem detection passes (cache misses) — lets the spec
     * assert the second plan over a store does no IO.
@@ -131,10 +120,10 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
 
   /** The relation is an IndexStore clustered layout iff it reads a single
     * `.../rows` root partitioned by `cell_id` with sibling `centroids` and
-    * `_build_id` artifacts. Scheme-agnostic (hadoop FileSystem), so the
-    * same detection works on a lake path.
+    * `_build_id` artifacts. Detection goes through the hadoop FileSystem;
+    * the centroids themselves are read through the store memo.
     */
-  private def storeParent(rel: LogicalRelation): Option[(Path, String)] = rel.relation match {
+  private def storeParent(rel: LogicalRelation): Option[String] = rel.relation match {
     case fs: HadoopFsRelation if fs.partitionSchema.fieldNames.contains("cell_id") =>
       fs.location.rootPaths.toSeq match {
         case Seq(p) if p.getName == "rows" && p.getParent != null =>
@@ -143,41 +132,14 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
             val parent = p.getParent
             val hfs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
             val marker = new Path(parent, graft.sources.Artifact.BuildId.name)
-            if (hfs.exists(new Path(parent, "centroids")) && hfs.exists(marker)) {
-              val in = hfs.open(marker)
-              val buildId =
-                try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-                finally in.close()
-              Some((parent.toString, buildId))
-            } else None
-          }).map { case (parent, buildId) => (new Path(parent), buildId) }
+            if (hfs.exists(new Path(parent, "centroids")) && hfs.exists(marker))
+              Some(parent.toString)
+            else None
+          })
         case _ => None
       }
     case _ => None
   }
-
-  private def loadCentroids(parent: Path, buildId: String): Array[(Int, Array[Float])] =
-    centroidCache.computeIfAbsent(s"$parent@$buildId", _ =>
-      SparkSession.active.read.parquet(new Path(parent, "centroids").toString)
-        .select("cell_id", "centroid").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).map(_.toFloat).toArray)))
-
-  /** Nearest-first cell ranking, identical to `IndexStore.scoreProbed`:
-    * squared L2 against the float-narrowed centroid, left-to-right double
-    * fold, ties broken by cell_id ascending.
-    */
-  private def probedCells(q: Array[Float], cents: Array[(Int, Array[Float])],
-                          n: Int): Seq[Int] =
-    cents.map { case (cid, c) =>
-      var s = 0.0
-      var i = 0
-      while (i < c.length && i < q.length) {
-        val d = q(i).toDouble - c(i).toDouble
-        s += d * d
-        i += 1
-      }
-      (s, cid)
-    }.sortBy(identity).take(n).map(_._2).toSeq
 
   /** The sorted-limit head, tolerating one derived-column Project pushed
     * between the limit and the sort (the optimizer moves outer per-row
@@ -206,10 +168,10 @@ object AnnProbeRewrite extends Rule[LogicalPlan] {
               if rel.output.exists(_.exprId == embAttr.exprId) &&
                 rel.output.exists(_.name == "cell_id") =>
             storeParent(rel) match {
-              case Some((parent, buildId)) =>
+              case Some(parent) =>
                 val cellAttr = rel.output.find(_.name == "cell_id").get
-                val cents = loadCentroids(parent, buildId)
-                val cells = probedCells(qvec, cents, math.min(nprobe, cents.length))
+                val cells = graft.sources.IvfProbe.centroids(SparkSession.active, parent)
+                  .nearest(qvec, nprobe).toSeq
                 val lits: Seq[Literal] = cellAttr.dataType match {
                   case IntegerType => cells.map(c => Literal(c))
                   case LongType => cells.map(c => Literal(c.toLong))

@@ -23,7 +23,7 @@ private[graft] object OracleSql {
       s"s -> (CAST(s[1] AS DOUBLE)-CAST(s[2] AS DOUBLE))*(CAST(s[1] AS DOUBLE)-CAST(s[2] AS DOUBLE)))), (acc,x) -> acc+x)"
 
   /** sqDist where the right side is a stored ARRAY<DOUBLE> centroid that the
-    * Spark plan first narrows to float (`centroid.cast("array<float>")`) —
+    * Spark probe first narrows to float (`graft.sources.IvfProbe`) —
     * mirror the double→float→double round-trip for bit-exactness.
     */
   def sqDistCentroidSql(a: String, b: String): String =

@@ -110,8 +110,7 @@ object VectorQueries {
          |      FROM r JOIN probed p USING (cell_id) WHERE r.vec_id <> p.qid)
          |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
          |       ${microSql("sim")} AS sim_micro
-         |FROM s WHERE ${microSql("sim")} >= 200000 ORDER BY qid, sim_micro DESC, vec_id""".stripMargin),
-      cross("broadcast probe batch / ≤100 centroids / 8×256 LUT")),
+         |FROM s WHERE ${microSql("sim")} >= 200000 ORDER BY qid, sim_micro DESC, vec_id""".stripMargin)),
     // Index health (num_entities / invlist balance): per-cell counts, key
     // range, integer-mean norm — replayed over the exported clustered rows.
     QueryDef("index_stats", (s, d) => graft.sources.IndexStore.statsQuery(s, d), sql(
@@ -266,8 +265,7 @@ object VectorQueries {
          |       CAST(rank AS BIGINT) AS rank, CAST(hamming AS BIGINT) AS hamming,
          |       ${microSql("sim")} AS sim_micro
          |FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)),
-    QueryDef("knn_ivf", (s, d) => graft.sources.IndexStore.searchQuery(s, d), sql(ivfProbedSearchSql()),
-      cross("broadcast query batch × ≤100 IVF centroids (probe ranking)")),
+    QueryDef("knn_ivf", (s, d) => graft.sources.IndexStore.searchQuery(s, d), sql(ivfProbedSearchSql())),
     // HNSW-twin graph search: the unrolled beam walk replayed in SQL over
     // the exported NN-Descent edge list (graph construction is
     // engine-specific; its invariants — degree bound, determinism, recall —
@@ -354,7 +352,7 @@ object VectorQueries {
     // Tombstone-aware search: same exported-store replay minus the
     // tombstone set — the anti-join sits below the rank window.
     QueryDef("knn_tombstone", (s, d) => graft.sources.IndexStore.searchTombstoned(s, d),
-      sql(ivfProbedSearchSql(" AND r.vec_id % 17 <> 3")), cross("same bounded centroid cross as knn_ivf")),
+      sql(ivfProbedSearchSql(" AND r.vec_id % 17 <> 3"))),
     // Recall report: both legs deterministic (exported-store replay vs
     // brute force), so the nprobe recall dial gets an oracle-checked
     // MEASUREMENT; integer floor-division micro.
@@ -372,7 +370,7 @@ object VectorQueries {
          |       CAST(n_exact AS BIGINT) AS n_exact,
          |       CAST(COALESCE(n_found, 0) * 1000000 // n_exact AS BIGINT) AS recall_micro
          |FROM ne LEFT JOIN f ON ne.qid = f.qid ORDER BY qid""".stripMargin),
-      cross("exact leg: broadcast query batch; approx leg: centroid cross")),
+      cross("exact leg: broadcast query batch × base scan")),
     // Reciprocal-rank eval: the exact top-1's rank inside the probed
     // top-10 (replayed over the exported store), rr = 10^6 // rank, 0 on
     // a miss — integer arithmetic end to end.
@@ -388,7 +386,7 @@ object VectorQueries {
          |       CAST(COALESCE(pk.rank, 0) AS BIGINT) AS rank,
          |       CAST(CASE WHEN pk.rank IS NOT NULL THEN 1000000 // pk.rank ELSE 0 END AS BIGINT) AS rr_micro
          |FROM ex LEFT JOIN pk ON ex.qid = pk.qid AND ex.vec_id = pk.vec_id
-         |ORDER BY qid""".stripMargin), cross("exact leg query-batch cross + probed centroid cross")),
+         |ORDER BY qid""".stripMargin), cross("exact leg: broadcast query batch × base scan")),
     // Split-half centroid drift over the exported clustered rows: offset
     // micros summed exactly, floor-division only on non-negatives.
     QueryDef("embed_centroid_drift", (s, d) => graft.sources.IndexStore.centroidDrift(s, d), sql(
@@ -462,7 +460,7 @@ object VectorQueries {
          |       CAST(sum(CASE WHEN h.cr <= l.nprobe THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT) AS recall_micro
          |FROM lv l CROSS JOIN hit h
          |GROUP BY l.nprobe ORDER BY nprobe""".stripMargin),
-      cross("knn_recall_report's two bounded crosses, one conditional agg")),
+      cross("exact leg: broadcast query batch × base scan")),
     // Auto-tuned probed search: the recall curve picks the smallest
     // measured nprobe clearing the target, then the probed search runs at
     // that knob — the whole decision replayed in one statement.
@@ -495,8 +493,7 @@ object VectorQueries {
          |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id,
          |       CAST(rank AS BIGINT) AS rank, ${microSql("sim")} AS sim_micro,
          |       (SELECT CAST(np AS BIGINT) FROM tuned) AS nprobe
-         |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
-      cross("the curve's bounded crosses + the tuned probe's centroid cross")),
+         |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)),
     // Residual ADC replay (IndexIVFPQ semantics): score = micro'd
     // dot(q, coarse_cell) + Σ micro'd residual LUT hits — coarse centroids
     // and residual codebooks both read from the exported store.
@@ -639,7 +636,7 @@ object VectorQueries {
          |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
          |       CAST(adc AS BIGINT) AS adc_micro
          |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
-      cross("broadcast query batch × IVF centroids and × m·k PQ codebook rows")),
+      cross("broadcast query batch × the ADC coarse-cell term and × m·k PQ codebook rows")),
     // Two-stage refine: PQ ADC shortlist (rank ≤ 20), exact re-rank of only
     // the shortlist's float vectors.
     QueryDef("knn_refine", (s, d) => graft.sources.PqStore.searchRefined(s, d), sql(
@@ -671,7 +668,7 @@ object VectorQueries {
          |SELECT CAST(qid AS BIGINT) AS qid, CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS BIGINT) AS rank,
          |       ${microSql("sim")} AS sim_micro
          |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
-      cross("IVF-PQ's centroid and LUT crosses, each over the broadcast query batch")),
+      cross("the ADC coarse-cell term and LUT crosses, each over the broadcast query batch")),
     // Adaptive filtered search: label=3 is ~10% selective, under the 20%
     // crossover, so the engine takes the BRUTE branch (exact over the
     // qualifying subset) — the oracle replays that branch and pins the

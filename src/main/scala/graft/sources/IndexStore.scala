@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.VectorSearch
@@ -62,8 +61,7 @@ object IndexStore {
     * re-derive instead of serving a row set they never encoded.
     */
   def absorb(spark: SparkSession, path: String, vectors: DataFrame): Unit = {
-    val centroids = graft.Tables.storeParquet(spark, s"$path/centroids")
-    VectorSearch.assignCells(vectors, centroids)
+    VectorSearch.assignCells(vectors, IvfProbe.centroids(spark, path))
       // cluster by cell before the partitioned append: the assignment
       // inherits the batch scan's split count (∝ core count), and the
       // partitionBy write would fan that out to tasks×cells tiny files —
@@ -285,6 +283,13 @@ object IndexStore {
   def ensure(spark: SparkSession, dir: String, path: String): Unit =
     graft.Profiling.timed("IndexStore.ensure")(build(spark, dir, path, force = false))
 
+  /** [[ensure]] the canonical store of `dir`; returns its path. */
+  private def ensured(spark: SparkSession, dir: String): String = {
+    val path = defaultPath(dir)
+    ensure(spark, dir, path)
+    path
+  }
+
   /** Probed search with STATIC partition pruning: the probed cell set is
     * tiny driver-side metadata (≤ nq·nprobe ints — the same coarse-quantizer
     * lookup FAISS does before touching inverted lists,
@@ -292,7 +297,7 @@ object IndexStore {
     * inlined as a literal IN-list and the parquet source prunes unprobed
     * cells' directories at planning time (`PartitionFilters` in the scan).
     * At 100 TB this is the difference between scanning nprobe/nlist of the
-    * files and scanning all of them.
+    * files and scanning all of them. The rank tail is the only window.
     */
   def searchPruned(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int = 5, nprobe: Int = 10,
@@ -300,34 +305,21 @@ object IndexStore {
     // An optional scalar predicate on the stored rows (the Milvus `expr`
     // surface over the probed path): applied pre-rank, and Catalyst
     // pushes it through the score join into the pruned scan.
-    val scored = rowPred.foldLeft(scoreProbed(spark, path, queries, nprobe))(_.filter(_))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    VectorSearch.rankTopK(rowPred.foldLeft(scoreProbed(spark, path, queries, nprobe))(_.filter(_)), k)
   }
 
-  /** Shared probe+score front half of every persisted-index query: rank
-    * cells per query against the broadcast centroids, keep the nprobe
-    * nearest, inline the probed cell ids as a literal IN-list (static
-    * `PartitionFilters` — the coarse-quantizer skip, decided driver-side
-    * from ≤ nq·nprobe ints), equi-join and score. Callers choose the tail:
-    * top-k rank window ([[searchPruned]]) or a radius filter
-    * ([[rangeSearchPruned]]).
+  /** Shared probe+score front half of every persisted-index query: probe
+    * map-side ([[IvfProbe]]), inline the probed cells as a literal IN-list
+    * (static `PartitionFilters`), equi-join the pruned rows to the exploded
+    * probe and score — no window, no shuffle. Callers choose the tail:
+    * top-k ([[searchPruned]]) or a radius filter ([[rangeSearchPruned]]).
     */
   private def scoreProbed(spark: SparkSession, path: String, queries: DataFrame,
                           nprobe: Int): DataFrame = {
-    val (rows, centroids) = read(spark, path)
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2", l2DistanceSq(col("qvec"), col("centroid").cast("array<float>")))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("d2"), col("cell_id"))
-    val probed = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cell_id"))
-    val cells = probed.select(col("cell_id")).distinct().collect().map(_.get(0))
-    rows.filter(col("cell_id").isin(cells: _*))
-      .join(broadcast(probed), "cell_id")
+    val cents = IvfProbe.centroids(spark, path)
+    val cells = IvfProbe.probedCells(queries, cents, nprobe)
+    read(spark, path)._1.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
+      .join(broadcast(IvfProbe.probed(queries, cents, nprobe)), "cell_id")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
   }
@@ -345,20 +337,14 @@ object IndexStore {
     */
   def searchTombstoned(spark: SparkSession, dir: String,
                        k: Int = 5, nprobe: Int = 10): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
     val tombstones = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
     // Counted, not assumed (graft.Tables.boundedBroadcast): past the
     // inline bound the anti-join degrades to a shuffle instead of forcing
     // a driver-side multi-GB hash build on a bulk delete.
-    val scored = scoreProbed(spark, path, VectorSearch.querySet(spark, dir, 5), nprobe)
+    val scored = scoreProbed(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, 5), nprobe)
       .join(graft.Tables.boundedBroadcast(tombstones), Seq("vec_id"), "left_anti")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    VectorSearch.rankTopK(scored, k)
   }
 
   /** Self-evaluating recall report — the quality metric the reference's
@@ -372,9 +358,7 @@ object IndexStore {
     */
   def recallReport(spark: SparkSession, dir: String,
                    k: Int = 5, nq: Int = 5, nprobe: Int = 10): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    val approx = searchPruned(spark, path, VectorSearch.querySet(spark, dir, nq), k, nprobe)
+    val approx = searchPruned(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, nq), k, nprobe)
       .select(col("qid"), col("vec_id"))
     val exact = VectorSearch.knnExact(spark, dir, k, nq)
       .select(col("qid"), col("vec_id"))
@@ -402,9 +386,7 @@ object IndexStore {
     */
   def mrrReport(spark: SparkSession, dir: String,
                 k: Int = 10, nq: Int = 5, nprobe: Int = 10): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    val probed = searchPruned(spark, path, VectorSearch.querySet(spark, dir, nq), k, nprobe)
+    val probed = searchPruned(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, nq), k, nprobe)
       .select(col("qid"), col("vec_id"), col("rank").cast("long").as("rank"))
     val exact1 = VectorSearch.knnExact(spark, dir, 1, nq)
       .select(col("qid"), col("vec_id"))
@@ -432,9 +414,7 @@ object IndexStore {
     * report. No pairwise anything.
     */
   def centroidDrift(spark: SparkSession, dir: String): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    val (rows, _) = read(spark, path)
+    val (rows, _) = read(spark, ensured(spark, dir))
     val comp = rows
       .select(col("cell_id"), (col("vec_id") % 2 === 0).as("even"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -469,21 +449,17 @@ object IndexStore {
   def recallSweep(spark: SparkSession, dir: String,
                   k: Int = 5, nq: Int = 5,
                   baseLevels: Seq[Int] = Seq(1, 2, 5, 10)): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    val (rows, centroids) = read(spark, path)
-    val nlist = centroids.count().toInt // bounded: ≤ 100 centroid rows
-    val levels = (baseLevels :+ nlist).distinct.sorted
-    val q = VectorSearch.querySet(spark, dir, nq)
-    val qCells = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", l2DistanceSq(col("qvec"), col("centroid").cast("array<float>")))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("d2"), col("cell_id"))
-    val cellRank = qCells.withColumn("cr", row_number().over(wc))
-      .select(col("qid"), col("cell_id"), col("cr"))
+    val path = ensured(spark, dir)
+    val cents = IvfProbe.centroids(spark, path)
+    val levels = (baseLevels :+ cents.nlist).distinct.sorted
+    // every cell's probe rank per query, 1-based
+    val cellRank = VectorSearch.querySet(spark, dir, nq)
+      .select(col("qid"), posexplode(IvfProbe.cells(cents, cents.nlist)(col("qvec"))))
+      .select(col("qid"), col("col").as("cell_id"), (col("pos") + 1).as("cr"))
     val exact = VectorSearch.knnExact(spark, dir, k, nq).select(col("qid"), col("vec_id"))
     // hits' cell assignments: broadcast the nq·k exact hits against the
     // store rows — a lookup join, never a corpus shuffle
-    val withCell = rows.select(col("vec_id"), col("cell_id"))
+    val withCell = read(spark, path)._1.select(col("vec_id"), col("cell_id"))
       .join(broadcast(exact), "vec_id")
       .join(broadcast(cellRank), Seq("qid", "cell_id"))
     withCell
@@ -557,9 +533,7 @@ object IndexStore {
     * the clustered layout — the shape a serving cluster actually runs.
     */
   def searchQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    searchPruned(spark, path, VectorSearch.querySet(spark, dir, 5))
+    searchPruned(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, 5))
   }
 
   /** The NAIVE flat nearest-neighbor query over the persisted clustered
@@ -589,15 +563,10 @@ object IndexStore {
     * plans union; the rank column is recomputed over the ≤ nq·k winners.
     */
   def rewriteSearchQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
+    val path = ensured(spark, dir)
     val qs = VectorSearch.querySet(spark, dir, 5).orderBy(col("qid")).collect()
     val per = qs.map(r => flatTopK(spark, path, r.getLong(0), r.getSeq[Float](1).toArray))
-    val all = per.reduce(_ unionAll _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    all.withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    VectorSearch.rankTopK(per.reduce(_ unionAll _), Int.MaxValue)
   }
 
   /** SQL-first entry to the vector store: the clustered rows registered
@@ -612,8 +581,7 @@ object IndexStore {
     * inference on every call.
     */
   def ensureSqlView(spark: SparkSession, dir: String): String = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
+    val path = ensured(spark, dir)
     SqlViews.ensureParquetView(spark, "lake_vectors", s"$path/rows")
     path
   }
@@ -672,9 +640,7 @@ object IndexStore {
 
   /** Range search over the persisted index as a named query. */
   def rangeQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    rangeSearchPruned(spark, path, VectorSearch.querySet(spark, dir, 5))
+    rangeSearchPruned(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, 5))
   }
 
   /** Index-health statistics — the `collection.num_entities` /
@@ -688,9 +654,7 @@ object IndexStore {
     * partial buffers.
     */
   def statsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val path = defaultPath(dir)
-    ensure(spark, dir, path)
-    val (rows, _) = read(spark, path)
+    val (rows, _) = read(spark, ensured(spark, dir))
     rows
       .select(col("cell_id").cast("long").as("cell_id"), col("vec_id"),
         micro(norm2(col("embedding"))).as("nm"))

@@ -418,7 +418,8 @@ object PqStore {
     * residual is computed against exactly the value ADC adds back.
     */
   private[graft] def residualized(vectors: DataFrame, coarse: DataFrame): DataFrame =
-    VectorSearch.withCellId(vectors.select(col("vec_id"), col("embedding")), coarse, "embedding")
+    VectorSearch.withCellId(vectors.select(col("vec_id"), col("embedding")),
+      IvfProbe.collect(coarse), "embedding")
       .join(broadcast(coarse.select(col("cell_id"),
         col("centroid").cast("array<float>").as("_cent"))), "cell_id")
       .select(col("vec_id"), col("cell_id"),
@@ -1052,22 +1053,17 @@ object PqStore {
     val queries = VectorSearch.querySet(spark, dir, 5)
     val short = search(spark, path, queries, k = shortlist)
       .select(col("qid"), col("vec_id"))
-    val exact = Tables.embeddings(spark, dir)
+    VectorSearch.rankTopK(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(short), "vec_id")
       .join(broadcast(queries), "qid")
-      .withColumn("sim", dot(col("qvec"), col("embedding")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+      .withColumn("sim", dot(col("qvec"), col("embedding"))), k)
   }
 
   /** IVF-PQ composed search — the lake re-expression of FAISS `IndexIVFPQ`
     * (coarse quantizer + PQ-compressed scan; the reference trains the flat
     * IVF sibling, `FAISS/PlainDemo/pipeline.py:315-321`): the IVF store's
-    * broadcast centroids prune to `nprobe` cells, the candidate ids come
+    * memoized centroids probe `nprobe` cells map-side ([[IvfProbe]]), the candidate ids come
     * from a statically partition-pruned scan of the clustered rows that
     * reads ONLY `(vec_id, cell_id)` (never the float vectors), and the PQ
     * codes ADC-score just those candidates. At 100 TB the search cost is
@@ -1082,19 +1078,14 @@ object PqStore {
     ensure(spark, dir, pqPath)
     val d = dsub(dim)
     val queries = VectorSearch.querySet(spark, dir, 5)
-    val centroids = IndexStore.read(spark, ivfPath)._2
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2", l2DistanceSq(col("qvec"), col("centroid").cast("array<float>")))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("d2"), col("cell_id"))
-    val probed = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .select(col("qid"), col("cell_id"))
+    val cents = IvfProbe.centroids(spark, ivfPath)
+    val probed = IvfProbe.probed(queries, cents, nprobe).select(col("qid"), col("cell_id"))
     // Tiny driver-side cell list → literal IN-list → static PartitionFilters
     // pruning on the CODES' clustered layout (same shape as
     // IndexStore.searchPruned): candidates and their 1-byte codes come from
     // one scan that reads nprobe/nlist of the code files — the float rows
     // table is never touched.
-    val cells = probed.select(col("cell_id")).distinct().collect().map(_.get(0))
+    val cells = IvfProbe.probedCells(queries, cents, nprobe)
     val books = Tables.storeParquet(spark, s"$pqPath/codebooks")
     val coarse = Tables.storeParquet(spark, s"$pqPath/coarse")
     val codes = Tables.storeParquet(spark, s"$pqPath/codes")
@@ -1109,7 +1100,7 @@ object PqStore {
     val cellLut = queries.crossJoin(broadcast(coarse))
       .select(col("qid"), col("cell_id"),
         micro(dot(col("qvec"), col("centroid").cast("array<float>"))).as("c_micro"))
-    val scored = codes.filter(col("cell_id").isin(cells: _*))
+    val scored = codes.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
       .join(broadcast(probed), "cell_id")
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(lut), Seq("qid", "sub", "code"))

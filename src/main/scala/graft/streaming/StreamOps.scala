@@ -316,7 +316,7 @@ object StreamOps {
         val embedded = graft.embed.Featurizer
           .embedBatched(batch.select(col("doc_id"), col("text")).toDF(), "text", "embedding")
         graft.operators.VectorSearch
-          .withCellId(embedded, centroids, "embedding")
+          .withCellId(embedded, graft.sources.IvfProbe.collect(centroids), "embedding")
           .write.mode("append").partitionBy("cell_id").parquet(storePath)
       }
       .start()

@@ -88,6 +88,43 @@ class IndexStoreSpec extends SparkSpec {
       "expected an INSET partition filter on cell_id\n" + plan.take(3000))
   }
 
+  /** Spark jobs started by `body` on this thread (and the SQL threads it
+    * hands work to, which inherit its local properties).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.budget") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.budget", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec.budget", null)
+      org.apache.spark.GraftListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("job budget: one searchPruned call over a local query batch runs at most 5 Spark jobs") {
+    // the serving shape: a driver-side batch of embedded queries against a
+    // store outside java.io.tmpdir (the table memo re-lists temp paths)
+    val store = IndexStore.defaultPath(sfDir)
+    IndexStore.ensure(spark, sfDir, store)
+    val q = VectorSearch.querySet(spark, sfDir, 5).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("qid", "qvec")
+    IndexStore.searchPruned(spark, store, q).collect() // warm: centroid memo, file listing
+    val jobs = jobsOf(IndexStore.searchPruned(spark, store, q).collect())
+    // 11 with the cross-join + window probe run twice; the map-side probe
+    // folds into planning, leaving the scoring plan's jobs
+    assert(jobs <= 5, s"searchPruned ran $jobs jobs")
+  }
+
   test("tombstoned search: no deleted id surfaces, k fills from live rows, pruning kept") {
     val out = IndexStore.searchTombstoned(spark, sfDir)
     val rows = out.select($"qid".as[Long], $"vec_id".as[Long], $"rank".as[Long]).collect()
