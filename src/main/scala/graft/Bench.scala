@@ -43,7 +43,6 @@ object Bench {
       "ivf_store" -> (() => graft.sources.IndexStore.ensure(
         spark, sfDir, graft.sources.IndexStore.defaultPath(sfDir))),
       "ivf_half" -> (() => { graft.sources.IndexStore.ensureCorpusHalf(spark, sfDir); () }),
-      "ivf_maint_day1" -> (() => { graft.sources.IndexStore.ensureMaintDay1(spark, sfDir); () }),
       "graph_index" -> (() => graft.sources.GraphIndex.ensure(
         spark, sfDir, graft.sources.GraphIndex.defaultPath(sfDir))),
       "graph_half" -> (() => { graft.sources.GraphIndex.ensureHalf(spark, sfDir); () }),
@@ -186,9 +185,6 @@ object Bench {
     val slowest = results.collect { case (k, Right(v)) => (k, v) }
       .sortBy(-_._2).take(20)
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val errsShort = results.collect { case (k, Left(e)) => (k, e) }.take(5)
-      .map { case (k, e) => s"\"" + k + "\":\"" + esc(e.take(60)) + "\"" }
-      .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$slowest,"n_queries":${results.size},"queries_shown":${math.min(20, results.size)},"n_errors":$nErr$sva,"warm_sec":${r3(warmSec)},"build_sec":$buildJson,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -26,10 +26,6 @@ object Quantize {
     transform(v, x =>
       least(lit(127L), greatest(lit(-127L), round(x.cast("double") * 127.0).cast("long"))))
 
-  /** Codes → ARRAY<DOUBLE> reconstruction. */
-  def dequantize(q: Column): Column =
-    transform(q, c => c.cast("double") / 127.0)
-
   /** Integer dot product in code space (codegen kernel). */
   def codeDot(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.dotL(a, b)

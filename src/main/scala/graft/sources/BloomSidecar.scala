@@ -71,7 +71,4 @@ object BloomSidecar {
     memo.put(s"$path|$fp", bytes)
     bytes
   }
-
-  /** In-process memo size — spec hook (mirrors Dedup.sketchMemoSize). */
-  private[graft] def memoSize: Int = memo.size
 }

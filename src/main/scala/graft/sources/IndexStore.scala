@@ -120,31 +120,6 @@ object IndexStore {
       .orderBy(col("cell_id"))
   }
 
-  /** Drift-DRIVEN day-2 maintenance — the consumer of the
-    * [[centroidDrift]] monitor: measure, decide, act. The decision rule a
-    * serving cluster runs nightly is `absorb` while the index still
-    * represents its data (max split-half cell drift below τ — cheap
-    * append into current cells, centroids fixed) and `rebuild` once any
-    * cell has drifted past τ (full re-train over live ∪ incoming — the
-    * expensive off-peak job). Acts on a MAINTENANCE COPY seeded from the
-    * even-id half (the [[ensureCorpusHalf]] day-1/day-2 split: odd ids
-    * play the incoming crawl), reset at every invocation so the operation
-    * is idempotent per run; returns the path that would now SERVE
-    * (blue/green: absorb serves the same store, rebuild serves the
-    * re-trained one).
-    */
-  /** Pristine day-1 state (even half clustered), built ONCE per source
-    * generation; [[maintain]] resets its working copy from this by file
-    * copy, so the per-invocation reset costs IO, not a k-means train.
-    */
-  private[graft] def ensureMaintDay1(spark: SparkSession, dir: String): String = {
-    val p = defaultPath(dir) + "_maint_day1"
-    Artifact.ensureSource(p, dir, Seq("centroids")) {
-      writeFrom(Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), p)
-    }
-    p
-  }
-
   /** Reset `to` as a byte-for-byte copy of the store at `from` — the
     * per-run working-copy idiom shared by [[maintain]] and the streaming
     * absorb run (each invocation acts on a fresh clone so the operation is
@@ -164,11 +139,24 @@ object IndexStore {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Drift-DRIVEN day-2 maintenance — the consumer of the
+    * [[centroidDrift]] monitor: measure, decide, act. The decision rule a
+    * serving cluster runs nightly is `absorb` while the index still
+    * represents its data (max split-half cell drift below τ — cheap
+    * append into current cells, centroids fixed) and `rebuild` once any
+    * cell has drifted past τ (full re-train over live ∪ incoming — the
+    * expensive off-peak job). Acts on a MAINTENANCE COPY seeded from the
+    * even-id half (the [[ensureCorpusHalf]] day-1/day-2 split: odd ids
+    * play the incoming crawl), reset at every invocation so the operation
+    * is idempotent per run; returns the path that would now SERVE
+    * (blue/green: absorb serves the same store, rebuild serves the
+    * re-trained one).
+    */
   def maintain(spark: SparkSession, dir: String, decision: String): String = {
     val maintPath = defaultPath(dir) + "_maint"
     val emb = Tables.embeddings(spark, dir)
     // day-1 reset: file-copy the pristine clustered even half into place
-    cloneStore(ensureMaintDay1(spark, dir), maintPath)
+    cloneStore(ensureCorpusHalf(spark, dir), maintPath)
     val incoming = emb.filter(col("vec_id") % 2 =!= 0)
     decision match {
       case "absorb" =>
@@ -213,15 +201,15 @@ object IndexStore {
       case r => r.getLong(0)
     }
     val decision = if (maxDrift >= tauMicroSq) "rebuild" else "absorb"
-    // The ACTION is a pure function of (day-1 store, source, decision) —
+    // The ACTION is a pure function of (half store, source, decision) —
     // the pq_maintain `_maint_from` convention: a completed maintenance
     // store is reused across executions, so re-executions pay the drift
     // census (the query's actual semantics) plus a marker check and the
     // audit count, never a re-clone + re-absorb per call.
     val maintPath = defaultPath(dir) + "_maint"
-    val day1 = ensureMaintDay1(spark, dir)
+    val half = ensureCorpusHalf(spark, dir)
     val servingPath = if (decision == "absorb") maintPath else maintPath + "_rb"
-    Artifact.ensure(maintPath, Artifact.generation(day1) + s" decision=$decision",
+    Artifact.ensure(maintPath, Artifact.generation(half) + s" decision=$decision",
       Seq(s"$servingPath/rows"), Artifact.MaintFrom)(maintain(spark, dir, decision))
     val rowsAfter = graft.Tables.storeParquet(spark, s"$servingPath/rows").count()
     drift
@@ -232,8 +220,9 @@ object IndexStore {
   }
 
   /** The even-vec_id half of a dir's embeddings as its own persisted
-    * store — the "existing corpus" the streaming dedup-ingest probes
-    * (the odd half plays the incoming crawl). Same canonical-path and
+    * store — the "existing corpus" the streaming dedup-ingest probes and
+    * the day-1 state [[maintain]] clones (the odd half plays the incoming
+    * crawl); it is only ever read or cloned. Same canonical-path and
     * content-fingerprint contract as the full store.
     */
   def corpusHalfPath(dir: String): String = defaultPath(dir) + "_half"

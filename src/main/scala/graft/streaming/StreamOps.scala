@@ -23,9 +23,9 @@ object StreamOps {
     * (delta file + fsync) — for a stream-stream join that is 4 stores per
     * side × partitions commits per batch. So the right number tracks state
     * VOLUME, not the session's batch parallelism. Measured on the sf0.1
-    * interval join (~40k state rows, single-source form, warm JVM,
-    * StreamProfile): summed state commitTimeMs ≈ 3-8 s at 8 partitions vs
-    * ~0.4 s at 2-3; end-to-end ~3.7-4.6 s at 8, ~2.8-3.0 s at 2-3, worse
+    * interval join (~40k state rows, single-source form, warm JVM, read
+    * off the query's `recentProgress` state operators): summed state
+    * commitTimeMs ≈ 3-8 s at 8 partitions vs ~0.4 s at 2-3; end-to-end ~3.7-4.6 s at 8, ~2.8-3.0 s at 2-3, worse
     * again at 1 (join runs single-threaded). Default 3 ≈ state-rows/13k;
     * a real deployment sizes this to expected state rows / executor count
     * when the checkpoint is first created (it cannot change afterwards
@@ -93,36 +93,138 @@ object StreamOps {
     f.delete()
   }
 
-  /** Streaming read of the events parquet with ts normalized to a
-    * session-tz TIMESTAMP. Streaming sources cannot infer a schema, and the
-    * driver's testdata generations have varied the `ts` physical type
-    * (nanos-as-long vs µs TIMESTAMP_NTZ), so the stream schema tracks a
-    * one-off batch read of the same file and the normalization is the
-    * SAME code path as the batch reader (Tables.normalizeTs) — the
-    * batch≡stream equivalence specs then compare like for like by
-    * construction. The testdata table is a single file, so basePath must
-    * be pinned to its parent directory (the streaming source otherwise
-    * requires a directory).
+  /** Where a [[replay]] lands its micro-batches. */
+  private[graft] sealed trait Sink
+
+  /** A memory table in the stream's session: the aggregate and stateful
+    * runs. The table is the run's result.
+    */
+  private[graft] final case class Memory(mode: OutputMode) extends Sink
+
+  /** `foreachBatch` that writes somewhere of its own (a store, a working
+    * index); nothing is read back. `checkpoint` is the caller's location
+    * for a run that must resume across calls, else a scratch one.
+    */
+  private[graft] final case class Batches(write: (DataFrame, Long) => Unit,
+                                          checkpoint: Option[String] = None) extends Sink
+
+  /** `foreachBatch` whose `write(batch, batchId, outDir)` leaves parquet
+    * under a scratch `outDir`; those files, read with `schema` (partition
+    * columns included) and then `shape`d, are the run's result.
+    */
+  private[graft] final case class ScratchParquet(schema: StructType,
+                                                 write: (DataFrame, Long, String) => Unit,
+                                                 shape: DataFrame => DataFrame)
+    extends Sink
+
+  /** The one AvailableNow run of this module: every streaming query here
+    * replays the input present at `start()` and stops, so the DuckDB
+    * oracle can check a real streaming execution.
+    *  - checkpoint: the [[Batches]] caller's own, else `<scratch>/chk`;
+    *  - read-back: the [[Memory]] table (lazy), or the [[ScratchParquet]]
+    *    output read with its explicit schema — a run whose batches wrote no
+    *    rows leaves no data file and returns an empty frame of that schema,
+    *    not a read error. The `shape`d frame is materialized eagerly
+    *    (`localCheckpoint(true)`) because its files go with the scratch
+    *    dir; [[Batches]] returns an empty frame;
+    *  - cleanup: the scratch dir is removed when the run ends, also when a
+    *    batch throws (the failure propagates from `awaitTermination`).
+    * Partition pinning stays with the caller: the stream's own session
+    * (see [[withStreamPartitions]]) runs the query and reads it back.
+    */
+  private[graft] def replay(stream: DataFrame, sink: Sink): DataFrame = {
+    val s = stream.sparkSession
+    val scratch = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    try {
+      val w = stream.writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", sink match {
+          case Batches(_, Some(own)) => own
+          case _ => s"$scratch/chk"
+        })
+      sink match {
+        case Memory(mode) =>
+          val name = s"replay_${System.nanoTime()}"
+          w.outputMode(mode).format("memory").queryName(name).start().awaitTermination()
+          s.table(name)
+        case Batches(write, _) =>
+          w.foreachBatch((b: Dataset[Row], id: Long) => write(b.toDF(), id)).start().awaitTermination()
+          s.emptyDataFrame
+        case ScratchParquet(schema, write, shape) =>
+          val out = s"$scratch/out"
+          w.foreachBatch((b: Dataset[Row], id: Long) => write(b.toDF(), id, out)).start().awaitTermination()
+          val rows =
+            if (new java.io.File(out).exists()) s.read.schema(schema).parquet(out)
+            else s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+          shape(rows).localCheckpoint(true)
+      }
+    } finally rmTree(new java.io.File(scratch))
+  }
+
+  /** At-least-once guard for one absorbing micro-batch. foreachBatch may
+    * re-run a batch and every absorb is an append, so a
+    * `_absorbed_batch_<id>` marker in the working store skips a batch that
+    * was already absorbed. The marker is written right after `absorb` and
+    * before `check` (the per-batch searchability assertion, handed the
+    * batch's smallest vec_id and what `absorb` returned); the crash window
+    * between append and marker is the one a production lake closes with
+    * staged file moves or a transactional table format, see
+    * [[graft.sources.SortedLayout]]'s absorb. An empty batch only writes
+    * its marker.
+    */
+  private def absorbOnce[A](work: String, batch: DataFrame, batchId: Long)(
+      absorb: DataFrame => A)(check: (DataFrame, Long, A) => Unit): Unit = {
+    val marker = new java.io.File(work, s"_absorbed_batch_$batchId")
+    if (!marker.exists()) {
+      val b = batch.persist()
+      try {
+        if (!b.isEmpty) {
+          val absorbed = absorb(b)
+          marker.createNewFile()
+          check(b, b.agg(min(col("vec_id"))).head().getLong(0), absorbed)
+        } else marker.createNewFile()
+      } finally b.unpersist(blocking = false)
+    }
+  }
+
+  /** File-source stream of table `name` under `dir`. Streaming sources
+    * cannot infer a schema, so it is read off the file's footer by a
+    * throwaway batch read: a generator-side type change then surfaces as a
+    * loud analysis error instead of silent nulls. Not through the
+    * `Tables` memo, which is keyed per session: callers build streams on a
+    * fresh child session per run, so every probe would miss and the entry
+    * would pin that session, memory-sink tables included, for the JVM's
+    * life. The probe reads the plain path when it exists (a batch read of
+    * a glob logs a stack trace looking for sink metadata); fixture dirs
+    * that only match the glob (multi-file restart layouts) probe the glob.
+    * The testdata table is a single file, so basePath is pinned to its
+    * parent directory and the trailing `*` makes the path a glob (the
+    * file-stream source accepts globs but not plain single-file paths).
+    */
+  def readTableStream(spark: SparkSession, dir: String, name: String,
+                      options: Map[String, String] = Map.empty): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val probe = if (new java.io.File(path).exists()) path else s"$path*"
+    spark.readStream.schema(spark.read.parquet(probe).schema)
+      .options(options)
+      .option("basePath", dir)
+      .parquet(s"$path*")
+  }
+
+  /** [[readTableStream]] of the events with ts normalized to a session-tz
+    * TIMESTAMP. Testdata generations have varied the `ts`
+    * physical type (nanos-as-long vs µs TIMESTAMP_NTZ), so the stream
+    * keeps the file's RAW schema and the normalization is the SAME code
+    * path as the batch reader (Tables.normalizeTs) — the batch≡stream
+    * equivalence specs then compare like for like by construction.
     */
   def readEventsStream(spark: SparkSession, dir: String,
-                       options: Map[String, String] = Map.empty): DataFrame = {
-    // schema probe through the memoized batch reader (fingerprint-keyed):
-    // the per-call file listing + footer inference was paid by every
-    // streaming query construction. RAW schema deliberately — the ts
-    // normalization wraps the STREAM below, so the source schema must
-    // match the file's physical type. Fixture dirs that only match the
-    // glob (multi-file restart layouts) keep the direct glob probe.
-    val raw =
-      if (new java.io.File(s"$dir/events.parquet").isFile)
-        graft.Tables.table(spark, dir, "events").schema
-      else spark.read.parquet(s"$dir/events.parquet*").schema
-    graft.Tables.normalizeTs(
-      spark.readStream.schema(raw)
-        .options(options)
-        .option("basePath", dir)
-        .parquet(s"$dir/events.parquet*")) // trailing * makes it a glob — the
-        // file-stream source accepts globs but not plain single-file paths
-  }
+                       options: Map[String, String] = Map.empty): DataFrame =
+    graft.Tables.normalizeTs(readTableStream(spark, dir, "events", options))
+
+  /** Source options of the replays whose oracle needs the whole input in
+    * ONE micro-batch (see [[streamDedupRun]]).
+    */
+  private val singleBatch = Map("maxFilesPerTrigger" -> "1000000")
 
   /** Shared transformation: tumbling 1-hour counts+sums per event type.
     * Works on a batch OR streaming DataFrame (same Catalyst plan).
@@ -141,22 +243,15 @@ object StreamOps {
     * an actual streaming execution.
     */
   def streamHourly(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_hourly_${System.nanoTime()}"
     // Pinned: the scan's parallelism comes from FILE SPLITS (maxPartitionBytes),
     // not shuffle partitions — only the few-thousand-group final aggregate
     // runs at the pinned width, so the pin costs nothing while cutting the
     // per-batch state commits (2 stores × partitions). Measured at sf0.1,
     // warm: ~3.1-3.4 s unpinned (32) vs ~1.9-2.1 s at 3.
     withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir)
-      val q = hourlyAgg(src.withWatermark("ts", "2 hours"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("hour_epoch"), col("event_type"))
-    }
+      replay(hourlyAgg(readEventsStream(s, dir).withWatermark("ts", "2 hours")),
+        Memory(OutputMode.Complete()))
+    }.orderBy(col("hour_epoch"), col("event_type"))
   }
 
   /** Sliding-window trending top-k — the "what's hot in the last 2 hours,
@@ -171,30 +266,24 @@ object StreamOps {
     * data.
     */
   def streamTrending(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val name = s"stream_trending_${System.nanoTime()}"
-    withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir)
-      val q = src.withWatermark("ts", "2 hours")
+    val counts = withStreamPartitions(spark) { s =>
+      replay(readEventsStream(s, dir).withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("sum_value_c"))
         .select(unix_timestamp(col("w.start")).as("window_epoch"),
-          col("event_type"), col("n"), col("sum_value_c"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val rankW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("window_epoch"))
-        .orderBy(col("n").desc, col("event_type"))
-      s.table(name)
-        .withColumn("rank", row_number().over(rankW))
-        .filter(col("rank") <= k)
-        .select(col("window_epoch"), col("event_type"), col("n"),
-          col("sum_value_c"), col("rank").cast("long").as("rank"))
-        .orderBy(col("window_epoch"), col("rank"))
+          col("event_type"), col("n"), col("sum_value_c")),
+        Memory(OutputMode.Complete()))
     }
+    val rankW = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("window_epoch"))
+      .orderBy(col("n").desc, col("event_type"))
+    counts
+      .withColumn("rank", row_number().over(rankW))
+      .filter(col("rank") <= k)
+      .select(col("window_epoch"), col("event_type"), col("n"),
+        col("sum_value_c"), col("rank").cast("long").as("rank"))
+      .orderBy(col("window_epoch"), col("rank"))
   }
 
   /** Stream-STATIC enrichment join: the serving-time pattern of joining a
@@ -210,24 +299,17 @@ object StreamOps {
     * as the hourly agg: the only shuffle is the few-group final
     * aggregate, so the pin cuts per-batch state commits for free.
     */
-  def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_enrich_${System.nanoTime()}"
+  def streamEnrich(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) { s =>
       val dim = broadcast(graft.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment")))
       val src = readEventsStream(s, dir)
-      val q = src.join(dim, src("user_id") === dim("c_custkey"))
+      replay(src.join(dim, src("user_id") === dim("c_custkey"))
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("sum_value_c"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("c_mktsegment"), col("event_type"))
-    }
-  }
+          (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("sum_value_c")),
+        Memory(OutputMode.Complete()))
+    }.orderBy(col("c_mktsegment"), col("event_type"))
 
   /** T1/T4: micro-batch ingest with foreachBatch keep-latest upsert into an
     * accumulating store — the Milvus chunked add/upsert loop
@@ -235,20 +317,12 @@ object StreamOps {
     * `mergeInto` is the MERGE the reference's upsert implies.
     */
   def foreachBatchUpsert(spark: SparkSession, dir: String, storePath: String,
-                         checkpoint: String): Unit = {
+                         checkpoint: String): Unit =
     // No partition pin: stateless (offsets in the checkpoint, no state
     // stores) — the merge window inside foreachBatch is real batch work
     // that wants the session's parallelism.
-    val src = readEventsStream(spark, dir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        mergeKeepLatest(batch.sparkSession, batch.toDF(), storePath, id)
-      }
-      .start()
-    q.awaitTermination()
-  }
+    replay(readEventsStream(spark, dir), Batches((batch, id) =>
+      mergeKeepLatest(batch.sparkSession, batch, storePath, id), Some(checkpoint)))
 
   /** Keep-latest merge of a batch into a parquet store (plain-DF MERGE:
     * union + window-dedup on the key). The snapshot swap goes through the
@@ -288,12 +362,6 @@ object StreamOps {
     if (fs.exists(aside)) fs.delete(aside, true)
   }
 
-  /** documents schema for the streaming ingest source. */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** C1 streaming twin: continuous vector ingest. Each micro-batch of
     * documents is embedded (F1 featurizer, batched), assigned to its IVF
     * cell map-side (broadcast centroids), and appended to the clustered
@@ -303,25 +371,16 @@ object StreamOps {
     */
   def streamingVectorIngest(spark: SparkSession, dir: String,
                             centroids: DataFrame, storePath: String,
-                            checkpoint: String): Unit = {
+                            checkpoint: String): Unit =
     // No partition pin: stateless — the embed + cell-assign inside
     // foreachBatch is the expensive part and wants session parallelism.
-    val docs = spark.readStream.schema(documentsSchema)
-      .option("basePath", dir)
-      .parquet(s"$dir/documents.parquet*")
-    val q = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val embedded = graft.embed.Featurizer
-          .embedBatched(batch.select(col("doc_id"), col("text")).toDF(), "text", "embedding")
-        graft.operators.VectorSearch
-          .withCellId(embedded, graft.sources.IvfProbe.collect(centroids), "embedding")
-          .write.mode("append").partitionBy("cell_id").parquet(storePath)
-      }
-      .start()
-    q.awaitTermination()
-  }
+    replay(readTableStream(spark, dir, "documents"), Batches({ (batch, _) =>
+      val embedded = graft.embed.Featurizer
+        .embedBatched(batch.select(col("doc_id"), col("text")), "text", "embedding")
+      graft.operators.VectorSearch
+        .withCellId(embedded, graft.sources.IvfProbe.collect(centroids), "embedding")
+        .write.mode("append").partitionBy("cell_id").parquet(storePath)
+    }, Some(checkpoint)))
 
   /** Shared transform for the click↔view interval join: every click pairs
     * with the same user's views from the preceding 4 hours. Works on batch
@@ -333,25 +392,6 @@ object StreamOps {
         expr("user_id = view_user AND view_ts BETWEEN click_ts - INTERVAL 4 HOURS AND click_ts"))
       .select(col("click_id"), col("view_id"), col("user_id"))
 
-  /** Click/view sides for the stream-stream interval join, both derived
-    * from ONE streaming source (a stream self-join): a single file-stream
-    * source means one offset log, one file listing, and one getBatch per
-    * micro-batch — the two-independent-sources form scanned the input
-    * twice per batch and ran two sources' offset machinery. Shared by
-    * [[streamIntervalJoin]] and graft.tools.StreamProfile so the profiler
-    * can never diverge from the production query.
-    */
-  private[graft] def clickViewStreams(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val src = readEventsStream(spark, dir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val views = src.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("view_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "5 hours") // join-window + click delay: state cleanup bound
-    (clicks, views)
-  }
-
   /** Stream-stream interval join, executed for real: both sides are
     * watermarked streams, so Spark bounds the join state — views are
     * dropped from state once the click-side watermark passes their
@@ -360,20 +400,23 @@ object StreamOps {
     * positionally, `pipeline+ui.py:598-599`; this is that lookup when BOTH
     * sides are unbounded). AvailableNow + memory sink returns the result
     * as a batch DataFrame for the driver's DuckDB oracle.
+    *
+    * Both sides derive from ONE streaming source (a stream self-join): one
+    * offset log, one file listing and one getBatch per micro-batch — the
+    * two-independent-sources form scanned the input twice per batch and
+    * ran two sources' offset machinery.
     */
-  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_cv_${System.nanoTime()}"
+  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) { s =>
-      val (clicks, views) = clickViewStreams(s, dir)
-      val q = clickViewIntervalJoin(clicks, views)
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("click_id"), col("view_id"))
-    }
-  }
+      val src = readEventsStream(s, dir)
+      val clicks = src.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
+        .withWatermark("click_ts", "1 hour")
+      val views = src.filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id").as("view_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "5 hours") // join-window + click delay: state cleanup bound
+      replay(clickViewIntervalJoin(clicks, views), Memory(OutputMode.Append()))
+    }.orderBy(col("click_id"), col("view_id"))
 
   /** T3: streaming dedup with watermark (exactly-once-ish ingest dedup,
     * `Milvus/stream1.py:265`).
@@ -405,25 +448,17 @@ object StreamOps {
     * watermark-late drops by design; only the replay-vs-DISTINCT check
     * needs the pin.
     */
-  def streamDedupRun(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_dedup_${System.nanoTime()}"
+  def streamDedupRun(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir, Map("maxFilesPerTrigger" -> "1000000"))
-      val keyed = src
+      replay(readEventsStream(s, dir, singleBatch)
         .select(col("user_id"), col("event_type"),
           date_trunc("hour", col("ts")).as("ts_hour"))
         .withWatermark("ts_hour", "2 hours")
         .dropDuplicates("user_id", "event_type", "ts_hour")
         .select(col("user_id"), col("event_type"),
-          unix_timestamp(col("ts_hour")).as("hour_epoch"))
-      val q = keyed.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("user_id"), col("event_type"), col("hour_epoch"))
-    }
-  }
+          unix_timestamp(col("ts_hour")).as("hour_epoch")),
+        Memory(OutputMode.Append()))
+    }.orderBy(col("user_id"), col("event_type"), col("hour_epoch"))
 
   /** Registered-query run of [[sessionizeStateful]]: replay the events
     * parquet through the stateful session operator (AvailableNow → memory
@@ -435,23 +470,14 @@ object StreamOps {
     * contract as [[streamDedupRun]]: a multi-batch replay would re-emit
     * grown sessions into the append sink.
     */
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_sessionize_${System.nanoTime()}"
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir, Map("maxFilesPerTrigger" -> "1000000"))
-      val q = sessionizeStateful(s, src).toDF()
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-        .select(col("userId").as("user_id"), col("sessionId").as("session_id"),
-          col("nEvents").as("n_events"), col("startEpoch").as("start_epoch"),
-          col("endEpoch").as("end_epoch"))
-        .orderBy(col("user_id"), col("session_id"))
-    }
-  }
+      replay(sessionizeStateful(s, readEventsStream(s, dir, singleBatch)).toDF(),
+        Memory(OutputMode.Append()))
+    }.select(col("userId").as("user_id"), col("sessionId").as("session_id"),
+        col("nEvents").as("n_events"), col("startEpoch").as("start_epoch"),
+        col("endEpoch").as("end_epoch"))
+      .orderBy(col("user_id"), col("session_id"))
 
   /** Registered-query run of [[funnelStateful]]: the strict
     * view→click→purchase state machine replayed as a real AvailableNow
@@ -460,25 +486,17 @@ object StreamOps {
     * Shares the single-batch replay contract of [[streamSessionize]].
     */
   def streamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_funnel_${System.nanoTime()}"
+    val us = 1000000L
     withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir, Map("maxFilesPerTrigger" -> "1000000"))
-      val q = funnelStateful(s, src).toDF()
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val us = 1000000L
-      s.table(name)
-        .select(col("userId").as("user_id"),
-          floor(col("viewEpoch") / us).cast("long").as("view_epoch"),
-          when(col("clickEpoch") >= 0, floor(col("clickEpoch") / us).cast("long")).as("click_epoch"),
-          when(col("purchaseEpoch") >= 0, floor(col("purchaseEpoch") / us).cast("long")).as("purchase_epoch"),
-          (lit(1L) + when(col("clickEpoch") >= 0, 1L).otherwise(0L)
-            + when(col("purchaseEpoch") >= 0, 1L).otherwise(0L)).as("stages_reached"))
-        .orderBy(col("user_id"))
-    }
+      replay(funnelStateful(s, readEventsStream(s, dir, singleBatch)).toDF(),
+        Memory(OutputMode.Append()))
+    }.select(col("userId").as("user_id"),
+        floor(col("viewEpoch") / us).cast("long").as("view_epoch"),
+        when(col("clickEpoch") >= 0, floor(col("clickEpoch") / us).cast("long")).as("click_epoch"),
+        when(col("purchaseEpoch") >= 0, floor(col("purchaseEpoch") / us).cast("long")).as("purchase_epoch"),
+        (lit(1L) + when(col("clickEpoch") >= 0, 1L).otherwise(0L)
+          + when(col("purchaseEpoch") >= 0, 1L).otherwise(0L)).as("stages_reached"))
+      .orderBy(col("user_id"))
   }
 
   /** Session state for stateful sessionization. */
@@ -611,24 +629,15 @@ object StreamOps {
     * REAL AvailableNow stream, emitted in the batch `cdc_apply` oracle
     * schema (µs epochs floored to seconds). Deleted keys are absent.
     */
-  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_cdc_apply_${System.nanoTime()}"
+  def streamCdcApply(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) { s =>
-      val src = readEventsStream(s, dir, Map("maxFilesPerTrigger" -> "1000000"))
-      val q = cdcStateful(s, src).toDF()
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-        .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
-          col("sumValueC").as("sum_value_c"), col("lastType").as("last_type"),
-          floor(col("lastUs") / 1000000L).cast("long").as("last_ep"),
-          col("nTombstones").as("n_tombstones"))
-        .orderBy(col("user_id"))
-    }
-  }
+      replay(cdcStateful(s, readEventsStream(s, dir, singleBatch)).toDF(),
+        Memory(OutputMode.Append()))
+    }.select(col("userId").as("user_id"), col("nEvents").as("n_events"),
+        col("sumValueC").as("sum_value_c"), col("lastType").as("last_type"),
+        floor(col("lastUs") / 1000000L).cast("long").as("last_ep"),
+        col("nTombstones").as("n_tombstones"))
+      .orderBy(col("user_id"))
 
   /** Streaming kNN search — the reference's serve loop: queries arrive
     * continuously and each round searches the collection
@@ -649,49 +658,35 @@ object StreamOps {
                       nq: Int = 5, nprobe: Int = 10): DataFrame = {
     val path = graft.sources.IndexStore.defaultPath(dir)
     graft.sources.IndexStore.ensure(spark, dir, path)
-    val out = java.nio.file.Files.createTempDirectory("graft-streamknn").toString
-    val hitsDir = s"$out/hits"
-    // The stream schema tracks the batch reader instead of a hand-copied
-    // StructType: a generator-side type change surfaces as a loud analysis
-    // error here rather than silent nulls diverging stream_knn from knn_ivf.
-    val schema = graft.Tables.embeddings(spark, dir).schema
+    val hits = new StructType().add("qid", LongType).add("vec_id", LongType)
+      .add("rank", IntegerType).add("sim_micro", LongType).add("batch_id", LongType)
     // Pinned partitions here even though the query is stateless: each
     // micro-batch's work (a pruned search over nq=5 queries) is tiny, so
     // fewer shuffle partitions means fewer near-empty tasks per batch —
     // a bench-scale consistency pin, not a state-commit one.
-    val result =
-      try withStreamPartitions(spark) { s =>
-        val src = s.readStream.schema(schema)
-          .option("basePath", dir)
-          .parquet(s"$dir/embeddings.parquet*")
-          .filter(col("vec_id") < nq)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            // foreachBatch is at-least-once (the checkpoint only guards
-            // cross-restart replays): write idempotently by OVERWRITING this
-            // batch's own partition, so a failed-then-retried micro-batch
-            // replaces its rows instead of appending duplicates.
-            graft.sources.IndexStore
-              .searchPruned(batch.sparkSession, path, batch.toDF(), k, nprobe)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(hitsDir)
-          }
-          .start()
-        q.awaitTermination()
-        // Materialize the (nq·k)-row result off the temp files (eager local
-        // checkpoint) so the scratch dir can be deleted before returning.
-        s.read.parquet(hitsDir)
-          .select(col("qid"), col("vec_id"), col("rank").cast("long").as("rank"),
-            col("sim_micro"))
-          .localCheckpoint(true)
-      } finally rmTree(new java.io.File(out)) // also on failure: no scratch leak
-    result.orderBy(col("qid"), col("rank"))
+    withStreamPartitions(spark) { s =>
+      val queries = readTableStream(s, dir, "embeddings")
+        .filter(col("vec_id") < nq)
+        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      replay(queries, ScratchParquet(hits, (batch, batchId, out) =>
+        overwriteBatch(graft.sources.IndexStore
+          .searchPruned(batch.sparkSession, path, batch, k, nprobe), batchId, out),
+        _.select(col("qid"), col("vec_id"), col("rank").cast("long").as("rank"),
+          col("sim_micro"))))
+    }.orderBy(col("qid"), col("rank"))
   }
+
+  /** Write one micro-batch's rows as its own `batch_id` partition under
+    * `out`. foreachBatch is at-least-once (the checkpoint only guards
+    * cross-restart replays), so the write OVERWRITES that partition: a
+    * failed-then-retried micro-batch replaces its rows instead of
+    * appending duplicates.
+    */
+  private def overwriteBatch(rows: DataFrame, batchId: Long, out: String): Unit =
+    rows.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(out)
 
   /** Streaming dedup-on-ingest — the "dedup the incoming crawl against the
     * training corpus before appending" production pass, as a REAL streaming
@@ -717,54 +712,26 @@ object StreamOps {
                         tauMicro: Long = 300000L,
                         options: Map[String, String] = Map.empty): DataFrame = {
     val half = graft.sources.IndexStore.ensureCorpusHalf(spark, dir)
-    val out = java.nio.file.Files.createTempDirectory("graft-dedupingest").toString
-    val keptDir = s"$out/kept"
-    val schema = graft.Tables.embeddings(spark, dir).schema
-    val result =
-      try withStreamPartitions(spark) { s =>
-        val src = s.readStream.schema(schema)
-          .options(options)
-          .option("basePath", dir)
-          .parquet(s"$dir/embeddings.parquet*")
-          .filter(col("vec_id") % 2 === 1)
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            val queries = batch.toDF()
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-            val nearest = graft.sources.IndexStore
-              .searchPruned(batch.sparkSession, half, queries, k = 1)
-              .select(col("qid"), col("vec_id").as("nearest_id"),
-                col("sim_micro").as("nearest_micro"))
-            queries.select(col("qid"))
-              .join(nearest, Seq("qid"), "left")
-              .filter(col("nearest_micro").isNull || col("nearest_micro") < tauMicro)
-              .select(col("qid").as("vec_id"),
-                coalesce(col("nearest_id"), lit(-1L)).as("nearest_id"),
-                coalesce(col("nearest_micro"), lit(-1L)).as("nearest_micro"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(keptDir)
-          }
-          .start()
-        q.awaitTermination()
-        // Read back with an EXPLICIT schema: if every micro-batch dropped all
-        // rows (everything cleared tau) no data file exists under keptDir and
-        // schema inference would fail — the correct result is an empty frame,
-        // not an error. batch_id is the partition column of the sink layout.
-        val keptSchema = new StructType()
-          .add("vec_id", LongType).add("nearest_id", LongType)
-          .add("nearest_micro", LongType).add("batch_id", LongType)
-        val kept =
-          if (new java.io.File(keptDir).exists())
-            s.read.schema(keptSchema).parquet(keptDir)
-          else s.createDataFrame(s.sparkContext.emptyRDD[Row], keptSchema)
-        kept.select(col("vec_id"), col("nearest_id"), col("nearest_micro"))
-          .localCheckpoint(true)
-      } finally rmTree(new java.io.File(out))
-    result.orderBy(col("vec_id"))
+    val kept = new StructType()
+      .add("vec_id", LongType).add("nearest_id", LongType)
+      .add("nearest_micro", LongType).add("batch_id", LongType)
+    withStreamPartitions(spark) { s =>
+      val crawl = readTableStream(s, dir, "embeddings", options)
+        .filter(col("vec_id") % 2 === 1)
+      replay(crawl, ScratchParquet(kept, { (batch, batchId, out) =>
+        val queries = batch.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val nearest = graft.sources.IndexStore
+          .searchPruned(batch.sparkSession, half, queries, k = 1)
+          .select(col("qid"), col("vec_id").as("nearest_id"),
+            col("sim_micro").as("nearest_micro"))
+        overwriteBatch(queries.select(col("qid"))
+          .join(nearest, Seq("qid"), "left")
+          .filter(col("nearest_micro").isNull || col("nearest_micro") < tauMicro)
+          .select(col("qid").as("vec_id"),
+            coalesce(col("nearest_id"), lit(-1L)).as("nearest_id"),
+            coalesce(col("nearest_micro"), lit(-1L)).as("nearest_micro")), batchId, out)
+      }, _.select(col("vec_id"), col("nearest_id"), col("nearest_micro"))))
+    }.orderBy(col("vec_id"))
   }
 
   /** Streaming absorb INTO the persisted IVF store — the reference's
@@ -789,13 +756,8 @@ object StreamOps {
     * artifacts and replays the probed search over it, so the hash match
     * proves both the absorb's cell assignment and the search result.
     *
-    * foreachBatch is at-least-once and `absorb` is an append, so each
-    * batch's absorb is guarded by a `_absorbed_batch_<id>` marker in the
-    * working store — a retried micro-batch skips the duplicate append
-    * (marker written after the append; the crash window between the two is
-    * the same one a production lake closes with staged file moves or a
-    * transactional table format, see [[graft.sources.SortedLayout]]'s
-    * absorb).
+    * Each batch's absorb runs under the at-least-once guard
+    * [[absorbOnce]].
     *
     * Output: the post-stream probed top-k for the first five ODD (i.e.
     * absorbed) query vectors, plus a `rows_after` audit column — the
@@ -810,47 +772,30 @@ object StreamOps {
     val work = IndexStore.defaultPath(dir) + "_sab"
     // per-run reset, completed runs reused (see [[ensureRun]])
     ensureRun(work, half, "rows", options) {
-    IndexStore.cloneStore(half, work)
-    val out = java.nio.file.Files.createTempDirectory("graft-storeabsorb").toString
-    val schema = graft.Tables.embeddings(spark, dir).schema
-      try withStreamPartitions(spark) { s =>
-        val src = s.readStream.schema(schema).options(options)
-          .option("basePath", dir)
-          .parquet(s"$dir/embeddings.parquet*")
+      IndexStore.cloneStore(half, work)
+      withStreamPartitions(spark) { s =>
+        val crawl = readTableStream(s, dir, "embeddings", options)
           .filter(col("vec_id") % 2 === 1)
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            val ss = batch.sparkSession
-            val marker = new java.io.File(work, s"_absorbed_batch_$batchId")
-            if (!marker.exists()) {
-              val b = batch.toDF().persist()
-              try if (!b.isEmpty) {
-                IndexStore.absorb(ss, work, b)
-                marker.createNewFile()
-                // per-batch searchability: the just-absorbed row must be
-                // findable by the probed search RIGHT NOW (insert → flush →
-                // searchable, the reference's Add Data contract). Fresh
-                // qid = −1 so the search's self-exclusion doesn't hide it;
-                // its cell is the rank-1 probed cell by construction. Top-1
-                // must be the row itself — or, if the corpus happens to
-                // hold a bit-identical twin with a smaller id, any
-                // sim ≈ 1.0 hit (either way the absorbed content serves).
-                val firstId = b.agg(min(col("vec_id"))).head().getLong(0)
-                val probe = b.filter(col("vec_id") === firstId)
-                  .select(lit(-1L).as("qid"), col("embedding").as("qvec"))
-                val top = IndexStore.searchPruned(ss, work, probe, 1, nprobe).collect()
-                require(top.nonEmpty &&
-                  (top(0).getLong(1) == firstId || top(0).getLong(3) >= 999999L),
-                  s"absorbed row $firstId not searchable after batch $batchId")
-              } else { marker.createNewFile(); () }
-              finally b.unpersist(blocking = false)
-            }
+        replay(crawl, Batches { (batch, batchId) =>
+          val ss = batch.sparkSession
+          absorbOnce(work, batch, batchId)(IndexStore.absorb(ss, work, _)) { (b, firstId, _) =>
+            // per-batch searchability: the just-absorbed row must be
+            // findable by the probed search RIGHT NOW (insert → flush →
+            // searchable, the reference's Add Data contract). Fresh
+            // qid = −1 so the search's self-exclusion doesn't hide it;
+            // its cell is the rank-1 probed cell by construction. Top-1
+            // must be the row itself — or, if the corpus happens to
+            // hold a bit-identical twin with a smaller id, any
+            // sim ≈ 1.0 hit (either way the absorbed content serves).
+            val probe = b.filter(col("vec_id") === firstId)
+              .select(lit(-1L).as("qid"), col("embedding").as("qvec"))
+            val top = IndexStore.searchPruned(ss, work, probe, 1, nprobe).collect()
+            require(top.nonEmpty &&
+              (top(0).getLong(1) == firstId || top(0).getLong(3) >= 999999L),
+              s"absorbed row $firstId not searchable after batch $batchId")
           }
-          .start()
-        q.awaitTermination()
-      } finally rmTree(new java.io.File(out))
+        })
+      }
     }
     val queries = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 1 && col("vec_id") < 10)
@@ -893,10 +838,7 @@ object StreamOps {
     * feeds `even ∪ absorbed-so-far` as the base — the store carries its
     * own corpus, as HNSW carries its vectors.
     *
-    * foreachBatch is at-least-once; the `_absorbed_batch_<id>` marker
-    * (written after the absorb + sidecar append) makes a retried
-    * micro-batch skip the duplicate work, same contract and same crash
-    * window as [[streamStoreAbsorb]].
+    * The absorb and the sidecar append run under [[absorbOnce]].
     *
     * Output: the post-stream beam top-k for the first five ABSORBED
     * query vectors, walked from the STORE corpus's own entry sample
@@ -918,72 +860,55 @@ object StreamOps {
     val absorbedDir = s"$work/absorbed_rows"
     // per-run reset, completed runs reused (see [[ensureRun]])
     ensureRun(work, half, "edges", options) {
-    IndexStore.cloneStore(half, work)
-    val out = java.nio.file.Files.createTempDirectory("graft-graphabsorb").toString
-    val schema = graft.Tables.embeddings(spark, dir).schema
-    // Stateless foreachBatch sink → keep the CALLER's parallelism (the
-    // withStreamPartitions docstring's own rule): the real work here is
-    // the absorb's NN-Descent joins and the beam walks, and the 3-wide
-    // streaming-state pin under-parallelizes them ~10× on the bench host
-    // (measured 14.9 s pinned → see BASELINE.md r14). A child session
-    // still isolates the run's conf from concurrently planned queries.
-      try {
-        val s = spark.newSession()
-        val src = s.readStream.schema(schema).options(options)
-          .option("basePath", dir)
-          .parquet(s"$dir/embeddings.parquet*")
-          .filter(col("vec_id") % 10 === 1)
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            val ss = batch.sparkSession
-            val marker = new java.io.File(work, s"_absorbed_batch_$batchId")
-            if (!marker.exists()) {
-              val b = batch.toDF().select(col("vec_id"), col("embedding")).persist()
-              try if (!b.isEmpty) {
-                val even = graft.Tables.embeddings(ss, dir)
-                  .filter(col("vec_id") % 2 === 0)
-                  .select(col("vec_id"), col("embedding"))
-                val baseNow =
-                  if (new java.io.File(absorbedDir).exists())
-                    even.unionByName(ss.read.schema(b.schema).parquet(absorbedDir))
-                  else even
-                GraphIndex.absorb(ss, work, baseNow, b)
-                b.write.mode("append").parquet(absorbedDir)
-                marker.createNewFile()
-                // per-batch searchability: insert → flush → searchable.
-                // The probe ESCALATES: first a walk one hop shallower than
-                // the serve config (3 — absorb just linked the row
-                // bidirectionally into the entry-reachable neighborhood,
-                // so a short walk finds it on every corpus measured;
-                // hops=2/beam=16 measurably trips the assert on a small
-                // multi-batch corpus), and only on a miss re-probes at the
-                // full serve depth before failing — the common case pays
-                // one fewer hop per micro-batch, the assert keeps the
-                // serve path's full margin at any scale.
-                val firstId = b.agg(min(col("vec_id"))).head().getLong(0)
-                val probe = b.filter(col("vec_id") === firstId)
-                  .select(lit(-1L).as("qid"), col("embedding").as("qvec"))
-                val entries = baseNow
-                  .filter(col("vec_id") % GraphIndex.entryStride === 0)
-                def hit(hops: Int): Boolean = {
-                  val top = GraphIndex.searchFrom(ss, work, entries, probe,
-                    k = 1, beam = 32, hops = hops,
-                    maxInlineIds = graft.Tables.MaxInlineIds,
-                    maxFlatEntries = GraphIndex.FlatPinned).collect()
-                  top.nonEmpty &&
-                    (top(0).getLong(1) == firstId || top(0).getLong(3) >= 999999L)
-                }
-                require(hit(3) || hit(4),
-                  s"absorbed row $firstId not beam-searchable after batch $batchId")
-              } else { marker.createNewFile(); () }
-              finally b.unpersist(blocking = false)
-            }
+      IndexStore.cloneStore(half, work)
+      // Stateless foreachBatch sink → keep the CALLER's parallelism (the
+      // withStreamPartitions docstring's own rule): the real work here is
+      // the absorb's NN-Descent joins and the beam walks, and the 3-wide
+      // streaming-state pin under-parallelizes them ~10× on the bench host
+      // (measured 14.9 s pinned → see BASELINE.md r14). A child session
+      // still isolates the run's conf from concurrently planned queries.
+      val crawl = readTableStream(spark.newSession(), dir, "embeddings", options)
+        .filter(col("vec_id") % 10 === 1)
+      replay(crawl, Batches { (batch, batchId) =>
+        val ss = batch.sparkSession
+        absorbOnce(work, batch.select(col("vec_id"), col("embedding")), batchId) { b =>
+          val even = graft.Tables.embeddings(ss, dir)
+            .filter(col("vec_id") % 2 === 0)
+            .select(col("vec_id"), col("embedding"))
+          val baseNow =
+            if (new java.io.File(absorbedDir).exists())
+              even.unionByName(ss.read.schema(b.schema).parquet(absorbedDir))
+            else even
+          GraphIndex.absorb(ss, work, baseNow, b)
+          b.write.mode("append").parquet(absorbedDir)
+          baseNow
+        } { (b, firstId, baseNow) =>
+          // per-batch searchability: insert → flush → searchable.
+          // The probe ESCALATES: first a walk one hop shallower than
+          // the serve config (3 — absorb just linked the row
+          // bidirectionally into the entry-reachable neighborhood,
+          // so a short walk finds it on every corpus measured;
+          // hops=2/beam=16 measurably trips the assert on a small
+          // multi-batch corpus), and only on a miss re-probes at the
+          // full serve depth before failing — the common case pays
+          // one fewer hop per micro-batch, the assert keeps the
+          // serve path's full margin at any scale.
+          val probe = b.filter(col("vec_id") === firstId)
+            .select(lit(-1L).as("qid"), col("embedding").as("qvec"))
+          val entries = baseNow
+            .filter(col("vec_id") % GraphIndex.entryStride === 0)
+          def hit(hops: Int): Boolean = {
+            val top = GraphIndex.searchFrom(ss, work, entries, probe,
+              k = 1, beam = 32, hops = hops,
+              maxInlineIds = graft.Tables.MaxInlineIds,
+              maxFlatEntries = GraphIndex.FlatPinned).collect()
+            top.nonEmpty &&
+              (top(0).getLong(1) == firstId || top(0).getLong(3) >= 999999L)
           }
-          .start()
-        q.awaitTermination()
-      } finally rmTree(new java.io.File(out))
+          require(hit(3) || hit(4),
+            s"absorbed row $firstId not beam-searchable after batch $batchId")
+        }
+      })
     }
     val storeRows = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 0 || col("vec_id") % 10 === 1)
@@ -1039,8 +964,7 @@ object StreamOps {
     * searchable" here asserts what every ADC scan actually reads — the
     * absorbed row's m codes are present in the clustered layout and
     * bit-equal to encoding its vector under the store's codebooks. The
-    * same at-least-once `_absorbed_batch_<id>` marker contract as the
-    * other two absorbs.
+    * absorb runs under [[absorbOnce]], as in the other two absorbs.
     *
     * Output: the post-stream ADC top-k for the first five ODD (absorbed)
     * query vectors, plus a `codes_after` audit column — the post-stream
@@ -1054,52 +978,36 @@ object StreamOps {
     val work = PqStore.defaultPath(dir) + "_pab"
     // per-run reset, completed runs reused (see [[ensureRun]])
     ensureRun(work, half, "codes", options) {
-    IndexStore.cloneStore(half, work)
-    val out = java.nio.file.Files.createTempDirectory("graft-pqabsorb").toString
-    val schema = graft.Tables.embeddings(spark, dir).schema
-      try withStreamPartitions(spark) { s =>
-        val src = s.readStream.schema(schema).options(options)
-          .option("basePath", dir)
-          .parquet(s"$dir/embeddings.parquet*")
+      IndexStore.cloneStore(half, work)
+      withStreamPartitions(spark) { s =>
+        val crawl = readTableStream(s, dir, "embeddings", options)
           .filter(col("vec_id") % 2 === 1)
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            val ss = batch.sparkSession
-            val marker = new java.io.File(work, s"_absorbed_batch_$batchId")
-            if (!marker.exists()) {
-              val b = batch.toDF().select(col("vec_id"), col("embedding")).persist()
-              try if (!b.isEmpty) {
-                PqStore.absorb(ss, work, b)
-                marker.createNewFile()
-                val firstId = b.agg(min(col("vec_id"))).head().getLong(0)
-                val books = ss.read.parquet(s"$work/codebooks")
-                val coarse = ss.read.parquet(s"$work/coarse")
-                val rotation = ss.read.parquet(s"$work/rotation")
-                val expect = PqStore.encode(b.filter(col("vec_id") === firstId),
-                    books, coarse, rotation)
-                  .select(col("sub"), col("code")).collect()
-                  .map(r => (r.getInt(0), r.getInt(1))).toSet
-                val got = ss.read.parquet(s"$work/codes")
-                  .filter(col("vec_id") === firstId)
-                  .select(col("sub"), col("code")).collect()
-                  .map(r => (r.getInt(0), r.getInt(1)))
-                // per-row COUNT, not just the distinct set: a retry that
-                // slips between the append and the marker write duplicates
-                // the batch's code rows, and set equality would mask it
-                // until the final codes_after census — fail at the batch
-                // that caused it instead
-                require(got.length == PqStore.M && got.toSet == expect,
-                  s"absorbed row $firstId codes absent, duplicated or drifted " +
-                    s"after batch $batchId (${got.length} rows)")
-              } else { marker.createNewFile(); () }
-              finally b.unpersist(blocking = false)
-            }
+        replay(crawl, Batches { (batch, batchId) =>
+          val ss = batch.sparkSession
+          absorbOnce(work, batch.select(col("vec_id"), col("embedding")), batchId)(
+            PqStore.absorb(ss, work, _)) { (b, firstId, _) =>
+            val books = ss.read.parquet(s"$work/codebooks")
+            val coarse = ss.read.parquet(s"$work/coarse")
+            val rotation = ss.read.parquet(s"$work/rotation")
+            val expect = PqStore.encode(b.filter(col("vec_id") === firstId),
+                books, coarse, rotation)
+              .select(col("sub"), col("code")).collect()
+              .map(r => (r.getInt(0), r.getInt(1))).toSet
+            val got = ss.read.parquet(s"$work/codes")
+              .filter(col("vec_id") === firstId)
+              .select(col("sub"), col("code")).collect()
+              .map(r => (r.getInt(0), r.getInt(1)))
+            // per-row COUNT, not just the distinct set: a retry that
+            // slips between the append and the marker write duplicates
+            // the batch's code rows, and set equality would mask it
+            // until the final codes_after census — fail at the batch
+            // that caused it instead
+            require(got.length == PqStore.M && got.toSet == expect,
+              s"absorbed row $firstId codes absent, duplicated or drifted " +
+                s"after batch $batchId (${got.length} rows)")
           }
-          .start()
-        q.awaitTermination()
-      } finally rmTree(new java.io.File(out))
+        })
+      }
     }
     val queries = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 1 && col("vec_id") < 10)
@@ -1125,42 +1033,16 @@ object StreamOps {
     * batch ≡ stream contract, hash-checked by the oracle.
     */
   def streamPartitionedIngest(spark: SparkSession, dir: String,
-                              options: Map[String, String] = Map.empty): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-partingest").toString
-    val rowsDir = s"$out/rows"
-    val schema = graft.Tables.table(spark, dir, "events").schema
-    val result =
-      try withStreamPartitions(spark) { s =>
-        val src = graft.Tables.normalizeTs(
-          s.readStream.schema(schema).options(options)
-            .option("basePath", dir)
-            .parquet(s"$dir/events.parquet*"))
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.toDF().withColumn("event_date", to_date(col("ts")))
-              .write.mode("append").partitionBy("event_date").parquet(rowsDir)
-          }
-          .start()
-        q.awaitTermination()
-        val agg =
-          if (new java.io.File(rowsDir).exists())
-            s.read.parquet(rowsDir)
-              .groupBy(col("event_date"))
-              .agg(count(lit(1)).as("n"),
-                (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("sum_value_c"))
-          else {
-            // all-empty stream: no sink files — the correct result is an
-            // empty frame with the output schema, not a read error
-            val sch = new StructType().add("event_date", DateType)
-              .add("n", LongType).add("sum_value_c", LongType)
-            s.createDataFrame(s.sparkContext.emptyRDD[Row], sch)
-          }
-        agg.localCheckpoint(true)
-      } finally rmTree(new java.io.File(out))
-    result.orderBy(col("event_date"))
-  }
+                              options: Map[String, String] = Map.empty): DataFrame =
+    withStreamPartitions(spark) { s =>
+      val src = readEventsStream(s, dir, options)
+      replay(src, ScratchParquet(src.schema.add("event_date", DateType), (batch, _, out) =>
+        batch.withColumn("event_date", to_date(col("ts")))
+          .write.mode("append").partitionBy("event_date").parquet(out),
+        _.groupBy(col("event_date"))
+          .agg(count(lit(1)).as("n"),
+            (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("sum_value_c"))))
+    }.orderBy(col("event_date"))
 
   /** Streaming EXACT dedup-on-ingest through the persisted Bloom sidecar —
     * the near-dup ingest gate's ([[streamDedupIngest]]) exact-content twin,
@@ -1181,48 +1063,23 @@ object StreamOps {
                         numBits: Long = 8L * 1024 * 1024,
                         options: Map[String, String] = Map.empty): DataFrame = {
     val bits = graft.operators.Dedup.ensureContentBloom(spark, dir, numBits)
-    val out = java.nio.file.Files.createTempDirectory("graft-bloomingest").toString
-    val keptDir = s"$out/kept"
-    val schema = graft.Tables.documents(spark, dir).schema
-    val result =
-      try withStreamPartitions(spark) { s =>
-        val corpusKeys = graft.Tables.documents(s, dir)
-          .filter(col("doc_id") % 10 =!= 0)
-          .select(md5(col("text")).as("w")).distinct()
-        val src = s.readStream.schema(schema)
-          .options(options)
-          .option("basePath", dir)
-          .parquet(s"$dir/documents.parquet*")
-          .filter(col("doc_id") % 10 === 0)
-        val q = src.writeStream
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-            val b = batch.toDF()
-              .select(col("doc_id"), xxhash64(col("text")).as("bh"),
-                md5(col("text")).as("w"))
-            val gate = graft.operators.Dedup.mightContainCol(bits, col("bh"))
-            val novel = b.filter(!gate).select(col("doc_id"))
-              .unionByName(b.filter(gate)
-                .join(corpusKeys, Seq("w"), "left_anti")
-                .select(col("doc_id")))
-            novel.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(keptDir)
-          }
-          .start()
-        q.awaitTermination()
-        // Explicit read-back schema: all-dup batches leave no data files.
-        val keptSchema = new StructType()
-          .add("doc_id", LongType).add("batch_id", LongType)
-        val kept =
-          if (new java.io.File(keptDir).exists())
-            s.read.schema(keptSchema).parquet(keptDir)
-          else s.createDataFrame(s.sparkContext.emptyRDD[Row], keptSchema)
-        kept.select(col("doc_id")).localCheckpoint(true)
-      } finally rmTree(new java.io.File(out))
-    result.orderBy(col("doc_id"))
+    val kept = new StructType().add("doc_id", LongType).add("batch_id", LongType)
+    withStreamPartitions(spark) { s =>
+      val corpusKeys = graft.Tables.documents(s, dir)
+        .filter(col("doc_id") % 10 =!= 0)
+        .select(md5(col("text")).as("w")).distinct()
+      val crawl = readTableStream(s, dir, "documents", options)
+        .filter(col("doc_id") % 10 === 0)
+      replay(crawl, ScratchParquet(kept, { (batch, batchId, out) =>
+        val b = batch.select(col("doc_id"), xxhash64(col("text")).as("bh"),
+          md5(col("text")).as("w"))
+        val gate = graft.operators.Dedup.mightContainCol(bits, col("bh"))
+        overwriteBatch(b.filter(!gate).select(col("doc_id"))
+          .unionByName(b.filter(gate)
+            .join(corpusKeys, Seq("w"), "left_anti")
+            .select(col("doc_id"))), batchId, out)
+      }, _.select(col("doc_id"))))
+    }.orderBy(col("doc_id"))
   }
 
   /** CONTINUOUS-trigger streaming kNN — the genuinely unbounded serving
