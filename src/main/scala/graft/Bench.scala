@@ -175,7 +175,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_errors":$nErr$sva,"warm_sec":${r3(warmSec)},"build_sec":$buildJson,"sf":"$sfDir"}"""
     // The driver keeps only the last ~2000 chars of stdout; with 90+ queries
     // the full-precision line outgrows that window and truncates into
-    // unparseable JSON (BENCH_r1–r3 all recorded parsed:null). Persist the
+    // unparseable JSON (the first three recorded runs parsed as null). Persist the
     // full line to a file, print it for humans, then print a compact line
     // LAST — slowest-N queries, 3-decimal values, bounded size — so the tail
     // always ends with one complete parseable object.

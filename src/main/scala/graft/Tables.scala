@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Readers for the driver testdata (see TESTDATA.md): TPC-H-ish star schema
   * plus `events` (stream-shaped), `documents` (text corpus) and `embeddings`
@@ -22,9 +23,13 @@ object Tables {
     * changed), so a regenerated testdata dir still invalidates. This is
     * plan reuse, NOT result caching: no rows are persisted; every action
     * on the returned frame re-scans the parquet files.
+    *
+    * One entry per path: a read from another session replaces the entry,
+    * so a per-run child session (streaming runs read through their own)
+    * stays reachable only until the next session reads that path.
     */
-  private val tableMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (SparkSession, Long, DataFrame)]
+  private[graft] val tableMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, Long, DataFrame)]
 
   /** Per-run temp locations (StreamOps sinks, zorder scratch) are
     * write-once-read-once — memoizing them would only grow the map.
@@ -37,19 +42,12 @@ object Tables {
 
   private def memoizedRead(spark: SparkSession, path: String): DataFrame = {
     if (under(tmpRoot, path)) return spark.read.parquet(path)
-    val k = (System.identityHashCode(spark), path)
     val gen = dirFingerprint(path)
-    tableMemo.get(k) match {
-      // `eq` on the stored session: an identity-hash collision after a
-      // session is GC'd can never serve a frame bound to a dead session
+    tableMemo.get(path) match {
       case Some((s, g, df)) if (s eq spark) && g == gen => df
       case _ =>
-        // bounded: evict entries of stopped sessions (test suites stop
-        // sessions; long-lived JVMs would otherwise pin them forever)
-        if (tableMemo.size > 512)
-          tableMemo.filterInPlace { case (_, (s, _, _)) => !s.sparkContext.isStopped }
         val df = spark.read.parquet(path)
-        tableMemo(k) = (spark, gen, df)
+        tableMemo(path) = (spark, gen, df)
         df
     }
   }
@@ -108,6 +106,17 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** The engine's one delete set: an id is deleted iff `id % 17 = 3`.
+    * Every tombstone and compaction query deletes this set (`vec_id` on
+    * the IVF, PQ and graph stores, `doc_id` on the CRUD corpus), so the
+    * stores' delete semantics compare directly.
+    */
+  def deleted(id: Column): Column = id % 17 === 3
+
+  /** The deleted `vec_id`s of `d`'s embeddings: [[deleted]] as a frame. */
+  def deletedVecIds(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).filter(deleted(col("vec_id"))).select(col("vec_id"))
 
   /** Cheap content fingerprint of a data dir: a fold over every file's
     * path, length, and mtime (recursive — the table dirs are shallow and

@@ -173,8 +173,8 @@ object Crud {
     * corpus snapshots (the batch analogue of the reference's mutating
     * CRUD loop: what did this refresh ADD / REMOVE / CHANGE?). Snapshots
     * are derived deterministically from the documents table: the old
-    * snapshot is missing `doc_id % 11 = 0`, the new one drops
-    * `doc_id % 17 = 3` and rewrites the text of `doc_id % 13 = 0`.
+    * snapshot is missing `doc_id % 11 = 0`, the new one drops the delete
+    * set ([[graft.Tables.deleted]]) and rewrites the text of `doc_id % 13 = 0`.
     *
     * Scale shape: each side reduces to (key, 8-byte content hash) BEFORE
     * the full-outer join, so the exchange moves 16 bytes/row instead of
@@ -187,7 +187,7 @@ object Crud {
     val docs = Tables.documents(spark, dir)
     val old = docs.filter(col("doc_id") % 11 =!= 0)
       .select(col("doc_id"), xxhash64(col("text")).as("h_old"))
-    val neu = docs.filter(col("doc_id") % 17 =!= 3)
+    val neu = docs.filter(!Tables.deleted(col("doc_id")))
       .select(col("doc_id"), xxhash64(
         when(col("doc_id") % 13 === 0, concat(col("text"), lit(" v2")))
           .otherwise(col("text"))).as("h_new"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.VectorFunctions._
 
@@ -59,10 +58,6 @@ object Quantize {
     val scored = base.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("qsim", codeDot(col("qcode"), col("code")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("qsim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), col("qsim"))
-      .orderBy(col("qid"), col("rank"))
+    VectorSearch.rankTopK(scored, k, "qsim", Seq(col("qid"), col("vec_id"), col("rank"), col("qsim")))
   }
 }

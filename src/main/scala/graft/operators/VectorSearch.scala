@@ -25,8 +25,9 @@ import graft.functions.VectorFunctions._
   *     nearest cells — ~nprobe/nlist of the data scanned, the same pruning
   *     FAISS gets, but expressed as partition-prunable joins.
   *
-  * Per-query top-k uses row_number over (score desc, vec_id) — Spark ≥3.5
-  * plans rank-limit windows with WindowGroupLimit (partial top-k before the
+  * Every strategy ranks by the one rule in [[topKPerKey]] / [[rankTopK]]:
+  * per query, score desc, ties to the lower id. Spark ≥3.5 plans the
+  * rank-limit window as WindowGroupLimit (partial top-k before the
   * shuffle), which is exactly the partial/final top-k merge Milvus does
   * server-side (`Milvus/stream1.py:161-162`).
   */
@@ -68,14 +69,32 @@ object VectorSearch {
     rankTopK(scored, k)
   }
 
-  /** Shared tail: per-query rank window + output contract. */
-  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
-  }
+  /** The engine's one ranking rule, `index.search`'s top-k by inner
+    * product (`pipeline.py:237-240`): per `key`, `score` desc, ties to the
+    * lower `id`. Keeps each key's first `k` rows, numbered 1..k in `rank`.
+    * Every per-key top-k in the engine is this window: result lists, the
+    * graph's neighbour cap and beam frontier, candidate pools.
+    */
+  private[graft] def topKPerKey(df: DataFrame, key: String, score: String, id: String,
+                                k: Int, rank: String = "rank"): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col(key)).orderBy(col(score).desc, col(id))))
+      .filter(col(rank) <= k)
+
+  /** The result contract over [[topKPerKey]]: the kept columns `cols`,
+    * ordered by (key, rank).
+    */
+  private[graft] def rankTopK(scored: DataFrame, k: Int, score: String, cols: Seq[Column],
+                              key: String = "qid", id: String = "vec_id"): DataFrame =
+    topKPerKey(scored, key, score, id, k).select(cols: _*).orderBy(col(key), col("rank"))
+
+  /** The `sim_micro` result contract: per `qid`, `sim` desc, then `vec_id`
+    * asc; emits `(qid, vec_id, rank, sim_micro)` with
+    * `sim_micro = floor(sim·10⁶)`, ordered by (qid, rank).
+    */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    rankTopK(scored, k, "sim",
+      Seq(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro")))
 
   /** Exact top-k cosine (embeddings are L2-normalized ⇒ dot == cosine,
     * `pipeline.py:237-240`). Excludes self-matches.
@@ -235,12 +254,8 @@ object VectorSearch {
       .join(fetch.select(col("vec_id"), col("embedding")), "vec_id")
       .join(broadcast(q.select(col("qid"), col("qvec"))), "qid")
       .withColumn("sim", dot(col("qvec"), col("embedding")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), col("hamming"),
-        micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    rankTopK(rescored, k, "sim", Seq(col("qid"), col("vec_id"), col("rank"), col("hamming"),
+      micro(col("sim")).as("sim_micro")))
   }
 
   /** One MMR pick: qid, chosen vec_id, selection rank, MMR score micros. */
@@ -325,12 +340,8 @@ object VectorSearch {
       .crossJoin(broadcast(q))
       .filter(col("label") =!= col("qlabel"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("label").cast("long").as("neg_label"),
-        col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    rankTopK(scored, k, "sim", Seq(col("qid"), col("vec_id"),
+      col("label").cast("long").as("neg_label"), col("rank"), micro(col("sim")).as("sim_micro")))
   }
 
   /** Scalar-filtered kNN — the Milvus hybrid surface: the reference applies
@@ -659,6 +670,13 @@ object VectorSearch {
     val scored = tok.crossJoin(broadcast(qtok))
       .filter(col("ddoc") =!= col("qdoc"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
+    maxSimTopK(scored, k, tokensPerDoc)
+  }
+
+  /** MaxSim's shared reduce: per (qdoc, ddoc), the conditional max per
+    * query-token slot, summed left to right, then the per-qdoc top-k.
+    */
+  private def maxSimTopK(scored: DataFrame, k: Int, tokensPerDoc: Int): DataFrame = {
     val slotMaxes = (0 until tokensPerDoc).map(i =>
       max(when(col("qslot") === i, col("sim"))).as(s"m$i"))
     val agg = scored.groupBy(col("qdoc"), col("ddoc"))
@@ -666,12 +684,9 @@ object VectorSearch {
     val score = (0 until tokensPerDoc)
       .map(i => coalesce(col(s"m$i"), lit(0.0)))
       .reduceLeft(_ + _)
-    val w = Window.partitionBy(col("qdoc")).orderBy(col("score").desc, col("ddoc"))
-    agg.withColumn("score", score)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qdoc"), col("ddoc"), col("rank"), micro(col("score")).as("score_micro"))
-      .orderBy(col("qdoc"), col("rank"))
+    rankTopK(agg.withColumn("score", score), k, "score",
+      Seq(col("qdoc"), col("ddoc"), col("rank"), micro(col("score")).as("score_micro")),
+      key = "qdoc", id = "ddoc")
   }
 
   /** The 100 TB path for [[maxSim]]: token-level sign-LSH pruning under
@@ -702,19 +717,7 @@ object VectorSearch {
     val scored = tok.join(broadcast(qtok), "bucket")
       .filter(col("ddoc") =!= col("qdoc"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
-    val slotMaxes = (0 until tokensPerDoc).map(i =>
-      max(when(col("qslot") === i, col("sim"))).as(s"m$i"))
-    val agg = scored.groupBy(col("qdoc"), col("ddoc"))
-      .agg(slotMaxes.head, slotMaxes.tail: _*)
-    val score = (0 until tokensPerDoc)
-      .map(i => coalesce(col(s"m$i"), lit(0.0)))
-      .reduceLeft(_ + _)
-    val w = Window.partitionBy(col("qdoc")).orderBy(col("score").desc, col("ddoc"))
-    agg.withColumn("score", score)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qdoc"), col("ddoc"), col("rank"), micro(col("score")).as("score_micro"))
-      .orderBy(col("qdoc"), col("rank"))
+    maxSimTopK(scored, k, tokensPerDoc)
   }
 
   /** Matryoshka (MRL) two-stage search: coarse-rank on a PREFIX of the
@@ -745,9 +748,7 @@ object VectorSearch {
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("coarse", dot(col("qpre"), col("pre")))
-    val wc = Window.partitionBy(col("qid")).orderBy(col("coarse").desc, col("vec_id"))
-    val pool = coarse.withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= candidates)
+    val pool = topKPerKey(coarse, "qid", "coarse", "vec_id", candidates, rank = "crank")
     val reranked = pool.withColumn("sim", dot(col("qvec"), col("embedding")))
     rankTopK(reranked, k)
   }

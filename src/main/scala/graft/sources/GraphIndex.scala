@@ -197,11 +197,9 @@ object GraphIndex {
       .select(col("src"), col("dst"), col("sim"))
 
   /** Keep each node's k best out-neighbors, ties by dst id. */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-    scored.withColumn("nr", row_number().over(w)).filter(col("nr") <= k)
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    VectorSearch.topKPerKey(scored, "src", "sim", "dst", k, rank = "nr")
       .select(col("src"), col("dst"), col("sim"))
-  }
 
   /** Canonical on-disk location for a data dir — pure function of the dir,
     * shared with the DuckDB oracle (the IndexStore.defaultPath contract).
@@ -649,13 +647,12 @@ object GraphIndex {
     val eDF = entries.select(col("vec_id"), col("embedding")).localCheckpoint(eager = false)
     val eCount = eDF.count()
 
-    val wf = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
     // One beam-expansion hop over an arbitrary edge frame — shared by the
     // level-1 descent and the level-0 walk (identical frontier/inline/join
     // mechanics at both levels).
     def hop(edgeFrame: DataFrame, visited0: DataFrame): DataFrame = {
-      val frontierDF = visited0.withColumn("fr", row_number().over(wf))
-        .filter(col("fr") <= beam).select(col("qid"), col("vec_id"))
+      val frontierDF = VectorSearch.topKPerKey(visited0, "qid", "sim", "vec_id", beam, rank = "fr")
+        .select(col("qid"), col("vec_id"))
       val joined =
         if (inlineFrontier) {
           val frontier = frontierDF.as[(Long, Long)].collect().toSeq
@@ -740,10 +737,7 @@ object GraphIndex {
           Seq("vec_id"), "left_anti")
       case None => visited
     }
-    live.filter(col("vec_id") =!= col("qid"))
-      .withColumn("rank", row_number().over(wf)).filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
-      .orderBy(col("qid"), col("rank"))
+    VectorSearch.rankTopK(live.filter(col("vec_id") =!= col("qid")), k)
   }
 
   /** The named `knn_graph` query: ensure the persisted graph exists for
@@ -802,8 +796,8 @@ object GraphIndex {
     * completing the lifecycle symmetry with [[IndexStore.searchTombstoned]]
     * (the reference deletes by PK from its HNSW collection and subsequent
     * searches exclude the victims, `Milvus/stream1.py:313-315` → search
-    * `:161-162`). Tombstones are the same deterministic vec_id % 17 = 3
-    * set as `knn_tombstone`; the beam walk still TRAVERSES dead nodes
+    * `:161-162`). Tombstones are the delete set [[Tables.deleted]], as in
+    * `knn_tombstone`; the beam walk still TRAVERSES dead nodes
     * (HNSW semantics — connectivity through a deleted hub survives), only
     * the final top-k excludes them, below the rank window so ranks stay
     * dense over live rows. Oracle: the unrolled-walk replay over the
@@ -812,10 +806,8 @@ object GraphIndex {
   def searchTombstonedQuery(spark: SparkSession, dir: String): DataFrame = {
     val path = defaultPath(dir)
     ensure(spark, dir, path)
-    val tombstones = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
     search(spark, dir, path, VectorSearch.querySet(spark, dir, 5),
-      tombstones = Some(tombstones), maxFlatEntries = FlatPinned)
+      tombstones = Some(Tables.deletedVecIds(spark, dir)), maxFlatEntries = FlatPinned)
   }
 
   /** Recall-vs-beam curve — the graph index's ef dial measured in-engine,
@@ -965,16 +957,15 @@ object GraphIndex {
     ensure(spark, dir, path)
     val cpt = path + "_cpt"
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val tombstones = emb.filter(col("vec_id") % 17 === 3).select(col("vec_id"))
     // Build-once / search-many (the knn_graph convention; compaction is
     // deterministic given the source store + delete set): `_built_from`
     // records WHICH canonical build this compaction folded — a rebuilt
     // canonical store invalidates it, exactly PqStore's `_ivf_build_id`
     // cascade. Re-executions pay only the staleness check + the walk.
     Artifact.ensure(cpt, Artifact.BuildId.key(path), Seq("edges")) {
-      compactTombstones(spark, path, cpt, tombstones, emb)
+      compactTombstones(spark, path, cpt, Tables.deletedVecIds(spark, dir), emb)
     }
-    val liveVecs = emb.filter(col("vec_id") % 17 =!= 3)
+    val liveVecs = emb.filter(!Tables.deleted(col("vec_id")))
     val nNodes = graft.Tables.storeParquet(spark, s"$cpt/edges").select(col("src")).distinct().count()
     searchFrom(spark, cpt,
       liveVecs.filter(col("vec_id") % entryStride === 0),
@@ -1041,8 +1032,8 @@ object GraphIndex {
     // ([[sqlChainWalk]]): the previous one-text CTE form re-executed every
     // upstream hop — Catalyst inlines deterministic CTEs, each v_h is
     // referenced twice (frontier window + union fold), so the physical
-    // plan duplicated v0 2^hops = 16× (732 nodes, 78 Exchanges measured;
-    // plans/r18/lake_sql_graph_before.txt) and the corpus-proportional
+    // plan duplicated v0 2^hops = 16× (732 nodes, 78 Exchanges measured)
+    // and the corpus-proportional
     // entry cross was paid 16 times at ANY scale. Hop mechanics are
     // unchanged, so the result stays row-identical to `knn_graph` and the
     // shared DuckDB replay.

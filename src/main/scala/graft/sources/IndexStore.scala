@@ -321,13 +321,12 @@ object IndexStore {
     * static partition pruning — k then fills from live rows only (the
     * anti-join sits below the rank window, never post-filtering a
     * short top-k). Compaction/rebuild becomes an offline maintenance
-    * choice instead of a write-path blocker. Tombstones here are the
-    * deterministic set vec_id % 17 = 3.
+    * choice instead of a write-path blocker. Tombstones are the delete
+    * set [[graft.Tables.deleted]].
     */
   def searchTombstoned(spark: SparkSession, dir: String,
                        k: Int = 5, nprobe: Int = 10): DataFrame = {
-    val tombstones = graft.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
+    val tombstones = graft.Tables.deletedVecIds(spark, dir)
     // Counted, not assumed (graft.Tables.boundedBroadcast): past the
     // inline bound the anti-join degrades to a shuffle instead of forcing
     // a driver-side multi-GB hash build on a bulk delete.

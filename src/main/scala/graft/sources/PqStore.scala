@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.VectorSearch
@@ -303,11 +302,7 @@ object PqStore {
       .orderBy(col("vec_id")).limit(32)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       .localCheckpoint()
-    val wx = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    val exact = vectors.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", dot(col("qvec"), col("embedding")))
-      .withColumn("rk", row_number().over(wx)).filter(col("rk") <= 5)
+    val exact = VectorSearch.knnDeclarative(qs, vectors, 5)
       .select(col("qid"), col("vec_id")).localCheckpoint()
     val nExact = exact.count()
     if (nExact == 0) return candidates.head
@@ -639,14 +634,28 @@ object PqStore {
   def ensure(spark: SparkSession, dir: String, path: String): Unit =
     graft.Profiling.timed("PqStore.ensure")(build(spark, dir, path, force = false))
 
-  /** The ADC scoring stage shared by [[search]] and [[searchTombstoned]]:
-    * every stored code row reconstructs its similarity to every query as a
-    * sum of m LUT hits — returns `(qid, vec_id, adc_micro)` BEFORE any
-    * rank window, so callers can compose row-level predicates (tombstones)
-    * under the top-k.
+  /** ADC top-k search against the persisted codes — the one PQ search
+    * path. `queries` carries (qid, qvec); every stored code row
+    * reconstructs its similarity to every query as a sum of m LUT hits,
+    * and scores are integer ADC similarities (sum of m micro'd subspace
+    * dots plus the coarse term — higher is better, matching the
+    * inner-product metric of the exact search).
+    *
+    *  - `deleted`: a delete set of `vec_id`s, anti-joined BELOW the rank
+    *    window so k fills from live rows (the `rowPred` role of
+    *    [[IndexStore.searchPruned]]). The broadcast is counted, not
+    *    assumed ([[Tables.boundedBroadcast]]): past the inline bound the
+    *    anti-join degrades to a shuffle instead of a driver-side
+    *    multi-GB hash build on a bulk delete.
+    *  - `probe`: IVF centroids and nprobe. Only each query's nprobe
+    *    nearest cells score: the probed cells inline as a literal IN-list
+    *    (static `PartitionFilters` on the cell-clustered codes, so the
+    *    scan reads nprobe/nlist of the code files) and the (qid, cell_id)
+    *    probe joins below the LUT.
     */
-  private def adcScores(spark: SparkSession, path: String,
-                        queries: DataFrame, dim: Int): DataFrame = {
+  def search(spark: SparkSession, path: String, queries: DataFrame,
+             k: Int = 5, dim: Int = 64, deleted: Option[DataFrame] = None,
+             probe: Option[(IvfProbe.Centroids, Int)] = None): DataFrame = {
     val d = dsub(dim)
     val books = Tables.storeParquet(spark, s"$path/codebooks")
     val coarse = Tables.storeParquet(spark, s"$path/coarse")
@@ -667,58 +676,43 @@ object PqStore {
     val cellLut = queries.crossJoin(broadcast(coarse))
       .select(col("qid"), col("cell_id"),
         micro(dot(col("qvec"), col("centroid").cast("array<float>"))).as("c_micro"))
-    codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("qid"))
+    val hits = probe match {
+      case None => codes.join(broadcast(lut), Seq("sub", "code"))
+      case Some((cents, nprobe)) =>
+        val cells = IvfProbe.probedCells(queries, cents, nprobe)
+        codes.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
+          .join(broadcast(IvfProbe.probed(queries, cents, nprobe)
+            .select(col("qid"), col("cell_id"))), "cell_id")
+          .join(broadcast(lut), Seq("qid", "sub", "code"))
+    }
+    val scored = hits.filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"), col("cell_id"))
       .agg(sum(col("p_micro")).as("r_micro"))
       .join(broadcast(cellLut), Seq("qid", "cell_id"))
       .select(col("qid"), col("vec_id"),
         (col("r_micro") + col("c_micro")).as("adc_micro"))
-  }
-
-  /** ADC top-k search against the persisted codes. `queries` carries
-    * (qid, qvec); scores are integer ADC similarities (sum of m micro'd
-    * subspace dots — higher is better, matching the inner-product metric
-    * of the exact search).
-    */
-  def search(spark: SparkSession, path: String, queries: DataFrame,
-             k: Int = 5, dim: Int = 64): DataFrame = {
-    val scored = adcScores(spark, path, queries, dim)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc_micro").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), col("adc_micro"))
-      .orderBy(col("qid"), col("rank"))
+    val live = deleted.fold(scored)(t =>
+      scored.join(Tables.boundedBroadcast(t), Seq("vec_id"), "left_anti"))
+    VectorSearch.rankTopK(live, k, "adc_micro",
+      Seq(col("qid"), col("vec_id"), col("rank"), col("adc_micro")))
   }
 
   /** Tombstone-aware ADC search — DELETE on the PQ store without touching
     * the codes, completing the delete leg of the lifecycle matrix (IVF:
-    * [[IndexStore.searchTombstoned]]; graph: `GraphIndex.searchTombstoned`;
-    * this store had absorb but no delete). FAISS `IndexIVFPQ.remove_ids`
+    * [[IndexStore.searchTombstoned]]; graph:
+    * [[GraphIndex.searchTombstonedQuery]]). FAISS `IndexIVFPQ.remove_ids`
     * (`FAISS/PlainDemo/pipeline.py:110-112` shows the flat sibling) eagerly
-    * rewrites inverted lists; the lake store instead accumulates deletes in
-    * a (tiny) tombstone set that broadcast anti-joins the scored candidates
-    * BELOW the rank window — k fills from live rows only, never
-    * post-filtering a short top-k. Tombstones here are the deterministic
-    * set vec_id % 17 = 3, shared with the IVF and graph delete queries so
-    * the three stores' delete semantics are directly comparable.
+    * rewrites inverted lists; the lake store instead [[search]]es with the
+    * delete set [[Tables.deleted]] as its (tiny) tombstone set, shared with
+    * the IVF and graph delete queries so the three stores' delete
+    * semantics are directly comparable.
     */
   def searchTombstoned(spark: SparkSession, dir: String,
                        k: Int = 5, dim: Int = 64): DataFrame = {
     val path = defaultPath(dir)
     ensure(spark, dir, path)
-    val tombstones = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
-    // Counted, not assumed (graft.Tables.boundedBroadcast): past the
-    // inline bound the anti-join degrades to a shuffle instead of forcing
-    // a driver-side multi-GB hash build on a bulk delete.
-    val scored = adcScores(spark, path, VectorSearch.querySet(spark, dir, 5), dim)
-      .join(graft.Tables.boundedBroadcast(tombstones), Seq("vec_id"), "left_anti")
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc_micro").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), col("adc_micro"))
-      .orderBy(col("qid"), col("rank"))
+    search(spark, path, VectorSearch.querySet(spark, dir, 5), k, dim,
+      deleted = Some(Tables.deletedVecIds(spark, dir)))
   }
 
   /** The named query: build-once / search-many ADC search (first execution
@@ -772,10 +766,8 @@ object PqStore {
     val path = defaultPath(dir)
     ensure(spark, dir, path)
     val cpt = path + "_cpt"
-    val tombstones = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 17 === 3).select(col("vec_id"))
     Artifact.ensure(cpt, Artifact.IvfBuildId.key(path), Seq("codes", "coarse", "rotation")) {
-      compactTombstones(spark, path, cpt, tombstones)
+      compactTombstones(spark, path, cpt, Tables.deletedVecIds(spark, dir))
     }
     search(spark, cpt, VectorSearch.querySet(spark, dir, 5), k)
   }
@@ -1063,56 +1055,18 @@ object PqStore {
   /** IVF-PQ composed search — the lake re-expression of FAISS `IndexIVFPQ`
     * (coarse quantizer + PQ-compressed scan; the reference trains the flat
     * IVF sibling, `FAISS/PlainDemo/pipeline.py:315-321`): the IVF store's
-    * memoized centroids probe `nprobe` cells map-side ([[IvfProbe]]), the candidate ids come
-    * from a statically partition-pruned scan of the clustered rows that
-    * reads ONLY `(vec_id, cell_id)` (never the float vectors), and the PQ
-    * codes ADC-score just those candidates. At 100 TB the search cost is
+    * memoized centroids probe `nprobe` cells map-side ([[IvfProbe]]), and
+    * [[search]] ADC-scores only the codes of each query's probed cells,
+    * read by a statically partition-pruned scan of the cell-clustered
+    * codes (never the float vectors). At 100 TB the search cost is
     * (nprobe/nlist) of a 4-byte-code table — and since both index stores
     * are plain parquet, the whole plan replays in the DuckDB oracle.
     */
   def searchIvfPq(spark: SparkSession, dir: String, k: Int = 5,
                   nprobe: Int = 10, dim: Int = 64): DataFrame = {
-    val ivfPath = IndexStore.defaultPath(dir)
-    IndexStore.ensure(spark, dir, ivfPath)
     val pqPath = defaultPath(dir)
-    ensure(spark, dir, pqPath)
-    val d = dsub(dim)
-    val queries = VectorSearch.querySet(spark, dir, 5)
-    val cents = IvfProbe.centroids(spark, ivfPath)
-    val probed = IvfProbe.probed(queries, cents, nprobe).select(col("qid"), col("cell_id"))
-    // Tiny driver-side cell list → literal IN-list → static PartitionFilters
-    // pruning on the CODES' clustered layout (same shape as
-    // IndexStore.searchPruned): candidates and their 1-byte codes come from
-    // one scan that reads nprobe/nlist of the code files — the float rows
-    // table is never touched.
-    val cells = IvfProbe.probedCells(queries, cents, nprobe)
-    val books = Tables.storeParquet(spark, s"$pqPath/codebooks")
-    val coarse = Tables.storeParquet(spark, s"$pqPath/coarse")
-    val codes = Tables.storeParquet(spark, s"$pqPath/codes")
-    // residual LUT over the ROTATED query (the adcScores convention)
-    val rq = rotatedQueries(queries, rotationMatrix(spark, pqPath))
-    val lut = rq.crossJoin(broadcast(books))
-      .select(col("qid"), col("sub"), col("code"),
-        micro(dot(slice(col("rqvec"), col("sub") * d + 1, lit(d)),
-          col("centroid").cast("array<float>"))).as("p_micro"))
-    // nlist-entry coarse LUT: the exact query·cell-centroid term the
-    // residual codes were taken against (same as adcScores)
-    val cellLut = queries.crossJoin(broadcast(coarse))
-      .select(col("qid"), col("cell_id"),
-        micro(dot(col("qvec"), col("centroid").cast("array<float>"))).as("c_micro"))
-    val scored = codes.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
-      .join(broadcast(probed), "cell_id")
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(lut), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"), col("cell_id"))
-      .agg(sum(col("p_micro")).as("r_micro"))
-      .join(broadcast(cellLut), Seq("qid", "cell_id"))
-      .select(col("qid"), col("vec_id"),
-        (col("r_micro") + col("c_micro")).as("adc_micro"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc_micro").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), col("adc_micro"))
-      .orderBy(col("qid"), col("rank"))
+    ensure(spark, dir, pqPath) // ensures the IVF store first
+    search(spark, pqPath, VectorSearch.querySet(spark, dir, 5), k, dim,
+      probe = Some((IvfProbe.centroids(spark, IndexStore.defaultPath(dir)), nprobe)))
   }
 }

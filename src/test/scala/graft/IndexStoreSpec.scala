@@ -10,11 +10,18 @@ import graft.sources.IndexStore
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  private var tmpPath: Option[String] = None
+
   private lazy val path = {
     val p = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    tmpPath = Some(p)
     IndexStore.write(spark, sfDir, p)
     p
   }
+
+  override def afterAll(): Unit =
+    try tmpPath.foreach(p => graft.streaming.StreamOps.rmTree(new java.io.File(p)))
+    finally super.afterAll()
 
   test("clustered layout: one directory per cell, all rows present") {
     val dirs = new java.io.File(s"$path/rows").listFiles()
@@ -111,18 +118,33 @@ class IndexStoreSpec extends SparkSpec {
     jobs.get
   }
 
-  test("job budget: one searchPruned call over a local query batch runs at most 5 Spark jobs") {
-    // the serving shape: a driver-side batch of embedded queries against a
-    // store outside java.io.tmpdir (the table memo re-lists temp paths)
+  /** The serving shape: a driver-side batch of 5 embedded queries, and
+    * the default store (outside java.io.tmpdir: the table memo re-lists
+    * temp paths).
+    */
+  private def servingBatch(): (String, org.apache.spark.sql.DataFrame) = {
     val store = IndexStore.defaultPath(sfDir)
     IndexStore.ensure(spark, sfDir, store)
-    val q = VectorSearch.querySet(spark, sfDir, 5).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("qid", "qvec")
+    (store, VectorSearch.querySet(spark, sfDir, 5).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("qid", "qvec"))
+  }
+
+  test("job budget: one searchPruned call over a local query batch runs at most 5 Spark jobs") {
+    val (store, q) = servingBatch()
     IndexStore.searchPruned(spark, store, q).collect() // warm: centroid memo, file listing
     val jobs = jobsOf(IndexStore.searchPruned(spark, store, q).collect())
     // 11 with the cross-join + window probe run twice; the map-side probe
     // folds into planning, leaving the scoring plan's jobs
     assert(jobs <= 5, s"searchPruned ran $jobs jobs")
+  }
+
+  test("job budget: one knnDeclarative call over a local query batch runs at most 5 Spark jobs") {
+    // the exact-search serving path: the batch against every stored row
+    val (store, q) = servingBatch()
+    val base = IndexStore.read(spark, store)._1.select($"vec_id", $"embedding")
+    VectorSearch.knnDeclarative(q, base, 5).collect() // warm: file listing
+    val jobs = jobsOf(VectorSearch.knnDeclarative(q, base, 5).collect())
+    assert(jobs <= 5, s"knnDeclarative ran $jobs jobs")
   }
 
   test("tombstoned search: no deleted id surfaces, k fills from live rows, pruning kept") {

@@ -13,8 +13,11 @@ import graft.streaming.StreamOps
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
+  private var csvDir: Option[String] = None
+
   private lazy val csvPath = {
     val dir = Files.createTempDirectory("graft-csv").toString
+    csvDir = Some(dir)
     val rows = Seq(
       "frame_number,frame_time,ip_src,ip_dst,tcp_srcport,tcp_dstport,protocol,frame_len",
       "1,2021-01-01 00:00:00,192.168.1.5,10.0.0.7,443,51000,TCP,1500",
@@ -24,6 +27,10 @@ class SourcesSpec extends SparkSpec {
       rows.mkString("\n"))
     s"$dir/flow.csv"
   }
+
+  override def afterAll(): Unit =
+    try csvDir.foreach(d => StreamOps.rmTree(new java.io.File(d)))
+    finally super.afterAll()
 
   test("S1: forced-string scan keeps every column a string, bad rows intact") {
     val df = FlowParity.readFlowCsv(spark, csvPath)
@@ -41,11 +48,13 @@ class SourcesSpec extends SparkSpec {
   test("S2: inferred-schema read types clean columns and degrades mixed ones to string") {
     // clean file: every column infers to a non-string type
     val cleanDir = Files.createTempDirectory("graft-csv-clean").toString
-    Files.writeString(java.nio.file.Paths.get(s"$cleanDir/clean.csv"),
-      Seq("frame_number,frame_len", "1,1500", "2,88").mkString("\n"))
-    val clean = FlowParity.readFlowCsvInferred(spark, s"$cleanDir/clean.csv")
-    assert(clean.schema.fields.forall(_.dataType != StringType),
-      clean.schema.treeString)
+    try {
+      Files.writeString(java.nio.file.Paths.get(s"$cleanDir/clean.csv"),
+        Seq("frame_number,frame_len", "1,1500", "2,88").mkString("\n"))
+      val clean = FlowParity.readFlowCsvInferred(spark, s"$cleanDir/clean.csv")
+      assert(clean.schema.fields.forall(_.dataType != StringType),
+        clean.schema.treeString)
+    } finally StreamOps.rmTree(new java.io.File(cleanDir))
     // mixed file: the 'x' frame_number degrades THAT column to string —
     // the whole-table type flip the explicit-schema default avoids
     val mixed = FlowParity.readFlowCsvInferred(spark, csvPath)

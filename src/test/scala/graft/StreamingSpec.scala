@@ -34,28 +34,32 @@ class StreamingSpec extends SparkSpec {
   test("mergeKeepLatest keeps the newest version per key and leaves no swap debris") {
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft-merge").toString
-    val store = s"$tmp/store"
-    val v1 = spark.range(0, 10).select($"id".as("event_id"), lit("old").as("payload"))
-    val v2 = spark.range(5, 15).select($"id".as("event_id"), lit("new").as("payload"))
-    StreamOps.mergeKeepLatest(spark, v1, store, version = 1L)
-    StreamOps.mergeKeepLatest(spark, v2, store, version = 2L)
-    val got = spark.read.parquet(store)
-    assert(got.count() == 15, "union of keys")
-    assert(got.filter($"event_id" >= 5 && $"event_id" < 10 && $"payload" =!= "new").count() == 0,
-      "overlapping keys take the later version")
-    assert(!new java.io.File(store + ".tmp").exists(), "tmp snapshot removed")
-    assert(!new java.io.File(store + ".old").exists(), "aside snapshot removed")
+    try {
+      val store = s"$tmp/store"
+      val v1 = spark.range(0, 10).select($"id".as("event_id"), lit("old").as("payload"))
+      val v2 = spark.range(5, 15).select($"id".as("event_id"), lit("new").as("payload"))
+      StreamOps.mergeKeepLatest(spark, v1, store, version = 1L)
+      StreamOps.mergeKeepLatest(spark, v2, store, version = 2L)
+      val got = spark.read.parquet(store)
+      assert(got.count() == 15, "union of keys")
+      assert(got.filter($"event_id" >= 5 && $"event_id" < 10 && $"payload" =!= "new").count() == 0,
+        "overlapping keys take the later version")
+      assert(!new java.io.File(store + ".tmp").exists(), "tmp snapshot removed")
+      assert(!new java.io.File(store + ".old").exists(), "aside snapshot removed")
+    } finally StreamOps.rmTree(new java.io.File(tmp))
   }
 
   test("foreachBatch upsert store converges to the keyed snapshot") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val store = s"$tmp/store"
-    val ckpt = s"$tmp/ckpt"
-    StreamOps.foreachBatchUpsert(spark, sfDir, store, ckpt)
-    val got = spark.read.parquet(store)
-    val want = Tables.events(spark, sfDir)
-    assert(got.count() == want.count(), "all events ingested, one per key")
-    assert(got.select($"event_id").distinct().count() == want.count())
+    try {
+      val store = s"$tmp/store"
+      val ckpt = s"$tmp/ckpt"
+      StreamOps.foreachBatchUpsert(spark, sfDir, store, ckpt)
+      val got = spark.read.parquet(store)
+      val want = Tables.events(spark, sfDir)
+      assert(got.count() == want.count(), "all events ingested, one per key")
+      assert(got.select($"event_id").distinct().count() == want.count())
+    } finally StreamOps.rmTree(new java.io.File(tmp))
   }
 
   test("foreachBatch upsert resumes from the checkpoint: a restart processes only new files") {
@@ -71,27 +75,29 @@ class StreamingSpec extends SparkSpec {
       StreamOps.rmTree(new java.io.File(staging))
     }
     val tmp = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    val src = s"$tmp/src"; new java.io.File(src).mkdirs()
-    val store = s"$tmp/store"; val ckpt = s"$tmp/ckpt"
-    // Raw read keeps ts in the file's native physical type, so the
-    // re-written halves carry the same flavor the adaptive stream schema
-    // probe (readEventsStream) will see.
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    writeOne(raw.filter($"event_id" % 2 === 0), s"$src/events.parquet.a")
-    StreamOps.foreachBatchUpsert(spark, src, store, ckpt)
-    assert(spark.read.parquet(store).count() == raw.filter($"event_id" % 2 === 0).count())
-    // "restart": a second run over the SAME checkpoint after a new file lands
-    writeOne(raw.filter($"event_id" % 2 === 1), s"$src/events.parquet.b")
-    StreamOps.foreachBatchUpsert(spark, src, store, ckpt)
-    val after = spark.read.parquet(store).cache()
-    assert(after.count() == raw.count(), "every event ingested exactly once across the restart")
-    assert(after.select($"event_id").distinct().count() == raw.count())
-    // The checkpoint, not the data, prevented reprocessing: file A's rows
-    // keep their run-1 merge version, file B's carry a later batch id.
-    assert(after.filter($"event_id" % 2 === 0 && $"v" > 0).count() == 0,
-      "file A was re-merged after the restart — offsets did not resume")
-    assert(after.filter($"event_id" % 2 === 1).agg(min($"v")).head.getLong(0) >= 1)
-    after.unpersist(blocking = false)
+    try {
+      val src = s"$tmp/src"; new java.io.File(src).mkdirs()
+      val store = s"$tmp/store"; val ckpt = s"$tmp/ckpt"
+      // Raw read keeps ts in the file's native physical type, so the
+      // re-written halves carry the same flavor the adaptive stream schema
+      // probe (readEventsStream) will see.
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      writeOne(raw.filter($"event_id" % 2 === 0), s"$src/events.parquet.a")
+      StreamOps.foreachBatchUpsert(spark, src, store, ckpt)
+      assert(spark.read.parquet(store).count() == raw.filter($"event_id" % 2 === 0).count())
+      // "restart": a second run over the SAME checkpoint after a new file lands
+      writeOne(raw.filter($"event_id" % 2 === 1), s"$src/events.parquet.b")
+      StreamOps.foreachBatchUpsert(spark, src, store, ckpt)
+      val after = spark.read.parquet(store).cache()
+      assert(after.count() == raw.count(), "every event ingested exactly once across the restart")
+      assert(after.select($"event_id").distinct().count() == raw.count())
+      // The checkpoint, not the data, prevented reprocessing: file A's rows
+      // keep their run-1 merge version, file B's carry a later batch id.
+      assert(after.filter($"event_id" % 2 === 0 && $"v" > 0).count() == 0,
+        "file A was re-merged after the restart — offsets did not resume")
+      assert(after.filter($"event_id" % 2 === 1).agg(min($"v")).head.getLong(0) >= 1)
+      after.unpersist(blocking = false)
+    } finally StreamOps.rmTree(new java.io.File(tmp))
   }
 
   test("stateful sessionization agrees with the batch window sessionize") {
@@ -404,19 +410,21 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming vector ingest fills the clustered store end-to-end") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest").toString
-    val centroids = graft.operators.VectorSearch.kmeansFit(
-      Tables.embeddings(spark, sfDir), nlist = 4, iters = 2)
-    StreamOps.streamingVectorIngest(spark, sfDir, centroids,
-      s"$tmp/store", s"$tmp/ckpt")
-    val store = spark.read.parquet(s"$tmp/store")
-    assert(store.count() == Tables.documents(spark, sfDir).count())
-    assert(store.select($"cell_id").distinct().count() > 1, "multiple cells hit")
-    // every ingested vector is unit-norm (embed → normalize happened)
-    val norms = store.select(
-      graft.functions.VectorFunctions.micro(
-        graft.functions.VectorFunctions.norm2($"embedding")).as("n"))
-      .distinct().as[Long].collect()
-    assert(norms.forall(n => n >= 999990L && n <= 1000000L))
+    try {
+      val centroids = graft.operators.VectorSearch.kmeansFit(
+        Tables.embeddings(spark, sfDir), nlist = 4, iters = 2)
+      StreamOps.streamingVectorIngest(spark, sfDir, centroids,
+        s"$tmp/store", s"$tmp/ckpt")
+      val store = spark.read.parquet(s"$tmp/store")
+      assert(store.count() == Tables.documents(spark, sfDir).count())
+      assert(store.select($"cell_id").distinct().count() > 1, "multiple cells hit")
+      // every ingested vector is unit-norm (embed → normalize happened)
+      val norms = store.select(
+        graft.functions.VectorFunctions.micro(
+          graft.functions.VectorFunctions.norm2($"embedding")).as("n"))
+        .distinct().as[Long].collect()
+      assert(norms.forall(n => n >= 999990L && n <= 1000000L))
+    } finally StreamOps.rmTree(new java.io.File(tmp))
   }
 
   test("stateful CDC apply agrees with the batch windowed cdcApply") {
