@@ -25,11 +25,13 @@ import graft.functions.VectorFunctions._
   *     nearest cells — ~nprobe/nlist of the data scanned, the same pruning
   *     FAISS gets, but expressed as partition-prunable joins.
   *
-  * Every strategy ranks by the one rule in [[topKPerKey]] / [[rankTopK]]:
-  * per query, score desc, ties to the lower id. Spark ≥3.5 plans the
-  * rank-limit window as WindowGroupLimit (partial top-k before the
-  * shuffle), which is exactly the partial/final top-k merge Milvus does
-  * server-side (`Milvus/stream1.py:161-162`).
+  * Every strategy ranks by the one order in [[rankOrder]]: per query,
+  * score desc, ties to the lower id. Result lists end in [[rankTopK]], the
+  * [[graft.plans.TopK]] node: a bounded top-k per partition, then, for a
+  * bounded query batch, one single-partition merge that emits the rows
+  * already in (qid, rank) order — the partial/final top-k merge Milvus
+  * does server-side (`Milvus/stream1.py:161-162`), with no window and no
+  * global sort. [[knnExact]], the entry point, keeps the window.
   */
 object VectorSearch {
 
@@ -58,49 +60,76 @@ object VectorSearch {
   }
 
   /** Declarative kNN join over an explicit query set: broadcast the query
-    * side, score every base row, rank-window top-k. The comparator form for
+    * side, score every base row, [[rankTopK]]. The comparator form for
     * every other strategy — correct at any nq, but every scored row
-    * (nq·|base|) flows through the window exchange.
+    * (nq·|base|) is materialized as a Spark row before the top-k.
     */
-  def knnDeclarative(q: DataFrame, base: DataFrame, k: Int): DataFrame = {
-    val scored = base.crossJoin(broadcast(q))
+  def knnDeclarative(q: DataFrame, base: DataFrame, k: Int): DataFrame =
+    rankTopK(crossScored(q, base), k)
+
+  /** Every (query, base row) pair but self-matches, with `sim`: the query
+    * side broadcast, the dot product map-side.
+    */
+  private def crossScored(q: DataFrame, base: DataFrame): DataFrame =
+    base.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
-    rankTopK(scored, k)
-  }
 
-  /** The engine's one ranking rule, `index.search`'s top-k by inner
-    * product (`pipeline.py:237-240`): per `key`, `score` desc, ties to the
-    * lower `id`. Keeps each key's first `k` rows, numbered 1..k in `rank`.
-    * Every per-key top-k in the engine is this window: result lists, the
-    * graph's neighbour cap and beam frontier, candidate pools.
+  /** The engine's one ranking order, `index.search`'s top-k by inner
+    * product (`pipeline.py:237-240`): `score` desc (nulls last), ties to
+    * the lower `id`. Both per-key top-k forms below are built from it.
+    */
+  private[graft] def rankOrder(score: String, id: String): Seq[Column] =
+    Seq(col(score).desc, col(id))
+
+  /** Each key's first `k` rows in [[rankOrder]], numbered 1..k in `rank`,
+    * as a window. The form of the candidate pools — the graph's neighbour
+    * cap is keyed over the whole corpus, where a window spills and
+    * [[rankTopK]]'s in-memory merge buffers would not; the beam frontier
+    * and the matryoshka pool feed a next stage, not a result list — and
+    * of [[knnExact]], which must plan without graft's extensions.
     */
   private[graft] def topKPerKey(df: DataFrame, key: String, score: String, id: String,
                                 k: Int, rank: String = "rank"): DataFrame =
     df.withColumn(rank, row_number().over(
-        Window.partitionBy(col(key)).orderBy(col(score).desc, col(id))))
+        Window.partitionBy(col(key)).orderBy(rankOrder(score, id): _*)))
       .filter(col(rank) <= k)
 
-  /** The result contract over [[topKPerKey]]: the kept columns `cols`,
-    * ordered by (key, rank).
+  /** The result contract: per `key`, the first `k` rows in [[rankOrder]],
+    * numbered 1..k in `rank`, the kept columns `cols`, ordered by (key,
+    * rank). One [[graft.plans.TopK]] node. With `single` (a bounded query
+    * batch as the keys) its output is already in that order on one
+    * partition, so the `orderBy` plans no exchange; an ingest-sized key
+    * side passes `single = false` and keeps the merge distributed.
     */
   private[graft] def rankTopK(scored: DataFrame, k: Int, score: String, cols: Seq[Column],
-                              key: String = "qid", id: String = "vec_id"): DataFrame =
-    topKPerKey(scored, key, score, id, k).select(cols: _*).orderBy(col(key), col("rank"))
+                              key: String = "qid", id: String = "vec_id",
+                              single: Boolean = true): DataFrame =
+    graft.plans.TopK(scored, key, rankOrder(score, id), k, single)
+      .select(cols: _*).orderBy(col(key), col("rank"))
+
+  /** The `sim_micro` result columns: `(qid, vec_id, rank, sim_micro)` with
+    * `sim_micro = floor(sim·10⁶)`.
+    */
+  private[graft] def simMicroCols: Seq[Column] =
+    Seq(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro"))
 
   /** The `sim_micro` result contract: per `qid`, `sim` desc, then `vec_id`
-    * asc; emits `(qid, vec_id, rank, sim_micro)` with
-    * `sim_micro = floor(sim·10⁶)`, ordered by (qid, rank).
+    * asc; emits [[simMicroCols]], ordered by (qid, rank).
     */
   private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
-    rankTopK(scored, k, "sim",
-      Seq(col("qid"), col("vec_id"), col("rank"), micro(col("sim")).as("sim_micro")))
+    rankTopK(scored, k, "sim", simMicroCols)
 
   /** Exact top-k cosine (embeddings are L2-normalized ⇒ dot == cosine,
-    * `pipeline.py:237-240`). Excludes self-matches.
+    * `pipeline.py:237-240`). Excludes self-matches. `SparkEntry.entry`
+    * runs this in a session built without graft's extensions, so it ranks
+    * with the [[topKPerKey]] window, which needs no planner strategy; the
+    * rows are [[knnDeclarative]]'s.
     */
   def knnExact(spark: SparkSession, dir: String, k: Int = 5, nq: Int = 5): DataFrame =
-    knnDeclarative(querySet(spark, dir, nq), Tables.embeddings(spark, dir), k)
+    topKPerKey(crossScored(querySet(spark, dir, nq), Tables.embeddings(spark, dir)),
+        "qid", "sim", "vec_id", k)
+      .select(simMicroCols: _*).orderBy(col("qid"), col("rank"))
 
   /** [[knnExact]]'s pure-SQL twin through the `injectFunction`-registered
     * kernels — the first surface a SQL user touches on a vector engine is
@@ -148,9 +177,9 @@ object VectorSearch {
   /** Exact top-k through the custom Catalyst operator
     * (graft.plans.KnnJoin → KnnJoinExec, registered via GraftExtensions):
     * scoring fused into the base scan with bounded per-partition heaps,
-    * then a tiny keyed merge — only heap winners shuffle, never scored
+    * then a hash-partitioned TopK merge — only heap winners shuffle, never scored
     * rows. Output contract and ordering identical to [[knnExact]]; the
-    * final rank window runs over nq·k rows.
+    * final [[rankTopK]] runs over nq·k rows.
     */
   def knnExactPhysical(spark: SparkSession, dir: String, k: Int = 5, nq: Int = 5): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
@@ -161,10 +190,11 @@ object VectorSearch {
 
   /** Batch-scale exact kNN (J1/O2 at the reference's query-batch sizes,
     * `pipeline.py:339-340`): nq in the thousands flips which side is
-    * "small". The declarative form pushes nq·|base| scored rows through the
-    * rank-window exchange; the KnnJoinExec heap path keeps per-partition
-    * top-k heaps and shuffles only nq·k winners — KnnJoinSpec asserts it
-    * returns identical rows AND beats the declarative form at nq=5000.
+    * "small". The declarative form materializes nq·|base| scored rows
+    * before its top-k; the KnnJoinExec heap path keeps per-partition
+    * top-k heaps in primitive slots and shuffles only nq·k winners —
+    * KnnJoinSpec asserts it returns identical rows AND beats the
+    * declarative form at nq=5000.
     */
   def knnBatch(spark: SparkSession, dir: String, k: Int = 5, nq: Int = 5000): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
@@ -327,9 +357,8 @@ object VectorSearch {
     * carrying a DIFFERENT label (near the anchor in embedding space, wrong
     * by supervision — exactly the negatives that make a triplet/InfoNCE
     * batch hard). Same scale shape as [[knnDeclarative]]: broadcast the
-    * anchor batch, score map-side, label-mismatch filter BEFORE the rank
-    * window (disqualified rows never reach the top-k exchange), per-anchor
-    * WindowGroupLimit top-k.
+    * anchor batch, score map-side, label-mismatch filter BEFORE the top-k
+    * (disqualified rows never reach it), per-anchor [[rankTopK]].
     */
   def hardNegatives(spark: SparkSession, dir: String, k: Int = 5, nq: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -650,7 +679,7 @@ object VectorSearch {
     * so the double arithmetic replays bit-identically in the oracle.
     * Partial aggregation runs map-side (the shuffle carries ≤
     * nqd·|docs| aggregated rows, never nqd·tokensPerDoc·|tokens| scored
-    * rows), and the per-query top-k plans as WindowGroupLimit.
+    * rows), and the per-query top-k is [[rankTopK]].
     *
     * At 100 TB the same two-level reduce composes under any candidate
     * pruner (per-token LSH/IVF probes feeding the conditional-max agg);
@@ -730,7 +759,8 @@ object VectorSearch {
     * [[knnBinary]]'s bit-depth cascade: that compresses precision, this
     * truncates dimensionality.
     *
-    * Both stages are rank windows (WindowGroupLimit partial top-k); the
+    * Stage 1 is a [[topKPerKey]] window (Spark plans its partial top-k as
+    * WindowGroupLimit), stage 2 a [[rankTopK]]; the
     * full embedding rides the candidate row out of stage 1, so stage 2 is
     * a projection over nq·candidates rows — no second scan, no refetch.
     * At 100 TB the coarse stage runs over a stored prefix column (¼ the

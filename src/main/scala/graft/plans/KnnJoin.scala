@@ -20,17 +20,19 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *      size k (so a partition contributes at most nq·k candidates, not
   *      its row count);
   *   3. the per-partition winners (≤ partitions·nq·k tiny rows) are merged
-  *      by a keyed aggregate into the global top-k.
+  *      into the global top-k by a [[TopK]] node over this one
+  *      ([[KnnJoinApi.knnJoin]]), hash-partitioned by qid: the query batch
+  *      runs to the reference's 30 000, so the merge stays distributed.
   *
-  * Contrast with the declarative form (crossJoin → window row_number ≤ k):
-  * same results (same (sim desc, vec_id) total order), but the shuffle
-  * carries only heap winners instead of every scored row. Spark ≥3.5's
-  * WindowGroupLimit approximates step 2; this node makes the bound
-  * explicit and fuses scoring into the scan pass.
+  * Contrast with the declarative form (crossJoin → TopK): same results
+  * (same (sim desc, vec_id) total order), but scoring is fused into the
+  * scan pass and no scored row is materialized as a Spark row — only heap
+  * winners reach the merge.
   *
   * Left child: queries (qid BIGINT, qvec ARRAY<FLOAT>).
   * Right child: base (vec_id BIGINT, embedding ARRAY<FLOAT>).
-  * Output: (qid BIGINT, vec_id BIGINT, sim DOUBLE), unranked.
+  * Output: (qid BIGINT, vec_id BIGINT, sim DOUBLE): each base partition's
+  * best k per query, unranked.
   */
 case class KnnJoin(left: LogicalPlan, right: LogicalPlan, k: Int,
                    excludeSelf: Boolean,
@@ -67,13 +69,6 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
   // tree printer flags the node as missing input ("!" marker)
   override def producedAttributes: AttributeSet = AttributeSet(Seq(output.last))
 
-  /** Best-first ordering of candidates: highest sim first, ties broken
-    * toward the smaller vec_id — the window form's (sim desc, vec_id asc).
-    */
-  private type Cand = (Double, Long) // (sim, vec_id)
-  private val bestFirst: Ordering[Cand] =
-    Ordering.by((c: Cand) => (-c._1, c._2))
-
   override protected def doExecute(): RDD[InternalRow] = {
     val qRows = queries.executeCollect().map { r =>
       (r.getLong(0), r.getArray(1).toFloatArray())
@@ -82,7 +77,7 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     val kk = k
     val self = excludeSelf
 
-    // Pass 1: per-partition bounded top-k, all-primitive hot path. The
+    // Per-partition bounded top-k, all-primitive hot path. The
     // previous form probed a PriorityQueue[(Double, Long)] per
     // (row × query) — nq·|partition| boxed-tuple allocations and ordering
     // calls dominated the scan (allocation-bound, not FLOP-bound, at
@@ -91,9 +86,9 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     // an accepted candidate (rare once warm: k of |base|) pays an O(k)
     // rescan. The row's embedding is ALSO materialized once per row —
     // `getFloat` per (query × dim) re-read the unsafe buffer nq times.
-    // Acceptance rule mirrors bestFirst exactly: better ⇔ s > worst's
+    // Acceptance rule mirrors VectorSearch.rankOrder: better ⇔ s > worst's
     // sim, or equal sim and smaller vec_id — results are bit-identical.
-    val localTopK: RDD[(Long, Array[Cand])] = base.execute().mapPartitions { it =>
+    base.execute().mapPartitions { it =>
       val qs = bc.value
       val nq = qs.length
       val sims = Array.ofDim[Double](nq, kk)
@@ -151,31 +146,15 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.map { case ((qid, _), qi) =>
-        val f = filled(qi)
-        (qid, Array.tabulate(f)(j => (sims(qi)(j), ids(qi)(j))))
-      }
-    }
-
-    // Pass 2: tiny keyed merge of partition winners into the global top-k.
-    localTopK
-      .aggregateByKey(Array.empty[Cand])(
-        (acc, cands) => merge(acc, cands, kk),
-        (a, b) => merge(a, b, kk))
-      .mapPartitions { it =>
-        val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
-          LongType, LongType, DoubleType))
-        it.flatMap { case (qid, cands) =>
-          cands.iterator.map { case (sim, vecId) =>
-            proj(new GenericInternalRow(Array[Any](qid, vecId, sim))).copy()
-          }
+      val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
+        LongType, LongType, DoubleType))
+      qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
+        Iterator.tabulate(filled(qi)) { j =>
+          proj(new GenericInternalRow(Array[Any](qid, ids(qi)(j), sims(qi)(j))))
         }
       }
+    }
   }
-
-  /** The best k of two candidate lists, best first. */
-  private def merge(a: Array[Cand], b: Array[Cand], k: Int): Array[Cand] =
-    (a ++ b).sorted(bestFirst).take(k)
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): KnnJoinExec =
@@ -185,11 +164,15 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
 /** DataFrame-level entry point for the custom operator. */
 object KnnJoinApi {
   /** queriesDF: (qid BIGINT, qvec ARRAY<FLOAT>); baseDF: (vec_id BIGINT,
-    * embedding ARRAY<FLOAT>). Returns unranked (qid, vec_id, sim).
+    * embedding ARRAY<FLOAT>). Returns each query's global top-k as
+    * unranked (qid, vec_id, sim): [[TopK]] merges the partition winners.
     */
   def knnJoin(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame,
-              k: Int, excludeSelf: Boolean = true): DataFrame =
-    GraftColumnBridge.ofRows(spark,
+              k: Int, excludeSelf: Boolean = true): DataFrame = {
+    val winners = GraftColumnBridge.ofRows(spark,
       KnnJoin(GraftColumnBridge.analyzed(queriesDF),
         GraftColumnBridge.analyzed(baseDF), k, excludeSelf))
+    TopK(winners, "qid", graft.operators.VectorSearch.rankOrder("sim", "vec_id"), k,
+      single = false).drop("rank")
+  }
 }

@@ -87,7 +87,7 @@ object VectorKernelRewrite extends Rule[LogicalPlan] {
 /** Session-extension entry point: `spark.sql.extensions=graft.plans.GraftExtensions`
   * (also wired programmatically in graft's own session builders).
   *
-  * Besides the optimizer rules and the kNN strategy, this registers the
+  * Besides the optimizer rules and the kNN and top-k strategies, this registers the
   * codegen vector kernels as SQL FUNCTIONS — a SQL user's first touch of
   * a vector engine is `SELECT dot(a, b)`, and without `injectFunction`
   * the kernels would be Scala-API only (the reference exposes the same
@@ -117,6 +117,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => AnnProbeRewrite)
     ext.injectOptimizerRule(_ => HiddenPartitionRewrite)
     ext.injectPlannerStrategy(_ => KnnJoinStrategy)
+    ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectFunction(fn("dot", 2,
       "dot(a, b) - ⟨a,b⟩ over ARRAY<FLOAT> in double precision") {
       a => DotProductFloat(a(0), a(1)) })

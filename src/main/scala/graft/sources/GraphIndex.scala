@@ -724,7 +724,7 @@ object GraphIndex {
     // `:161-162`): the beam WALK above traverses dead nodes unchanged —
     // deleting a hub must not disconnect its neighborhood, exactly as
     // HNSW keeps deleted nodes' links navigable — and only the RESULT set
-    // excludes them, with the anti-join BELOW the rank window so k fills
+    // excludes them, with the anti-join BELOW the final top-k so k fills
     // from live rows (never a post-filtered short top-k). Same shape as
     // IndexStore.searchTombstoned; between compactions the tombstone set
     // is deletes-sized — and the broadcast is COUNTED, not assumed
@@ -737,7 +737,10 @@ object GraphIndex {
           Seq("vec_id"), "left_anti")
       case None => visited
     }
-    VectorSearch.rankTopK(live.filter(col("vec_id") =!= col("qid")), k)
+    // Past the inline bound the query side is an ingest batch ([[absorb]]),
+    // so the final top-k merges hash-partitioned, not in one task.
+    VectorSearch.rankTopK(live.filter(col("vec_id") =!= col("qid")), k, "sim",
+      VectorSearch.simMicroCols, single = inlineFrontier)
   }
 
   /** The named `knn_graph` query: ensure the persisted graph exists for
@@ -799,7 +802,7 @@ object GraphIndex {
     * `:161-162`). Tombstones are the delete set [[Tables.deleted]], as in
     * `knn_tombstone`; the beam walk still TRAVERSES dead nodes
     * (HNSW semantics — connectivity through a deleted hub survives), only
-    * the final top-k excludes them, below the rank window so ranks stay
+    * the final top-k excludes them, below the TopK node so ranks stay
     * dense over live rows. Oracle: the unrolled-walk replay over the
     * exported edges minus the tombstone set.
     */

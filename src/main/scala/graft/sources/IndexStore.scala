@@ -319,7 +319,7 @@ object IndexStore {
     * deletes accumulate in a (tiny) tombstone set that broadcast
     * anti-joins the scored candidates at query time, UNDER the same
     * static partition pruning — k then fills from live rows only (the
-    * anti-join sits below the rank window, never post-filtering a
+    * anti-join sits below the top-k, never post-filtering a
     * short top-k). Compaction/rebuild becomes an offline maintenance
     * choice instead of a write-path blocker. Tombstones are the delete
     * set [[graft.Tables.deleted]].

@@ -41,7 +41,7 @@ object Plans {
     "range_join_bucketed" -> "interval-overlap range join: epoch-bucket equi-join with bounded fan-out — no cartesian, no nested loop",
     "decontam_embedding" -> "semantic decontamination: broadcast eval holdout, map-side broadcast-nested-loop scoring, partial agg before the only exchange",
     "dedup_keep_best" -> "keep-best dedup: quality-argmax survivor via max(struct(score, -id)) — one map-side-combined hash agg, no window state",
-    "knn_hard_negatives" -> "hard-negative mining: broadcast anchor batch, label-mismatch filter below the rank window, WindowGroupLimit top-k",
+    "knn_hard_negatives" -> "hard-negative mining: broadcast anchor batch, label-mismatch filter below the TopK",
     "events_funnel" -> "strict-sequence funnel: running window minima resolve stage ordering in ONE user_id exchange, final agg reuses the window partitioning",
     "events_retention" -> "cohort retention: (user, week) grid pre-distinct'd map-side before the cohort join",
     "quality_audit" -> "expectations gate: conditional aggregates stacked per table — exactly one scan per audited table",
@@ -58,7 +58,7 @@ object Plans {
     "text_bpe_encode" -> "BPE apply: learned pair sequence over the FULL word-type table, per-type token counts join back on the word key — shuffle sized to the vocabulary, never positions × corpus",
     "dedup_bloom" -> "bloom-pruned incremental exact dedup: might_contain literal gate splits the batch map-side — the definite-novel branch union-bypasses the single md5 confirm join",
     "corpus_offsets" -> "global token offsets: per-shard window prefix sums + 8-row shard-base cumsum broadcast back — the naive global-ORDER-BY window is never planned",
-    "knn_maxsim" -> "late-interaction MaxSim: broadcast query-token batch, BOTH reduction levels (per-slot conditional max + fixed-order sum) in ONE map-combined hash aggregate, WindowGroupLimit top-k",
+    "knn_maxsim" -> "late-interaction MaxSim: broadcast query-token batch, BOTH reduction levels (per-slot conditional max + fixed-order sum) in ONE map-combined hash aggregate, TopK",
     "knn_maxsim_pruned" -> "LSH-pruned MaxSim: token-bucket equi-join replaces the broadcast cross — only colliding tokens score, same one-aggregate reduce",
     "knn_matryoshka" -> "MRL two-stage: coarse prefix-dot rank (¼ vector bytes), candidates carry the full vector out of stage 1 — the rerank is a projection, never a refetch",
     "knn_multiprobe" -> "multi-probe LSH: (1+probes)·nq probe rows broadcast into ONE bucket equi-join — recall of flipping low-margin bits without more tables",
@@ -81,9 +81,9 @@ object Plans {
     "lake_sql_ann" -> "SQL route to ANN: every union arm's naive ORDER BY dot(...) LIMIT k over the lake_vectors view is rewritten at optimization time into the probed form — static cell_id INSET PartitionFilters on each arm's scan",
     "media_phash_pairs" -> "multi-index Hamming pairs (r13 core): hash frame repartitioned BEFORE the probe explosion (the whole candidate stream never serializes through one scan task), exact-Hamming verify streams inside whole-stage codegen, DISTINCT only on verified survivors — the candidate multiset never hits a blocking operator",
     "lake_sql_merge" -> "lake MERGE through SQL DML: changeset views over the raw log, INSERT OVERWRITE staging (no self-read), dynamic partition overwrite of only the changeset's date directories; this dump shows the post-merge report plan over the rows view",
-    "graph_tombstone" -> "graph-index DELETE (r14): the beam walk's hops are unchanged (dead nodes still traversed — HNSW connectivity), the tombstone anti-join sits BELOW the final rank window so k fills from live rows; look for BroadcastHashJoin LeftAnti under the last Window",
+    "graph_tombstone" -> "graph-index DELETE (r14): the beam walk's hops are unchanged (dead nodes still traversed — HNSW connectivity), the tombstone anti-join sits BELOW the final TopK so k fills from live rows; look for BroadcastHashJoin LeftAnti under the TopK",
     "lake_sql_graph" -> "SQL route to graph search (r14): the whole unrolled beam walk as ONE SQL text over catalog views — chained CTEs stay SHARED (hop h never re-executes hops 0..h-1), dot() on the injected codegen kernel, same row output as the DataFrame walk",
-    "knn_pq_tombstone" -> "PQ-store DELETE (r14): the ADC scan and LUT join are unchanged, the tombstone anti-join sits BELOW the final rank window so k fills from live rows — look for BroadcastHashJoin LeftAnti between the ADC aggregate and the last Window",
+    "knn_pq_tombstone" -> "PQ-store DELETE (r14): the ADC scan and LUT join are unchanged, the tombstone anti-join sits BELOW the final TopK so k fills from live rows — look for BroadcastHashJoin LeftAnti between the ADC aggregate and the TopK",
     "pq_compact" -> "compacted PQ store (r14): plain ADC scan over the compacted codes — NO tombstone filter anywhere in the plan, the dead code rows are physically gone; codebooks broadcast as the LUT side exactly as knn_pq",
     "lake_sql_pq" -> "SQL route to compressed ADC search (r15 fix): one SQL text over the pq_codes/pq_codebooks/pq_coarse views — the BROADCAST hints now reference the CTEs UNALIASED so they BIND (r14's aliased hint silently inverted to broadcasting the corpus-sized code table); look for BroadcastHashJoin with the LUT/coarse sides under BroadcastExchange and the codes scan streamed",
     "knn_graph_hier" -> "three-level entry descent (r15/r16): v0 crosses only the 1/(97·32²) top sample, two hops over the persisted edges_l2 coarse-node graph, two over edges_l1, then the level-0 hops — no serve term stays corpus-linear (v0 is N/99328, every hop bounded nq·beam·M); each level engages automatically past HierFlatBound entries, forced on here",

@@ -70,16 +70,18 @@ class BpeSpec extends SparkSpec {
     val docs = Seq.fill(9)("aaaa") ++ Seq("ab")
     val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("bpe-spec").toString
-    df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = TextAnalysis.bpeMerges(spark, dir, rounds = 1, topWords = 10)
-      .as[(Long, String, String, Long, Long, Long, Long, Long, Long)].collect()
-    val (_, l, r, pc, sites, mass, vocab, nPos, cm) = out.head
-    assert(l == "a" && r == "a")
-    assert(pc == 9L * 3)    // 3 candidate sites in the 'aaaa' type, weight 9
-    assert(sites == 2L && mass == 18L) // even offsets only, never 1 or 3
-    assert(nPos == 2L + 2L) // type 'aaaa'->['aa','aa'], type 'ab'->['a','b']
-    assert(cm == 9L * 4 + 2) // content conserved
-    assert(vocab == 3L)      // {'aa','a','b'}
+    try {
+      df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = TextAnalysis.bpeMerges(spark, dir, rounds = 1, topWords = 10)
+        .as[(Long, String, String, Long, Long, Long, Long, Long, Long)].collect()
+      val (_, l, r, pc, sites, mass, vocab, nPos, cm) = out.head
+      assert(l == "a" && r == "a")
+      assert(pc == 9L * 3)    // 3 candidate sites in the 'aaaa' type, weight 9
+      assert(sites == 2L && mass == 18L) // even offsets only, never 1 or 3
+      assert(nPos == 2L + 2L) // type 'aaaa'->['aa','aa'], type 'ab'->['a','b']
+      assert(cm == 9L * 4 + 2) // content conserved
+      assert(vocab == 3L)      // {'aa','a','b'}
+    } finally graft.streaming.StreamOps.rmTree(new java.io.File(dir))
   }
 
   test("bpe encode: tokens bounded by words and chars, saved_micro is the floor-div fraction") {
@@ -99,16 +101,18 @@ class BpeSpec extends SparkSpec {
     val docs = Seq.fill(9)("aaaa") ++ Seq("ab")
     val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("bpe-enc-spec").toString
-    df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val enc = TextAnalysis.bpeEncode(spark, dir, rounds = 1, topWords = 10)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    // round 1 learns (a,a): 'aaaa' -> ['aa','aa'], 'ab' stays 2 chars
-    val aaaa = enc.filter(_._1 < 9)
-    assert(aaaa.size == 9)
-    aaaa.foreach { case (_, w, c, t, s) =>
-      assert(w == 1L && c == 4L && t == 2L && s == 500000L)
-    }
-    assert(enc.find(_._1 == 9L).get == ((9L, 1L, 2L, 2L, 0L)))
+    try {
+      df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val enc = TextAnalysis.bpeEncode(spark, dir, rounds = 1, topWords = 10)
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq
+      // round 1 learns (a,a): 'aaaa' -> ['aa','aa'], 'ab' stays 2 chars
+      val aaaa = enc.filter(_._1 < 9)
+      assert(aaaa.size == 9)
+      aaaa.foreach { case (_, w, c, t, s) =>
+        assert(w == 1L && c == 4L && t == 2L && s == 500000L)
+      }
+      assert(enc.find(_._1 == 9L).get == ((9L, 1L, 2L, 2L, 0L)))
+    } finally graft.streaming.StreamOps.rmTree(new java.io.File(dir))
   }
 
   test("bpe merges are deterministic across runs") {

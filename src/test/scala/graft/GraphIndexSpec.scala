@@ -261,6 +261,27 @@ class GraphIndexSpec extends SparkSpec {
     assert(batch == inline, "distributed and inline frontier routes must agree row for row")
   }
 
+  test("absorb-shaped walk past the inline-id bound: the final top-k merge is not one partition") {
+    // absorb walks an INGEST batch (the store base as entries, k = M,
+    // beam 32, 2 hops); 400 queries · beam 32 > MaxInlineIds, so the
+    // query side is ingest-sized and the final TopK merges hash-partitioned
+    val emb = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding")
+    val batch = emb.filter($"vec_id" < 400).select($"vec_id".as("qid"), $"embedding".as("qvec"))
+    assert(batch.count() * 32 > Tables.MaxInlineIds, "fixture must exceed the inline bound")
+    def walk(maxInlineIds: Int) = GraphIndex.searchFrom(spark, path, emb, batch,
+      k = GraphIndex.M, beam = 32, hops = 2, maxInlineIds = maxInlineIds,
+      maxFlatEntries = GraphIndex.FlatPinned)
+    val ingest = walk(Tables.MaxInlineIds)
+    val rows = ingest.collect().toSeq
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val finalTopK = plans.collectFirst(ingest.queryExecution.executedPlan) {
+      case t: graft.plans.TopKExec => t
+    }.get
+    assert(finalTopK.outputPartitioning !=
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+    assert(rows == walk(Int.MaxValue).collect().toSeq, "both routes must agree row for row")
+  }
+
   test("SQL hier route (lake_sql_graph_hier): one-text three-level walk equals the forced DataFrame descent") {
     val df = GraphIndex.searchHierQuery(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq

@@ -129,22 +129,33 @@ class IndexStoreSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("qid", "qvec"))
   }
 
-  test("job budget: one searchPruned call over a local query batch runs at most 5 Spark jobs") {
+  test("job budget: one searchPruned call over a local query batch runs at most 2 Spark jobs") {
     val (store, q) = servingBatch()
     IndexStore.searchPruned(spark, store, q).collect() // warm: centroid memo, file listing
     val jobs = jobsOf(IndexStore.searchPruned(spark, store, q).collect())
-    // 11 with the cross-join + window probe run twice; the map-side probe
-    // folds into planning, leaving the scoring plan's jobs
-    assert(jobs <= 5, s"searchPruned ran $jobs jobs")
+    // 11 with the cross-join + window probe run twice, 5 with the rank
+    // window and global sort; left: the probe's broadcast and the TopK job
+    assert(jobs <= 2, s"searchPruned ran $jobs jobs")
   }
 
-  test("job budget: one knnDeclarative call over a local query batch runs at most 5 Spark jobs") {
+  test("job budget: one knnDeclarative call over a local query batch runs at most 2 Spark jobs") {
     // the exact-search serving path: the batch against every stored row
     val (store, q) = servingBatch()
     val base = IndexStore.read(spark, store)._1.select($"vec_id", $"embedding")
     VectorSearch.knnDeclarative(q, base, 5).collect() // warm: file listing
     val jobs = jobsOf(VectorSearch.knnDeclarative(q, base, 5).collect())
-    assert(jobs <= 5, s"knnDeclarative ran $jobs jobs")
+    assert(jobs <= 2, s"knnDeclarative ran $jobs jobs")
+  }
+
+  test("job budget: a ranked KnnJoin over a local query batch runs in 1 Spark job") {
+    // the query side is collected from a local relation without a job, and
+    // both TopK merges run inside the collecting job
+    val (store, q) = servingBatch()
+    val base = IndexStore.read(spark, store)._1.select($"vec_id", $"embedding")
+    def ranked() = VectorSearch.rankTopK(graft.plans.KnnJoinApi.knnJoin(spark, q, base, 5), 5).collect()
+    ranked() // warm: file listing
+    val jobs = jobsOf(ranked())
+    assert(jobs <= 1, s"rankTopK over knnJoin ran $jobs jobs")
   }
 
   test("tombstoned search: no deleted id surfaces, k fills from live rows, pruning kept") {

@@ -15,8 +15,11 @@ class SubstringDedupSpec extends SparkSpec {
     *  - doc 4: exact copy of doc 1
     *  - doc 5: z1..z4 ++ w1..w7 (7-word span — detected at 7, filtered by minSpan=8)
     */
+  private var tmpDir: Option[String] = None
+
   private lazy val craftedDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("substr_docs").toString
+    tmpDir = Some(dir)
     val w = (1 to 20).map("w" + _)
     val docs = Seq(
       (1L, w.mkString(" ")),
@@ -31,6 +34,10 @@ class SubstringDedupSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(dir + "/documents.parquet")
     dir
   }
+
+  override def afterAll(): Unit =
+    try tmpDir.foreach(d => graft.streaming.StreamOps.rmTree(new java.io.File(d)))
+    finally super.afterAll()
 
   test("crafted corpus: exact maximal runs, short docs invisible, sub-minSpan filtered") {
     val runs = Dedup.substringRuns(spark, craftedDir)
