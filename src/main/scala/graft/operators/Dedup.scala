@@ -139,7 +139,7 @@ object Dedup {
     * of the query row for row.
     */
   private[graft] def sketchStorePath(dir: String): String =
-    "/root/repo/data/sketch_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    graft.sources.Artifact.storeDir("sketch_store", dir)
 
   /** Write `build` to `path` once per data-dir CONTENT: a `_fp_<hash>`
     * marker (underscore-prefixed — invisible to Spark and to the oracle's

@@ -320,7 +320,7 @@ object Multimodal {
     }.mkString("(", " + ", ")")
 
   def graysPath(dir: String): String =
-    "/root/repo/data/phash_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_v6"
+    graft.sources.Artifact.storeDir("phash_store", dir) + "_v6"
 
   /** Deterministic nearest-neighbor 2× upscale — the "re-encoded copy"
     * fixture generator: integer pixel replication, no interpolation, so

@@ -14,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   * call rebuilds instead of serving a torn store. Each (path, marker) pair
   * has its own JVM lock, so concurrent callers in one driver build once.
   *
-  * Not guaranteed: exclusion against a build in ANOTHER JVM, and atomic
+  * Not guaranteed: exclusion against a build in ANOTHER JVM; atomic
   * publication (outputs are rewritten in place; readers that bypass
-  * [[ensure]] can observe a half-written store).
+  * [[ensure]] can observe a half-written store); and an atomic IVF segment
+  * fold ([[IndexStore.compact]] interrupted between its cell rewrite and
+  * its segment deletes leaves those rows both in a cell and in a segment).
   */
 object Artifact {
 
@@ -75,6 +77,16 @@ object Artifact {
   def tunedBeam(targetMicro: Long): Marker = new Marker(s"_tuned_beam_$targetMicro", named = false)
   /** Which OPQ rotation a PQ store trained; part of its [[generation]]. */
   val RotationKind = "_rotation_kind"
+
+  /** Canonical location of the `kind` store derived from data dir `dir`:
+    * `data/<kind>/<dir, every char outside [A-Za-z0-9.] as _>` under the
+    * JVM's working directory — the checkout root for sbt runs and the
+    * mains — so two checkouts never build or race in each other's stores.
+    * A pure function of (working directory, dir): callers and the DuckDB
+    * oracle agree on the path without coordination.
+    */
+  def storeDir(kind: String, dir: String): String =
+    Paths.get("data", kind, dir.replaceAll("[^A-Za-z0-9.]", "_")).toAbsolutePath.toString
 
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 

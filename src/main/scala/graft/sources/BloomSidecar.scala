@@ -25,7 +25,7 @@ object BloomSidecar {
   private val memo = TrieMap.empty[String, Array[Byte]]
 
   private[graft] def root(dir: String): String =
-    "/root/repo/data/bloom_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("bloom_store", dir)
 
   /** The sidecar bytes for (dir, name, numBits), building via `build` only
     * when no current-generation copy exists on disk or in the memo.

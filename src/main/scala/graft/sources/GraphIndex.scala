@@ -205,7 +205,7 @@ object GraphIndex {
     * shared with the DuckDB oracle (the IndexStore.defaultPath contract).
     */
   def defaultPath(dir: String): String =
-    "/root/repo/data/graph_index/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("graph_index", dir)
 
   /** Build and persist the graph: edges carry the dst embedding payload
     * (HNSW's vectors-next-to-links layout) and are range-partitioned +

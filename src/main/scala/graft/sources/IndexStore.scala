@@ -7,7 +7,7 @@ import graft.operators.VectorSearch
 import graft.functions.VectorFunctions._
 
 /** The persisted form of the IVF "index" (SURVEY.md §1.2): a clustered
-  * parquet layout `partitionBy(cell_id)` plus a tiny centroid table.
+  * parquet layout plus a tiny centroid table (`path/centroids`).
   *
   * This is what "vector index" means on a lake at 100 TB: not a mutable
   * in-memory structure (`index.add`, `FAISS/PlainDemo/pipeline.py:321`) but
@@ -15,6 +15,24 @@ import graft.functions.VectorFunctions._
   * quantizer — a probed query equi-joins on `cell_id` and the scan planner
   * prunes to nprobe/nlist of the files (`PartitionFilters` in the plan),
   * the same data-skipping FAISS gets from its inverted lists.
+  *
+  * The rows live in two parts, and [[read]] serves their union:
+  *
+  *  - `path/rows/cell_id=*` — the clustered cells, written by [[writeFrom]],
+  *    [[rebuild]] and [[compact]];
+  *  - `path/segments/` — one parquet file per [[absorb]] call, sorted by
+  *    `cell_id`, which is a data column there: the probed `cell_id IN (…)`
+  *    is a pushed filter that skips row groups by their statistics. This
+  *    is the Milvus shape (each insert+flush, `Milvus/stream1.py:282-283`,
+  *    becomes one new segment, compacted later): an absorb costs one file
+  *    however many cells its batch touches, where an append into the cells
+  *    cost one file per touched cell and every later read listed them all.
+  *
+  * [[compact]] folds the segments back into their cells. Failure modes
+  * (no atomic publication, [[Artifact]]): a fold interrupted after its
+  * cell rewrite and before its segment deletes leaves those rows in a cell
+  * AND in a segment, so [[read]] serves them twice (and a later fold
+  * would write both copies into the cell) until the store is rebuilt.
   */
 object IndexStore {
 
@@ -35,7 +53,8 @@ object IndexStore {
     }
 
   /** Build and persist a store from an explicit vector frame (subset /
-    * ingest-side stores). Stamps `_build_id` only — callers that derive
+    * ingest-side stores), dropping any segments an earlier generation
+    * absorbed. Stamps `_build_id` only — callers that derive
     * the frame from a data dir add their own `_src_fp` staleness marker
     * ([[write]], [[ensureSubset]]).
     */
@@ -45,46 +64,94 @@ object IndexStore {
       .partitionBy("cell_id")
       .parquet(s"$path/rows")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    dropSegments(path)
     Artifact.stampBuildId(path)
   }
 
+  /** Where [[absorb]] lands its segments. */
+  private def segmentsDir(path: String): String = s"$path/segments"
+
+  /** The segment data files of the store at `path` (Spark's hidden-file
+    * rule: `_`/`.` names are bookkeeping, not data).
+    */
+  private def segmentFiles(path: String): Seq[java.io.File] =
+    Option(new java.io.File(segmentsDir(path)).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  /** A rebuilt store must not union in rows assigned under its old centroids. */
+  private def dropSegments(path: String): Unit =
+    graft.streaming.StreamOps.rmTree(new java.io.File(segmentsDir(path)))
+
   /** Day-2 maintenance: absorb new vectors into an EXISTING store without
     * re-clustering — assign each to its nearest current centroid (the same
-    * assignment rule queries probe by) and append into the matching
-    * `rows/cell_id=*` partitions. This is what FAISS `index.add` does
-    * post-train (`pipeline.py:321-323` adds to a trained index): centroids
-    * stay fixed, so probed search finds the new rows with zero rebuild;
-    * the documented drift contract is that cells slowly unbalance as data
-    * drifts and a periodic [[rebuild]] (or compaction) re-trains. A fresh
-    * `_build_id` is stamped so dependent artifacts (PqStore codes, the
-    * planner's memoized store detection) see the content change and
+    * assignment rule queries probe by) and append the batch as ONE new
+    * segment under `path/segments/`, sorted by `cell_id`. This is what FAISS
+    * `index.add` does post-train (`pipeline.py:321-323` adds to a trained
+    * index): centroids stay fixed, so probed search finds the new rows with
+    * zero rebuild; the documented drift contract is that cells slowly
+    * unbalance as data drifts and a periodic [[rebuild]] re-trains, while
+    * [[compact]] folds the segments into their cells. One writer task and
+    * one Spark job per call, with no shuffle: the cells under `rows/` are
+    * never touched, so their file listing stays valid for every later read.
+    * A fresh `_build_id` is stamped so dependent artifacts (PqStore codes,
+    * the planner's memoized store detection) see the content change and
     * re-derive instead of serving a row set they never encoded.
     */
   def absorb(spark: SparkSession, path: String, vectors: DataFrame): Unit = {
     VectorSearch.assignCells(vectors, IvfProbe.centroids(spark, path))
-      // cluster by cell before the partitioned append: the assignment
-      // inherits the batch scan's split count (∝ core count), and the
-      // partitionBy write would fan that out to tasks×cells tiny files —
-      // every later probe/count/fingerprint over rows/ re-pays the
-      // listing. The tiny AQE-coalesced shuffle lands ~one file per cell.
-      .repartition(col("cell_id"))
-      .write.mode("append").partitionBy("cell_id").parquet(s"$path/rows")
+      .coalesce(1)
+      .sortWithinPartitions(col("cell_id"))
+      .write.mode("append").parquet(segmentsDir(path))
     Artifact.stampBuildId(path)
   }
 
-  /** Small-files hygiene for the IVF absorb append path — the exact twin
-    * of `PqStore.layoutCompactQuery` pointed at `rows/cell_id=*` (each
-    * per-batch [[absorb]] appends a file per touched cell; the audit is
-    * the measured decision input the compaction was missing): fragment a
-    * working clone with three deterministic absorb chunks, rewrite every
-    * cell above `targetFiles` via dynamic partition overwrite, and return
-    * the post-compaction files-per-cell audit plus a source-recomputed
-    * conservation column. Build-once per half-store generation;
-    * re-executions pay the audit scan only.
+  /** Fold the segments [[absorb]] landed back into the clustered cells:
+    * read the cells the listed segments touch ∪ those segments, rewrite
+    * each touched cell as one file (dynamic partition overwrite — untouched
+    * cells keep their files), then delete exactly the segment files listed
+    * before the fold. A segment an absorb lands during the fold is kept for
+    * the next one. The row set, and so `_build_id`, does not change. An
+    * interruption between the cell rewrite and the deletes leaves rows in
+    * both places (see the object header). Folds in one JVM run one at a
+    * time; nothing excludes a fold in another JVM.
     */
-  def layoutCompactQuery(spark: SparkSession, dir: String,
-                         targetFiles: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def compact(spark: SparkSession, path: String): Unit = synchronized {
+    val segs = segmentFiles(path)
+    if (segs.nonEmpty) {
+      val folded = spark.read.parquet(segs.map(_.getPath): _*)
+      val touched = folded.select(col("cell_id")).distinct().collect().map(_.get(0)) // ≤ nlist
+      if (touched.nonEmpty)
+        graft.Tables.storeParquet(spark, s"$path/rows")
+          .filter(col("cell_id").isin(touched.toIndexedSeq: _*))
+          .unionByName(folded)
+          .repartition(touched.length, col("cell_id"))
+          .localCheckpoint()
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell_id")
+          .parquet(s"$path/rows")
+      segs.foreach { f =>
+        f.delete()
+        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+      }
+      // the dir goes once it holds no segment (a delete of a non-empty dir
+      // fails, so an absorb's in-flight output keeps it)
+      if (segmentFiles(path).isEmpty) {
+        val dir = new java.io.File(segmentsDir(path))
+        Seq("_SUCCESS", "._SUCCESS.crc").foreach(n => new java.io.File(dir, n).delete())
+        dir.delete()
+      }
+    }
+  }
+
+  /** The absorb → [[compact]] cycle as a query (`ivf_layout_compact`), the
+    * twin of `PqStore.layoutCompactQuery`: land three deterministic absorb
+    * chunks of the odd half as segments on a working clone of the even-half
+    * store, fold them, and return the post-fold files-per-cell audit plus
+    * a source-recomputed conservation column. Build-once per half-store
+    * generation; re-executions pay the audit scan only.
+    */
+  def layoutCompactQuery(spark: SparkSession, dir: String): DataFrame = {
     val half = ensureCorpusHalf(spark, dir)
     val work = defaultPath(dir) + "_plc"
     Artifact.ensure(work, Artifact.generation(half), Seq("rows")) {
@@ -93,25 +160,10 @@ object IndexStore {
       (0 until 3).foreach { i =>
         absorb(spark, work, odd.filter((col("vec_id") / 2).cast("long") % 3 === i))
       }
-      val needy = graft.Tables.storeParquet(spark, s"$work/rows")
-        .select(col("cell_id"), input_file_name().as("f"))
-        .groupBy(col("cell_id"))
-        .agg(countDistinct(col("f")).as("n_files"))
-        .filter(col("n_files") > targetFiles)
-        .select(col("cell_id")).collect().map(_.get(0)) // ≤ nlist rows
-      if (needy.nonEmpty) {
-        graft.Tables.storeParquet(spark, s"$work/rows")
-          .filter(col("cell_id").isin(needy.toIndexedSeq: _*))
-          .repartition(needy.length, col("cell_id"))
-          .localCheckpoint()
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell_id")
-          .parquet(s"$work/rows")
-      }
+      compact(spark, work)
     }
     val corpusRows = Tables.embeddings(spark, dir).count()
-    graft.Tables.storeParquet(spark, s"$work/rows")
+    read(spark, work)._1
       .select(col("cell_id").cast("long").as("cell_id"), input_file_name().as("f"))
       .groupBy(col("cell_id"))
       .agg(countDistinct(col("f")).as("n_files"), count(lit(1)).as("n_rows"))
@@ -211,7 +263,7 @@ object IndexStore {
     val servingPath = if (decision == "absorb") maintPath else maintPath + "_rb"
     Artifact.ensure(maintPath, Artifact.generation(half) + s" decision=$decision",
       Seq(s"$servingPath/rows"), Artifact.MaintFrom)(maintain(spark, dir, decision))
-    val rowsAfter = graft.Tables.storeParquet(spark, s"$servingPath/rows").count()
+    val rowsAfter = read(spark, servingPath)._1.count()
     drift
       .withColumn("decision", lit(decision))
       .withColumn("threshold", lit(tauMicroSq))
@@ -239,10 +291,20 @@ object IndexStore {
   /** The build marker of the store at `path`, if present. */
   def buildId(path: String): Option[String] = Artifact.BuildId.read(path)
 
-  /** Open the clustered index. */
-  def read(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (graft.Tables.storeParquet(spark, s"$path/rows"),
-      graft.Tables.storeParquet(spark, s"$path/centroids"))
+  /** Open the index: (every row, centroids). The rows are the clustered
+    * cells ∪ the absorb segments, by name in the cells' column order;
+    * without segments, the cells' frame as is (a never-absorbed store
+    * plans exactly as before). The `cell_id` filter of a probed search is
+    * a `PartitionFilters` on the cells arm and a pushed data filter on the
+    * segments arm.
+    */
+  def read(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
+    val cells = graft.Tables.storeParquet(spark, s"$path/rows")
+    val rows =
+      if (segmentFiles(path).isEmpty) cells
+      else cells.unionByName(graft.Tables.storeParquet(spark, segmentsDir(path)))
+    (rows, graft.Tables.storeParquet(spark, s"$path/centroids"))
+  }
 
   /** Probed search against the PERSISTED index: identical query shape to
     * VectorSearch.ivfSearch, but the equi-join key is now also the storage
@@ -255,13 +317,13 @@ object IndexStore {
     VectorSearch.ivfSearch(rows, centroids, queries, k, nprobe)
   }
 
-  /** Canonical on-disk location of the index for a given data dir —
-    * a pure function of the dir so "build once, search many" callers
-    * (and the DuckDB oracle, which replays the probed search over these
-    * artifacts) agree on the path without coordination.
+  /** Canonical on-disk location of the index for a given data dir
+    * ([[Artifact.storeDir]]), so "build once, search many" callers (and the
+    * DuckDB oracle, which replays the probed search over these artifacts)
+    * agree on the path without coordination.
     */
   def defaultPath(dir: String): String =
-    "/root/repo/data/ivf_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("ivf_store", dir)
 
   /** Build the index only if its artifacts don't exist yet OR were built
     * from different source content (`_src_fp_*` mismatch — the driver
@@ -487,7 +549,8 @@ object IndexStore {
     * [[searchTombstoned]]: fold the tombstones in (drop dead rows),
     * RETRAIN the coarse quantizer on the live set (cluster drift after
     * heavy deletes is exactly why vector DBs rebuild rather than only
-    * filter), rewrite the clustered layout, and stamp a fresh `_build_id`
+    * filter), rewrite the clustered layout (the source's segments folded
+    * in, none at the target), and stamp a fresh `_build_id`
     * so dependent artifacts (PqStore codes) detect the change. Runs
     * against the persisted store only — the original corpus is not
     * re-read; on a cluster this is the off-peak job that turns
@@ -510,6 +573,7 @@ object IndexStore {
         .partitionBy("cell_id")
         .parquet(s"$rebuiltPath/rows")
       centroids.write.mode("overwrite").parquet(s"$rebuiltPath/centroids")
+      dropSegments(rebuiltPath)
       Artifact.stampBuildId(rebuiltPath)
     } finally centroids.unpersist(blocking = false)
   }
@@ -532,7 +596,9 @@ object IndexStore {
     * `cell_id IN (<nprobe nearest cells>)` filter at planning time, so
     * this flat scan executes as the partition-pruned probed search —
     * querying THROUGH the index opts into index (approximate) semantics,
-    * exactly as in FAISS/Milvus; exact search reads the base table.
+    * exactly as in FAISS/Milvus; exact search reads the base table. Over a
+    * store with absorb segments the rule does not fire (its match does not
+    * see through [[read]]'s union), so the flat query runs exact.
     */
   def flatTopK(spark: SparkSession, path: String, qid: Long,
                qvec: Array[Float], k: Int = 5): DataFrame = {
@@ -557,8 +623,9 @@ object IndexStore {
     VectorSearch.rankTopK(per.reduce(_ unionAll _), Int.MaxValue)
   }
 
-  /** SQL-first entry to the vector store: the clustered rows registered
-    * as a datasource-backed catalog view (the `lake_events` pattern of
+  /** SQL-first entry to the vector store: the clustered rows ([[compact]]ed
+    * first, so the view over `rows` holds every row) registered as a
+    * datasource-backed catalog view (the `lake_events` pattern of
     * [[PartitionedStore.ensureSqlViews]]), so plain `spark.sql` over
     * `lake_vectors` plans through the SAME HadoopFsRelation the DataFrame
     * path reads — including [[graft.plans.AnnProbeRewrite]]'s store
@@ -570,6 +637,7 @@ object IndexStore {
     */
   def ensureSqlView(spark: SparkSession, dir: String): String = {
     val path = ensured(spark, dir)
+    compact(spark, path)
     SqlViews.ensureParquetView(spark, "lake_vectors", s"$path/rows")
     path
   }

@@ -31,7 +31,7 @@ import graft.{GraftSession, Tables}
 object PartitionedStore {
 
   def defaultPath(dir: String): String =
-    "/root/repo/data/part_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("part_store", dir)
 
   /** Build the partitioned layout + calendar dim. The fact write pays one
     * shuffle-free pass (dynamic partition write); the calendar is a

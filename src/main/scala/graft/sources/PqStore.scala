@@ -619,7 +619,7 @@ object PqStore {
     * these artifacts).
     */
   def defaultPath(dir: String): String =
-    "/root/repo/data/pq_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("pq_store", dir)
 
   /** Build only if the artifacts don't exist yet or were built against a
     * DIFFERENT IVF build than the current one — a rebuilt coarse quantizer

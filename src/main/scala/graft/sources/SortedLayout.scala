@@ -53,7 +53,7 @@ object SortedLayout {
   // ------------------------------------------- zone-map manifest store --
 
   def docStorePath(dir: String): String =
-    "/root/repo/data/sorted_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Artifact.storeDir("sorted_store", dir)
 
   /** doc_id-sorted documents store WITH a persisted zone-map manifest —
     * the Iceberg/Delta file-skipping pattern made explicit: parquet's own

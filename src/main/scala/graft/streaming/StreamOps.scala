@@ -742,10 +742,10 @@ object StreamOps {
     * incoming crawl; every micro-batch [[graft.sources.IndexStore.absorb]]s
     * into a per-run working clone of the pristine even-half store (assign
     * to nearest CURRENT centroid — the same rule queries probe by — and
-    * append into the matching `rows/cell_id=*` partitions, centroids
-    * fixed), then PROVES per-batch searchability the way the reference's
-    * loop does: the probed search, run immediately after the absorb with
-    * the batch's first vector as a fresh query, must return that absorbed
+    * land the batch as one cell-sorted segment, centroids fixed), then
+    * PROVES per-batch searchability the way the reference's loop does:
+    * the probed search, run immediately after the absorb with the batch's
+    * first vector as a fresh query, must return that absorbed
     * row as its top-1 (its cell is by construction the rank-1 probed
     * cell). Batch ≡ stream by construction — assignment is per-row against
     * FIXED centroids, so the post-stream store content is independent of
@@ -800,7 +800,7 @@ object StreamOps {
     val queries = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 2 === 1 && col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val rowsAfter = graft.Tables.storeParquet(spark, s"$work/rows").count()
+    val rowsAfter = IndexStore.read(spark, work)._1.count()
     // eager checkpoint: the returned frame must stay valid after a LATER
     // invocation re-clones the working store out from under its files
     IndexStore.searchPruned(spark, work, queries, k, nprobe)

@@ -28,7 +28,7 @@ import graft.GraftSession
   *
   * Deterministic end to end — no RNG, the replica index drives every
   * transform. Usage:
-  *   sbt "runMain graft.tools.BlowUp /root/testdata/sf0.1 /root/repo/data/sf1 10"
+  *   sbt "runMain graft.tools.BlowUp <sf0.1 dir> data/sf1 10"
   */
 object BlowUp {
 
@@ -39,6 +39,9 @@ object BlowUp {
   private[graft] val Dims = Seq("region", "nation")
   private[graft] val Facts = Seq("customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
+
+  /** Default output: `data/sf1` under the working directory (the checkout root). */
+  private[graft] def DefaultOut: String = java.nio.file.Paths.get("data", "sf1").toAbsolutePath.toString
 
   private def replicate(spark: SparkSession, df: DataFrame, factor: Int): DataFrame =
     df.crossJoin(spark.range(factor).toDF("rep"))
@@ -57,7 +60,7 @@ object BlowUp {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "/root/repo/data/sf1"
+    val out = if (args.length > 1) args(1) else DefaultOut
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.local()
     run(spark, src, out, factor)
@@ -169,7 +172,7 @@ object StampSf1 {
     val pos = args.filterNot(_ == "--force")
     val force = args.contains("--force")
     val src = if (pos.length > 0) pos(0) else "/root/testdata/sf0.1"
-    val out = if (pos.length > 1) pos(1) else "/root/repo/data/sf1"
+    val out = if (pos.length > 1) pos(1) else BlowUp.DefaultOut
     if (force) println(s"--force: skipping blow-up sanity check for $out")
     else {
       val spark = GraftSession.local()

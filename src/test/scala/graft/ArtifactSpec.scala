@@ -184,4 +184,41 @@ class ArtifactSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, "marker names outside Artifact.scala:\n" + bad.mkString("\n"))
   }
+
+  // --- source lint: an IVF store's rows are read through IndexStore.read,
+  // which adds the absorb segments; a direct read of a `…/rows` root would
+  // silently miss them. PartitionedStore reads its own (segment-free) rows.
+
+  private val parquetRead = """(?:storeParquet|read\s*\.\s*parquet)\s*\(([^\n]*)""".r
+
+  /** The argument lines of every parquet read of a `…/rows` root in `src`. */
+  private def rowsReads(src: String): Seq[String] =
+    parquetRead.findAllMatchIn(src).map(_.group(1))
+      .filter(args => """/rows\b""".r.findFirstIn(args).nonEmpty).toSeq
+
+  test("lint: the rows-read scanner flags direct reads of a rows root only") {
+    val flagged = rowsReads(
+      """val a = graft.Tables.storeParquet(spark, s"$work/rows").count()
+        |val b = spark.read.parquet(s"$p/rows")
+        |val c = spark.read .parquet(IndexStore.defaultPath(d) + "_sab/rows")
+        |""".stripMargin)
+    assert(flagged.size == 3, flagged)
+    val clean = rowsReads(
+      """val d = graft.Tables.storeParquet(spark, s"$p/rows_meta")
+        |val e = IndexStore.read(spark, work)._1
+        |val f = graft.Tables.storeParquet(spark, s"$p/edges")
+        |""".stripMargin)
+    assert(clean.isEmpty, clean)
+  }
+
+  test("lint: no file but IndexStore.scala and PartitionedStore.scala reads a rows root directly") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"lint must run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val allowed = Set("IndexStore.scala", "PartitionedStore.scala")
+    val files = Files.walk(root).toArray.map(_.asInstanceOf[Path])
+      .filter(f => f.toString.endsWith(".scala") && !allowed(f.getFileName.toString))
+    assert(files.length > 50)
+    val bad = files.flatMap(f => rowsReads(Files.readString(f)).map(a => s"${root.relativize(f)}: $a"))
+    assert(bad.isEmpty, "direct reads of a rows root (use IndexStore.read):\n" + bad.mkString("\n"))
+  }
 }

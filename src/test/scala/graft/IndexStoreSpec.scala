@@ -20,7 +20,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   override def afterAll(): Unit =
-    try tmpPath.foreach(p => graft.streaming.StreamOps.rmTree(new java.io.File(p)))
+    try (tmpPath ++ tmpSegRoot).foreach(p => graft.streaming.StreamOps.rmTree(new java.io.File(p)))
     finally super.afterAll()
 
   test("clustered layout: one directory per cell, all rows present") {
@@ -397,6 +397,160 @@ class IndexStoreSpec extends SparkSpec {
       val b = degraded.collect().map(_.getLong(0)).sorted.toSeq
       assert(a == b && a.nonEmpty, "join strategy must never change the result")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+  }
+
+  // --- the two-part layout: absorb segments over the clustered cells ---
+
+  /** The even half as a pristine store under a scratch dir (built once),
+    * and the odd half in the three absorb chunks `layoutCompactQuery` uses.
+    */
+  private lazy val halfStore: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-half").toString
+    tmpSegRoot = Some(p)
+    IndexStore.writeFrom(Tables.embeddings(spark, sfDir).filter($"vec_id" % 2 === 0), s"$p/half")
+    s"$p/half"
+  }
+  private var tmpSegRoot: Option[String] = None
+
+  private def chunks: Seq[org.apache.spark.sql.DataFrame] = {
+    val odd = Tables.embeddings(spark, sfDir).filter($"vec_id" % 2 === 1)
+    (0 until 3).map(i => odd.filter(($"vec_id" / 2).cast("long") % 3 === i))
+  }
+
+  /** A fresh clone of [[halfStore]] at `name`, removed after `body`. */
+  private def withClone(name: String)(body: String => Unit): Unit = {
+    val store = s"${new java.io.File(halfStore).getParent}/$name"
+    IndexStore.cloneStore(halfStore, store)
+    try body(store) finally graft.streaming.StreamOps.rmTree(new java.io.File(store))
+  }
+
+  /** The per-cell append absorb that preceded segments — the reference the
+    * segment layout must stay row-identical to.
+    */
+  private def absorbPerCell(store: String, vectors: org.apache.spark.sql.DataFrame): Unit =
+    VectorSearch.assignCells(vectors, graft.sources.IvfProbe.centroids(spark, store))
+      .repartition($"cell_id")
+      .write.mode("append").partitionBy("cell_id").parquet(s"$store/rows")
+
+  /** Every file under `dir`, with its length and mtime. */
+  private def tree(dir: String): Map[String, (Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+  }
+
+  /** Parquet data files under `dir` (no `_`/`.` bookkeeping files). */
+  private def dataFiles(dir: String): Set[String] =
+    tree(dir).keySet.filter { p =>
+      val n = new java.io.File(p).getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  private def content(store: String) =
+    IndexStore.read(spark, store)._1.select($"vec_id", $"cell_id", $"embedding", $"label")
+      .orderBy($"vec_id").collect().toSeq
+
+  test("job budget: absorb of a local batch lands one data file in 1 Spark job, rows/ untouched") {
+    withClone("budget") { store =>
+      val b = chunks.head
+      val batch = spark.createDataFrame(java.util.Arrays.asList(b.collect(): _*), b.schema)
+      graft.sources.IvfProbe.centroids(spark, store) // warm: the centroid memo
+      val cells = tree(s"$store/rows")
+      val before = dataFiles(store)
+      val jobs = jobsOf(IndexStore.absorb(spark, store, batch))
+      assert(jobs <= 1, s"absorb ran $jobs jobs")
+      assert(tree(s"$store/rows") == cells, "absorb must not touch the clustered cells")
+      val added = dataFiles(store) -- before
+      assert(added.size == 1 && added.forall(_.startsWith(s"$store/segments/")), added)
+    }
+  }
+
+  test("segments ≡ per-cell appends: read, tombstoned searchPruned and knnDeclarative row-identical") {
+    withClone("seg") { seg =>
+      withClone("ref") { ref =>
+        chunks.foreach { c =>
+          IndexStore.absorb(spark, seg, c)
+          absorbPerCell(ref, c)
+        }
+        assert(new java.io.File(s"$seg/segments").isDirectory && !new java.io.File(s"$ref/segments").exists())
+        assert(content(seg) == content(ref), "read must serve the cells ∪ every segment")
+        val q = Tables.embeddings(spark, sfDir).select($"vec_id".as("qid"), $"embedding".as("qvec"))
+        val live = Some(!Tables.deleted($"vec_id"))
+        def probed(store: String) =
+          IndexStore.searchPruned(spark, store, q, 5, 10, live).orderBy($"qid", $"rank").collect().toSeq
+        val p = probed(seg)
+        assert(p.nonEmpty && p == probed(ref), "tombstoned probed search")
+        def exact(store: String) =
+          VectorSearch.knnDeclarative(q, IndexStore.read(spark, store)._1.select($"vec_id", $"embedding"), 5)
+            .orderBy($"qid", $"rank").collect().toSeq
+        val e = exact(seg)
+        assert(e.size == 5 * 500 && e == exact(ref), "exact search over read")
+      }
+    }
+  }
+
+  test("compact folds segments into one file per touched cell, conserving every row") {
+    withClone("fold") { store =>
+      chunks.foreach(IndexStore.absorb(spark, store, _))
+      val before = content(store)
+      val touched = spark.read.parquet(s"$store/segments").select($"cell_id").distinct()
+        .as[Int].collect().toSet
+      val untouched = tree(s"$store/rows").filter { case (p, _) =>
+        !touched.exists(c => p.contains(s"/cell_id=$c/"))
+      }
+      val id = IndexStore.buildId(store)
+      IndexStore.compact(spark, store)
+      assert(!new java.io.File(s"$store/segments").exists(), "compact must remove segments/")
+      assert(content(store) == before, "compact must conserve every row")
+      touched.foreach { c =>
+        val n = dataFiles(s"$store/rows/cell_id=$c").size
+        assert(n == 1, s"cell $c holds $n files after the fold")
+      }
+      assert(untouched.toSet.subsetOf(tree(s"$store/rows").toSet), "untouched cells keep their files")
+      assert(IndexStore.buildId(store) == id, "a fold does not change the row set")
+      IndexStore.compact(spark, store) // nothing left to fold: a no-op
+      assert(content(store) == before)
+    }
+  }
+
+  test("writeFrom over an absorbed store leaves no segment rows") {
+    withClone("rewrite") { store =>
+      IndexStore.absorb(spark, store, chunks.head)
+      val even = Tables.embeddings(spark, sfDir).filter($"vec_id" % 2 === 0)
+      IndexStore.writeFrom(even, store)
+      assert(!new java.io.File(s"$store/segments").exists())
+      assert(IndexStore.read(spark, store)._1.count() == even.count())
+    }
+  }
+
+  test("absorbed store: searchPruned keeps the cells' INSET and pushes cell_id into the segment scan") {
+    withClone("plan") { store =>
+      chunks.foreach(IndexStore.absorb(spark, store, _))
+      val plan = IndexStore.searchPruned(spark, store, VectorSearch.querySet(spark, sfDir, 3))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("INSET"),
+        "expected an INSET partition filter on cell_id\n" + plan.take(4000))
+      assert("PushedFilters: \\[In\\(cell_id".r.findFirstIn(plan).nonEmpty,
+        "expected cell_id pushed into the segment scan\n" + plan.take(4000))
+    }
+  }
+
+  test("AnnProbeRewrite does not fire over an absorbed store, which then runs the flat query exact") {
+    withClone("ann") { store =>
+      val q = VectorSearch.querySet(spark, sfDir, 1).collect().head
+      def flat() = IndexStore.flatTopK(spark, store, q.getLong(0), q.getSeq[Float](1).toArray)
+      def cellFilters(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.references.exists(_.name == "cell_id") => f
+      }
+      assert(cellFilters(flat()).nonEmpty, "control: the rule fires on the never-absorbed store")
+      chunks.foreach(IndexStore.absorb(spark, store, _))
+      val absorbed = flat()
+      assert(cellFilters(absorbed).isEmpty, absorbed.queryExecution.optimizedPlan.toString)
+      val exact = graft.GraftSession.withConf(spark, "spark.graft.ann.rewrite.enabled", "false")(
+        flat().collect().toSeq)
+      assert(absorbed.collect().toSeq == exact)
+    }
   }
 
   test("layout compaction: fragmented absorb cells compact to the file target with rows conserved") {

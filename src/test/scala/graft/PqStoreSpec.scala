@@ -10,7 +10,7 @@ import graft.operators.VectorSearch
 class PqStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private val path = "/root/repo/data/pq_store_spec"
+  private val path = java.nio.file.Paths.get("data", "pq_store_spec").toAbsolutePath.toString
 
   override def afterAll(): Unit = {
     def rm(f: java.io.File): Unit = {

@@ -184,13 +184,13 @@ class StreamingSpec extends SparkSpec {
       e.filter($"vec_id" >= 200).coalesce(1).write
         .mode("append").parquet(s"$tmp/embeddings.parquet")
       val single = StreamOps.streamStoreAbsorb(spark, tmp)
-      val singleRows = spark.read.parquet(
-        IndexStore.defaultPath(tmp) + "_sab/rows")
+      val singleRows = IndexStore.read(spark,
+        IndexStore.defaultPath(tmp) + "_sab")._1
         .select($"vec_id", $"cell_id").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       val multi = StreamOps.streamStoreAbsorb(spark, tmp,
         options = Map("maxFilesPerTrigger" -> "1"))
-      val multiRows = spark.read.parquet(
-        IndexStore.defaultPath(tmp) + "_sab/rows")
+      val multiRows = IndexStore.read(spark,
+        IndexStore.defaultPath(tmp) + "_sab")._1
         .select($"vec_id", $"cell_id").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       assert(single.exceptAll(multi).isEmpty && multi.exceptAll(single).isEmpty,
         "post-stream search result must be identical under any batch split")
@@ -203,7 +203,7 @@ class StreamingSpec extends SparkSpec {
       IndexStore.cloneStore(half, batchPath)
       IndexStore.absorb(spark, batchPath,
         Tables.embeddings(spark, tmp).filter($"vec_id" % 2 === 1))
-      val batchRows = spark.read.parquet(s"$batchPath/rows")
+      val batchRows = IndexStore.read(spark, batchPath)._1
         .select($"vec_id", $"cell_id").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       assert(batchRows == multiRows, "stream absorb must equal the one-shot batch absorb")
     } finally {
@@ -266,14 +266,14 @@ class StreamingSpec extends SparkSpec {
     val odds = Tables.embeddings(spark, sfDir).filter($"vec_id" % 2 === 1)
     val expected = VectorSearch.assignCells(odds, centroids)
       .select($"vec_id", $"cell_id").collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    val got = spark.read.parquet(s"$work/rows")
+    val got = IndexStore.read(spark, work)._1
       .filter($"vec_id" % 2 === 1)
       .select($"vec_id", $"cell_id").collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(got.size == expected.size, "every odd row absorbed exactly once")
     assert(got == expected, "absorbed cell assignment must equal assignCells against fixed centroids")
     // and the even half is untouched by the stream
-    val evenN = spark.read.parquet(s"$work/rows").filter($"vec_id" % 2 === 0).count()
-    val halfN = spark.read.parquet(s"${IndexStore.corpusHalfPath(sfDir)}/rows").count()
+    val evenN = IndexStore.read(spark, work)._1.filter($"vec_id" % 2 === 0).count()
+    val halfN = IndexStore.read(spark, IndexStore.corpusHalfPath(sfDir))._1.count()
     assert(evenN == halfN, "pristine half rows pass through the clone unchanged")
   }
 
