@@ -304,7 +304,8 @@ object VectorSearch {
     * [[knnDeclarative]]. The greedy loop then runs per-query over ≤
     * poolSize rows INSIDE a `mapGroups` task (poolSize² dot products on
     * ≤ poolSize×dim floats — constant work per query, no shuffle beyond
-    * the pool's own groupBy, no driver participation).
+    * the pool's own groupBy, no driver participation). The pool's vectors
+    * are typed `Array[Float]` so `dot` indexes them in O(1).
     */
   def mmrRerank(spark: SparkSession, dir: String, k: Int = 5,
                 poolSize: Int = 30, lambdaRel: Double = 0.7,
@@ -316,10 +317,10 @@ object VectorSearch {
       .join(base, "vec_id")
       .join(broadcast(querySet(spark, dir, nq)), "qid")
       .select(col("qid").as[Long], col("vec_id").as[Long],
-        col("embedding").as[Seq[Float]], col("qvec").as[Seq[Float]])
+        col("embedding").as[Array[Float]], col("qvec").as[Array[Float]])
     pool.groupByKey(_._1).flatMapGroups { (qid, it) =>
       val cand = it.toArray
-      def dot(a: Seq[Float], b: Seq[Float]): Double = {
+      def dot(a: Array[Float], b: Array[Float]): Double = {
         var s = 0.0; var i = 0
         while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
         s
@@ -501,10 +502,17 @@ object VectorSearch {
     * dim×nlist loop is genuinely imperative hot-path work (the same
     * boundary FAISS crosses into C++), and doing it per-row map-side means
     * the assignment needs NO shuffle at any data scale.
+    *
+    * The input is declared `Array[Float]`, as every Scala-side vector
+    * kernel's is: Spark's encoder then copies the row's floats once and
+    * `emb(i)` is O(1). A `Seq[Float]` parameter arrives as an
+    * `immutable.List`, so each `emb(i)` walks `i` cells and one row costs
+    * nlist·dim²/2 steps — over a local batch (absorb) that cost lands in
+    * planning on the driver, where `ConvertToLocalRelation` folds the UDF.
     */
   private def nearestCellUdf(vectors: DataFrame, centroids: Array[Array[Double]]) = {
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
-    udf((emb: Seq[Float]) => {
+    udf((emb: Array[Float]) => {
       val cs = bc.value
       var best = 0; var bestD = Double.MaxValue
       var c = 0
@@ -847,12 +855,14 @@ case class VecSumBuf(sum: Array[Double], n: Long)
   * (SURVEY.md §7.3). Partial buffers are (dim doubles, count) per
   * executor, so the per-iteration shuffle is ≤ partitions × nlist tiny
   * rows — the treeAggregate shape spark.ml's KMeans uses, not a shuffle
-  * of the input.
+  * of the input. The input type is `Array[Float]` (the vector-kernel
+  * contract of `nearestCellUdf`): a `Seq[Float]` input is decoded into an
+  * `immutable.List`, and `a(i)` in `reduce` would walk the list.
   */
 class VecMeanAgg(dim: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[Seq[Float], VecSumBuf, Seq[Double]] {
+    extends org.apache.spark.sql.expressions.Aggregator[Array[Float], VecSumBuf, Seq[Double]] {
   def zero: VecSumBuf = VecSumBuf(new Array[Double](dim), 0L)
-  def reduce(b: VecSumBuf, a: Seq[Float]): VecSumBuf = {
+  def reduce(b: VecSumBuf, a: Array[Float]): VecSumBuf = {
     var i = 0; while (i < dim) { b.sum(i) += a(i); i += 1 }
     VecSumBuf(b.sum, b.n + 1)
   }

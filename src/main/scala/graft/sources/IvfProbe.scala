@@ -80,9 +80,11 @@ object IvfProbe {
   /** `ARRAY<INT>` of the `nprobe` cells nearest to `qvec`, nearest first;
     * the ≤ nlist·dim floats ride in the expression, and over a local query
     * batch the optimizer folds it into planning (`ConvertToLocalRelation`).
+    * `qvec` arrives as `Array[Float]`, the vector-kernel input contract
+    * (`VectorSearch.nearestCellUdf`); a NULL query arrives as `null`.
     */
   def cells(cents: Centroids, nprobe: Int)(qvec: Column): Column =
-    udf((q: Seq[Float]) => cents.nearest(if (q == null) null else q.toArray, nprobe))
+    udf((q: Array[Float]) => cents.nearest(q, nprobe))
       .apply(qvec)
 
   /** `(qid, qvec, cell_id)`: one row per probed cell of each query. */

@@ -220,7 +220,10 @@ object PqStore {
   /** Mean squared quantization error of a codebook set over a (rotated)
     * residual frame — the k-means objective the rotation selection
     * minimizes: Σ_s min_c ‖r_s − c‖², summed map-side per row against the
-    * broadcast codebooks, one distributed agg scalar.
+    * broadcast codebooks, one distributed agg scalar. Like every PQ UDF
+    * here it takes the residual as `Array[Float]`, the vector-kernel input
+    * contract (`VectorSearch.nearestCellUdf`): a `Seq[Float]` arrives as an
+    * `immutable.List`, whose `res(i)` walks the list.
     */
   private[graft] def quantError(rotRes: DataFrame, codebooks: DataFrame): Double = {
     val books: Array[Array[Array[Double]]] =
@@ -229,7 +232,7 @@ object PqStore {
         .groupBy(_._1).toArray.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3))
     val bc = rotRes.sparkSession.sparkContext.broadcast(books)
-    val errUdf = udf((res: Seq[Float]) => {
+    val errUdf = udf((res: Array[Float]) => {
       val bs = bc.value
       var total = 0.0
       var s = 0
@@ -335,10 +338,12 @@ object PqStore {
   /** Apply R to a residual frame map-side: broadcast 64×64 matrix, one
     * batched matmul UDF (the encode-UDF convention — a native expression
     * buys nothing here because the output feeds the argmin UDF anyway).
+    * The residual arrives as `Array[Float]`: the loop reads it dim² times
+    * per row, which over a `Seq[Float]` (a decoded `List`) cost O(dim³).
     */
   private[graft] def rotateResiduals(residuals: DataFrame, r: Array[Array[Double]]): DataFrame = {
     val bc = residuals.sparkSession.sparkContext.broadcast(r)
-    val rotUdf = udf((res: Seq[Float]) => {
+    val rotUdf = udf((res: Array[Float]) => {
       val m = bc.value
       val n = m.length
       Array.tabulate(n) { i =>
@@ -346,7 +351,7 @@ object PqStore {
         var acc = 0.0; var j = 0
         while (j < n) { acc += res(j).toDouble * row(j); j += 1 }
         acc.toFloat
-      }.toSeq
+      }
     })
     residuals.select(col("vec_id"), col("cell_id"),
       rotUdf(col("residual")).as("residual"))
@@ -452,7 +457,8 @@ object PqStore {
   }
 
   /** [[encode]] over an already-residualized frame — [[writeFrom]] shares
-    * one checkpointed residual pass between train and encode.
+    * one checkpointed residual pass between train and encode. The encode
+    * UDF takes the residual as `Array[Float]` (see [[quantError]]).
     */
   private def encodeResiduals(residuals: DataFrame, codebooks: DataFrame): DataFrame = {
     // m × k × d dense codebook matrix, ordered by (sub, code)
@@ -462,7 +468,7 @@ object PqStore {
         .groupBy(_._1).toArray.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3))
     val bc = residuals.sparkSession.sparkContext.broadcast(books)
-    val encodeUdf = udf((res: Seq[Float]) => {
+    val encodeUdf = udf((res: Array[Float]) => {
       val bs = bc.value
       Array.tabulate(bs.length) { s =>
         val cents = bs(s)
@@ -478,7 +484,7 @@ object PqStore {
           c += 1
         }
         best
-      }.toSeq
+      }
     })
     residuals.select(col("vec_id"), col("cell_id"),
       posexplode(encodeUdf(col("residual"))).as(Seq("sub", "code")))
