@@ -38,7 +38,7 @@ import graft.expressions.{DotProductFloat, L2DistanceSqFloat}
   *     flat scans over the store layout
   *   spark.graft.ann.rewrite.nprobe   (default 10)    — the recall knob
   *
-  * Cell ranking calls the same probe as `IndexStore.scoreProbed`
+  * Cell ranking calls the same probe as `IndexStore.searchPruned`
   * ([[graft.sources.IvfProbe]]), so the rewritten query is row-identical
   * to `IndexStore.searchPruned` — `knn_rewrite` replays it against the
   * SAME DuckDB oracle SQL as `knn_ivf`.

@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.sources.IvfProbe
 
 /** The engine's whole-operator Catalyst extension: an exact kNN join as a
   * first-class plan node (`index.search(q, k)` batch shape,
@@ -20,30 +22,44 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *      size k (so a partition contributes at most nq·k candidates, not
   *      its row count);
   *   3. the per-partition winners (≤ partitions·nq·k tiny rows) are merged
-  *      into the global top-k by a [[TopK]] node over this one
-  *      ([[KnnJoinApi.knnJoin]]), hash-partitioned by qid: the query batch
-  *      runs to the reference's 30 000, so the merge stays distributed.
+  *      into the global top-k by a [[TopK]] node over this one: hash-
+  *      partitioned by qid in [[KnnJoinApi.knnJoin]], whose query batch
+  *      runs to the reference's 30 000, in one partition for a probed
+  *      search's bounded batch.
+  *
+  * Probed mode (`probe = Some((centroids, nprobe))`, the IVF store's
+  * search): the base side also carries each row's `cell_id`, and a row is
+  * scored only against the queries whose [[IvfProbe.Centroids.nearest]]
+  * cells hold it ([[IvfProbe.byCell]], which also gives the caller its
+  * static `cell_id` IN-list). The broadcast is the nq query vectors, not
+  * nq·nprobe exploded (qid, qvec, cell_id) rows, and no joined row
+  * carrying a query and an embedding copy is built.
   *
   * Contrast with the declarative form (crossJoin → TopK): same results
-  * (same (sim desc, vec_id) total order), but scoring is fused into the
-  * scan pass and no scored row is materialized as a Spark row — only heap
-  * winners reach the merge.
+  * (same [[graft.operators.VectorSearch.rankOrder]]: sim desc with NaN
+  * largest, −0.0 = 0.0 and NULL last, then vec_id), but scoring is fused
+  * into the scan pass and no scored row is materialized as a Spark row —
+  * only heap winners reach the merge. A NULL query or embedding scores
+  * NULL, as `dot` does. A row with a NULL vec_id is never a candidate,
+  * and with `excludeSelf` neither is a query with a NULL qid, as
+  * `vec_id <> qid` drops them.
   *
   * Left child: queries (qid BIGINT, qvec ARRAY<FLOAT>).
-  * Right child: base (vec_id BIGINT, embedding ARRAY<FLOAT>).
+  * Right child: base (vec_id BIGINT, embedding ARRAY<FLOAT>[, cell_id INT]).
   * Output: (qid BIGINT, vec_id BIGINT, sim DOUBLE): each base partition's
   * best k per query, unranked.
   */
 case class KnnJoin(left: LogicalPlan, right: LogicalPlan, k: Int,
                    excludeSelf: Boolean,
+                   probe: Option[(IvfProbe.Centroids, Int)] = None,
                    // constructor param (not a body val): withNewChildren's
                    // copy() must preserve the output exprId or downstream
                    // references dangle
                    simAttr: AttributeReference =
-                     AttributeReference("sim", DoubleType, nullable = false)())
+                     AttributeReference("sim", DoubleType)())
     extends BinaryNode {
-  override def output: Seq[Attribute] =
-    Seq(left.output.head, right.output.head, simAttr)
+  override def output: Seq[Attribute] = Seq(left.output.head, right.output.head,
+    simAttr.withNullability(left.output(1).nullable || right.output(1).nullable))
   // Declare we consume every child column — keeps ColumnPruning from
   // stripping the embedding arrays out from under an "expressionless" node.
   override def references: AttributeSet = AttributeSet(left.output ++ right.output)
@@ -55,13 +71,15 @@ case class KnnJoin(left: LogicalPlan, right: LogicalPlan, k: Int,
 object KnnJoinStrategy extends Strategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: KnnJoin =>
-      KnnJoinExec(planLater(j.left), planLater(j.right), j.k, j.excludeSelf, j.output) :: Nil
+      KnnJoinExec(planLater(j.left), planLater(j.right), j.k, j.excludeSelf, j.probe,
+        j.output) :: Nil
     case _ => Nil
   }
 }
 
 case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
-                       excludeSelf: Boolean, output: Seq[Attribute])
+                       excludeSelf: Boolean, probe: Option[(IvfProbe.Centroids, Int)],
+                       output: Seq[Attribute])
     extends BinaryExecNode {
   override def left: SparkPlan = queries
   override def right: SparkPlan = base
@@ -70,87 +88,73 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
   override def producedAttributes: AttributeSet = AttributeSet(Seq(output.last))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val qRows = queries.executeCollect().map { r =>
-      (r.getLong(0), r.getArray(1).toFloatArray())
-    }
-    val bc = sparkContext.broadcast(qRows)
-    val kk = k
+    val qRows = queries.executeCollect()
+    val qidNull = qRows.map(_.isNullAt(0))
+    val qids = qRows.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+    val qvecs = qRows.map(r => if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
     val self = excludeSelf
+    // the query indices a row is scored against: every query, or (with a
+    // probe) those probing the row's cell; a NULL qid never passes
+    // `vec_id <> qid`
+    def scored(qis: Array[Int]): Array[Int] = qis.filter(i => !(self && qidNull(i)))
+    val all = scored(qids.indices.toArray)
+    val byCell = probe.map { case (cents, nprobe) =>
+      IvfProbe.byCell(cents, qvecs, nprobe).map { case (c, qis) => c -> scored(qis) }
+    }
+    val bc = sparkContext.broadcast((qids, qidNull, qvecs, all, byCell))
+    val kk = k
 
-    // Per-partition bounded top-k, all-primitive hot path. The
-    // previous form probed a PriorityQueue[(Double, Long)] per
-    // (row × query) — nq·|partition| boxed-tuple allocations and ordering
-    // calls dominated the scan (allocation-bound, not FLOP-bound, at
-    // nq=5000). Here each query keeps parallel double[]/long[] slots with
-    // a cached worst index: the reject test is two primitive compares,
-    // an accepted candidate (rare once warm: k of |base|) pays an O(k)
-    // rescan. The row's embedding is ALSO materialized once per row —
-    // `getFloat` per (query × dim) re-read the unsafe buffer nq times.
-    // Acceptance rule mirrors VectorSearch.rankOrder: better ⇔ s > worst's
-    // sim, or equal sim and smaller vec_id — results are bit-identical.
+    // Per-partition bounded top-k, all-primitive hot path: a query keeps
+    // parallel slots with a cached worst index ([[KnnJoinExec.Best]]), so
+    // a reject is one compare and an accepted candidate (rare once warm:
+    // k of |base|) pays an O(k) rescan. The row's embedding is
+    // materialized once per row — `getFloat` per (query × dim) re-read
+    // the unsafe buffer nq times.
     base.execute().mapPartitions { it =>
-      val qs = bc.value
-      val nq = qs.length
-      val sims = Array.ofDim[Double](nq, kk)
-      val ids = Array.ofDim[Long](nq, kk)
-      val filled = new Array[Int](nq)
-      val worstAt = new Array[Int](nq)
+      val (ids, idNull, qs, every, probed) = bc.value
+      val cells = probed.orNull
+      val best = Array.fill(qs.length)(new KnnJoinExec.Best(kk))
+      val none = Array.emptyIntArray
       var embBuf = new Array[Float](0)
       it.foreach { row =>
-        val vecId = row.getLong(0)
-        val emb = row.getArray(1)
-        val m = emb.numElements()
-        if (embBuf.length < m) embBuf = new Array[Float](m)
-        var d = 0
-        while (d < m) { embBuf(d) = emb.getFloat(d); d += 1 }
-        var qi = 0
-        while (qi < nq) {
-          val q = qs(qi)
-          val qid = q._1
-          if (!(self && vecId == qid)) {
-            val qvec = q._2
-            var s = 0.0
-            var i = 0
-            // Equal-dim precondition, enforced: a truncated dot product is
-            // not a similarity (mirrors DotProductFloat's fail-fast).
-            val n = graft.expressions.VectorKernels.checkDims(qvec.length, m)
-            while (i < n) { s += qvec(i).toDouble * embBuf(i).toDouble; i += 1 }
-            val f = filled(qi)
-            if (f < kk) {
-              sims(qi)(f) = s; ids(qi)(f) = vecId
-              filled(qi) = f + 1
-              if (f + 1 == kk) { // slots full: locate the worst once
-                var w = 0; var j = 1
-                while (j < kk) {
-                  if (sims(qi)(j) < sims(qi)(w) ||
-                      (sims(qi)(j) == sims(qi)(w) && ids(qi)(j) > ids(qi)(w))) w = j
-                  j += 1
-                }
-                worstAt(qi) = w
-              }
-            } else {
-              val w = worstAt(qi)
-              val ws = sims(qi)(w)
-              if (s > ws || (s == ws && vecId < ids(qi)(w))) {
-                sims(qi)(w) = s; ids(qi)(w) = vecId
-                var nw = 0; var j = 1
-                while (j < kk) {
-                  if (sims(qi)(j) < sims(qi)(nw) ||
-                      (sims(qi)(j) == sims(qi)(nw) && ids(qi)(j) > ids(qi)(nw))) nw = j
-                  j += 1
-                }
-                worstAt(qi) = nw
+        val targets =
+          if (cells == null) every
+          else if (row.isNullAt(2)) none
+          else cells.getOrElse(row.getInt(2), none)
+        if (targets.length > 0 && !row.isNullAt(0)) {
+          val vecId = row.getLong(0)
+          val emb = if (row.isNullAt(1)) null else row.getArray(1)
+          val m = if (emb == null) 0 else emb.numElements()
+          if (embBuf.length < m) embBuf = new Array[Float](m)
+          var d = 0
+          while (d < m) { embBuf(d) = emb.getFloat(d); d += 1 }
+          var t = 0
+          while (t < targets.length) {
+            val qi = targets(t)
+            if (!(self && vecId == ids(qi))) {
+              val qvec = qs(qi)
+              if (qvec == null || emb == null) best(qi).offer(0.0, isNull = true, vecId)
+              else {
+                // Equal-dim precondition, enforced: a truncated dot product
+                // is not a similarity (mirrors DotProductFloat's fail-fast).
+                val n = graft.expressions.VectorKernels.checkDims(qvec.length, m)
+                var s = 0.0
+                var i = 0
+                while (i < n) { s += qvec(i).toDouble * embBuf(i).toDouble; i += 1 }
+                best(qi).offer(s, isNull = false, vecId)
               }
             }
+            t += 1
           }
-          qi += 1
         }
       }
       val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
         LongType, LongType, DoubleType))
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-        Iterator.tabulate(filled(qi)) { j =>
-          proj(new GenericInternalRow(Array[Any](qid, ids(qi)(j), sims(qi)(j))))
+      best.iterator.zipWithIndex.flatMap { case (b, qi) =>
+        val qid = if (idNull(qi)) null else ids(qi)
+        Iterator.tabulate(b.filled) { j =>
+          proj(new GenericInternalRow(Array[Any](qid, b.ids(j),
+            if (b.nulls(j)) null else b.sims(j))))
         }
       }
     }
@@ -161,18 +165,69 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     copy(queries = newLeft, base = newRight)
 }
 
-/** DataFrame-level entry point for the custom operator. */
+object KnnJoinExec {
+  /** One query's best `k` (sim, vec_id) candidates so far, in
+    * [[graft.operators.VectorSearch.rankOrder]]: sim desc as Spark orders
+    * doubles (`SQLOrderingUtil.compareDoubles`: NaN largest, NaN = NaN,
+    * −0.0 = 0.0), a NULL sim after every other, ties to the lower vec_id.
+    * Parallel primitive slots with the worst slot's index cached. Slot
+    * order is not rank order.
+    */
+  final class Best(k: Int) {
+    val sims = new Array[Double](k)
+    val nulls = new Array[Boolean](k)
+    val ids = new Array[Long](k)
+    var filled = 0
+    private var worst = 0
+
+    def offer(s: Double, isNull: Boolean, id: Long): Unit =
+      if (filled < k) {
+        put(filled, s, isNull, id)
+        filled += 1
+        if (filled == k) worst = worstSlot()
+      } else if (k > 0 && beats(s, isNull, id, worst)) {
+        put(worst, s, isNull, id)
+        worst = worstSlot()
+      }
+
+    private def put(j: Int, s: Double, isNull: Boolean, id: Long): Unit = {
+      sims(j) = s; nulls(j) = isNull; ids(j) = id
+    }
+
+    /** Does (s, isNull, id) rank before slot `j`? */
+    private def beats(s: Double, isNull: Boolean, id: Long, j: Int): Boolean = {
+      val c =
+        if (isNull || nulls(j)) java.lang.Boolean.compare(nulls(j), isNull)
+        else SQLOrderingUtil.compareDoubles(s, sims(j))
+      c > 0 || (c == 0 && id < ids(j))
+    }
+
+    private def worstSlot(): Int = {
+      var w = 0; var j = 1
+      while (j < filled) { if (beats(sims(w), nulls(w), ids(w), j)) w = j; j += 1 }
+      w
+    }
+  }
+}
+
+/** DataFrame-level entry points for the custom operator. */
 object KnnJoinApi {
   /** queriesDF: (qid BIGINT, qvec ARRAY<FLOAT>); baseDF: (vec_id BIGINT,
     * embedding ARRAY<FLOAT>). Returns each query's global top-k as
     * unranked (qid, vec_id, sim): [[TopK]] merges the partition winners.
     */
   def knnJoin(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame,
-              k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val winners = GraftColumnBridge.ofRows(spark,
+              k: Int, excludeSelf: Boolean = true): DataFrame =
+    TopK(winners(spark, queriesDF, baseDF, k, excludeSelf, None), "qid",
+      graft.operators.VectorSearch.rankOrder("sim", "vec_id"), k, single = false).drop("rank")
+
+  /** The [[KnnJoin]] node itself: each base partition's best `k` per
+    * query, unranked. With a `probe`, `baseDF` also carries `cell_id` and
+    * a row meets only the queries that probe its cell.
+    */
+  def winners(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame, k: Int,
+              excludeSelf: Boolean, probe: Option[(IvfProbe.Centroids, Int)]): DataFrame =
+    GraftColumnBridge.ofRows(spark,
       KnnJoin(GraftColumnBridge.analyzed(queriesDF),
-        GraftColumnBridge.analyzed(baseDF), k, excludeSelf))
-    TopK(winners, "qid", graft.operators.VectorSearch.rankOrder("sim", "vec_id"), k,
-      single = false).drop("rank")
-  }
+        GraftColumnBridge.analyzed(baseDF), k, excludeSelf, probe))
 }

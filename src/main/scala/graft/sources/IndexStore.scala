@@ -12,7 +12,7 @@ import graft.functions.VectorFunctions._
   * This is what "vector index" means on a lake at 100 TB: not a mutable
   * in-memory structure (`index.add`, `FAISS/PlainDemo/pipeline.py:321`) but
   * a partitioned materialization whose directory layout IS the coarse
-  * quantizer — a probed query equi-joins on `cell_id` and the scan planner
+  * quantizer — a probed query reads only its cells' rows: the scan planner
   * prunes to nprobe/nlist of the files (`PartitionFilters` in the plan),
   * the same data-skipping FAISS gets from its inverted lists.
   *
@@ -348,43 +348,47 @@ object IndexStore {
     * inlined as a literal IN-list and the parquet source prunes unprobed
     * cells' directories at planning time (`PartitionFilters` in the scan).
     * At 100 TB this is the difference between scanning nprobe/nlist of the
-    * files and scanning all of them. The rank tail is the only window.
+    * files and scanning all of them. The pruned rows are scored in a probed
+    * [[graft.plans.KnnJoin]] and ranked by one [[graft.plans.TopK]]: over a
+    * local query batch, one Spark job with no exchange for AQE to re-plan.
+    * `rowPred`, an optional predicate over the stored rows' columns (the
+    * Milvus `expr` surface over the probed path), filters the rows before
+    * they are scored, so k fills from the rows it admits.
     */
   def searchPruned(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int = 5, nprobe: Int = 10,
-                   rowPred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // An optional scalar predicate on the stored rows (the Milvus `expr`
-    // surface over the probed path): applied pre-rank, and Catalyst
-    // pushes it through the score join into the pruned scan.
-    VectorSearch.rankTopK(rowPred.foldLeft(scoreProbed(spark, path, queries, nprobe))(_.filter(_)), k)
-  }
+                   rowPred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    probedTopK(spark, path, queries, k, nprobe)(rows => rowPred.foldLeft(rows)(_.filter(_)))
 
-  /** Shared probe+score front half of every persisted-index query: probe
-    * map-side ([[IvfProbe]]), inline the probed cells as a literal IN-list
-    * (static `PartitionFilters`), equi-join the pruned rows to the exploded
-    * probe and score — no window, no shuffle. Callers choose the tail:
-    * top-k ([[searchPruned]]) or a radius filter ([[rangeSearchPruned]]).
+  /** Top-`k` of the probed rows that `live` keeps, per query. The batch is
+    * collected once, into a local relation (so [[graft.plans.KnnJoinExec]]
+    * reads it back without a job, even for a streaming micro-batch); its
+    * probe ([[IvfProbe.byCell]]) gives the static IN-list.
     */
-  private def scoreProbed(spark: SparkSession, path: String, queries: DataFrame,
-                          nprobe: Int): DataFrame = {
+  private def probedTopK(spark: SparkSession, path: String, queries: DataFrame,
+                         k: Int, nprobe: Int)(live: DataFrame => DataFrame): DataFrame = {
+    val batch = queries.select(col("qid"), col("qvec"))
+    val rows = batch.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema)
     val cents = IvfProbe.centroids(spark, path)
-    val cells = IvfProbe.probedCells(queries, cents, nprobe)
-    read(spark, path)._1.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
-      .join(broadcast(IvfProbe.probed(queries, cents, nprobe)), "cell_id")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", dot(col("qvec"), col("embedding")))
+    val qvecs = rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    val cells = IvfProbe.byCell(cents, qvecs, nprobe).keys.toSeq.sorted
+    val probed = live(read(spark, path)._1.filter(col("cell_id").isin(cells: _*)))
+      .select(col("vec_id"), col("embedding"), col("cell_id"))
+    VectorSearch.rankTopK(graft.plans.KnnJoinApi.winners(spark, local, probed, k,
+      excludeSelf = true, Some((cents, nprobe))), k)
   }
 
   /** Tombstone-aware probed search — DELETE without rebuild. FAISS
     * `remove_ids` (`FAISS/PlainDemo/pipeline.py:110-112`) mutates its
     * inverted lists eagerly; a lake store cannot, and doesn't need to:
     * deletes accumulate in a (tiny) tombstone set that broadcast
-    * anti-joins the scored candidates at query time, UNDER the same
-    * static partition pruning — k then fills from live rows only (the
-    * anti-join sits below the top-k, never post-filtering a
-    * short top-k). Compaction/rebuild becomes an offline maintenance
-    * choice instead of a write-path blocker. Tombstones are the delete
-    * set [[graft.Tables.deleted]].
+    * anti-joins the probed rows at query time, UNDER the same static
+    * partition pruning — k then fills from live rows only (the anti-join
+    * sits below the scoring, never post-filtering a short top-k).
+    * Compaction/rebuild becomes an offline maintenance choice instead of a
+    * write-path blocker. Tombstones are the delete set
+    * [[graft.Tables.deleted]].
     */
   def searchTombstoned(spark: SparkSession, dir: String,
                        k: Int = 5, nprobe: Int = 10): DataFrame = {
@@ -392,9 +396,8 @@ object IndexStore {
     // Counted, not assumed (graft.Tables.boundedBroadcast): past the
     // inline bound the anti-join degrades to a shuffle instead of forcing
     // a driver-side multi-GB hash build on a bulk delete.
-    val scored = scoreProbed(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, 5), nprobe)
-      .join(graft.Tables.boundedBroadcast(tombstones), Seq("vec_id"), "left_anti")
-    VectorSearch.rankTopK(scored, k)
+    probedTopK(spark, ensured(spark, dir), VectorSearch.querySet(spark, dir, 5), k, nprobe)(
+      _.join(graft.Tables.boundedBroadcast(tombstones), Seq("vec_id"), "left_anti"))
   }
 
   /** Self-evaluating recall report — the quality metric the reference's
@@ -687,12 +690,16 @@ object IndexStore {
     * probed cells are missed — the same nprobe recall dial.
     */
   def rangeSearchPruned(spark: SparkSession, path: String, queries: DataFrame,
-                        thresholdMicro: Long = 200000L, nprobe: Int = 10): DataFrame =
-    scoreProbed(spark, path, queries, nprobe)
-      .withColumn("sim_micro", micro(col("sim")))
+                        thresholdMicro: Long = 200000L, nprobe: Int = 10): DataFrame = {
+    val cents = IvfProbe.centroids(spark, path)
+    val cells = IvfProbe.probedCells(queries, cents, nprobe)
+    read(spark, path)._1.filter(col("cell_id").isin(cells.toIndexedSeq: _*))
+      .join(broadcast(IvfProbe.probed(queries, cents, nprobe)), "cell_id")
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"), micro(dot(col("qvec"), col("embedding"))).as("sim_micro"))
       .filter(col("sim_micro") >= thresholdMicro)
-      .select(col("qid"), col("vec_id"), col("sim_micro"))
       .orderBy(col("qid"), col("sim_micro").desc, col("vec_id"))
+  }
 
   /** Range search over the persisted index as a named query. */
   def rangeQuery(spark: SparkSession, dir: String): DataFrame = {

@@ -132,10 +132,15 @@ class IndexStoreSpec extends SparkSpec {
   test("job budget: one searchPruned call over a local query batch runs at most 2 Spark jobs") {
     val (store, q) = servingBatch()
     IndexStore.searchPruned(spark, store, q).collect() // warm: centroid memo, file listing
-    val jobs = jobsOf(IndexStore.searchPruned(spark, store, q).collect())
+    val df = IndexStore.searchPruned(spark, store, q)
+    val jobs = jobsOf(df.collect())
     // 11 with the cross-join + window probe run twice, 5 with the rank
-    // window and global sort; left: the probe's broadcast and the TopK job
-    assert(jobs <= 2, s"searchPruned ran $jobs jobs")
+    // window and global sort, 2 with the exploded probe's broadcast; left:
+    // the probed KnnJoin, whose TopK merge runs inside the collecting job.
+    // (The name keeps the former budget of 2 so the test's id is stable.)
+    assert(jobs <= 1, s"searchPruned ran $jobs jobs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange") && !plan.contains("AdaptiveSparkPlan"), plan)
   }
 
   test("job budget: one knnDeclarative call over a local query batch runs at most 2 Spark jobs") {

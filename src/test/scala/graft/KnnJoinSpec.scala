@@ -78,6 +78,39 @@ class KnnJoinSpec extends SparkSpec {
     assert(top.forall(r => math.abs(r.getDouble(2) - 1.0) < 1e-5))
   }
 
+  /** A base whose first rows in every partition are its highest ids, so
+    * a heap that keeps its first k rows shows.
+    */
+  private def descBase = Tables.embeddings(spark, sfDir)
+    .select($"vec_id", $"embedding").orderBy($"vec_id".desc)
+
+  private def rankedBoth(q: org.apache.spark.sql.DataFrame) = {
+    val base = descBase
+    (VectorSearch.rankTopK(KnnJoinApi.knnJoin(spark, q, base, 5), 5).collect().toSeq,
+      VectorSearch.knnDeclarative(q, base, 5).collect().toSeq)
+  }
+
+  test("a NaN query ranks its NaN sims by vec_id, as knnDeclarative does") {
+    val real = VectorSearch.querySet(spark, sfDir, 2).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    val q = ((7L, Seq.fill(real.head._2.length)(Float.NaN)) +: real).toDF("qid", "qvec")
+    val (phys, decl) = rankedBoth(q)
+    assert(decl.size == 15)
+    assert(decl.filter(_.getLong(0) == 7L).map(_.getLong(1)) == Seq(0L, 1L, 2L, 3L, 4L))
+    assert(phys == decl, s"NaN query diverged: $phys vs $decl")
+  }
+
+  test("a NULL query gets NULL sims ranked by vec_id, as knnDeclarative does") {
+    val real = VectorSearch.querySet(spark, sfDir, 2).collect()
+      .map(r => (r.getLong(0), Option(r.getSeq[Float](1)))).toSeq
+    val q = ((-1L, Option.empty[Seq[Float]]) +: real).toDF("qid", "qvec")
+    val (phys, decl) = rankedBoth(q)
+    assert(decl.size == 15)
+    assert(decl.filter(_.getLong(0) == -1L).map(_.getLong(1)) == Seq(0L, 1L, 2L, 3L, 4L))
+    assert(decl.filter(_.getLong(0) == -1L).forall(_.isNullAt(3)))
+    assert(phys == decl, s"NULL query diverged: $phys vs $decl")
+  }
+
   // --- batch scale: the reference searches query batches up to 30 000
   // (FAISS/PlainDemo/pipeline.py:339-340); nq=5 hides the query-side scale
   // axis. At nq=5000 × the sf0.1 base the declarative form pushes 10M

@@ -150,4 +150,20 @@ class TopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(outer.outputPartitioning == SinglePartition)
     assert(inner.outputPartitioning.isInstanceOf[HashPartitioning], inner.outputPartitioning)
   }
+
+  test("SingleTopKOrder drops the (key, rank) sort over a one-partition TopK, and only that sort") {
+    val scored = emb.repartition(4)
+      .select($"vec_id", ($"vec_id" % 7).as("qid"), ($"vec_id" * 13 % 101).cast("double").as("sim"))
+    val ref = windowTopK(scored, 3, "sim", simCols).collect().toSeq
+    def sorts(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
+    }
+    val ranked = VectorSearch.rankTopK(scored, 3, "sim", simCols)
+    assert(ranked.collect().toSeq == ref)
+    assert(sorts(ranked).isEmpty, ranked.queryExecution.optimizedPlan)
+    val byId = ranked.orderBy($"vec_id")
+    assert(sorts(byId).nonEmpty && byId.collect().toSeq == ref.sortBy(_.getLong(1)))
+    val hashed = VectorSearch.rankTopK(scored, 3, "sim", simCols, single = false)
+    assert(sorts(hashed).nonEmpty && hashed.collect().toSeq == ref)
+  }
 }
