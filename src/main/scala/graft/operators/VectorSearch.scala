@@ -98,15 +98,16 @@ object VectorSearch {
   /** The result contract: per `key`, the first `k` rows in [[rankOrder]],
     * numbered 1..k in `rank`, the kept columns `cols`, ordered by (key,
     * rank). One [[graft.plans.TopK]] node. With `single` (a bounded query
-    * batch as the keys) its output is already in that order on one
-    * partition, so the `orderBy` plans no exchange; an ingest-sized key
-    * side passes `single = false` and keeps the merge distributed.
+    * batch as the keys) its one merge partition already emits that order,
+    * so no sort is added; an ingest-sized key side passes `single = false`,
+    * keeps the merge distributed and is sorted after it.
     */
   private[graft] def rankTopK(scored: DataFrame, k: Int, score: String, cols: Seq[Column],
                               key: String = "qid", id: String = "vec_id",
-                              single: Boolean = true): DataFrame =
-    graft.plans.TopK(scored, key, rankOrder(score, id), k, single)
-      .select(cols: _*).orderBy(col(key), col("rank"))
+                              single: Boolean = true): DataFrame = {
+    val ranked = graft.plans.TopK(scored, key, rankOrder(score, id), k, single).select(cols: _*)
+    if (single) ranked else ranked.orderBy(col(key), col("rank"))
+  }
 
   /** The `sim_micro` result columns: `(qid, vec_id, rank, sim_micro)` with
     * `sim_micro = floor(sim·10⁶)`.
@@ -627,9 +628,11 @@ object VectorSearch {
     (assignCells(e, centroids), centroids)
   }
 
-  /** V5: probed ANN search — probe each query's nprobe nearest cells
-    * map-side ([[IvfProbe]]), equi-join on cell_id, exact score within
-    * probed cells, top-k. (`index.nprobe = 10`, `pipeline.py:257`.)
+  /** V5: probed ANN search — probe each query's nprobe nearest cells on
+    * the driver ([[IvfProbe.byCell]]), score each row of a probed cell
+    * against the queries that probe it in one probed
+    * [[graft.plans.KnnJoin]], top-k. (`index.nprobe = 10`,
+    * `pipeline.py:257`.)
     *
     * Edge clamps (`pipeline+ui.py:227-230`: `min(nprobe, nlist)`,
     * `min(k, ntotal)`): the probe returns min(nprobe, nlist) cells and
@@ -637,13 +640,12 @@ object VectorSearch {
     * and never fabricates rows (asserted in VectorSearchSpec "clamp").
     */
   def ivfSearch(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-                k: Int = 5, nprobe: Int = 10): DataFrame = {
-    val probed = IvfProbe.probed(queries, IvfProbe.collect(centroids), nprobe)
-    val scored = assigned.join(broadcast(probed), "cell_id")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", dot(col("qvec"), col("embedding")))
-    rankTopK(scored, k)
-  }
+                k: Int = 5, nprobe: Int = 10): DataFrame =
+    rankTopK(graft.plans.KnnJoinApi.probed(queries.sparkSession, queries,
+        IvfProbe.collect(centroids), nprobe, k) { cells =>
+      assigned.filter(col("cell_id").isin(cells: _*))
+        .select(col("vec_id"), col("embedding"), col("cell_id"))
+    }, k)
 
   /** V1 as a named query: per-row norm probe (all ≈ 1 on this table, but the
     * operator is the general normalizer).

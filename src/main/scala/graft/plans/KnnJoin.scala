@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, GraftColumnBridge}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -27,13 +28,15 @@ import graft.sources.IvfProbe
   *      runs to the reference's 30 000, in one partition for a probed
   *      search's bounded batch.
   *
-  * Probed mode (`probe = Some((centroids, nprobe))`, the IVF store's
-  * search): the base side also carries each row's `cell_id`, and a row is
-  * scored only against the queries whose [[IvfProbe.Centroids.nearest]]
-  * cells hold it ([[IvfProbe.byCell]], which also gives the caller its
-  * static `cell_id` IN-list). The broadcast is the nq query vectors, not
-  * nq·nprobe exploded (qid, qvec, cell_id) rows, and no joined row
-  * carrying a query and an embedding copy is built.
+  * Probed mode (a [[KnnJoin.Probe]], built by [[KnnJoinApi.probed]] for
+  * the IVF searches): the base side also carries each row's `cell_id`, and
+  * a row is scored only against the queries whose
+  * [[IvfProbe.Centroids.nearest]] cells hold it. The probe is computed
+  * once, on the driver, from the collected query batch
+  * ([[IvfProbe.byCell]]); its cells are also the caller's static `cell_id`
+  * IN-list. The broadcast is
+  * the nq query vectors, not nq·nprobe exploded (qid, qvec, cell_id) rows,
+  * and no joined row carrying a query and an embedding copy is built.
   *
   * Contrast with the declarative form (crossJoin → TopK): same results
   * (same [[graft.operators.VectorSearch.rankOrder]]: sim desc with NaN
@@ -51,7 +54,7 @@ import graft.sources.IvfProbe
   */
 case class KnnJoin(left: LogicalPlan, right: LogicalPlan, k: Int,
                    excludeSelf: Boolean,
-                   probe: Option[(IvfProbe.Centroids, Int)] = None,
+                   probe: Option[KnnJoin.Probe] = None,
                    // constructor param (not a body val): withNewChildren's
                    // copy() must preserve the output exprId or downstream
                    // references dangle
@@ -68,6 +71,17 @@ case class KnnJoin(left: LogicalPlan, right: LogicalPlan, k: Int,
     copy(left = newLeft, right = newRight)
 }
 
+object KnnJoin {
+  /** A probed query batch: per probed cell, the positions of the queries
+    * that probe it, in the row order of the query side — a local relation
+    * of the `nq` rows the map was computed from ([[KnnJoinApi.probed]]).
+    */
+  final case class Probe(nq: Int, byCell: Map[Int, Array[Int]]) {
+    // plan trees print their arguments
+    override def toString: String = s"Probe(nq=$nq, cells=${byCell.size})"
+  }
+}
+
 object KnnJoinStrategy extends Strategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: KnnJoin =>
@@ -78,7 +92,7 @@ object KnnJoinStrategy extends Strategy {
 }
 
 case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
-                       excludeSelf: Boolean, probe: Option[(IvfProbe.Centroids, Int)],
+                       excludeSelf: Boolean, probe: Option[KnnJoin.Probe],
                        output: Seq[Attribute])
     extends BinaryExecNode {
   override def left: SparkPlan = queries
@@ -93,15 +107,17 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     val qids = qRows.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
     val qvecs = qRows.map(r => if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
     val self = excludeSelf
-    // the query indices a row is scored against: every query, or (with a
+    // the query positions a row is scored against: every query, or (with a
     // probe) those probing the row's cell; a NULL qid never passes
     // `vec_id <> qid`
     def scored(qis: Array[Int]): Array[Int] = qis.filter(i => !(self && qidNull(i)))
-    val all = scored(qids.indices.toArray)
-    val byCell = probe.map { case (cents, nprobe) =>
-      IvfProbe.byCell(cents, qvecs, nprobe).map { case (c, qis) => c -> scored(qis) }
+    val targets: Either[Array[Int], Map[Int, Array[Int]]] = probe match {
+      case None => Left(scored(qids.indices.toArray))
+      case Some(p) =>
+        require(p.nq == qRows.length, s"probe of ${p.nq} queries over ${qRows.length}")
+        Right(p.byCell.map { case (c, qis) => c -> scored(qis) })
     }
-    val bc = sparkContext.broadcast((qids, qidNull, qvecs, all, byCell))
+    val bc = sparkContext.broadcast((qids, qidNull, qvecs, targets))
     val kk = k
 
     // Per-partition bounded top-k, all-primitive hot path: a query keeps
@@ -111,17 +127,18 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
     // materialized once per row — `getFloat` per (query × dim) re-read
     // the unsafe buffer nq times.
     base.execute().mapPartitions { it =>
-      val (ids, idNull, qs, every, probed) = bc.value
-      val cells = probed.orNull
+      val (ids, idNull, qs, targets) = bc.value
+      val every = targets.left.toOption.orNull
+      val cells = targets.toOption.orNull
       val best = Array.fill(qs.length)(new KnnJoinExec.Best(kk))
       val none = Array.emptyIntArray
       var embBuf = new Array[Float](0)
       it.foreach { row =>
-        val targets =
-          if (cells == null) every
+        val ts =
+          if (every != null) every
           else if (row.isNullAt(2)) none
           else cells.getOrElse(row.getInt(2), none)
-        if (targets.length > 0 && !row.isNullAt(0)) {
+        if (ts.length > 0 && !row.isNullAt(0)) {
           val vecId = row.getLong(0)
           val emb = if (row.isNullAt(1)) null else row.getArray(1)
           val m = if (emb == null) 0 else emb.numElements()
@@ -129,8 +146,8 @@ case class KnnJoinExec(queries: SparkPlan, base: SparkPlan, k: Int,
           var d = 0
           while (d < m) { embBuf(d) = emb.getFloat(d); d += 1 }
           var t = 0
-          while (t < targets.length) {
-            val qi = targets(t)
+          while (t < ts.length) {
+            val qi = ts(t)
             if (!(self && vecId == ids(qi))) {
               val qvec = qs(qi)
               if (qvec == null || emb == null) best(qi).offer(0.0, isNull = true, vecId)
@@ -179,15 +196,19 @@ object KnnJoinExec {
     val ids = new Array[Long](k)
     var filled = 0
     private var worst = 0
+    // the worst slot's sim once full, −∞ while it is NULL: a candidate
+    // below it is rejected by this one compare (a NaN compares false and
+    // takes the full rule, [[beats]])
+    private var floor = Double.NegativeInfinity
 
     def offer(s: Double, isNull: Boolean, id: Long): Unit =
       if (filled < k) {
         put(filled, s, isNull, id)
         filled += 1
-        if (filled == k) worst = worstSlot()
-      } else if (k > 0 && beats(s, isNull, id, worst)) {
+        if (filled == k) findWorst()
+      } else if (k > 0 && !(s < floor) && beats(s, isNull, id, worst)) {
         put(worst, s, isNull, id)
-        worst = worstSlot()
+        findWorst()
       }
 
     private def put(j: Int, s: Double, isNull: Boolean, id: Long): Unit = {
@@ -202,10 +223,11 @@ object KnnJoinExec {
       c > 0 || (c == 0 && id < ids(j))
     }
 
-    private def worstSlot(): Int = {
+    private def findWorst(): Unit = {
       var w = 0; var j = 1
       while (j < filled) { if (beats(sims(w), nulls(w), ids(w), j)) w = j; j += 1 }
-      w
+      worst = w
+      floor = if (nulls(w)) Double.NegativeInfinity else sims(w)
     }
   }
 }
@@ -218,15 +240,30 @@ object KnnJoinApi {
     */
   def knnJoin(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame,
               k: Int, excludeSelf: Boolean = true): DataFrame =
-    TopK(winners(spark, queriesDF, baseDF, k, excludeSelf, None), "qid",
+    TopK(node(spark, queriesDF, baseDF, k, excludeSelf, None), "qid",
       graft.operators.VectorSearch.rankOrder("sim", "vec_id"), k, single = false).drop("rank")
 
-  /** The [[KnnJoin]] node itself: each base partition's best `k` per
-    * query, unranked. With a `probe`, `baseDF` also carries `cell_id` and
-    * a row meets only the queries that probe its cell.
+  /** The probed [[KnnJoin]] of an IVF search: each base partition's best
+    * `k` per query, unranked, excluding `vec_id = qid`. The `queries` batch
+    * (qid, qvec) is collected once, into a local relation that the exec
+    * reads back without a job (even for a streaming micro-batch), and
+    * probed once ([[IvfProbe.byCell]]). `base` is handed the probed cells
+    * ascending — the static `cell_id` IN-list — and returns the (vec_id,
+    * embedding, cell_id) rows to score.
     */
-  def winners(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame, k: Int,
-              excludeSelf: Boolean, probe: Option[(IvfProbe.Centroids, Int)]): DataFrame =
+  def probed(spark: SparkSession, queries: DataFrame, cents: IvfProbe.Centroids,
+             nprobe: Int, k: Int)(base: Seq[Int] => DataFrame): DataFrame = {
+    val batch = queries.select(col("qid"), col("qvec"))
+    val rows = batch.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema)
+    val byCell = IvfProbe.byCell(cents,
+      rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray), nprobe)
+    node(spark, local, base(byCell.keys.toSeq.sorted), k, excludeSelf = true,
+      Some(KnnJoin.Probe(rows.length, byCell)))
+  }
+
+  private def node(spark: SparkSession, queriesDF: DataFrame, baseDF: DataFrame, k: Int,
+                   excludeSelf: Boolean, probe: Option[KnnJoin.Probe]): DataFrame =
     GraftColumnBridge.ofRows(spark,
       KnnJoin(GraftColumnBridge.analyzed(queriesDF),
         GraftColumnBridge.analyzed(baseDF), k, excludeSelf, probe))

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort, UnaryNode}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition}
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.execution.{ShuffledRowRDD, SparkPlan, UnaryExecNode, UnsafeRowSerializer}
@@ -37,8 +36,6 @@ case class TopK(key: Expression, order: Seq[SortOrder], k: Int, single: Boolean,
     extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ rank
   override def producedAttributes: AttributeSet = AttributeSet(rank)
-  override def outputOrdering: Seq[SortOrder] =
-    if (single) Seq(SortOrder(key, Ascending), SortOrder(rank, Ascending)) else Nil
   override protected def withNewChildInternal(newChild: LogicalPlan): TopK =
     copy(child = newChild)
 }
@@ -53,27 +50,6 @@ object TopK {
     val sort = GraftColumnBridge.analyzed(df.orderBy(col(key) +: order: _*)).asInstanceOf[Sort]
     GraftColumnBridge.ofRows(df.sparkSession,
       TopK(sort.order.head.child, sort.order.tail, k, single, sort.child))
-  }
-}
-
-/** Drops a global sort that a `single` [[TopK]] below it already gives:
-  * its one merge partition emits rows in (key, rank) order, so the sort
-  * plans no exchange and is removed after planning — but a sort, which
-  * requires an ordered distribution, makes Spark wrap the whole query in
-  * adaptive execution first. Sees through the order-keeping `Project` and
-  * `Filter` that a result list puts between them.
-  */
-object SingleTopKOrder extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case s: Sort if s.global && single(s.child) &&
-        SortOrder.orderingSatisfies(s.child.outputOrdering, s.order) => s.child
-  }
-
-  private def single(p: LogicalPlan): Boolean = p match {
-    case t: TopK => t.single
-    case Project(_, c) => single(c)
-    case Filter(_, c) => single(c)
-    case _ => false
   }
 }
 

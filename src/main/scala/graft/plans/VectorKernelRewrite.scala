@@ -116,7 +116,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => VectorKernelRewrite)
     ext.injectOptimizerRule(_ => AnnProbeRewrite)
     ext.injectOptimizerRule(_ => HiddenPartitionRewrite)
-    ext.injectOptimizerRule(_ => SingleTopKOrder)
     ext.injectPlannerStrategy(_ => KnnJoinStrategy)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectFunction(fn("dot", 2,

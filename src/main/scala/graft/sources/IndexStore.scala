@@ -306,8 +306,8 @@ object IndexStore {
     (rows, graft.Tables.storeParquet(spark, s"$path/centroids"))
   }
 
-  /** Probed search against the PERSISTED index: identical query shape to
-    * VectorSearch.ivfSearch, but the equi-join key is now also the storage
+  /** Probed search against the PERSISTED index: VectorSearch.ivfSearch over
+    * the stored rows, whose probed-cell IN-list is now on the storage
     * partition key, so the parquet source prunes unprobed cells' files
     * before reading a byte.
     */
@@ -360,24 +360,17 @@ object IndexStore {
                    rowPred: Option[org.apache.spark.sql.Column] = None): DataFrame =
     probedTopK(spark, path, queries, k, nprobe)(rows => rowPred.foldLeft(rows)(_.filter(_)))
 
-  /** Top-`k` of the probed rows that `live` keeps, per query. The batch is
-    * collected once, into a local relation (so [[graft.plans.KnnJoinExec]]
-    * reads it back without a job, even for a streaming micro-batch); its
-    * probe ([[IvfProbe.byCell]]) gives the static IN-list.
+  /** Top-`k` of the probed rows that `live` keeps, per query: a probed
+    * [[graft.plans.KnnJoinApi.probed]] over the store's rows, whose probe
+    * gives the static IN-list.
     */
   private def probedTopK(spark: SparkSession, path: String, queries: DataFrame,
-                         k: Int, nprobe: Int)(live: DataFrame => DataFrame): DataFrame = {
-    val batch = queries.select(col("qid"), col("qvec"))
-    val rows = batch.collect()
-    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema)
-    val cents = IvfProbe.centroids(spark, path)
-    val qvecs = rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
-    val cells = IvfProbe.byCell(cents, qvecs, nprobe).keys.toSeq.sorted
-    val probed = live(read(spark, path)._1.filter(col("cell_id").isin(cells: _*)))
-      .select(col("vec_id"), col("embedding"), col("cell_id"))
-    VectorSearch.rankTopK(graft.plans.KnnJoinApi.winners(spark, local, probed, k,
-      excludeSelf = true, Some((cents, nprobe))), k)
-  }
+                         k: Int, nprobe: Int)(live: DataFrame => DataFrame): DataFrame =
+    VectorSearch.rankTopK(graft.plans.KnnJoinApi.probed(spark, queries,
+        IvfProbe.centroids(spark, path), nprobe, k) { cells =>
+      live(read(spark, path)._1.filter(col("cell_id").isin(cells: _*)))
+        .select(col("vec_id"), col("embedding"), col("cell_id"))
+    }, k)
 
   /** Tombstone-aware probed search — DELETE without rebuild. FAISS
     * `remove_ids` (`FAISS/PlainDemo/pipeline.py:110-112`) mutates its

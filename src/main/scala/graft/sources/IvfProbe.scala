@@ -25,9 +25,6 @@ object IvfProbe {
 
     def nlist: Int = ids.length
 
-    // plan trees print their probe argument
-    override def toString: String = s"Centroids(nlist=$nlist)"
-
     /** The `min(n, nlist)` cells nearest to `q`, nearest first. */
     def nearest(q: Array[Float], n: Int): Array[Int] = {
       val m = math.max(0, math.min(n, nlist))
@@ -84,7 +81,8 @@ object IvfProbe {
     * [[Centroids.nearest]] `nprobe` cells hold it, ascending. Its keys are
     * the static `cell_id` IN-list of a probed scan, and
     * [[graft.plans.KnnJoinExec]] scores each row against its cell's
-    * queries only. A NULL query (`null`) probes the lowest cell ids.
+    * queries only ([[graft.plans.KnnJoinApi.probed]]). A NULL query
+    * (`null`) probes the lowest cell ids.
     */
   def byCell(cents: Centroids, qvecs: Array[Array[Float]], nprobe: Int): Map[Int, Array[Int]] =
     qvecs.indices.flatMap(i => cents.nearest(qvecs(i), nprobe).map(_ -> i))

@@ -132,8 +132,8 @@ class IndexStoreSpec extends SparkSpec {
   test("job budget: one searchPruned call over a local query batch runs at most 2 Spark jobs") {
     val (store, q) = servingBatch()
     IndexStore.searchPruned(spark, store, q).collect() // warm: centroid memo, file listing
-    val df = IndexStore.searchPruned(spark, store, q)
-    val jobs = jobsOf(df.collect())
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { df = IndexStore.searchPruned(spark, store, q); df.collect() }
     // 11 with the cross-join + window probe run twice, 5 with the rank
     // window and global sort, 2 with the exploded probe's broadcast; left:
     // the probed KnnJoin, whose TopK merge runs inside the collecting job.

@@ -6,8 +6,9 @@ import graft.functions.VectorFunctions.dot
 import graft.operators.VectorSearch
 import graft.sources.{IndexStore, IvfProbe}
 
-/** `searchPruned` and `searchTombstoned` score the probed cells inside a
-  * probed `KnnJoin`. Their former form — the pruned rows equi-joined to the
+/** `searchPruned`, `searchTombstoned` and `ivfSearch` (so also
+  * `IndexStore.search`) score the probed cells inside a probed `KnnJoin`.
+  * Their former form — the pruned rows equi-joined to the
   * broadcast exploded probe, scored with `dot`, ranked by `rankTopK` — is
   * kept in [[ProbedSearchSpec$]] as the reference, and every result must be
   * row-identical to it.
@@ -72,18 +73,43 @@ class ProbedSearchSpec extends SparkSpec {
     }
   }
 
-  test("NULL and NaN queries and a NULL qid, among real ones") {
+  /** NULL queries (qid -1 and 2), a NaN query and a NULL qid, among real
+    * queries 0..2.
+    */
+  private def oddQueries: DataFrame = {
     val real = VectorSearch.querySet(spark, sfDir, 3).as[(Long, Seq[Float])].collect().toSeq
     val dim = real.head._2.length
-    val q = (Seq[(Option[Long], Option[Seq[Float]])](
+    (Seq[(Option[Long], Option[Seq[Float]])](
         (Some(-1L), None), (Some(2L), None), (Some(-2L), Some(Seq.fill(dim)(Float.NaN))),
         (None, Some(real.head._2))) ++
       real.map { case (id, v) => (Some(id), Some(v)) }).toDF("qid", "qvec")
+  }
+
+  test("NULL and NaN queries and a NULL qid, among real ones") {
+    val q = oddQueries
     for (store <- Seq(built, absorbed); nprobe <- Seq(1, 10)) {
       val got = same(store, q, 5, nprobe)
       assert(got.filter(_.getLong(0) == -1L).forall(_.isNullAt(3)))
       assert(got.count(_.getLong(0) == 2L) == 5)
     }
+  }
+
+  test("ivfSearch and IndexStore.search: every sf0.001 embedding, NULL and NaN queries") {
+    val (assigned, centroids) = VectorSearch.ivfBuild(spark, sfDir)
+    val a = assigned.cache()
+    val nlist = IvfProbe.collect(centroids).nlist
+    def check(got: DataFrame, want: DataFrame, what: String): Unit = {
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.nonEmpty && g == w, s"$what: ${g.diff(w).take(3)} vs ${w.diff(g).take(3)}")
+    }
+    for (q <- Seq(everyEmbedding, oddQueries); nprobe <- Seq(1, 2, nlist))
+      check(VectorSearch.ivfSearch(a, centroids, q, 5, nprobe),
+        ivfReference(a, centroids, q, 5, nprobe), s"ivfSearch nprobe=$nprobe")
+    val (rows, cents) = IndexStore.read(spark, built)
+    for (nprobe <- Seq(1, 10))
+      check(IndexStore.search(spark, built, everyEmbedding, 5, nprobe),
+        ivfReference(rows, cents, everyEmbedding, 5, nprobe), s"search nprobe=$nprobe")
+    a.unpersist(blocking = false)
   }
 
   test("searchTombstoned is unchanged") {
@@ -107,6 +133,18 @@ object ProbedSearchSpec {
       .join(broadcast(IvfProbe.probed(queries, cents, nprobe)), "cell_id")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("sim", dot(col("qvec"), col("embedding")))
-    VectorSearch.rankTopK(live(scored), k)
+    VectorSearch.rankTopK(live(scored), k).orderBy(col("qid"), col("rank"))
+  }
+
+  /** The former `VectorSearch.ivfSearch`: the rows equi-joined to the
+    * broadcast exploded probe, scored with `dot`, then `rankTopK`.
+    */
+  def ivfReference(assigned: DataFrame, centroids: DataFrame, queries: DataFrame, k: Int,
+                   nprobe: Int): DataFrame = {
+    val probed = IvfProbe.probed(queries, IvfProbe.collect(centroids), nprobe)
+    val scored = assigned.join(broadcast(probed), "cell_id")
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("sim", dot(col("qvec"), col("embedding")))
+    VectorSearch.rankTopK(scored, k).orderBy(col("qid"), col("rank"))
   }
 }
